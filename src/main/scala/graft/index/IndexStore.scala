@@ -1,0 +1,266 @@
+package graft.index
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The on-disk rules every persisted index family shares (dedup, CDC,
+  * winnow, band, plain IVF, PQ, residual IVF-PQ, k-means-int) — one
+  * copy each, so the operators never spell file layout themselves:
+  *
+  *  - VERSIONS: a versioned family keeps its tables under
+  *    `<path>/v<NNNNNN>/` and commits one with an empty `_COMMITTED`
+  *    marker ([[installIndexVersion]]); readers resolve the highest
+  *    committed version ([[currentIndexDir]]). An unmarked version is
+  *    never served.
+  *  - IDENTITY BATCHES: rows land under `<table>/batch=<tag>/`, the tag
+  *    derived from the batch's ids ([[identityBatchTag]]), with the
+  *    landed tags kept in the table's `_batches` manifest
+  *    ([[landIdentityBatch]]) — replay-idempotent appends.
+  *  - TOMBSTONES: deleted ids land as identity batches under a
+  *    `deletes/`-style dir ([[landTombstones]]) and are read back as
+  *    one id frame ([[idsIn]]) for the probe-side anti-join mask.
+  *  - REBUILD: a rebuild clears the tables it replaces ([[clearTables]]).
+  */
+private[graft] object IndexStore {
+
+  private val IndexVersionRe = """^v(\d{6})$""".r
+
+  /** The `_batches` manifest name — one landed tag per line, living at
+    * the table root next to the batch dirs. The manifest exists so a
+    * COMPACTION (which physically merges batch dirs away) can carry
+    * the landed-tag history into the new version: without it, a
+    * replayed append whose first attempt committed BEFORE an
+    * intervening compact would land as a fresh batch dir and silently
+    * double-count — the _SUCCESS probe only protects replays within
+    * one version's lifetime. */
+  private val BatchManifest = "_batches"
+
+  private def indexFs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // ----- versioned install ----- //
+
+  /** Every `v<NNNNNN>` directory under an index root (committed or
+    * not), as (version, path) pairs. */
+  private def indexVersions(spark: SparkSession,
+                            path: String): Seq[(Long, Path)] = {
+    val fs = indexFs(spark, path)
+    val root = new Path(path)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
+      st.getPath.getName match {
+        case IndexVersionRe(n) => Some((n.toLong, st.getPath))
+        case _ => None
+      }
+    }
+  }
+
+  /** The committed (version, dir) pairs under an index root. */
+  private def committedVersions(spark: SparkSession,
+                                path: String): Seq[(Long, Path)] = {
+    val fs = indexFs(spark, path)
+    indexVersions(spark, path).filter { case (_, p) =>
+      fs.exists(new Path(p, "_COMMITTED"))
+    }
+  }
+
+  /** The live (highest COMMITTED) version directory of a versioned
+    * index — the single resolution point every reader goes through. */
+  def currentIndexDir(spark: SparkSession, path: String): String = {
+    val committed = committedVersions(spark, path)
+    require(committed.nonEmpty,
+      s"no committed dedup-index version under $path")
+    committed.maxBy(_._1)._2.toString
+  }
+
+  /** Write a full index layout under the NEXT version directory, then
+    * commit it with one atomic `_COMMITTED` create and sweep stale
+    * versions (older committed ones and crashed uncommitted
+    * leftovers). The sweep runs strictly AFTER the commit and RETAINS
+    * the immediately-previous committed version: a reader that
+    * resolved [[currentIndexDir]] moments before this install can
+    * still be mid-scan on the previous version's parquet, so its
+    * files must survive this call — the previous version is swept by
+    * the NEXT lifecycle call instead (by which point any scan started
+    * against two installs ago has long finished; a deployment with
+    * genuinely unbounded reader lifetimes would pin versions with
+    * leases). Crash contract: a kill at ANY instant — mid-write,
+    * between two table writes, before the marker — leaves the old
+    * version fully committed and readable (the marker is the single
+    * commit point), and the orphaned uncommitted directory is swept
+    * here on the next call (spec-pinned for every window, including a
+    * first install that dies before its marker). */
+  def installIndexVersion(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val fs = indexFs(spark, path)
+    val prevCommitted = committedVersions(spark, path).map(_._1).maxOption
+    val nextN = indexVersions(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
+    val dir = new Path(new Path(path), f"v$nextN%06d")
+    write(dir.toString)
+    require(fs.createNewFile(new Path(dir, "_COMMITTED")),
+      s"could not commit index version $dir")
+    indexVersions(spark, path).foreach { case (n, p) =>
+      if (p.getName != dir.getName && !prevCommitted.contains(n)) {
+        fs.delete(p, true); ()
+      }
+    }
+  }
+
+  // ----- identity-addressed batch landing ----- //
+
+  /** Deterministic identity tag of a row batch: row count + a bit_xor
+    * fold of per-id xxhash64 (order-independent, overflow-free under
+    * ANSI). Append batches carry DISJOINT id sets (the lifecycle
+    * contract: new rows get new ids), so two different batches get
+    * different tags even when their PAYLOADS are identical (a re-crawl
+    * of the same pages — which is exactly why the tag hashes ids, not
+    * payload), while a replay of the same batch reproduces the same
+    * tag. Accidental 64-bit collision between disjoint id sets is the
+    * 2⁻⁶⁴-scale trade for a journal-free idempotent append. One
+    * bounded aggregate over bare ids. */
+  def identityBatchTag(rows: DataFrame, idCol: String): String = {
+    val r = rows.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
+    f"n${r.getLong(0)}_h${java.lang.Long.toHexString(
+      if (r.isNullAt(1)) 0L else r.getLong(1))}"
+  }
+
+  /** Land one batch of rows under an IDENTITY-ADDRESSED partition dir
+    * `<tableDir>/batch=<tag>/` — the replay-idempotence mechanism (the
+    * `streaming/Events.idempotentBatchWrite` convention applied to a
+    * standing index table, with [[identityBatchTag]] playing the batch
+    * id). A batch whose directory already carries the committer's
+    * _SUCCESS — or whose tag the table's [[landedBatchTags]] manifest
+    * records as landed in an EARLIER compacted-away version — is
+    * SKIPPED entirely: the common replay touches no files at all, so
+    * in-flight readers of the live version are never disturbed. Only a
+    * replay after a mid-write crash (no _SUCCESS, no manifest row)
+    * rewrites its own directory, and the partial files it clears were
+    * an undercounted batch no reader should trust anyway. After
+    * landing, the tag is recorded in the manifest so a later
+    * compaction can carry it forward. */
+  def landIdentityBatch(rows: DataFrame, tableDir: String,
+                        tag: String): Unit = {
+    val spark = rows.sparkSession
+    val fs = indexFs(spark, tableDir)
+    val batchDir = new Path(s"$tableDir/batch=$tag")
+    val landed = landedBatchTags(spark, tableDir)
+    if (!landed.contains(tag) && !fs.exists(new Path(batchDir, "_SUCCESS"))) {
+      rows.write.mode("overwrite").parquet(batchDir.toString)
+    }
+    recordBatchTags(spark, tableDir, landed + tag)
+  }
+
+  /** The set of batch tags the table's manifest records as landed
+    * (empty when no manifest exists, where the per-dir _SUCCESS probe
+    * still covers in-version replays). */
+  def landedBatchTags(spark: SparkSession, tableDir: String): Set[String] = {
+    val fs = indexFs(spark, tableDir)
+    val mf = new Path(tableDir, BatchManifest)
+    if (!fs.exists(mf)) Set.empty
+    else {
+      val in = fs.open(mf)
+      try {
+        scala.io.Source.fromInputStream(in, "UTF-8")
+          .getLines().map(_.trim).filter(_.nonEmpty).toSet
+      } finally in.close()
+    }
+  }
+
+  /** Rewrite the table's `_batches` manifest with `tags` (temp file +
+    * delete + rename — the crash window between delete and rename
+    * degrades to an absent manifest, which the per-dir _SUCCESS probe
+    * still covers for every replay except the already-rare
+    * replay-after-compact). */
+  def recordBatchTags(spark: SparkSession, tableDir: String,
+                      tags: Set[String]): Unit = {
+    val fs = indexFs(spark, tableDir)
+    val root = new Path(tableDir)
+    if (!fs.exists(root)) { fs.mkdirs(root); () }
+    val mf = new Path(root, BatchManifest)
+    val tmp = new Path(root, s"$BatchManifest.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(tags.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    if (fs.exists(mf)) { fs.delete(mf, false); () }
+    require(fs.rename(tmp, mf), s"could not install batch manifest $mf")
+  }
+
+  /** The batch tags physically present as `batch=<tag>/` dirs under a
+    * table root — carried across compacts alongside the manifest, and
+    * the physical half of the streaming snapshot gate. */
+  def batchDirTags(spark: SparkSession, tableDir: String): Set[String] = {
+    val fs = indexFs(spark, tableDir)
+    val root = new Path(tableDir)
+    if (!fs.exists(root)) Set.empty
+    else fs.listStatus(root).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
+        st.getPath.getName.stripPrefix("batch=")
+    }.toSet
+  }
+
+  // ----- tombstones ----- //
+
+  /** Land a tombstone batch: the distinct `idCol` values of `ids` as an
+    * identity-addressed `<dir>/batch=<tag>/` — replay-idempotent, read
+    * back by [[idsIn]]. */
+  def landTombstones(ids: DataFrame, dir: String, idCol: String): Unit = {
+    val distinctIds = ids.select(col(idCol)).distinct()
+    landIdentityBatch(distinctIds, dir, identityBatchTag(distinctIds, idCol))
+  }
+
+  /** The ids landed as batch dirs under `dir`, as a one-column
+    * `idCol` frame — empty (same schema) when none have been landed,
+    * or when a compact applied them all (a post-compact dir may hold
+    * only the carried manifest). */
+  def idsIn(spark: SparkSession, dir: String, idCol: String): DataFrame =
+    if (batchDirTags(spark, dir).nonEmpty)
+      spark.read.parquet(dir).select(col(idCol)).distinct()
+    else spark.range(0).select(col("id").as(idCol))
+
+  /** Delete the named tables under an index root, where present — the
+    * rebuild step every unversioned family shares (a rebuild's corpus
+    * is the post-takedown truth, so its tombstones go with the rows). */
+  def clearTables(spark: SparkSession, path: String, names: String*): Unit = {
+    val fs = indexFs(spark, path)
+    names.foreach { t =>
+      val d = new Path(path, t)
+      if (fs.exists(d)) { fs.delete(d, true); () }
+    }
+  }
+
+  // ----- streaming snapshot gate ----- //
+
+  /** A serving snapshot of `<path>/<table>` for a streaming probe: the
+    * returned thunk re-runs `read` only when the landed state it
+    * depends on changed since the last call, so a quiet index costs
+    * one small manifest read and one tombstone-sized listing per
+    * trigger instead of a fresh listing + footer reads of the whole
+    * table (which grows linearly with landed batch dirs).
+    *
+    * The gate covers BOTH lifecycles a serving view depends on. The
+    * table gates on its `_batches` MANIFEST (a torn append — dir
+    * landed, no manifest row — stays invisible here AND is re-landed by
+    * its replaying writer, so the divergence heals). Tombstones gate on
+    * the PHYSICAL batch-dir listing of `<path>/deletes` instead:
+    * one-shot probes mask by scanning those physical dirs, so a
+    * manifest-keyed gate would leave a crash's torn tombstone MASKED
+    * for one-shot readers but SERVED by a stale stream snapshot until
+    * replay — and `deletes/` is tombstone-sized, so listing it costs
+    * what the manifest read costs. Call the thunk from `foreachBatch`,
+    * whose body runs in the query's own JVM, not in tasks. */
+  def servingSnapshot(spark: SparkSession, path: String, table: String)(
+      read: => DataFrame): () => DataFrame = {
+    var snapTags: Option[(Set[String], Set[String])] = None
+    var snap: DataFrame = null
+    () => {
+      val tags = (landedBatchTags(spark, s"$path/$table"),
+        batchDirTags(spark, s"$path/deletes"))
+      if (!snapTags.contains(tags)) {
+        snap = read
+        snapTags = Some(tags)
+      }
+      snap
+    }
+  }
+}

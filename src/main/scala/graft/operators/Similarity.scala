@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.index.IndexStore
 import graft.tables.Tables
 
 /** Similarity search over the `embeddings` table (`Array[Float]`
@@ -1386,7 +1387,7 @@ object Similarity {
     * pruning [[graft.operators.LakeLayout]] uses for dates. */
   def writeIvfIndex(emb: DataFrame, path: String): Unit = {
     // a rebuild clears standing tombstones ([[deleteIvfIndex]])
-    clearTombstones(emb.sparkSession, path)
+    IndexStore.clearTables(emb.sparkSession, path, "deletes")
     ivfCells(emb)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/cells")
@@ -1438,7 +1439,8 @@ object Similarity {
                     k: Int, nprobe: Int): DataFrame = {
     // tombstone mask — a no-op anti-join when none are landed
     val cells = spark.read.parquet(s"$path/cells")
-      .join(ivfPqDeletes(spark, path), Seq("vec_id"), "left_anti")
+      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
+        Seq("vec_id"), "left_anti")
     val probed = probeAssignments(spark, path, queries, nprobe)
     rankTopK(
       cells.join(broadcast(probed), Seq("cell"))
@@ -1523,35 +1525,8 @@ object Similarity {
     ()
   }
 
-  /** Typed parameters for the standing-index lifecycle — the
-    * similarity twin of [[graft.JobConfig]] / [[Curate.CurateConfig]]:
-    * one immutable object instead of scattered path/knob arguments, so
-    * a scheduled maintenance job and an ad-hoc probe can't drift on
-    * defaults. `k`/`nprobe` parameterize probes; `compactAfterAppend`
-    * folds the small-file rewrite into the append window. */
-  case class IndexConfig(
-      path: String,
-      k: Int = 3,
-      nprobe: Int = 2,
-      compactAfterAppend: Boolean = true)
-
-  /** Config-driven lifecycle runner: `build` lands the standing index,
-    * `append` absorbs an increment (compacting when configured),
-    * `probe` answers a query batch from the standing layout. Each step
-    * is exactly the operator it names — the runner adds no semantics,
-    * only the typed wiring a production scheduler calls. */
+  /** Scheduled maintenance over the standing residual IVF-PQ index. */
   object IndexJob {
-    def build(emb: DataFrame, cfg: IndexConfig): Unit =
-      writeIvfIndex(emb, cfg.path)
-
-    def append(spark: SparkSession, newEmb: DataFrame, cfg: IndexConfig): Unit = {
-      appendIvfIndex(spark, cfg.path, newEmb)
-      if (cfg.compactAfterAppend) compactIvfIndex(spark, cfg.path)
-    }
-
-    def probe(spark: SparkSession, queries: DataFrame, cfg: IndexConfig): DataFrame =
-      ivfProbeIndex(spark, cfg.path, queries, cfg.k, cfg.nprobe)
-
     /** The RETRAIN-policy step — the lifecycle runner's closing arc
       * over the residual IVF-PQ family (appends inherit FROZEN
       * structures, so skew only ever accumulates; the occupancy
@@ -1580,7 +1555,7 @@ object Similarity {
         // — bounded by deletes-since-last-rebuild, the approved
         // driver scalar)
         import spark.implicits._
-        val tomb = ivfPqDeletes(spark, path)
+        val tomb = IndexStore.idsIn(spark, s"$path/deletes", "vec_id")
           .as[Long].collect().toSeq.toDF("vec_id")
         writeIvfPqIndex(
           corpus.join(broadcast(tomb), Seq("vec_id"), "left_anti"), path)
@@ -2316,8 +2291,10 @@ object Similarity {
     * exact value/null/type roundtrip, plan-literal downstream (no
     * recomputation per consumer, no cache-lifecycle management).
     * Callers own the boundedness argument. */
-  private def localized(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = df.collect()
+  private[graft] def localized(spark: SparkSession, df: DataFrame): DataFrame = {
+    // collect at most cap + 1 rows: an oversized frame trips the
+    // require below without ever being collected whole
+    val rows = df.limit(LocalizedRowCap + 1).collect()
     // bounded-collect ledger: the LARGEST legitimate call site is the
     // ⌈√N⌉-row fine-centroid map (≈3·10⁵ rows at 10¹¹ vectors — tens
     // of MB, driver-bounded); every other site is a ≤PqM·PqK=128-row
@@ -2333,7 +2310,7 @@ object Similarity {
   }
 
   /** Hard ceiling on [[localized]] collects — see its require. */
-  private val LocalizedRowCap = 1000000
+  private[graft] val LocalizedRowCap = 1000000
 
   /** Run INDEPENDENT eager builds as concurrent Spark jobs (guide
     * §2.6): actions are only sequential because one driver thread
@@ -2898,7 +2875,11 @@ object Similarity {
   def writeIvfPqIndex(emb: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
     writeIvfPqStructures(emb, path)
-    clearIvfPqCodes(spark, path)
+    // a rebuild clears the tombstones with the codes: the new corpus
+    // is the post-takedown truth (upstream filters the deleted docs),
+    // so old vec-id tombstones are void — and ids are never reused,
+    // so none can mask a legitimate new row anyway
+    IndexStore.clearTables(spark, path, "codes", "deletes")
     landIvfPqCodes(spark, path, emb)
   }
 
@@ -2914,19 +2895,6 @@ object Similarity {
     cb.write.mode("overwrite").parquet(s"$path/codebook")
   }
 
-  private def clearIvfPqCodes(spark: SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a rebuild clears the tombstones with the codes: the new corpus
-    // is the post-takedown truth (upstream filters the deleted docs),
-    // so old vec-id tombstones are void — and ids are never reused,
-    // so none can mask a legitimate new row anyway
-    Seq("codes", "deletes").foreach { t =>
-      val d = new org.apache.hadoop.fs.Path(root, t)
-      if (fs.exists(d)) { fs.delete(d, true); () }
-    }
-  }
-
   /** Place + encode one batch against the LANDED structures and land
     * its code rows under an identity-addressed batch dir. */
   def landIvfPqCodes(spark: SparkSession, path: String,
@@ -2935,11 +2903,11 @@ object Similarity {
     val coarse = spark.read.parquet(s"$path/coarse")
     val fmap = spark.read.parquet(s"$path/fmap")
     val cb = spark.read.parquet(s"$path/codebook")
-    TextDedup.landIdentityBatch(
+    IndexStore.landIdentityBatch(
       encodeResiduals(
         residualsAgainst(batch, coarse, fmap, keepEmbedding = true),
         cb, keepEmbedding = true),
-      s"$path/codes", TextDedup.identityBatchTag(batch, "vec_id"))
+      s"$path/codes", IndexStore.identityBatchTag(batch, "vec_id"))
   }
 
   /** Append an increment: place into the FROZEN cells, encode against
@@ -2952,7 +2920,7 @@ object Similarity {
   /** Land a TOMBSTONE batch against a landed residual IVF-PQ index —
     * the delete half of the serving lifecycle (vector takedowns):
     * vec ids land as an identity-addressed `deletes/batch=<tag>/` dir
-    * ([[TextDedup.landIdentityBatch]] — replay-idempotent), are MASKED
+    * ([[IndexStore.landTombstones]] — replay-idempotent), are MASKED
     * out of every probe immediately ([[ivfPqIndexCodes]] anti-joins
     * them off the code table before the ADC — exact: no other
     * vector's score depends on a deleted one), and are physically
@@ -2969,26 +2937,7 @@ object Similarity {
   def deleteIvfPqIndex(spark: SparkSession, path: String,
                        vecIds: DataFrame): Unit = {
     ensureRegistered(spark)
-    landVecTombstones(path, vecIds)
-  }
-
-  /** The one vec-id tombstone landing every vector-index family
-    * shares (band, residual IVF-PQ, plain PQ, plain IVF): distinct
-    * ids under an identity-addressed `deletes/batch=<tag>/` dir —
-    * replay-idempotent, read back by [[ivfPqDeletes]]. */
-  private def landVecTombstones(path: String, vecIds: DataFrame): Unit = {
-    val ids = vecIds.select(col("vec_id")).distinct()
-    TextDedup.landIdentityBatch(ids, s"$path/deletes",
-      TextDedup.identityBatchTag(ids, "vec_id"))
-  }
-
-  /** Clear a standing tombstone dir — the rebuild-applies contract
-    * every write*Index shares: the new corpus is the post-takedown
-    * truth. */
-  private def clearTombstones(spark: SparkSession, path: String): Unit = {
-    val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = delDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delDir)) { fs.delete(delDir, true); () }
+    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
   }
 
   /** Land a TOMBSTONE batch against a standing plain-PQ index — the
@@ -3001,7 +2950,7 @@ object Similarity {
   def deletePqIndex(spark: SparkSession, path: String,
                     vecIds: DataFrame): Unit = {
     ensureRegistered(spark)
-    landVecTombstones(path, vecIds)
+    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
   }
 
   /** Land a TOMBSTONE batch against a standing plain-IVF index:
@@ -3014,19 +2963,7 @@ object Similarity {
   def deleteIvfIndex(spark: SparkSession, path: String,
                      vecIds: DataFrame): Unit = {
     ensureRegistered(spark)
-    landVecTombstones(path, vecIds)
-  }
-
-  /** The landed tombstones of a vec-id-keyed index layout (IVF-PQ or
-    * band) — empty frame when none. */
-  private def ivfPqDeletes(spark: SparkSession, path: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(dir) && fs.listStatus(dir).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (hasBatches)
-      spark.read.parquet(dir.toString).select(col("vec_id")).distinct()
-    else spark.range(0).select(col("id").as("vec_id"))
+    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
   }
 
   /** The SERVING view of a landed index's code table: the physical
@@ -3035,7 +2972,8 @@ object Similarity {
     * the rows until the next rebuild ([[deleteIvfPqIndex]]). */
   private def ivfPqIndexCodes(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/codes")
-      .join(ivfPqDeletes(spark, path), Seq("vec_id"), "left_anti")
+      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
+        Seq("vec_id"), "left_anti")
 
   /** Serve top-k from the landed index: probe cells from `coarse`/
     * `fmap`, ADC over the landed codes (tombstones masked), exact
@@ -3077,7 +3015,7 @@ object Similarity {
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
     writeIvfPqStructures(emb, path)
-    clearIvfPqCodes(spark, path)
+    IndexStore.clearTables(spark, path, "codes", "deletes")
     landIvfPqCodes(spark, path, emb.filter(!isNew))
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
@@ -3097,7 +3035,7 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "ivfpq_index")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     writeIvfPqStructures(emb, path)
-    clearIvfPqCodes(spark, path)
+    IndexStore.clearTables(spark, path, "codes", "deletes")
     landIvfPqCodes(spark, path, emb.filter(!isNew))
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     ivfPqProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
@@ -3122,19 +3060,13 @@ object Similarity {
     * linearly with landed batch-dir count (SeamBench's
     * `ivfpq_probe_26dirs` prices it at ~6 ms per extra batch dir PER
     * TRIGGER on a local FS — object-store listing is far worse). The
-    * codes frame is therefore SNAPSHOT-gated on the `_batches`
-    * manifest: each trigger reads the one small manifest file and
-    * re-lists the table only when the landed tag set actually changed,
-    * so a quiet index costs O(1 manifest read) per trigger and a fresh
-    * append becomes visible at the first trigger after its manifest
-    * row lands (the same commit point its identity batch dir gets).
-    * The TOMBSTONE half of the gate lists the physical `deletes/`
-    * batch dirs instead (tombstone-sized — costs what the manifest
-    * read costs): one-shot probes mask by scanning those dirs, so
-    * keying deletes on the manifest would let a crash between a
-    * tombstone dir write and its manifest row serve deleted vectors
-    * from a stale stream snapshot that one-shot readers already
-    * mask. */
+    * codes frame is therefore SNAPSHOT-gated
+    * ([[IndexStore.servingSnapshot]]): each trigger reads the one small
+    * `_batches` manifest plus the tombstone-sized `deletes/` listing
+    * and re-lists the table only when either changed, so a quiet index
+    * costs O(1 manifest read) per trigger and a fresh append becomes
+    * visible at the first trigger after its manifest row lands (the
+    * same commit point its identity batch dir gets). */
   def streamingIvfPqSearch(spark: SparkSession, path: String,
                            streamQueries: DataFrame, k: Int,
                            nprobe: Int = 2,
@@ -3144,31 +3076,12 @@ object Similarity {
     val coarse = localized(spark, spark.read.parquet(s"$path/coarse"))
     val fmap = localized(spark, spark.read.parquet(s"$path/fmap"))
     val cb = localized(spark, spark.read.parquet(s"$path/codebook"))
-    val codesDir = s"$path/codes"
-    var snapTags: Option[(Set[String], Set[String])] = None
-    var codesSnap: DataFrame = null
+    val codes = IndexStore.servingSnapshot(spark, path, "codes")(
+      ivfPqIndexCodes(spark, path))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // the gate covers BOTH lifecycles the serving view depends on.
-        // Codes gate on the _batches MANIFEST (one small-file read —
-        // the whole point of the listing discipline; a torn append,
-        // dir landed but no manifest row, stays invisible here AND is
-        // re-landed by its replaying writer, so the divergence heals).
-        // Tombstones gate on the PHYSICAL batch-dir listing of the
-        // deletes/ dir instead: one-shot probes mask by scanning those
-        // physical dirs, so a manifest-keyed gate would leave a
-        // crash's torn tombstone (dir landed, no manifest row) MASKED
-        // for one-shot readers but SERVED by a stale stream snapshot
-        // until replay — and unlike codes/, deletes/ is
-        // tombstone-sized, so listing it every trigger costs what the
-        // manifest read costs.
-        val tags = (TextDedup.landedBatchTags(spark, codesDir),
-          TextDedup.batchDirTags(spark, s"$path/deletes"))
-        if (!snapTags.contains(tags)) {
-          codesSnap = ivfPqIndexCodes(spark, path)
-          snapTags = Some(tags)
-        }
+        val codesSnap = codes()
         sink(ivfPqProbeResidual(
           codesSnap.select(col("vec_id"), col("cell"), col("codes")),
           cb, coarse, fmap,
@@ -3185,19 +3098,15 @@ object Similarity {
     * as [[writeBandIndex]]; the ADC scan itself projects just the
     * codes, and column pruning keeps the floats unread there). Codes
     * land as an identity-addressed `batch=<tag>/` dir
-    * ([[TextDedup.landIdentityBatch]]) so [[appendPqIndex]] batches
+    * ([[IndexStore.landIdentityBatch]]) so [[appendPqIndex]] batches
     * are replay-idempotent; the build clears any previous codes
     * layout first (a build is a full rebuild). */
   def writePqIndex(emb: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
     // a rebuild clears standing tombstones (the new corpus is the
     // post-takedown truth — the shared write*Index contract)
-    clearTombstones(spark, path)
-    val cb = pqCodebook(emb)
-    cb.write.mode("overwrite").parquet(s"$path/codebook")
-    val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(codesDir)) { fs.delete(codesDir, true); () }
+    IndexStore.clearTables(spark, path, "deletes", "codes")
+    pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
     landPqCodes(emb, spark.read.parquet(s"$path/codebook"), path)
   }
 
@@ -3226,11 +3135,11 @@ object Similarity {
     // the encode is MAP-ONLY ([[pqEncode]]), so the embedding rides the
     // same projection instead of a corpus-scale re-join on vec_id (two
     // exchanges + a second batch scan for a column the row already had)
-    TextDedup.landIdentityBatch(
+    IndexStore.landIdentityBatch(
       emb.select(col("vec_id"),
         pqEncodeColumn(emb.sparkSession, cb, col("embedding")).as("codes"),
         col("embedding")),
-      s"$path/codes", TextDedup.identityBatchTag(emb, "vec_id"))
+      s"$path/codes", IndexStore.identityBatchTag(emb, "vec_id"))
 
   def pqProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int): DataFrame = {
@@ -3254,11 +3163,8 @@ object Similarity {
     // the codebook trains on the FULL corpus (its rank-stride training
     // rows must match the oracle's); the standing/increment split
     // exercises encode-against-frozen-codebook on the append path
-    val cb = pqCodebook(emb)
-    cb.write.mode("overwrite").parquet(s"$path/codebook")
-    val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(codesDir)) { fs.delete(codesDir, true); () }
+    pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
+    IndexStore.clearTables(spark, path, "codes")
     landPqCodes(emb.filter(!isNew),
       spark.read.parquet(s"$path/codebook"), path)
     appendPqIndex(spark, path, emb.filter(isNew))
@@ -3279,12 +3185,8 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "pq_index_deleted")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
-    val cb = pqCodebook(emb)
-    clearTombstones(spark, path)
-    cb.write.mode("overwrite").parquet(s"$path/codebook")
-    val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(codesDir)) { fs.delete(codesDir, true); () }
+    IndexStore.clearTables(spark, path, "deletes", "codes")
+    pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
     landPqCodes(emb.filter(!isNew),
       spark.read.parquet(s"$path/codebook"), path)
     appendPqIndex(spark, path, emb.filter(isNew))
@@ -3323,7 +3225,7 @@ object Similarity {
   def writeBandIndex(emb: DataFrame, path: String): Unit = {
     // a rebuild clears standing tombstones (the deleteIvfPqIndex
     // contract: the new corpus is the post-takedown truth)
-    clearTombstones(emb.sparkSession, path)
+    IndexStore.clearTables(emb.sparkSession, path, "deletes")
     bandedIndex(emb)
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("band"), col("sig"), col("vec_id"), col("embedding"))
@@ -3343,7 +3245,7 @@ object Similarity {
   def deleteBandIndex(spark: SparkSession, path: String,
                       vecIds: DataFrame): Unit = {
     ensureRegistered(spark)
-    landVecTombstones(path, vecIds)
+    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
   }
 
   /** Probe a standing band index with a fresh increment: bands are
@@ -3355,7 +3257,8 @@ object Similarity {
                      threshold: Double): DataFrame = {
     // tombstone mask — a no-op anti-join when none are landed
     val bands = spark.read.parquet(s"$path/bands")
-      .join(ivfPqDeletes(spark, path), Seq("vec_id"), "left_anti")
+      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
+        Seq("vec_id"), "left_anti")
     val pIdx = bandedIndex(probe)
       .select(col("band"), col("sig"), col("vec_id").as("probe_id"))
     val cand = pIdx.join(bands.select(col("band"), col("sig"),
@@ -3839,10 +3742,7 @@ object Similarity {
                                iters: Int = KmeansIters): Unit = {
     val spark = train.sparkSession
     ensureRegistered(spark)
-    clearTombstones(spark, path)
-    val cellsDir = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = cellsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cellsDir)) { fs.delete(cellsDir, true); () }
+    IndexStore.clearTables(spark, path, "deletes", "cells")
     val k = if (kc > 0) kc else kmeansAutoK(train.count())
     import spark.implicits._
     kmeansCentroidsInt(train, k, iters).toDF("cid", "cm")
@@ -3868,9 +3768,9 @@ object Similarity {
   def appendKmeansIntIndex(spark: SparkSession, path: String,
                            batch: DataFrame): Unit = {
     ensureRegistered(spark)
-    TextDedup.landIdentityBatch(
+    IndexStore.landIdentityBatch(
       kmeansAssignInt(batch, kmeansIntCentroidsOf(spark, path)),
-      s"$path/cells", TextDedup.identityBatchTag(batch, "vec_id"))
+      s"$path/cells", IndexStore.identityBatchTag(batch, "vec_id"))
   }
 
   /** Serve top-k from the landed integer-learned index: query cells
@@ -3888,7 +3788,8 @@ object Similarity {
         cents, nprobe)
       .select(col("vec_id").as("query_id"), col("cell"))
     val cells = spark.read.parquet(s"$path/cells")
-      .join(ivfPqDeletes(spark, path), Seq("vec_id"), "left_anti")
+      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
+        Seq("vec_id"), "left_anti")
     rankTopK(
       cells.join(broadcast(qCells.join(queries, Seq("query_id"))),
           Seq("cell"))
@@ -3902,11 +3803,8 @@ object Similarity {
     * [[streamingIvfPqSearch]] disciplines carried over: the bounded
     * centroid table is read and localized ONCE before the stream
     * starts (per-batch re-reads would re-pay its scan + collect every
-    * trigger); the corpus-scale cells table is snapshot-gated on the
-    * `_batches` manifest for appends and on the PHYSICAL `deletes/`
-    * batch-dir listing for tombstones (the torn-landing argument at
-    * the IVF-PQ gate — one-shot probes mask from physical dirs, so
-    * the stream must see what they see). Stateless per batch ⇒
+    * trigger); the corpus-scale cells table is snapshot-gated
+    * ([[IndexStore.servingSnapshot]]). Stateless per batch ⇒
     * streamed ≡ batch under any slicing (spec-pinned). */
   def streamingKmeansIntSearch(spark: SparkSession, path: String,
                                streamQueries: DataFrame, k: Int,
@@ -3915,19 +3813,14 @@ object Similarity {
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     ensureRegistered(spark)
     val cents = kmeansIntCentroidsOf(spark, path)
-    val cellsDir = s"$path/cells"
-    var snapTags: Option[(Set[String], Set[String])] = None
-    var cellsSnap: DataFrame = null
+    val cells = IndexStore.servingSnapshot(spark, path, "cells")(
+      spark.read.parquet(s"$path/cells")
+        .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
+          Seq("vec_id"), "left_anti"))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val tags = (TextDedup.landedBatchTags(spark, cellsDir),
-          TextDedup.batchDirTags(spark, s"$path/deletes"))
-        if (!snapTags.contains(tags)) {
-          cellsSnap = spark.read.parquet(cellsDir)
-            .join(ivfPqDeletes(spark, path), Seq("vec_id"), "left_anti")
-          snapTags = Some(tags)
-        }
+        val cellsSnap = cells()
         val qCells = kmeansProbeCellsInt(
             batch.select(col("query_id").as("vec_id"),
               col("q").as("embedding")),
@@ -4075,7 +3968,7 @@ object Similarity {
     // shares the plain-IVF layout AND its delete lifecycle: probes go
     // through [[ivfProbeIndex]] (tombstone-masked), deletes land via
     // [[deleteIvfIndex]], and a rebuild applies + clears
-    clearTombstones(spark, path)
+    IndexStore.clearTables(spark, path, "deletes")
     val learned = kmeansCentroids(emb, kc, iters)
     val local = learned.select(col("cluster_id"), col("c"))
       .as[(Long, Array[Float])].collect().toSeq // O(K·dims), the broadcast bound

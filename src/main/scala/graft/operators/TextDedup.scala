@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.index.IndexStore
 import graft.tables.Tables
 
 /** Document deduplication suite over the `documents` corpus — the
@@ -618,9 +619,9 @@ object TextDedup {
     * Layout: BOTH tables live together under one committed VERSION
     * directory — `<path>/v<NNNNNN>/{bands,sets}` plus an empty
     * `_COMMITTED` marker file — and every reader resolves the highest
-    * committed version ([[currentIndexDir]]). `bands/` holds the
-    * (doc_id, band, sig) LSH table, one row per distinct shingle set
-    * per band; `sets/` the CHUNKED memberships
+    * committed version ([[IndexStore.currentIndexDir]]). `bands/`
+    * holds the (doc_id, band, sig) LSH table, one row per distinct
+    * shingle set per band; `sets/` the CHUNKED memberships
     * `(doc_id = set rep, hs, chunk_id, members)` the Jaccard verify
     * and pair expansion need — rows bounded by [[ChunkMembers]], so a
     * 10⁸-copy standing boilerplate family is thousands of bounded
@@ -654,287 +655,36 @@ object TextDedup {
     // frames (see the contractToStars NB), which would strand the
     // corpus-sized shingle blocks until GC in the shared harness JVM.
     val ig = groups.cache()
-    installIndexVersion(groups.sparkSession, path) { dir =>
-      ig.select(col("set_rep").as("doc_id"), col("hs"), col("chunk_id"),
-          col("members"))
-        .write.mode("overwrite").parquet(s"$dir/sets")
-      minhashIndex(ig.filter(col("chunk_id") === 0)
-          .select(col("set_rep").as("doc_id"), col("hs")))
-        .select(col("doc_id"), col("band"), col("sig"))
-        .write.mode("overwrite").parquet(s"$dir/bands")
+    IndexStore.installIndexVersion(groups.sparkSession, path) { dir =>
+      landSetsAndBands(ig, dir, "overwrite")
     }
     ig.unpersist()
     ()
   }
 
-  private val IndexVersionRe = """^v(\d{6})$""".r
-
-  private def indexFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Every `v<NNNNNN>` directory under an index root (committed or
-    * not), as (version, path) pairs. */
-  private def indexVersions(spark: SparkSession, path: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val fs = indexFs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      st.getPath.getName match {
-        case IndexVersionRe(n) => Some((n.toLong, st.getPath))
-        case _ => None
-      }
-    }
-  }
-
-  /** The committed (version, dir) pairs under an index root. */
-  private def committedVersions(spark: SparkSession, path: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val fs = indexFs(spark, path)
-    indexVersions(spark, path).filter { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMITTED"))
-    }
-  }
-
-  /** One-shot migration of the PRE-VERSIONING layout (`<path>/{bands,
-    * sets}` directly at the root, no v<NNNNNN>/_COMMITTED): wrap the
-    * two tables into `v000000` and commit it, so standing indexes
-    * persisted by the previous code keep working instead of throwing
-    * "no committed version". Runs only when NO committed version
-    * exists and both legacy tables do; the renames are directory
-    * moves (metadata-only on any real filesystem), and the marker
-    * lands last — interrupted mid-migration, the next call simply
-    * resumes (rename of an already-moved dir is skipped). */
-  private def migrateLegacyLayout(spark: SparkSession, path: String): Unit = {
-    val fs = indexFs(spark, path)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val legacyBands = p(s"$path/bands")
-    val legacySets = p(s"$path/sets")
-    if (committedVersions(spark, path).isEmpty &&
-        (fs.exists(legacyBands) || fs.exists(legacySets))) {
-      val v0 = p(s"$path/v000000")
-      fs.mkdirs(v0)
-      if (fs.exists(legacySets)) fs.rename(legacySets, p(s"$v0/sets"))
-      if (fs.exists(legacyBands)) fs.rename(legacyBands, p(s"$v0/bands"))
-      fs.createNewFile(p(s"$v0/_COMMITTED"))
-      ()
-    } else if (committedVersions(spark, path).isEmpty) {
-      // resume the one window the branch above can't see: a kill AFTER
-      // both legacy renames but BEFORE the marker leaves no legacy dir
-      // and no committed version — previously unresolvable forever, and
-      // the next install's sweep would even delete the migrated data.
-      // An unmarked v000000 whose BOTH tables are complete is
-      // internally consistent wherever it came from (an interrupted
-      // migration moved complete legacy tables; a first build that
-      // died between its last table commit and its marker wrote both
-      // tables in one call), so committing it IS the resume. A table
-      // counts as complete when the committer's _SUCCESS marker is
-      // present, or — ONLY when this job's committer is actually
-      // configured not to write one (marksuccessfuljobs=false, common
-      // on object stores) — when the dir holds parquet part files and
-      // no leftover _temporary staging dir. The config gate matters:
-      // under the DEFAULT config a complete table always has
-      // _SUCCESS, so a parquet-files heuristic would AUTO-COMMIT a
-      // v2-committer partial write (task-committed part files, no
-      // _temporary after job abort) that the _SUCCESS check correctly
-      // leaves for the sweep; with marksuccessfuljobs=false that
-      // residual v2-crash ambiguity is the config owner's documented
-      // trade. A partial build is left for the next install's
-      // post-commit sweep.
-      val v0 = p(s"$path/v000000")
-      val successMarkersOff = !spark.sparkContext.hadoopConfiguration
-        .getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
-      def tableComplete(t: org.apache.hadoop.fs.Path): Boolean =
-        fs.exists(new org.apache.hadoop.fs.Path(t, "_SUCCESS")) ||
-          (successMarkersOff && fs.exists(t) &&
-            !fs.exists(new org.apache.hadoop.fs.Path(t, "_temporary")) &&
-            fs.listStatus(t).exists(_.getPath.getName.endsWith(".parquet")))
-      if (tableComplete(p(s"$v0/sets")) && tableComplete(p(s"$v0/bands")) &&
-          !fs.exists(p(s"$v0/_COMMITTED"))) {
-        fs.createNewFile(p(s"$v0/_COMMITTED"))
-        ()
-      }
-    }
-  }
-
-  /** The live (highest COMMITTED) version directory of a dedup index
-    * — the single resolution point every reader goes through. A
-    * legacy pre-versioning layout is wrapped into v000000 on first
-    * resolution ([[migrateLegacyLayout]]). */
-  private[graft] def currentIndexDir(spark: SparkSession,
-                                     path: String): String = {
-    migrateLegacyLayout(spark, path)
-    val committed = committedVersions(spark, path)
-    require(committed.nonEmpty,
-      s"no committed dedup-index version under $path")
-    committed.maxBy(_._1)._2.toString
+  /** Land chunk rows as a version's `sets/` and their chunk-0 reps'
+    * LSH bands as `bands/` — the one sets+bands landing build, append
+    * and compact share (`mode` "overwrite" fills a fresh version,
+    * "append" grows the live one). Sets land BEFORE bands (the
+    * [[appendDedupIndex]] crash contract). */
+  private def landSetsAndBands(groups: DataFrame, dir: String,
+                               mode: String): Unit = {
+    groups.select(col("set_rep").as("doc_id"), col("hs"), col("chunk_id"),
+        col("members"))
+      .write.mode(mode).parquet(s"$dir/sets")
+    minhashIndex(groups.filter(col("chunk_id") === 0)
+        .select(col("set_rep").as("doc_id"), col("hs")))
+      .select(col("doc_id"), col("band"), col("sig"))
+      .write.mode(mode).parquet(s"$dir/bands")
   }
 
   /** Version-resolving table readers — the public view of the
     * persisted layout; tests and tooling should never hardcode
     * version directories. */
   def dedupIndexSets(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${currentIndexDir(spark, path)}/sets")
+    spark.read.parquet(s"${IndexStore.currentIndexDir(spark, path)}/sets")
   def dedupIndexBands(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${currentIndexDir(spark, path)}/bands")
-
-  /** Write a full index layout under the NEXT version directory, then
-    * commit it with one atomic `_COMMITTED` create and sweep stale
-    * versions (older committed ones and crashed uncommitted
-    * leftovers). The sweep runs strictly AFTER the commit and RETAINS
-    * the immediately-previous committed version: a reader that
-    * resolved [[currentIndexDir]] moments before this install can
-    * still be mid-scan on the previous version's parquet, so its
-    * files must survive this call — the previous version is swept by
-    * the NEXT lifecycle call instead (by which point any scan started
-    * against two installs ago has long finished; a deployment with
-    * genuinely unbounded reader lifetimes would pin versions with
-    * leases). Crash contract: a kill at ANY instant — mid-write,
-    * between the two table writes, before the marker — leaves the old
-    * version fully committed and readable (the marker is the single
-    * commit point), and the orphaned uncommitted directory is swept
-    * here on the next call (spec-pinned for all three windows). */
-  private[graft] def installIndexVersion(spark: SparkSession, path: String)(
-      write: String => Unit): Unit = {
-    migrateLegacyLayout(spark, path)
-    val fs = indexFs(spark, path)
-    val prevCommitted = committedVersions(spark, path)
-      .map(_._1).maxOption
-    val nextN = indexVersions(spark, path).map(_._1).maxOption.getOrElse(-1L) + 1
-    val dir = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path), f"v$nextN%06d")
-    write(dir.toString)
-    require(fs.createNewFile(new org.apache.hadoop.fs.Path(dir, "_COMMITTED")),
-      s"could not commit dedup-index version $dir")
-    indexVersions(spark, path).foreach { case (n, p) =>
-      if (p.getName != dir.getName && !prevCommitted.contains(n)) {
-        fs.delete(p, true); ()
-      }
-    }
-  }
-
-  // ----- identity-addressed batch landing (shared machinery) ----- //
-
-  /** Deterministic identity tag of a row batch: row count + a bit_xor
-    * fold of per-id xxhash64 (order-independent, overflow-free under
-    * ANSI). Append batches carry DISJOINT id sets (the lifecycle
-    * contract: new rows get new ids), so two different batches get
-    * different tags even when their PAYLOADS are identical (a re-crawl
-    * of the same pages — which is exactly why the tag hashes ids, not
-    * payload), while a replay of the same batch reproduces the same
-    * tag. Accidental 64-bit collision between disjoint id sets is the
-    * 2⁻⁶⁴-scale trade for a journal-free idempotent append. One
-    * bounded aggregate over bare ids. */
-  private[operators] def identityBatchTag(rows: DataFrame,
-                                          idCol: String): String = {
-    val r = rows.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    f"n${r.getLong(0)}_h${java.lang.Long.toHexString(
-      if (r.isNullAt(1)) 0L else r.getLong(1))}"
-  }
-
-  /** Land one batch of rows under an IDENTITY-ADDRESSED partition dir
-    * `<tableDir>/batch=<tag>/` — the replay-idempotence mechanism (the
-    * `streaming/Events.idempotentBatchWrite` convention applied to a
-    * standing index table, with [[identityBatchTag]] playing the batch
-    * id). A batch whose directory already carries the committer's
-    * _SUCCESS — or whose tag the table's [[landedBatchTags]] manifest
-    * records as landed in an EARLIER compacted-away version — is
-    * SKIPPED entirely: the common replay touches no files at all, so
-    * in-flight readers of the live version are never disturbed. Only a
-    * replay after a mid-write crash (no _SUCCESS, no manifest row)
-    * rewrites its own directory, and the partial files it clears were
-    * an undercounted batch no reader should trust anyway. Also
-    * migrates the transient pre-batch-dir flat layout (bare part files
-    * at the table root) into `batch=legacy/` first — mixing partition
-    * depths would break Spark's partition discovery for every reader.
-    * After landing, the tag is recorded in the manifest so a later
-    * compaction can carry it forward ([[carryBatchManifest]]). */
-  private[operators] def landIdentityBatch(rows: DataFrame, tableDir: String,
-                                           tag: String): Unit = {
-    val spark = rows.sparkSession
-    migrateFlatBatchLayout(spark, tableDir)
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = new org.apache.hadoop.fs.Path(s"$tableDir/batch=$tag")
-    val landed = landedBatchTags(spark, tableDir)
-    if (!landed.contains(tag) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(batchDir, "_SUCCESS"))) {
-      rows.write.mode("overwrite").parquet(batchDir.toString)
-    }
-    recordBatchTags(spark, tableDir, landed + tag)
-  }
-
-  /** The `_batches` manifest name — one landed tag per line, living at
-    * the table root next to the batch dirs. The manifest exists so a
-    * COMPACTION (which physically merges batch dirs away) can carry
-    * the landed-tag history into the new version: without it, a
-    * replayed append whose first attempt committed BEFORE an
-    * intervening compact would land as a fresh batch dir and silently
-    * double-count — the _SUCCESS probe only protects replays within
-    * one version's lifetime. */
-  private val BatchManifest = "_batches"
-
-  /** The set of batch tags the table's manifest records as landed
-    * (empty when no manifest exists — e.g. a pre-manifest layout,
-    * where the per-dir _SUCCESS probe still covers in-version
-    * replays). */
-  private[operators] def landedBatchTags(spark: SparkSession,
-                                         tableDir: String): Set[String] = {
-    val fs = indexFs(spark, tableDir)
-    val mf = new org.apache.hadoop.fs.Path(tableDir, BatchManifest)
-    if (!fs.exists(mf)) Set.empty
-    else {
-      val in = fs.open(mf)
-      try {
-        scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().map(_.trim).filter(_.nonEmpty).toSet
-      } finally in.close()
-    }
-  }
-
-  /** Rewrite the table's `_batches` manifest with `tags` (temp file +
-    * delete + rename — the crash window between delete and rename
-    * degrades to an absent manifest, which the per-dir _SUCCESS probe
-    * still covers for every replay except the already-rare
-    * replay-after-compact). */
-  private[operators] def recordBatchTags(spark: SparkSession,
-                                         tableDir: String,
-                                         tags: Set[String]): Unit = {
-    val fs = indexFs(spark, tableDir)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(root)) { fs.mkdirs(root); () }
-    val mf = new org.apache.hadoop.fs.Path(root, BatchManifest)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"$BatchManifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(tags.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(mf)) { fs.delete(mf, false); () }
-    require(fs.rename(tmp, mf), s"could not install batch manifest $mf")
-  }
-
-  /** One-shot migration of a flat batch table (part files at the
-    * root — the layout a pre-batch-dir build landed) into
-    * `batch=legacy/`: metadata-only renames, idempotent (nothing to
-    * move on a second call), and required before any batch dir may
-    * coexist — Spark's partition discovery rejects leaf files at two
-    * depths ("conflicting directory structures"). */
-  private[operators] def migrateFlatBatchLayout(spark: SparkSession,
-                                                tableDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) {
-      val flat = fs.listStatus(root).filter(st => st.isFile &&
-        (st.getPath.getName.endsWith(".parquet") ||
-          st.getPath.getName == "_SUCCESS"))
-      if (flat.nonEmpty) {
-        val legacy = new org.apache.hadoop.fs.Path(root, "batch=legacy")
-        fs.mkdirs(legacy)
-        flat.foreach(st => fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(legacy, st.getPath.getName)))
-      }
-    }
-  }
+    spark.read.parquet(s"${IndexStore.currentIndexDir(spark, path)}/bands")
 
   /** Probe a standing dedup index with a fresh increment: shingles and
     * bands are computed ONLY for `probe`; candidates come from
@@ -942,8 +692,14 @@ object TextDedup {
     * reads the standing shingle sets from `sets/`. Semantics equal
     * [[crossCorpusPairs]] — persistence is answer-invariant. */
   def dedupProbeIndex(spark: SparkSession, path: String,
-                      probe: DataFrame): DataFrame = {
-    val live = currentIndexDir(spark, path)
+                      probe: DataFrame): DataFrame =
+    dedupProbeIndexPairs(spark, path, collapseGroups(probe))
+
+  /** [[dedupProbeIndex]] over ALREADY-GROUPED probe chunk rows — the
+    * [[writeDedupIndexPairs]] seam for the probe side. */
+  private def dedupProbeIndexPairs(spark: SparkSession, path: String,
+                                   probeGroups: DataFrame): DataFrame = {
+    val live = IndexStore.currentIndexDir(spark, path)
     // tombstone MASK: every landed delete is excluded from the answer
     // by an anti-join on the emitted index ids — each SURVIVING
     // pair's jaccard is exact (a function of the two shingle SETs,
@@ -957,25 +713,12 @@ object TextDedup {
     // tombstones exist (the anti-join is a no-op); grows with
     // total-ever-deleted ids, never the corpus (deleted-stays-deleted
     // retention — see [[compactDedupIndex]]).
-    crossPairsFrom(collapseGroups(probe),
-      spark.read.parquet(s"$live/bands"),
-      spark.read.parquet(s"$live/sets"),
-      MaxBandBucket)
-      .join(deletesIn(spark, live).select(col("doc_id").as("index_id")),
-        Seq("index_id"), "left_anti")
-      .select(col("probe_id"), col("index_id"), col("jaccard"))
-  }
-
-  /** [[dedupProbeIndex]] over ALREADY-GROUPED probe chunk rows — the
-    * [[writeDedupIndexPairs]] seam for the probe side. */
-  private def dedupProbeIndexPairs(spark: SparkSession, path: String,
-                                   probeGroups: DataFrame): DataFrame = {
-    val live = currentIndexDir(spark, path)
     crossPairsFrom(probeGroups,
       spark.read.parquet(s"$live/bands"),
       spark.read.parquet(s"$live/sets"),
       MaxBandBucket)
-      .join(deletesIn(spark, live).select(col("doc_id").as("index_id")),
+      .join(IndexStore.idsIn(spark, s"$live/deletes", "doc_id")
+          .select(col("doc_id").as("index_id")),
         Seq("index_id"), "left_anti")
       .select(col("probe_id"), col("index_id"), col("jaccard"))
   }
@@ -984,8 +727,8 @@ object TextDedup {
     * delete half of the lifecycle a 100-TB CDC-fed corpus needs
     * (takedowns, re-crawl retractions): the doc ids to remove land as
     * an identity-addressed `deletes/batch=<tag>/` dir inside the LIVE
-    * version ([[landIdentityBatch]] — replay-idempotent like every
-    * landing in this engine), are MASKED out of probe answers
+    * version ([[IndexStore.landTombstones]] — replay-idempotent like
+    * every landing in this engine), are MASKED out of probe answers
     * immediately ([[dedupProbeIndex]]) and physically APPLIED at the
     * next [[compactDedupIndex]] (memberships pruned, fully-deleted
     * sets dropped, bands rebuilt), after which the sets/bands layout
@@ -1000,41 +743,9 @@ object TextDedup {
     * compaction — the same more-exclusion-never-phantom-pairs
     * direction as append's split reps, and gone after compact. */
   def deleteDedupIndex(spark: SparkSession, path: String,
-                       docIds: DataFrame): Unit = {
-    val live = currentIndexDir(spark, path)
-    val ids = docIds.select(col("doc_id")).distinct()
-    landIdentityBatch(ids, s"$live/deletes", identityBatchTag(ids, "doc_id"))
-  }
-
-  /** The landed tombstones of a version dir, as a (doc_id) frame —
-    * empty (same schema) when none have been landed or all were
-    * applied by a compact (a post-compact `deletes/` holds only the
-    * carried manifest, no batch dirs). */
-  private def deletesIn(spark: SparkSession, versionDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$versionDir/deletes")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(dir) && fs.listStatus(dir).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (hasBatches)
-      spark.read.parquet(dir.toString).select(col("doc_id")).distinct()
-    else spark.range(0).select(col("id").as("doc_id"))
-  }
-
-  /** The batch tags physically present as `batch=<tag>/` dirs under a
-    * table root (the [[TrainPrep.compactCdcIndex]] convention: carried
-    * across compacts alongside the manifest, so pre-manifest layouts
-    * keep their history too). Shared with [[TrainPrep]] — one listing
-    * convention, one implementation. */
-  private[operators] def batchDirTags(spark: SparkSession,
-                                      tableDir: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=")
-    }.toSet
-  }
+                       docIds: DataFrame): Unit =
+    IndexStore.landTombstones(docIds,
+      s"${IndexStore.currentIndexDir(spark, path)}/deletes", "doc_id")
 
   /** Append an increment to a standing dedup index — the text twin of
     * [[graft.operators.Similarity.appendIvfIndex]]: shingles, the
@@ -1064,15 +775,9 @@ object TextDedup {
     * [[writeDedupIndexPairs]] seam for the append half. */
   private def appendDedupIndexPairs(spark: SparkSession, path: String,
                                     groups: DataFrame): Unit = {
-    val live = currentIndexDir(spark, path)
+    val live = IndexStore.currentIndexDir(spark, path)
     val ig = groups.cache()
-    ig.select(col("set_rep").as("doc_id"), col("hs"), col("chunk_id"),
-        col("members"))
-      .write.mode("append").parquet(s"$live/sets")
-    minhashIndex(ig.filter(col("chunk_id") === 0)
-        .select(col("set_rep").as("doc_id"), col("hs")))
-      .select(col("doc_id"), col("band"), col("sig"))
-      .write.mode("append").parquet(s"$live/bands")
+    landSetsAndBands(ig, live, "append")
     ig.unpersist()
     ()
   }
@@ -1087,11 +792,11 @@ object TextDedup {
     * is deterministic in doc_id order). The member de-dup also makes
     * compaction the RECOVERY step for a replayed append (see
     * [[appendDedupIndex]]'s crash contract). Installation is one
-    * atomic version commit ([[installIndexVersion]]) — there is no
-    * instant at which merged sets are readable against stale
-    * bands. */
+    * atomic version commit ([[IndexStore.installIndexVersion]]) —
+    * there is no instant at which merged sets are readable against
+    * stale bands. */
   def compactDedupIndex(spark: SparkSession, path: String): Unit = {
-    val live = currentIndexDir(spark, path)
+    val live = IndexStore.currentIndexDir(spark, path)
     // APPLY tombstones: deleted ids drop out of every membership (the
     // anti-join below), and a set whose members all died vanishes from
     // the explode→re-chunk — its band rows are simply never rebuilt.
@@ -1108,17 +813,19 @@ object TextDedup {
     // volume, never corpus-proportional (ids are never reused per the
     // lifecycle contract, so no tombstone can ever be retired by a
     // later legitimate append).
-    val tombstones = deletesIn(spark, live)
-    val carriedDeleteTags = landedBatchTags(spark, s"$live/deletes") ++
-      batchDirTags(spark, s"$live/deletes")
-    // gate the mask on tombstone BATCH DIRS existing (one FS listing
-    // we already paid above): a delete-free index — the common
+    val deletesDir = s"$live/deletes"
+    val tombstoneTags = IndexStore.batchDirTags(spark, deletesDir)
+    val carriedDeleteTags =
+      IndexStore.landedBatchTags(spark, deletesDir) ++ tombstoneTags
+    val tombstones = IndexStore.idsIn(spark, deletesDir, "doc_id")
+    // gate the mask on tombstone BATCH DIRS existing (the FS listing
+    // already paid above): a delete-free index — the common
     // lifecycle — skips the anti-join entirely instead of trusting
     // PropagateEmptyRelation to fold the 0-row side out (measured in
     // SCALING.md's round-20 creep adjudication: the ungated join's
     // cost is ~30 ms, but the gate makes the no-delete compact plan
     // IDENTICAL to the pre-lifecycle r18 shape by construction)
-    val hasTombstoneBatches = batchDirTags(spark, s"$live/deletes").nonEmpty
+    val hasTombstoneBatches = tombstoneTags.nonEmpty
     // no distinct() here: replay-duplicated memberships dedupe inside
     // chunkMembers' bucket aggregate (collect_set — same partition,
     // same bucket), saving a second corpus-width exchange that carried
@@ -1139,18 +846,12 @@ object TextDedup {
         exploded.join(t, Seq("doc_id"), "left_anti")
       } else exploded,
       chunkSize(spark)).cache()
-    installIndexVersion(spark, path) { dir =>
-      merged.select(col("set_rep").as("doc_id"), col("hs"),
-          col("chunk_id"), col("members"))
-        .write.mode("overwrite").parquet(s"$dir/sets")
-      minhashIndex(merged.filter(col("chunk_id") === 0)
-          .select(col("set_rep").as("doc_id"), col("hs")))
-        .select(col("doc_id"), col("band"), col("sig"))
-        .write.mode("overwrite").parquet(s"$dir/bands")
+    IndexStore.installIndexVersion(spark, path) { dir =>
+      landSetsAndBands(merged, dir, "overwrite")
       if (carriedDeleteTags.nonEmpty) {
         tombstones.write.mode("overwrite")
           .parquet(s"$dir/deletes/batch=compacted")
-        recordBatchTags(spark, s"$dir/deletes",
+        IndexStore.recordBatchTags(spark, s"$dir/deletes",
           carriedDeleteTags + "compacted")
       }
     }
@@ -2344,10 +2045,7 @@ object TextDedup {
     * truth). */
   def writeWinnowIndex(standing: DataFrame, path: String,
                        k: Int = WinnowK, w: Int = WinnowW): Unit = {
-    val spark = standing.sparkSession
-    val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = delDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delDir)) { fs.delete(delDir, true); () }
+    IndexStore.clearTables(standing.sparkSession, path, "deletes")
     winnowFingerprints(standing, k, w)
       .select(col("fp"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$path/prints")
@@ -2383,10 +2081,8 @@ object TextDedup {
     * buckets) — and the next [[writeWinnowIndex]] rebuild applies +
     * clears them. */
   def deleteWinnowIndex(spark: SparkSession, path: String,
-                        docIds: DataFrame): Unit = {
-    val ids = docIds.select(col("doc_id")).distinct()
-    landIdentityBatch(ids, s"$path/deletes", identityBatchTag(ids, "doc_id"))
-  }
+                        docIds: DataFrame): Unit =
+    IndexStore.landTombstones(docIds, s"$path/deletes", "doc_id")
 
   /** Probe a landed winnow index: identical semantics to
     * [[winnowProbePairs]] over the SURVIVING standing docs
@@ -2402,7 +2098,8 @@ object TextDedup {
       // cap count — survivor-exact (see deleteWinnowIndex)
       spark.read.parquet(s"$path/prints")
         .select(col("fp"), col("doc_id"))
-        .join(deletesIn(spark, path), Seq("doc_id"), "left_anti")
+        .join(IndexStore.idsIn(spark, s"$path/deletes", "doc_id"),
+          Seq("doc_id"), "left_anti")
         .distinct(),
       cap)
 
@@ -2453,9 +2150,7 @@ object TextDedup {
     // line, the r13 convention)
     val prints = winnowPrints(spark, dir)(docs)
     val standing = prints.filter(col("doc_id") % IncrementMod =!= 0)
-    val delDir = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = delDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(delDir)) { fs.delete(delDir, true); () }
+    IndexStore.clearTables(spark, path, "deletes")
     standing.filter(col("doc_id") % 2 === 1)
       .select(col("fp"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$path/prints")
@@ -2471,7 +2166,8 @@ object TextDedup {
       // survivor-exact (see deleteWinnowIndex)
       spark.read.parquet(s"$path/prints")
         .select(col("fp"), col("doc_id"))
-        .join(deletesIn(spark, path), Seq("doc_id"), "left_anti")
+        .join(IndexStore.idsIn(spark, s"$path/deletes", "doc_id"),
+          Seq("doc_id"), "left_anti")
         .distinct(),
       WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions._
+import graft.index.IndexStore
 import graft.tables.Tables
 
 /** Training-batch preparation over the `documents` corpus — the stage
@@ -323,38 +324,26 @@ object TrainPrep {
     * one `fps/` table ([[cdcFpStats]]' unfiltered per-fp rows) under a
     * committed `v<NNNNNN>/` directory with the same atomic
     * `_COMMITTED` marker, resolver, and crash-window sweep as the
-    * dedup index ([[TextDedup.installIndexVersion]] is shared
-    * machinery, not a copy). Built ONCE per corpus snapshot; every
+    * dedup index ([[graft.index.IndexStore.installIndexVersion]]).
+    * Fp batches land identity-addressed under `fps/batch=<tag>/`
+    * ([[graft.index.IndexStore.landIdentityBatch]]: replay-idempotent
+    * via the per-dir _SUCCESS probe plus the `_batches` manifest that
+    * survives compaction). Built ONCE per corpus snapshot; every
     * probe batch and streaming gate then reads the O(|distinct fps|)
     * table instead of re-chunking 100 TB of standing text. */
   def writeCdcIndex(docs: DataFrame, path: String,
                     divisor: Int = CdcDivisor): Unit = {
-    TextDedup.installIndexVersion(docs.sparkSession, path) { dir =>
-      landCdcBatch(cdcFpStats(docs, divisor), s"$dir/fps",
-        cdcBatchTag(docs))
+    IndexStore.installIndexVersion(docs.sparkSession, path) { dir =>
+      IndexStore.landIdentityBatch(cdcFpStats(docs, divisor), s"$dir/fps",
+        IndexStore.identityBatchTag(docs, "doc_id"))
     }
   }
-
-  /** Deterministic identity tag of a document batch — the shared
-    * [[TextDedup.identityBatchTag]] over `doc_id` (see there for the
-    * id-not-payload rationale and the collision trade). */
-  private def cdcBatchTag(docs: DataFrame): String =
-    TextDedup.identityBatchTag(docs, "doc_id")
-
-  /** Land one batch of fp statistics under an identity-addressed
-    * `fps/batch=<tag>/` dir — the shared
-    * [[TextDedup.landIdentityBatch]] machinery (replay-idempotence via
-    * the per-dir _SUCCESS probe PLUS the `_batches` manifest that
-    * survives compaction; flat-layout migration included). */
-  private def landCdcBatch(stats: DataFrame, fpsDir: String,
-                           tag: String): Unit =
-    TextDedup.landIdentityBatch(stats, fpsDir, tag)
 
   /** Append an increment's fp statistics to the standing CDC index:
     * chunking runs ONLY over `newDocs`, and their per-fp rows land as
     * a new identity-addressed batch directory inside the current
-    * committed version's `fps/` ([[landCdcBatch]]) — the standing rows
-    * are never rewritten or re-read. A fp present in both sides
+    * committed version's `fps/` — the standing rows are never
+    * rewritten or re-read. A fp present in both sides
     * temporarily holds two rows; every reader goes through
     * [[cdcIndexStats]]' merge, so answers are unchanged.
     * [[compactCdcIndex]] merges the rows away physically. Crash
@@ -365,9 +354,9 @@ object TrainPrep {
     * any died append is simply running it again. */
   def appendCdcIndex(spark: SparkSession, path: String, newDocs: DataFrame,
                      divisor: Int = CdcDivisor): Unit = {
-    val live = TextDedup.currentIndexDir(spark, path)
-    landCdcBatch(cdcFpStats(newDocs, divisor), s"$live/fps",
-      cdcBatchTag(newDocs))
+    val live = IndexStore.currentIndexDir(spark, path)
+    IndexStore.landIdentityBatch(cdcFpStats(newDocs, divisor), s"$live/fps",
+      IndexStore.identityBatchTag(newDocs, "doc_id"))
   }
 
   /** Land a TOMBSTONE batch against the standing CDC index — the
@@ -392,8 +381,8 @@ object TrainPrep {
     * {A} then {A, B}) would double-subtract its contribution,
     * silently corrupting merged counts for fps still carried by live
     * docs. So every takedown doc id is also recorded in a
-    * `deleted_ids/` ledger ([[cdcDeletedIds]] — carried across
-    * compacts like the dedup family's tombstones), the incoming batch
+    * `deleted_ids/` ledger (carried across compacts like the dedup
+    * family's tombstones), the incoming batch
     * de-duplicates internally and anti-joins the ledger, and only the
     * FRESH docs' stats land. The stats batch lands BEFORE the ledger
     * batch: a crash between the two replays safely (the ledger still
@@ -408,7 +397,7 @@ object TrainPrep {
     * at absent rather than surfacing a negative row. */
   def deleteCdcIndex(spark: SparkSession, path: String, docs: DataFrame,
                      divisor: Int = CdcDivisor): Unit = {
-    val live = TextDedup.currentIndexDir(spark, path)
+    val live = IndexStore.currentIndexDir(spark, path)
     // persisted (and released below): THREE consumers — the identity
     // tag aggregate, the negated-stats landing and the id-ledger
     // landing — each re-ran the dropDuplicates exchange over the full
@@ -416,37 +405,24 @@ object TrainPrep {
     // (guide §5: reuse the expensive intermediate; the persist is
     // operator-scoped, built and unpersisted inside this call)
     val fresh = docs.dropDuplicates("doc_id")
-      .join(cdcDeletedIds(spark, live), Seq("doc_id"), "left_anti")
+      .join(IndexStore.idsIn(spark, s"$live/deleted_ids", "doc_id"),
+        Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the identity tag's n<count>_ prefix doubles as the emptiness
       // check — one action instead of an isEmpty job + a tag job
-      val idTag = cdcBatchTag(fresh)
+      val idTag = IndexStore.identityBatchTag(fresh, "doc_id")
       if (!idTag.startsWith("n0_")) {
         val tag = s"del_$idTag"
-        landCdcBatch(
+        IndexStore.landIdentityBatch(
           cdcFpStats(fresh, divisor)
             .select(col("fp"), (-col("n_docs")).as("n_docs"),
               (-col("n_occurrences")).as("n_occurrences"), col("n_tokens")),
           s"$live/fps", tag)
-        TextDedup.landIdentityBatch(fresh.select(col("doc_id")),
+        IndexStore.landIdentityBatch(fresh.select(col("doc_id")),
           s"$live/deleted_ids", tag)
       }
     } finally { fresh.unpersist(); () }
-  }
-
-  /** The deleted-doc-id ledger of a standing CDC index — the set that
-    * makes [[deleteCdcIndex]] set-semantic under overlapping takedown
-    * batches. Tombstone-sized (one long per deleted doc), read once
-    * per delete/compact. */
-  private def cdcDeletedIds(spark: SparkSession, liveDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$liveDir/deleted_ids")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(dir) && fs.listStatus(dir).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (hasBatches)
-      spark.read.parquet(dir.toString).select(col("doc_id")).distinct()
-    else spark.range(0).select(col("id").as("doc_id"))
   }
 
   /** The merged per-fp statistics of a standing CDC index — the
@@ -456,10 +432,8 @@ object TrainPrep {
     * for the negation). Fully-deleted fps (merged count 0) read as
     * absent. */
   def cdcIndexStats(spark: SparkSession, path: String): DataFrame = {
-    val fps = s"${TextDedup.currentIndexDir(spark, path)}/fps"
-    TextDedup.migrateFlatBatchLayout(spark, fps)
     spark.read
-      .parquet(fps)
+      .parquet(s"${IndexStore.currentIndexDir(spark, path)}/fps")
       // the batch partition column is landing provenance, not data
       .select(col("fp"), col("n_docs"), col("n_occurrences"),
         col("n_tokens"))
@@ -494,24 +468,25 @@ object TrainPrep {
   def compactCdcIndex(spark: SparkSession, path: String): Unit = {
     // reads the CURRENT version, writes the NEXT — never in-place
     // (installIndexVersion's sweep retains the version being read)
-    val live = TextDedup.currentIndexDir(spark, path)
+    val live = IndexStore.currentIndexDir(spark, path)
     val liveFps = s"$live/fps"
-    val carried = TextDedup.landedBatchTags(spark, liveFps) ++
-      TextDedup.batchDirTags(spark, liveFps)
-    val deleted = cdcDeletedIds(spark, live)
+    val carried = IndexStore.landedBatchTags(spark, liveFps) ++
+      IndexStore.batchDirTags(spark, liveFps)
+    val deleted = IndexStore.idsIn(spark, s"$live/deleted_ids", "doc_id")
     val hasDeleted = !deleted.isEmpty
-    TextDedup.installIndexVersion(spark, path) { dir =>
+    IndexStore.installIndexVersion(spark, path) { dir =>
       // a compacted version holds exactly one batch in a FRESH dir, so
       // a constant tag suffices (no conflation surface)
-      landCdcBatch(cdcIndexStats(spark, path), s"$dir/fps", "compacted")
-      TextDedup.recordBatchTags(spark, s"$dir/fps", carried + "compacted")
+      IndexStore.landIdentityBatch(cdcIndexStats(spark, path), s"$dir/fps",
+        "compacted")
+      IndexStore.recordBatchTags(spark, s"$dir/fps", carried + "compacted")
       // the deleted-doc-id ledger carries across versions
       // (deleted-stays-deleted, the dedup-family retention): without
       // the carry, a post-compact re-submission of an old takedown
       // list would re-subtract docs whose stats the compact already
       // dropped
       if (hasDeleted)
-        TextDedup.landIdentityBatch(deleted, s"$dir/deleted_ids",
+        IndexStore.landIdentityBatch(deleted, s"$dir/deleted_ids",
           "compacted")
     }
   }

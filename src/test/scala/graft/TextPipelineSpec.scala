@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.index.IndexStore
 import graft.operators.{Multimodal, Similarity, TextDedup, TextStats}
 
 /** LLM-data-pipeline operators on small planted fixtures. */
@@ -264,7 +265,7 @@ class TextPipelineSpec extends SparkSpec {
       // replayed delete: identity-addressed no-op (answers + batch dirs)
       TextDedup.deleteDedupIndex(spark, path, Seq(2L).toDF("doc_id"))
       assert(rows(path) === masked)
-      val delDirs = new java.io.File(TextDedup.currentIndexDir(spark, path)
+      val delDirs = new java.io.File(IndexStore.currentIndexDir(spark, path)
           .stripPrefix("file:"), "deletes")
         .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
       assert(delDirs.size === 1, s"replayed delete landed twice: $delDirs")
@@ -278,7 +279,7 @@ class TextPipelineSpec extends SparkSpec {
       // replayed DELETE after the compact consolidated its batch away:
       // the carried manifest makes it a no-op (no fresh batch dir)
       TextDedup.deleteDedupIndex(spark, path, Seq(2L).toDF("doc_id"))
-      val delDirs2 = new java.io.File(TextDedup.currentIndexDir(spark, path)
+      val delDirs2 = new java.io.File(IndexStore.currentIndexDir(spark, path)
           .stripPrefix("file:"), "deletes")
         .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
       assert(delDirs2 === Seq("batch=compacted"),
@@ -311,21 +312,13 @@ class TextPipelineSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .select("probe_id", "index_id", "jaccard")
         .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
-      def versions() = new java.io.File(path).listFiles()
+      def versions(p: String = path) = new java.io.File(p).listFiles()
         .map(_.getName).filter(_.matches("v\\d{6}")).sorted.toSeq
-      def committed(v: String) =
-        new java.io.File(s"$path/$v/_COMMITTED").exists()
-      TextDedup.writeDedupIndex(p1, path)
-      val v0 = TextDedup.currentIndexDir(spark, path)
-      val baseline = rows(TextDedup.dedupProbeIndex(spark, path, probe))
-      assert(baseline.nonEmpty, "vacuous: probe must hit the standing side")
-      // simulate a kill in each window of the NEXT install: before any
-      // table lands, after sets/, and after sets/ + bands/ (marker never
-      // created) — the reader must keep resolving the old version with
-      // identical probe answers after every crash
-      (0 to 2).foreach { after =>
+      def committed(v: String, p: String = path) =
+        new java.io.File(s"$p/$v/_COMMITTED").exists()
+      def crashInstall(p: String, after: Int): Unit =
         intercept[RuntimeException] {
-          TextDedup.installIndexVersion(spark, path) { d =>
+          IndexStore.installIndexVersion(spark, p) { d =>
             if (after >= 1)
               Seq((1L, "x")).toDF("doc_id", "hs").write.parquet(s"$d/sets")
             if (after >= 2)
@@ -333,7 +326,17 @@ class TextPipelineSpec extends SparkSpec {
             throw new RuntimeException("simulated crash")
           }
         }
-        assert(TextDedup.currentIndexDir(spark, path) === v0,
+      TextDedup.writeDedupIndex(p1, path)
+      val v0 = IndexStore.currentIndexDir(spark, path)
+      val baseline = rows(TextDedup.dedupProbeIndex(spark, path, probe))
+      assert(baseline.nonEmpty, "vacuous: probe must hit the standing side")
+      // simulate a kill in each window of the NEXT install: before any
+      // table lands, after sets/, and after sets/ + bands/ (marker never
+      // created) — the reader must keep resolving the old version with
+      // identical probe answers after every crash
+      (0 to 2).foreach { after =>
+        crashInstall(path, after)
+        assert(IndexStore.currentIndexDir(spark, path) === v0,
           s"crash window $after moved the live version")
         assert(rows(TextDedup.dedupProbeIndex(spark, path, probe)) === baseline,
           s"crash window $after changed probe answers")
@@ -348,7 +351,7 @@ class TextPipelineSpec extends SparkSpec {
       val afterBuild = versions()
       assert(afterBuild.size === 2, s"expected {v0, new}, got $afterBuild")
       assert(afterBuild.contains(v0.split('/').last), "previous version swept too early")
-      assert(afterBuild.forall(committed), "orphans must be gone")
+      assert(afterBuild.forall(committed(_)), "orphans must be gone")
       val full = rows(TextDedup.dedupProbeIndex(spark, path, probe))
       // one MORE install finally sweeps v0
       TextDedup.writeDedupIndex(docs, path)
@@ -357,70 +360,21 @@ class TextPipelineSpec extends SparkSpec {
       assert(!afterSecond.contains(v0.split('/').last),
         "two-installs-ago version must now be swept")
       assert(rows(TextDedup.dedupProbeIndex(spark, path, probe)) === full)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  test("legacy pre-versioning index layout migrates to v000000 on first resolution") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-legacy")
-    try {
-      val path = s"$dir/idx"
-      val p1 = docs.filter(col("doc_id").isin(1L, 3L))
-      val probe = Seq((10L, base + " tonight")).toDF("doc_id", "text")
-      def rows(df: org.apache.spark.sql.DataFrame) = df
-        .select("probe_id", "index_id", "jaccard")
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
-      TextDedup.writeDedupIndex(p1, path)
-      val baseline = rows(TextDedup.dedupProbeIndex(spark, path, probe))
-      // reconstruct the legacy layout: tables at the root, no versions
-      // (currentIndexDir returns a hadoop URI — strip the file scheme)
-      val cur = new java.io.File(
-        TextDedup.currentIndexDir(spark, path).stripPrefix("file:"))
-      assert(new java.io.File(cur, "sets")
-        .renameTo(new java.io.File(s"$path/sets")))
-      assert(new java.io.File(cur, "bands")
-        .renameTo(new java.io.File(s"$path/bands")))
-      org.apache.commons.io.FileUtils.deleteDirectory(cur)
-      // first resolution migrates and probes identically; append keeps
-      // working against the migrated layout
-      assert(rows(TextDedup.dedupProbeIndex(spark, path, probe)) === baseline)
-      assert(TextDedup.currentIndexDir(spark, path).endsWith("v000000"))
-      TextDedup.appendDedupIndex(spark, path,
-        docs.filter(col("doc_id").isin(2L, 4L, 5L)))
-      val appended = rows(TextDedup.dedupProbeIndex(spark, path, probe))
-      assert(appended.map(_._2).toSet === Set(1L, 2L, 4L))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  test("migration killed after its renames but before its marker still resumes") {
-    // the one crash window the legacy-dir guard can't see: both tables
-    // already renamed into v000000, no _COMMITTED yet, no legacy dirs
-    // left — the next resolution must commit the complete unmarked
-    // version instead of throwing forever (or worse, letting the next
-    // install's sweep delete the migrated data)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-crashmig")
-    try {
-      val path = s"$dir/idx"
-      val p1 = docs.filter(col("doc_id").isin(1L, 3L))
-      val probe = Seq((10L, base + " tonight")).toDF("doc_id", "text")
-      def rows(df: org.apache.spark.sql.DataFrame) = df
-        .select("probe_id", "index_id", "jaccard")
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
-      TextDedup.writeDedupIndex(p1, path)
-      val baseline = rows(TextDedup.dedupProbeIndex(spark, path, probe))
-      // simulate the interrupted migration's end state: a complete
-      // v000000 (both tables with their _SUCCESS) whose marker is gone
-      val cur = new java.io.File(
-        TextDedup.currentIndexDir(spark, path).stripPrefix("file:"))
-      assert(new java.io.File(cur, "_COMMITTED").delete())
-      assert(rows(TextDedup.dedupProbeIndex(spark, path, probe)) === baseline,
-        "resolution must resume the complete unmarked version")
-      assert(new java.io.File(cur, "_COMMITTED").exists(),
-        "the resume must have committed v000000")
-      // and the lifecycle keeps working on top of the resumed version
-      TextDedup.appendDedupIndex(spark, path,
-        docs.filter(col("doc_id").isin(2L, 4L, 5L)))
-      assert(rows(TextDedup.dedupProbeIndex(spark, path, probe))
-        .map(_._2).toSet === Set(1L, 2L, 4L))
+      // a FIRST install that dies after both tables land: the unmarked
+      // version is never served, and the next install commits a fresh
+      // version and sweeps the orphan
+      val fresh = s"$dir/fresh"
+      crashInstall(fresh, 2)
+      assert(versions(fresh) === Seq("v000000"))
+      val unserved = intercept[IllegalArgumentException] {
+        TextDedup.dedupProbeIndex(spark, fresh, probe)
+      }
+      assert(unserved.getMessage.contains("no committed dedup-index version"))
+      TextDedup.writeDedupIndex(p1, fresh)
+      assert(versions(fresh) === Seq("v000001"),
+        "the orphan first install must be swept")
+      assert(committed("v000001", fresh))
+      assert(rows(TextDedup.dedupProbeIndex(spark, fresh, probe)) === baseline)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
@@ -1873,24 +1827,62 @@ class TextPipelineSpec extends SparkSpec {
     assert(probed > 0, "probe over the compacted index must still answer")
   }
 
-  test("IndexJob lifecycle: build, append+compact, probe == all-at-once answers") {
+  test("IVF index lifecycle: build, append+compact, probe == all-at-once answers") {
     import graft.operators.Similarity
     val emb = graft.tables.Tables.embeddings(spark, sfSmoke)
     val isNew = col("vec_id") % Similarity.IvfAppendMod === Similarity.IvfAppendRem &&
       !Similarity.isCentroidId(col("vec_id"))
-    val cfg = Similarity.IndexConfig(
-      path = TextDedup.spillPath(spark, "spec_ivf_job"))
-    Similarity.IndexJob.build(emb.filter(!isNew), cfg)
-    Similarity.IndexJob.append(spark, emb.filter(isNew), cfg)
+    val path = TextDedup.spillPath(spark, "spec_ivf_job")
+    Similarity.writeIvfIndex(emb.filter(!isNew), path)
+    Similarity.appendIvfIndex(spark, path, emb.filter(isNew))
+    Similarity.compactIvfIndex(spark, path)
     val queries = emb.filter(Similarity.isQueryId(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    val viaJob = Similarity.IndexJob.probe(spark, queries, cfg)
+    val viaJob = Similarity.ivfProbeIndex(spark, path, queries, k = 3, nprobe = 2)
       .orderBy("query_id", "rk")
       .as[(Long, Long, Long, Double)].collect().toSeq
     val allAtOnce = Similarity.qSimilarIvf2(spark, sfSmoke)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(viaJob === allAtOnce,
       "the scheduled lifecycle must answer exactly like the all-at-once build")
+  }
+
+  test("localized: an oversized frame trips the row cap without a whole-frame collect") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+    val cap = Similarity.LocalizedRowCap
+    // ONE partition of 4x the cap random longs (incompressible: at
+    // least 8 bytes per row on the wire), so a whole-frame collect
+    // ships >= 32 bytes per cap row back from its task before any check
+    val big = spark.range(0L, 4L * cap, 1L, 1)
+      .select((rand(7) * 9.2e18).cast("long").as("v"))
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) resultBytes.addAndGet(e.taskMetrics.resultSize)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val err = intercept[IllegalArgumentException] {
+        Similarity.localized(spark, big)
+      }
+      assert(err.getMessage.contains(s"(cap $cap)"))
+      // a marker job: listener events arrive in order, so once its end
+      // is seen every task of the localized collect has been counted
+      sc.setJobGroup("localized-spec-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup("localized-spec-marker").max
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!ended.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(ended.contains(marker), "listener never saw the marker job end")
+      // an UnsafeRow of one long is 16 bytes + a 4-byte length prefix,
+      // so cap + 1 rows ship at most ~20 bytes each
+      assert(resultBytes.get() < 24L * (cap + 1),
+        s"${resultBytes.get()} result bytes were collected: more than cap + 1 rows")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("learned k-means index persists through the same layout and probes identically") {
@@ -2911,12 +2903,13 @@ class TextPipelineSpec extends SparkSpec {
     val isNew = col("vec_id") % 3 === 1
     // p2 shares p1's codebook (the append contract: codes are only
     // comparable under ONE frozen codebook) and lands the standing
-    // codes first, then the increment through the append path
+    // codes first (as one batch dir — every table under codes/ is a
+    // batch=<tag>/ layout), then the increment through the append path
     val cbStanding = spark.read.parquet(s"$p1/codebook")
     cbStanding.write.mode("overwrite").parquet(s"$p2/codebook")
     pqEncode(emb.filter(!isNew), cbStanding)
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .write.mode("overwrite").parquet(s"$p2/codes")
+      .write.mode("overwrite").parquet(s"$p2/codes/batch=standing")
     appendPqIndex(spark, p2, emb.filter(isNew))
     def landed(p: String) = spark.read.parquet(s"$p/codes")
       .select("vec_id", "codes").as[(Long, Seq[Long])].collect()
