@@ -70,8 +70,4 @@ object Jobs {
       }
     FullText.search(scopedCorpus, FullText.termsTable(spark, cfg.fullTextTerms))
   }
-
-  /** The reference's save-name convention for pipeline outputs. */
-  def resultPath(outDir: String, cfg: JobConfig, runId: String): String =
-    s"$outDir/${runId}_${cfg.saveName}"
 }

@@ -218,6 +218,15 @@ private[graft] object IndexStore {
       spark.read.parquet(dir).select(col(idCol)).distinct()
     else spark.range(0).select(col("id").as(idCol))
 
+  /** The serving view of `<path>/<table>`: its rows minus the ids
+    * landed under `<path>/deletes` (anti-joined on `idCol`; a no-op
+    * when none are landed). The physical table keeps masked rows until
+    * the family's next rebuild applies them. */
+  def liveRows(spark: SparkSession, path: String, table: String,
+               idCol: String): DataFrame =
+    spark.read.parquet(s"$path/$table")
+      .join(idsIn(spark, s"$path/deletes", idCol), Seq(idCol), "left_anti")
+
   /** Delete the named tables under an index root, where present — the
     * rebuild step every unversioned family shares (a rebuild's corpus
     * is the post-takedown truth, so its tombstones go with the rows). */

@@ -67,14 +67,20 @@ object Similarity {
     emb.filter(isQueryId(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("q"))
 
-  def topK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = emb.crossJoin(broadcast(queries))
+  def topK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
+        cos(col("q"), col("embedding")).as("cosine")), k)
+
+  /** The one top-k rank every search shares: per query, the `k` best
+    * scored `(query_id, vec_id, cosine)` candidates by (cosine desc,
+    * vec_id asc), emitted as `(query_id, vec_id, rk, cosine)`. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
+    scored
+      .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
         col("cosine"))
@@ -419,24 +425,26 @@ object Similarity {
   def annTopK(emb: DataFrame, k: Int): DataFrame = {
     val idx = bandedIndex(emb)
     // O(MaxQueries · SigBands) rows — bounded broadcast
-    val qIdx = idx.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("band"), col("sig"))
-    // a pair sharing several bands must score once: distinct BEFORE the
-    // (wider) embedding join, on id-only rows
-    val cand = idx.join(broadcast(qIdx), Seq("band", "sig"))
+    lshTopK(idx, idx.filter(isQueryId(col("vec_id")))
+      .select(col("vec_id").as("query_id"), col("band"), col("sig")), emb, k)
+  }
+
+  /** The LSH candidate re-score every banded search shares: query
+    * signature rows `(query_id, band, sig)` meet the index rows
+    * `(vec_id, band, sig)` on (band, sig), then the candidates are
+    * scored by exact cosine against `emb` and ranked. A pair sharing
+    * several bands must score once: distinct BEFORE the (wider)
+    * embedding join, on id-only rows. */
+  private def lshTopK(idx: DataFrame, qSigs: DataFrame, emb: DataFrame,
+                      k: Int): DataFrame = {
+    val cand = idx.join(broadcast(qSigs), Seq("band", "sig"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
-    val scored = cand
+    rankTopK(cand
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(broadcast(queryVectors(emb)), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
+        cos(col("q"), col("embedding")).as("cosine")), k)
   }
 
   def qSimilarAnn(spark: SparkSession, dir: String): DataFrame = {
@@ -493,14 +501,10 @@ object Similarity {
     val recQueries = rec
       .filter(isQueryId(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("recon").as("qv"))
-    val scored = rec.crossJoin(broadcast(recQueries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.cosineSim(col("qv"), col("recon")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val approx = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val approx = rankTopK(rec.crossJoin(broadcast(recQueries))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          graft.functions.cosineSim(col("qv"), col("recon")).as("cosine")), k)
       .select(col("query_id"), col("vec_id"))
     val exact = topK(emb, queryVectors(emb), k)
       .select(col("query_id"), col("vec_id"))
@@ -631,23 +635,9 @@ object Similarity {
     val idx = bandedIndex(emb)
     val probeSigs = array(col("sig") +:
       (0 until PlanesPerBand).map(j => col("sig").bitwiseXOR(lit(1 << j))): _*)
-    val qProbes = idx.filter(isQueryId(col("vec_id")))
+    lshTopK(idx, idx.filter(isQueryId(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("band"),
-        explode(probeSigs).as("sig"))
-    val cand = idx.join(broadcast(qProbes), Seq("band", "sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val scored = cand
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(queryVectors(emb)), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
+        explode(probeSigs).as("sig")), emb, k)
   }
 
   def qSimilarAnn2(spark: SparkSession, dir: String): DataFrame = {
@@ -675,39 +665,18 @@ object Similarity {
     id % IvfCentroidEvery === 0 &&
       id < IvfCentroidEvery.toLong * MaxCentroids
 
-  /** Every vector's centroids ranked by cosine (rank 1 = its cell;
-    * ranks ≤ nprobe = the cells a query probes). One broadcast of the
-    * O([[MaxCentroids]]) centroid set, one narrow pass over the corpus
-    * (O(N·K) assignment work, linear in the corpus). */
-  def ivfAssignments(emb: DataFrame): DataFrame =
-    ivfAssignmentsFor(emb, isCentroidId(col("vec_id")))
+  /** The fixed-stride centroid set as `(centroid_id, c)` — at most
+    * [[MaxCentroids]] rows at any corpus size. */
+  private def strideCentroids(emb: DataFrame): DataFrame =
+    emb.filter(isCentroidId(col("vec_id")))
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("c"))
 
-  /** The assignment pass over an arbitrary centroid-selection
-    * predicate — the fixed-stride demo quantizer's spelling. */
-  private def ivfAssignmentsFor(emb: DataFrame,
-                                isCentroid: Column): DataFrame =
-    ivfAssignmentsFrom(emb,
-      emb.filter(isCentroid)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("c")))
-
-  /** The assignment pass against an explicit `(centroid_id, c)` frame
-    * — shared by the fixed-stride demo quantizer and the rank-selected
-    * [[autoCentroidParams]]-sized production path. */
-  private def ivfAssignmentsFrom(emb: DataFrame,
-                                 centroids: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist").desc, col("centroid_id"))
-    emb.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cos(col("embedding"), col("c")).as("dist"))
-      .withColumn("crk", row_number().over(w))
-  }
-
+  /** Every vector placed into its nearest fixed-stride cell: one
+    * broadcast of the O([[MaxCentroids]]) centroid set, one narrow
+    * pass over the corpus (O(N·K) assignment work, linear in the
+    * corpus). */
   def ivfCells(emb: DataFrame): DataFrame =
-    assignBestByCos(emb,
-      emb.filter(isCentroidId(col("vec_id")))
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("c")),
-      "centroid_id", "c", "cell")
+    assignBestByCos(emb, strideCentroids(emb), "centroid_id", "c", "cell")
 
   /** Auto-sized centroid parameters (stride, count) for a corpus of
     * `n` vectors: C = ⌈√n⌉ centroids at stride ⌊n/C⌋ — the SemDeDup
@@ -891,10 +860,9 @@ object Similarity {
     * less assignment work — and no downstream schema change: the
     * output is [[ivfCellsAuto]]'s (vec_id, embedding, cell), so it
     * composes with [[semanticDedupFrom]] and the probed searches
-    * unchanged. Exchange audit: step 2's window shuffles on vec_id
-    * ONCE; step 3's broadcast join preserves that clustering, so its
-    * window adds a sort but NO second exchange — two-level costs one
-    * extra bounded fine-map job, not an extra corpus shuffle.
+    * unchanged. Exchange audit: steps 1–3 are map-only cosine
+    * argmaxes ([[assignTwoLevel]]) — two-level costs bounded
+    * centroid-row aggregates, never a corpus shuffle.
     *
     * Fully deterministic (every rank carries a (dist DESC, id ASC)
     * tie-break), so the DuckDB oracle replays the identical chain —
@@ -939,14 +907,16 @@ object Similarity {
     val fine = sel(stride, c)
     val coarse = sel(span, g)
       .select(col("centroid_id").as("coarse_id"), col("c").as("gv"))
-    val wf = Window.partitionBy(col("centroid_id"))
-      .orderBy(col("gdist").desc, col("coarse_id"))
-    val fmap = fine.crossJoin(broadcast(coarse))
-      .select(col("centroid_id"), col("c"), col("coarse_id"),
-        cos(col("c"), col("gv")).as("gdist"))
-      .withColumn("grk", row_number().over(wf))
-      .filter(col("grk") === 1)
-      .select(col("coarse_id"), col("centroid_id"), col("c"))
+    // each fine centroid's owner: the same map-only coarse argmax
+    // every vector pays in [[assignTwoLevel]]. A fine centroid with a
+    // null component has no owner (and could never win a refine
+    // argmax), so it stays out of the map.
+    val fmap = assignBestByCos(
+        fine.select(col("centroid_id").as("vec_id"), col("c").as("embedding")),
+        coarse, "coarse_id", "gv", "coarse_id")
+      .filter(col("coarse_id").isNotNull)
+      .select(col("coarse_id"), col("vec_id").as("centroid_id"),
+        col("embedding").as("c"))
     (coarse, fmap)
   }
 
@@ -981,8 +951,26 @@ object Similarity {
     vectors.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(centsRowFrom(cents, centId, centVec)))
       .select(col("vec_id"), col("embedding"),
-        element_at(call_function("cos_top_cells",
-          col("embedding"), col("_cents"), lit(1)), 1).as(outCol))
+        element_at(cosTopCells(col("embedding"), col("_cents"), 1), 1)
+          .as(outCol))
+  }
+
+  /** The one cosine argmax: the ids of the `n` best centroids of
+    * `cents` (`array<struct<cid, cv>>`) for `vec`, by (cosine desc,
+    * cid asc) — [[graft.expressions.CosTopCells]]. */
+  private def cosTopCells(vec: Column, cents: Column, n: Int): Column =
+    call_function("cos_top_cells", vec, cents, lit(n))
+
+  /** Query→cell probe lists: each `(query_id, q)` row paired with its
+    * `nprobe` nearest `(centroid_id, c)` centroids, one `(query_id, q,
+    * cell)` row per probed cell — the map-only top-n twin of
+    * [[assignBestByCos]] that every flat-centroid probe shares. */
+  private def probeCells(queries: DataFrame, centroids: DataFrame,
+                         nprobe: Int): DataFrame = {
+    ensureRegistered(queries.sparkSession)
+    queries.crossJoin(broadcast(centsRowFrom(centroids, "centroid_id", "c")))
+      .select(col("query_id"), col("q"),
+        explode(cosTopCells(col("q"), col("_cents"), nprobe)).as("cell"))
   }
 
   /** Coarse-then-refine placement of a (vec_id, embedding) frame into
@@ -994,7 +982,18 @@ object Similarity {
     * zero sorts where the window form paid an N×G-row exchange plus
     * two corpus-scale sorts (every row carrying the embedding). */
   private def assignTwoLevel(vectors: DataFrame, coarse: DataFrame,
-                             fmap: DataFrame): DataFrame = {
+                             fmap: DataFrame): DataFrame =
+    twoLevelTopCells(vectors, coarse, fmap, 1)
+      .select(col("vec_id"), col("embedding"),
+        element_at(col("cells"), 1).as("cell"))
+
+  /** The two-level placement with the `n` best refine cells as
+    * `cells: array<long>` (n = nprobe: the cells a multi-probe query
+    * visits; fine candidates come from the vector's best COARSE cell
+    * only — the standard two-level multi-probe trade, same recall
+    * reasoning as [[ivfCellsTwoLevel]]). */
+  private def twoLevelTopCells(vectors: DataFrame, coarse: DataFrame,
+                               fmap: DataFrame, n: Int): DataFrame = {
     ensureRegistered(vectors.sparkSession)
     val fmapRow = fmap
       .groupBy(col("coarse_id"))
@@ -1005,55 +1004,42 @@ object Similarity {
     assignBestByCos(vectors, coarse, "coarse_id", "gv", "coarse_id")
       .crossJoin(broadcast(fmapRow))
       .select(col("vec_id"), col("embedding"),
-        element_at(call_function("cos_top_cells",
-          col("embedding"), element_at(col("_fmap"), col("coarse_id")),
-          lit(1)), 1).as("cell"))
+        cosTopCells(col("embedding"),
+          element_at(col("_fmap"), col("coarse_id")), n).as("cells"))
   }
 
-  /** The same placement with the refine RANK exposed (crk ≤ nprobe =
-    * the cells a multi-probe query visits; fine candidates come from
-    * the vector's rank-1 COARSE cell only — the standard two-level
-    * multi-probe trade, same recall reasoning as [[ivfCellsTwoLevel]]). */
-  private def assignTwoLevelRanked(vectors: DataFrame, coarse: DataFrame,
-                                   fmap: DataFrame): DataFrame = {
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("gdist").desc, col("coarse_id"))
-    val vecCoarse = vectors.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("embedding"), col("coarse_id"),
-        cos(col("embedding"), col("gv")).as("gdist"))
-      .withColumn("grk", row_number().over(wv))
-      .filter(col("grk") === 1)
-      .select(col("vec_id"), col("embedding"), col("coarse_id"))
-    val wr = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist").desc, col("centroid_id"))
-    vecCoarse.join(broadcast(fmap), Seq("coarse_id"))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cos(col("embedding"), col("c")).as("dist"))
-      .withColumn("crk", row_number().over(wr))
-  }
+  /** `(query_id, cell)` probe pairs of a `(query_id, q)` frame: each
+    * query's `nprobe` best two-level cells. */
+  private def twoLevelProbeCells(queries: DataFrame, coarse: DataFrame,
+                                 fmap: DataFrame, nprobe: Int): DataFrame =
+    twoLevelTopCells(
+        queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
+        coarse, fmap, nprobe)
+      .select(col("vec_id").as("query_id"), explode(col("cells")).as("cell"))
 
   def ivfTopK(emb: DataFrame, k: Int): DataFrame =
     ivfTopKFrom(ivfCells(emb), k)
 
   /** The cell-probed top-k over ANY (vec_id, embedding, cell)
-    * assignment — shared by the fixed-stride demo quantizer and the
-    * two-level production path (the "no downstream schema change"
-    * claim of [[ivfCellsTwoLevel]], made code). */
-  private def ivfTopKFrom(cells: DataFrame, k: Int): DataFrame = {
-    val queries = cells.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cells.join(broadcast(queries), Seq("cell"))
+    * assignment — shared by the fixed-stride, two-level and learned
+    * (float and integer k-means) partitions (the "no downstream schema
+    * change" claim of [[ivfCellsTwoLevel]], made code). */
+  private def ivfTopKFrom(cells: DataFrame, k: Int): DataFrame =
+    sameCellTopK(cells, cells.filter(isQueryId(col("vec_id")))
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
+        col("cell")), k)
+
+  /** The one same-cell probe: `cells` rows `(vec_id, embedding, cell)`
+    * that share a cell with a `probed` row `(query_id, q, cell)` —
+    * a broadcast equi-join on cell; cells partition the corpus, so no
+    * candidate is scored twice — self-matches dropped, cosine-scored
+    * and ranked. */
+  private def sameCellTopK(cells: DataFrame, probed: DataFrame,
+                           k: Int): DataFrame =
+    rankTopK(cells.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
-  }
+        cos(col("q"), col("embedding")).as("cosine")), k)
 
   /** Cell-probed top-k over the TWO-LEVEL auto-sized assignment —
     * [[ivfCellsTwoLevel]] composed with the search path: C ≈ √N cells
@@ -1342,27 +1328,10 @@ object Similarity {
     * query side just carries nprobe rows per query; cells partition the
     * corpus, so no candidate is scored twice. */
   def ivfTopKProbed(emb: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    // corpus placement is the map-collapsed argmax ([[ivfCells]]);
-    // only the O([[MaxQueries]]) query subset pays the RANKED window
-    // (crk ≤ nprobe needs top-n, not top-1 — bounded rows, trivial)
-    val cells = ivfCells(emb)
-    val queries = ivfAssignmentsFrom(
-        emb.filter(isQueryId(col("vec_id"))),
-        emb.filter(isCentroidId(col("vec_id")))
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("c")))
-      .filter(col("crk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("centroid_id").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cells.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
+    // both placements are map-only argmaxes: the corpus into its one
+    // cell ([[ivfCells]]), each query into its top-nprobe cells
+    sameCellTopK(ivfCells(emb),
+      probeCells(queryVectors(emb), strideCentroids(emb), nprobe), k)
   }
 
   def qSimilarIvf2(spark: SparkSession, dir: String): DataFrame = {
@@ -1399,55 +1368,25 @@ object Similarity {
     * `centroids/` schema [[probeAssignments]] reads can never drift
     * between flavors. */
   private def writeStrideCentroids(emb: DataFrame, path: String): Unit =
-    emb.filter(isCentroidId(col("vec_id")))
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    strideCentroids(emb).write.mode("overwrite").parquet(s"$path/centroids")
+
+  /** Query→cell probe lists against a standing index's centroid table
+    * — the |queries|×K placement every probe flavor shares. */
+  private def probeAssignments(spark: SparkSession, path: String,
+                               queries: DataFrame, nprobe: Int): DataFrame =
+    probeCells(queries, spark.read.parquet(s"$path/centroids"), nprobe)
 
   /** Probe a standing IVF index: `queries` is (query_id, q). The plan
     * touches the corpus ONLY through the index parquet — query
     * assignment is a |queries|×K broadcast product (K = [[MaxCentroids]]
-    * bounded), candidates an equi-join on cell. Result semantics are
-    * identical to [[ivfTopKProbed]] at equal (k, nprobe): persistence
-    * must not change answers, only amortize the build. */
-  /** Query→cell assignment against a standing centroid table: the
-    * |queries|×K broadcast product every probe flavor shares. */
-  private def probeAssignments(spark: SparkSession, path: String,
-                               queries: DataFrame, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").desc, col("centroid_id"))
-    queries.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("q"), col("centroid_id"),
-        cos(col("q"), col("c")).as("dist"))
-      .withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= nprobe)
-      .select(col("query_id"), col("q"), col("centroid_id").as("cell"))
-  }
-
-  /** Top-k ranking over scored candidates — shared probe tail. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
-  }
-
+    * bounded), candidates an equi-join on cell; tombstones are masked
+    * at the cells read (a no-op anti-join when none are landed). Result
+    * semantics are identical to [[ivfTopKProbed]] at equal (k, nprobe):
+    * persistence must not change answers, only amortize the build. */
   def ivfProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
-                    k: Int, nprobe: Int): DataFrame = {
-    // tombstone mask — a no-op anti-join when none are landed
-    val cells = spark.read.parquet(s"$path/cells")
-      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
-        Seq("vec_id"), "left_anti")
-    val probed = probeAssignments(spark, path, queries, nprobe)
-    rankTopK(
-      cells.join(broadcast(probed), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cos(col("q"), col("embedding")).as("cosine")), k)
-  }
+                    k: Int, nprobe: Int): DataFrame =
+    sameCellTopK(IndexStore.liveRows(spark, path, "cells", "vec_id"),
+      probeAssignments(spark, path, queries, nprobe), k)
 
   /** Harness entry: build the standing index (one assignment pass,
     * landed to parquet), then answer the probe batch FROM the index.
@@ -1458,9 +1397,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivf_index")
     writeIvfIndex(emb, path)
-    val queries = emb.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    ivfProbeIndex(spark, path, queries, k = 3, nprobe = 2)
+    ivfProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -1604,9 +1541,7 @@ object Similarity {
     writeIvfIndex(emb.filter(!isNew), path)
     appendIvfIndex(spark, path, emb.filter(isNew))
     deleteIvfIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
-    val queries = emb.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    ivfProbeIndex(spark, path, queries, k = 3, nprobe = 2)
+    ivfProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -1621,9 +1556,7 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "ivf_index_app")
     writeIvfIndex(emb.filter(!isNew), path)
     appendIvfIndex(spark, path, emb.filter(isNew))
-    val queries = emb.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    ivfProbeIndex(spark, path, queries, k = 3, nprobe = 2)
+    ivfProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -1663,13 +1596,8 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         transform(col("codes"),
           c => (c.cast("double") * col("scale") / 127.0).cast("float"))
-          .as("ehat"))
-    val probed = probeAssignments(spark, path, queries, nprobe)
-    rankTopK(
-      cells.join(broadcast(probed), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cos(col("q"), col("ehat")).as("cosine")), k)
+          .as("embedding"))
+    sameCellTopK(cells, probeAssignments(spark, path, queries, nprobe), k)
   }
 
   /** Harness entry: land the quantized index, probe it — scored on
@@ -1681,9 +1609,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivf_index_q8")
     writeQuantizedIvfIndex(emb, path)
-    val queries = emb.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    ivfProbeQuantized(spark, path, queries, k = 3, nprobe = 2)
+    ivfProbeQuantized(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -1916,17 +1842,11 @@ object Similarity {
     val shortlist = adc.withColumn("srk", row_number().over(ws))
       .filter(col("srk") <= PqShortlist)
       .select(col("query_id"), col("vec_id"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    shortlist
+    rankTopK(shortlist
       .join(rerankSrc.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-      .withColumn("rk", row_number().over(wr))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"),
-        col("rk").cast("long").as("rk"), col("cosine"))
+        cos(col("q"), col("embedding")).as("cosine")), k)
   }
 
   /** One-shot PQ search: train codebook, encode, ADC + re-rank. */
@@ -2186,13 +2106,9 @@ object Similarity {
     val cells = assignTwoLevel(emb, coarse, fmap)
     val cb = pqCodebookFrom(n, sel)
     val queries = queryVectors(emb)
-    val qCells = assignTwoLevelRanked(
-        queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
-        coarse, fmap)
-      .filter(col("crk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("cell"))
     val cand = cells.select(col("vec_id"), col("cell"))
-      .join(broadcast(qCells), Seq("cell"))
+      .join(broadcast(twoLevelProbeCells(queries, coarse, fmap, nprobe)),
+        Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
     pqProbeFrom(pqEncode(emb, cb), cb, emb, queries, k, Some(cand))
@@ -2394,18 +2310,14 @@ object Similarity {
                                  rerankSrc: DataFrame, queries: DataFrame,
                                  k: Int, nprobe: Int): DataFrame = {
     val centers = fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
-    val qCells = assignTwoLevelRanked(
-        queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
-        coarse, fmap)
-      .filter(col("crk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("cell"))
-    ivfPqProbeResidualFrom(codes, cb, centers, rerankSrc, queries, qCells, k)
+    ivfPqProbeResidualFrom(codes, cb, centers, rerankSrc, queries,
+      twoLevelProbeCells(queries, coarse, fmap, nprobe), k)
   }
 
   /** The placement-agnostic residual probe core — per-(query, probed
     * cell) effective-codeword LUT, pruned-before-explode ADC,
     * shortlist + exact re-rank — shared by the two-level chain (cells
-    * from [[assignTwoLevelRanked]]) and the LEARNED chain (cells from
+    * from [[twoLevelProbeCells]]) and the LEARNED chain (cells from
     * the integer k-means quantizer). `centers` is the (cell, cv)
     * decode table; `qCells` the caller's (query_id, cell) probed
     * pairs. */
@@ -2921,7 +2833,7 @@ object Similarity {
     * the delete half of the serving lifecycle (vector takedowns):
     * vec ids land as an identity-addressed `deletes/batch=<tag>/` dir
     * ([[IndexStore.landTombstones]] — replay-idempotent), are MASKED
-    * out of every probe immediately ([[ivfPqIndexCodes]] anti-joins
+    * out of every probe immediately ([[IndexStore.liveRows]] anti-joins
     * them off the code table before the ADC — exact: no other
     * vector's score depends on a deleted one), and are physically
     * APPLIED at the next [[writeIvfPqIndex]] rebuild. There is no
@@ -2966,15 +2878,6 @@ object Similarity {
     IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
   }
 
-  /** The SERVING view of a landed index's code table: the physical
-    * rows minus the standing tombstone mask. Every probe path (one-
-    * shot and streaming) reads through this; the physical table keeps
-    * the rows until the next rebuild ([[deleteIvfPqIndex]]). */
-  private def ivfPqIndexCodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codes")
-      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
-        Seq("vec_id"), "left_anti")
-
   /** Serve top-k from the landed index: probe cells from `coarse`/
     * `fmap`, ADC over the landed codes (tombstones masked), exact
     * re-rank from the colocated embeddings. */
@@ -2982,7 +2885,7 @@ object Similarity {
                       queries: DataFrame, k: Int,
                       nprobe: Int = 2): DataFrame = {
     ensureRegistered(spark)
-    val codes = ivfPqIndexCodes(spark, path)
+    val codes = IndexStore.liveRows(spark, path, "codes", "vec_id")
     ivfPqProbeResidual(
       codes.select(col("vec_id"), col("cell"), col("codes")),
       spark.read.parquet(s"$path/codebook"),
@@ -3077,7 +2980,7 @@ object Similarity {
     val fmap = localized(spark, spark.read.parquet(s"$path/fmap"))
     val cb = localized(spark, spark.read.parquet(s"$path/codebook"))
     val codes = IndexStore.servingSnapshot(spark, path, "codes")(
-      ivfPqIndexCodes(spark, path))
+      IndexStore.liveRows(spark, path, "codes", "vec_id"))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -3146,7 +3049,7 @@ object Similarity {
     val cb = spark.read.parquet(s"$path/codebook")
     // tombstone mask — the shared serving view (no-op anti-join when
     // none are landed)
-    val codes = ivfPqIndexCodes(spark, path)
+    val codes = IndexStore.liveRows(spark, path, "codes", "vec_id")
     pqProbeFrom(codes.select(col("vec_id"), col("codes")), cb,
       codes.select(col("vec_id"), col("embedding")), queries, k)
   }
@@ -3256,9 +3159,7 @@ object Similarity {
   def bandProbeIndex(spark: SparkSession, path: String, probe: DataFrame,
                      threshold: Double): DataFrame = {
     // tombstone mask — a no-op anti-join when none are landed
-    val bands = spark.read.parquet(s"$path/bands")
-      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
-        Seq("vec_id"), "left_anti")
+    val bands = IndexStore.liveRows(spark, path, "bands", "vec_id")
     val pIdx = bandedIndex(probe)
       .select(col("band"), col("sig"), col("vec_id").as("probe_id"))
     val cand = pIdx.join(bands.select(col("band"), col("sig"),
@@ -3429,20 +3330,8 @@ object Similarity {
       .as[(Long, Array[Float])].collect().toSeq
     learned.unpersist()
     val cents = local.toDF("cluster_id", "c")
-    val cells = kmeansAssign(emb, cents)
-      .withColumnRenamed("cluster_id", "cell")
-    val queries = cells.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cells.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
+    ivfTopKFrom(kmeansAssign(emb, cents)
+      .withColumnRenamed("cluster_id", "cell"), k)
   }
 
   /** The centroid table as ONE broadcast row holding
@@ -3535,30 +3424,7 @@ object Similarity {
     * certified instead of exempt. */
   def ivfTopKKmeansInt(emb: DataFrame, k: Int, kc: Int = KmeansK,
                        iters: Int = KmeansIters): DataFrame =
-    ivfTopKKmeansIntFrom(
-      kmeansAssignInt(emb, kmeansCentroidsInt(emb, kc, iters)), k)
-
-  /** The same-cell probe over an ALREADY-ASSIGNED (vec_id, embedding,
-    * cell) frame — factored out (r21) so a multi-K caller
-    * ([[kmeansTradeTable]]) trains each partition ONCE and feeds the
-    * shared assignment to both the occupancy audit and this probe,
-    * instead of re-running the full integer-Lloyd training per
-    * consumer. */
-  private def ivfTopKKmeansIntFrom(cells: DataFrame, k: Int): DataFrame = {
-    val queries = cells.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cells.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
-  }
+    ivfTopKFrom(kmeansAssignInt(emb, kmeansCentroidsInt(emb, kc, iters)), k)
 
   def qSimilarKmeansInt(spark: SparkSession, dir: String): DataFrame = {
     ensureRegistered(spark)
@@ -3605,8 +3471,8 @@ object Similarity {
     * codebook trains on the mid-stride rank rows' residuals (the
     * [[ivfPqResidualParts]] recipe) against the LEARNED cells. Query
     * placement is the same baked integer argmin widened to top-nprobe
-    * ([[kmeansProbeCellsInt]] — map-only; the two-level chain pays a
-    * ranked window here). */
+    * ([[kmeansProbeCellsInt]] — map-only, like the two-level chain's
+    * [[twoLevelProbeCells]]). */
   def ivfPqResidualTopKLearned(emb: DataFrame, k: Int, nprobe: Int = 2,
                                kc: Int = KmeansK,
                                iters: Int = KmeansIters): DataFrame = {
@@ -3787,15 +3653,8 @@ object Similarity {
         queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
         cents, nprobe)
       .select(col("vec_id").as("query_id"), col("cell"))
-    val cells = spark.read.parquet(s"$path/cells")
-      .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
-        Seq("vec_id"), "left_anti")
-    rankTopK(
-      cells.join(broadcast(qCells.join(queries, Seq("query_id"))),
-          Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cos(col("q"), col("embedding")).as("cosine")), k)
+    sameCellTopK(IndexStore.liveRows(spark, path, "cells", "vec_id"),
+      qCells.join(queries, Seq("query_id")), k)
   }
 
   /** Live ANN serving from the landed integer-learned index — the
@@ -3814,9 +3673,7 @@ object Similarity {
     ensureRegistered(spark)
     val cents = kmeansIntCentroidsOf(spark, path)
     val cells = IndexStore.servingSnapshot(spark, path, "cells")(
-      spark.read.parquet(s"$path/cells")
-        .join(IndexStore.idsIn(spark, s"$path/deletes", "vec_id"),
-          Seq("vec_id"), "left_anti"))
+      IndexStore.liveRows(spark, path, "cells", "vec_id"))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -3826,12 +3683,8 @@ object Similarity {
               col("q").as("embedding")),
             cents, nprobe)
           .select(col("vec_id").as("query_id"), col("cell"))
-        sink(rankTopK(
-          cellsSnap.join(broadcast(qCells.join(batch, Seq("query_id"))),
-              Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .select(col("query_id"), col("vec_id"),
-              cos(col("q"), col("embedding")).as("cosine")), k), id)
+        sink(sameCellTopK(cellsSnap, qCells.join(batch, Seq("query_id")), k),
+          id)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
@@ -3926,7 +3779,7 @@ object Similarity {
       val cells = kmeansAssignInt(emb, cents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val hits = exact.join(
-          ivfTopKKmeansIntFrom(cells, k)
+          ivfTopKFrom(cells, k)
             .select(col("query_id"), col("vec_id")),
           Seq("query_id", "vec_id"), "left_semi")
         .groupBy().agg(count(lit(1)).as("n_hit"))
@@ -4193,22 +4046,8 @@ object Similarity {
   def annTopKProjected(emb: DataFrame, k: Int): DataFrame = {
     val idx = bandedIndexOn(
       rpProject(emb).withColumnRenamed("proj", "embedding"), RpBands)
-    val qIdx = idx.filter(isQueryId(col("vec_id")))
-      .select(col("vec_id").as("query_id"), col("band"), col("sig"))
-    val cand = idx.join(broadcast(qIdx), Seq("band", "sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val scored = cand
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(queryVectors(emb)), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cos(col("q"), col("embedding")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("rk").cast("long").as("rk"),
-        col("cosine"))
+    lshTopK(idx, idx.filter(isQueryId(col("vec_id")))
+      .select(col("vec_id").as("query_id"), col("band"), col("sig")), emb, k)
   }
 
   def qSimilarRp(spark: SparkSession, dir: String): DataFrame = {

@@ -2095,12 +2095,9 @@ object TextDedup {
       winnowFingerprints(probe, k, w).select(col("fp"), col("doc_id"))
         .distinct(),
       // tombstone mask BEFORE distinct and before winnowProbeFrom's
-      // cap count — survivor-exact (see deleteWinnowIndex)
-      spark.read.parquet(s"$path/prints")
-        .select(col("fp"), col("doc_id"))
-        .join(IndexStore.idsIn(spark, s"$path/deletes", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .distinct(),
+      // cap count — survivor-exact (see deleteWinnowIndex); prints/
+      // holds exactly (fp, doc_id)
+      IndexStore.liveRows(spark, path, "prints", "doc_id").distinct(),
       cap)
 
   /** Harness entry: land the standing 90%'s winnow index, probe with
@@ -2164,11 +2161,7 @@ object TextDedup {
       selOf(prints.filter(col("doc_id") % IncrementMod === 0)),
       // tombstone mask BEFORE distinct and before the cap count —
       // survivor-exact (see deleteWinnowIndex)
-      spark.read.parquet(s"$path/prints")
-        .select(col("fp"), col("doc_id"))
-        .join(IndexStore.idsIn(spark, s"$path/deletes", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .distinct(),
+      IndexStore.liveRows(spark, path, "prints", "doc_id").distinct(),
       WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))
   }

@@ -630,17 +630,6 @@ object TrainPrep {
     stripWithBanned(docs, chunks, boiler)
   }
 
-  /** The fraction-threshold boilerplate readout of a standing CDC
-    * index: fps carried by ≥ `minBp` basis points of `totalDocs` (the
-    * corpus size is lifecycle state the CALLER owns — the index stores
-    * per-fp stats, and a crawl scheduler always knows its snapshot's
-    * document count). */
-  def cdcIndexBoilerplateFrac(spark: SparkSession, path: String,
-                              totalDocs: Long,
-                              minBp: Long = CdcBoilerMinBp): DataFrame =
-    cdcIndexStats(spark, path)
-      .filter(col("n_docs") * lit(10000L) >= lit(minBp) * lit(totalDocs))
-
   def qCdcStripFrac(spark: SparkSession, dir: String): DataFrame =
     cdcStripSharedFrac(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
@@ -822,7 +811,6 @@ object TrainPrep {
     * positions are IDENTICAL at every width — widening for scale is a
     * pure parallelism knob, spec'd invariant in TrainPrepSpec. */
   val ShuffleNibbles = 2
-  val ShuffleBuckets = 256
 
   /** Deterministic global training order for an epoch: every document
     * gets a unique position 0..N-1 in salted-md5 order — the "shuffle

@@ -389,13 +389,16 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // sigs must come from the index parquet. A regression that
     // re-derives them in the probe shows up as extra corpus scans.
     // AQE off for the walk: nested AdaptiveSparkPlan broadcast stages
-    // would otherwise hide/duplicate scan nodes (SnapshotSpec precedent)
+    // would otherwise hide/duplicate scan nodes (SnapshotSpec precedent).
+    // The walk includes subqueries: when the probed cells prune the
+    // cell partitions (DPP), the query-side broadcast lives in the
+    // pruning subquery and the join reads it as a ReusedExchange.
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       def scanPaths(q: String): Seq[String] =
         SparkEntry.queries(q)(spark, sf("sf0.001"))
-          .queryExecution.executedPlan.collect {
+          .queryExecution.executedPlan.collectWithSubqueries {
             case f: org.apache.spark.sql.execution.FileSourceScanExec =>
               f.relation.location.rootPaths.mkString(",")
           }
@@ -413,6 +416,30 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       assert(band.count(_.contains("band_index")) === 1,
         s"band probe must read the standing band table, not re-band the index: $band")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("IVF placements are map-only") {
+    // Placing a vector (or a query) into its best cells is an argmax
+    // over a bounded centroid broadcast — the map-only cos_top_cells
+    // expression. A row_number window ordered by the centroid cosine
+    // (`dist`, or `gdist` for the coarse level) shuffles and sorts the
+    // vectors×centroids product to pick the same cells.
+    import org.apache.spark.sql.catalyst.expressions.SortOrder
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    def byCentroidDistance(order: Seq[SortOrder]): Boolean =
+      order.exists(_.child.references.exists(a =>
+        a.name == "dist" || a.name == "gdist"))
+    val windowed = Seq("q_similar_ivf2", "q_similar_ivf_persisted",
+        "q_similar_ivf_quantized", "q_similar_ivf_2lvl",
+        "q_similar_ivfpq_persisted").filter { q =>
+      physical(SparkEntry.queries(q)(spark, sf("sf0.001")))
+        .collectWithSubqueries {
+          case w: WindowExec if byCentroidDistance(w.orderSpec) => w
+          case w: WindowGroupLimitExec if byCentroidDistance(w.orderSpec) => w
+        }.nonEmpty
+    }
+    assert(windowed.isEmpty,
+      s"placements ranked by a centroid-distance window in: ${windowed.mkString(", ")}")
   }
 
   test("heavy hitters: map-side MG summaries, only candidates reach the count shuffle") {
