@@ -16,10 +16,20 @@ import org.apache.spark.sql.functions._
   *  - IDENTITY BATCHES: rows land under `<table>/batch=<tag>/`, the tag
   *    derived from the batch's ids ([[identityBatchTag]]), with the
   *    landed tags kept in the table's `_batches` manifest
-  *    ([[landIdentityBatch]]) — replay-idempotent appends.
-  *  - TOMBSTONES: deleted ids land as identity batches under a
-  *    `deletes/`-style dir ([[landTombstones]]) and are read back as
-  *    one id frame ([[idsIn]]) for the probe-side anti-join mask.
+  *    ([[landIdentityBatch]]) — replay-idempotent appends. The
+  *    unversioned families' serving tables (`cells`, `codes`, `bands`,
+  *    `prints`) land ONLY this way: a build is [[clearTables]] plus one
+  *    batch, an append is one batch. Every batch-table read goes
+  *    through one root listing that refuses a mixed-depth layout
+  *    ([[batchDirTags]]).
+  *  - TOMBSTONES: deleted ids land as identity batches under the index
+  *    root's `deletes/` dir ([[landTombstones]]) and are read back as
+  *    one id frame ([[idsIn]]) for the probe-side anti-join mask
+  *    ([[liveRows]]).
+  *  - COMPACTION: a batch table's dirs merge into one `batch=compacted`
+  *    dir whose manifest carries every merged tag ([[landCompacted]]);
+  *    an unversioned table swaps it in with checked renames
+  *    ([[compactBatchTable]]).
   *  - REBUILD: a rebuild clears the tables it replaces ([[clearTables]]).
   */
 private[graft] object IndexStore {
@@ -138,15 +148,18 @@ private[graft] object IndexStore {
     * rewrites its own directory, and the partial files it clears were
     * an undercounted batch no reader should trust anyway. After
     * landing, the tag is recorded in the manifest so a later
-    * compaction can carry it forward. */
-  def landIdentityBatch(rows: DataFrame, tableDir: String,
-                        tag: String): Unit = {
+    * compaction can carry it forward. `partitionCols` partition the
+    * rows INSIDE the batch dir (`batch=<tag>/cell=<n>/`), so a probe
+    * that filters on them still prunes directories. */
+  def landIdentityBatch(rows: DataFrame, tableDir: String, tag: String,
+                        partitionCols: String*): Unit = {
     val spark = rows.sparkSession
     val fs = indexFs(spark, tableDir)
     val batchDir = new Path(s"$tableDir/batch=$tag")
     val landed = landedBatchTags(spark, tableDir)
     if (!landed.contains(tag) && !fs.exists(new Path(batchDir, "_SUCCESS"))) {
-      rows.write.mode("overwrite").parquet(batchDir.toString)
+      rows.write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(batchDir.toString)
     }
     recordBatchTags(spark, tableDir, landed + tag)
   }
@@ -188,26 +201,47 @@ private[graft] object IndexStore {
 
   /** The batch tags physically present as `batch=<tag>/` dirs under a
     * table root — carried across compacts alongside the manifest, and
-    * the physical half of the streaming snapshot gate. */
+    * the physical half of the streaming snapshot gate. This one listing
+    * is also the MIXED-DEPTH GUARD every batch-table read goes through:
+    * Spark's file index infers partition columns from directory depth,
+    * so a bare part file or a leftover `cell=` dir beside the batch
+    * dirs would silently drop out of the read. Such a root fails here,
+    * naming the table; entries named `_…` or `.…` (the manifest,
+    * committer markers, checksums) are metadata and pass. */
   def batchDirTags(spark: SparkSession, tableDir: String): Set[String] = {
     val fs = indexFs(spark, tableDir)
     val root = new Path(tableDir)
     if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=")
-    }.toSet
+    else {
+      val (batches, other) = fs.listStatus(root).toSeq
+        .filterNot { st =>
+          val n = st.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .partition(st => st.isDirectory &&
+          st.getPath.getName.startsWith("batch="))
+      require(batches.isEmpty || other.isEmpty,
+        s"batch table $tableDir also holds " +
+          other.map(_.getPath.getName).sorted.mkString(", ") +
+          " beside its batch= dirs; Spark would read it without them")
+      batches.map(_.getPath.getName.stripPrefix("batch=")).toSet
+    }
   }
 
   // ----- tombstones ----- //
 
-  /** Land a tombstone batch: the distinct `idCol` values of `ids` as an
-    * identity-addressed `<dir>/batch=<tag>/` — replay-idempotent, read
-    * back by [[idsIn]]. */
-  def landTombstones(ids: DataFrame, dir: String, idCol: String): Unit = {
+  /** Land a tombstone batch against the index rooted at `root`: the
+    * distinct `idCol` values of `ids` as an identity-addressed
+    * `<root>/deletes/batch=<tag>/` — replay-idempotent, read back by
+    * [[liveRows]] (or [[idsIn]] over [[deletesDir]]). */
+  def landTombstones(ids: DataFrame, root: String, idCol: String): Unit = {
     val distinctIds = ids.select(col(idCol)).distinct()
-    landIdentityBatch(distinctIds, dir, identityBatchTag(distinctIds, idCol))
+    landIdentityBatch(distinctIds, deletesDir(root),
+      identityBatchTag(distinctIds, idCol))
   }
+
+  /** The tombstone dir of the index rooted at `root`. */
+  def deletesDir(root: String): String = s"$root/deletes"
 
   /** The ids landed as batch dirs under `dir`, as a one-column
     * `idCol` frame — empty (same schema) when none have been landed,
@@ -221,11 +255,14 @@ private[graft] object IndexStore {
   /** The serving view of `<path>/<table>`: its rows minus the ids
     * landed under `<path>/deletes` (anti-joined on `idCol`; a no-op
     * when none are landed). The physical table keeps masked rows until
-    * the family's next rebuild applies them. */
+    * the family's next rebuild applies them. A batch table's rows carry
+    * its `batch` partition column. */
   def liveRows(spark: SparkSession, path: String, table: String,
-               idCol: String): DataFrame =
+               idCol: String): DataFrame = {
+    batchDirTags(spark, s"$path/$table") // the mixed-depth guard
     spark.read.parquet(s"$path/$table")
-      .join(idsIn(spark, s"$path/deletes", idCol), Seq(idCol), "left_anti")
+      .join(idsIn(spark, deletesDir(path), idCol), Seq(idCol), "left_anti")
+  }
 
   /** Delete the named tables under an index root, where present — the
     * rebuild step every unversioned family shares (a rebuild's corpus
@@ -236,6 +273,61 @@ private[graft] object IndexStore {
       val d = new Path(path, t)
       if (fs.exists(d)) { fs.delete(d, true); () }
     }
+  }
+
+  // ----- batch-table compaction ----- //
+
+  /** Land `rows` — the merged content of the batch table `from` — as
+    * the single `batch=compacted` dir of a fresh table dir `to`, whose
+    * `_batches` manifest carries every tag `from` had landed (its
+    * manifest and its batch dirs) plus `compacted`. The carry is what
+    * keeps a replayed append whose batch dir this merge consolidated
+    * away a no-op afterwards ([[landIdentityBatch]] consults the
+    * manifest). */
+  def landCompacted(rows: DataFrame, from: String, to: String,
+                    partitionCols: String*): Unit = {
+    val spark = rows.sparkSession
+    val carried = landedBatchTags(spark, from) ++ batchDirTags(spark, from)
+    rows.write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(s"$to/batch=compacted")
+    recordBatchTags(spark, to, carried + "compacted")
+  }
+
+  /** Compact an UNVERSIONED batch table in place: merge its batch dirs
+    * into one ([[landCompacted]]; rows regrouped by `partitionCols`, so
+    * each partition lands one-ish file instead of one per append), then
+    * swap the merge in with renames — live→retired, merged→live, drop
+    * retired. Never delete-first: the rows are on disk at every
+    * instant, and a crash between the renames leaves the retired dir
+    * intact for manual recovery. Hadoop rename signals failure by
+    * RETURNING FALSE, so each step is checked and the retired copy is
+    * dropped only once the merged table is in place. (Single-FS renames
+    * are atomic on HDFS and POSIX; object stores would swap a manifest
+    * pointer instead.) A probe racing the swap can see the table
+    * missing for one rename, so schedule compaction in maintenance
+    * windows, not under live traffic. The row set is untouched:
+    * tombstones stay masked, and the family's rebuild applies them. */
+  def compactBatchTable(spark: SparkSession, tableDir: String,
+                        partitionCols: String*): Unit = {
+    val fs = indexFs(spark, tableDir)
+    val live = new Path(tableDir)
+    val merged = new Path(s"${tableDir}_compact")
+    val retired = new Path(s"${tableDir}_retired")
+    Seq(merged, retired).foreach(fs.delete(_, true)) // a crashed run's leftovers
+    landCompacted(spark.read.parquet(tableDir).drop("batch")
+        .repartition(partitionCols.map(col): _*),
+      tableDir, merged.toString, partitionCols: _*)
+    require(fs.rename(live, retired),
+      s"could not retire $live — table left untouched")
+    if (!fs.rename(merged, live)) {
+      val rolledBack = fs.rename(retired, live)
+      throw new IllegalStateException(
+        s"could not install the compacted table at $live" +
+          (if (rolledBack) " — original layout restored"
+           else s" — ORIGINAL PRESERVED AT $retired, restore manually"))
+    }
+    fs.delete(retired, true)
+    ()
   }
 
   // ----- streaming snapshot gate ----- //
@@ -264,7 +356,7 @@ private[graft] object IndexStore {
     var snap: DataFrame = null
     () => {
       val tags = (landedBatchTags(spark, s"$path/$table"),
-        batchDirTags(spark, s"$path/deletes"))
+        batchDirTags(spark, deletesDir(path)))
       if (!snapTags.contains(tags)) {
         snap = read
         snapTags = Some(tags)

@@ -1353,15 +1353,23 @@ object Similarity {
     * for oracle parity; THIS is the shape you deploy). Directory
     * partitioning by cell keeps a probe's read proportional to the
     * cells it touches (nprobe·|queries| partitions at most) — the same
-    * pruning [[graft.operators.LakeLayout]] uses for dates. */
+    * pruning [[graft.operators.LakeLayout]] uses for dates. Cells land
+    * as identity batches (`cells/batch=<tag>/cell=<n>/`), so
+    * [[appendIvfIndex]] is replay-idempotent; a rebuild clears the
+    * standing cells and tombstones ([[deleteIvfPqIndex]]). */
   def writeIvfIndex(emb: DataFrame, path: String): Unit = {
-    // a rebuild clears standing tombstones ([[deleteIvfIndex]])
-    IndexStore.clearTables(emb.sparkSession, path, "deletes")
-    ivfCells(emb)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells")
+    IndexStore.clearTables(emb.sparkSession, path, "cells", "deletes")
+    landCells(ivfCells(emb), emb, path)
     writeStrideCentroids(emb, path)
   }
+
+  /** Land one batch of cell rows under `cells/batch=<tag>/cell=<n>/`,
+    * tagged from `batch`'s ids — the one cells landing every plain,
+    * quantized and learned IVF build and append shares. */
+  private def landCells(rows: DataFrame, batch: DataFrame,
+                        path: String): Unit =
+    IndexStore.landIdentityBatch(rows, s"$path/cells",
+      IndexStore.identityBatchTag(batch, "vec_id"), "cell")
 
   /** The fixed-stride centroid table in the standard layout — one
     * definition for every index flavor that stores it, so the
@@ -1405,62 +1413,29 @@ object Similarity {
     * maintenance op that makes the persisted index a living structure
     * rather than a rebuild-per-snapshot artifact. ONLY the new vectors
     * are assigned, against the index's OWN centroid table (read back,
-    * O([[MaxCentroids]]) broadcast); their cell partitions are appended
-    * and the standing cells are never rewritten or re-read. Contract
-    * (pinned by spec and by `q_similar_ivf_appended`'s shared oracle):
+    * O([[MaxCentroids]]) broadcast); their cell rows land as one
+    * identity batch, so a replayed append is a no-op, and the standing
+    * cells are never rewritten or re-read. Contract (pinned by spec and
+    * by `q_similar_ivf_appended`'s shared oracle):
     * `build(part1); append(part2)` ≡ `build(part1 ∪ part2)` whenever
     * part1 carries the fixed-stride centroid rows — assignment depends
     * only on the centroid set, which an append of genuinely new
     * vectors never changes. */
-  def appendIvfIndex(spark: SparkSession, path: String, newEmb: DataFrame): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    assignBestByCos(newEmb, centroids, "centroid_id", "c", "cell")
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
+  def appendIvfIndex(spark: SparkSession, path: String, newEmb: DataFrame): Unit =
+    landCells(assignBestByCos(newEmb, spark.read.parquet(s"$path/centroids"),
+      "centroid_id", "c", "cell"), newEmb, path)
 
   /** Compact a standing IVF index's cell files in place. Repeated
     * [[appendIvfIndex]] batches each land their own small files per
     * cell directory; at a daily-append cadence the cells degrade into
     * the many-tiny-files regime that ruins scan throughput (open/seek
-    * dominated) and file-listing time. One partitioned rewrite —
-    * `repartition(cell)` so each cell's rows land together — restores
-    * one-ish file per cell; the row SET is untouched (spec-pinned).
-    * The swap is rename(live→retired) then rename(compact→live) —
-    * never delete-first: data is present on disk at every instant, and
-    * a crash between the renames leaves the retired directory intact
-    * for manual recovery instead of a destroyed index. (Single-FS
-    * renames are atomic on HDFS and POSIX; object stores would use a
-    * manifest pointer instead — same caveat as every rename-based
-    * committer.) A probe racing the swap window can still observe the
-    * path missing for one rename; schedule compaction in the same
-    * maintenance windows that run [[graft.operators.LakeLayout]]
-    * compaction, not under live traffic. */
-  def compactIvfIndex(spark: SparkSession, path: String): Unit = {
-    val cells = spark.read.parquet(s"$path/cells")
-    val tmp = s"$path/cells_compact"
-    cells.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val retired = new org.apache.hadoop.fs.Path(s"$path/cells_retired")
-    fs.delete(retired, true) // clear any previous run's leftover
-    // Hadoop rename signals failure by RETURNING FALSE, not throwing —
-    // each step must be checked, and the retired copy is deleted ONLY
-    // after the new layout is verifiably in place (an unchecked second
-    // rename followed by the delete would destroy the last copy)
-    require(fs.rename(live, retired),
-      s"compactIvfIndex: could not retire $live — index left untouched")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), live)) {
-      val rolledBack = fs.rename(retired, live) // try to restore
-      throw new IllegalStateException(
-        s"compactIvfIndex: could not install compacted cells at $live" +
-          (if (rolledBack) " — original layout restored"
-           else s" — ORIGINAL PRESERVED AT $retired, restore manually"))
-    }
-    fs.delete(retired, true)
-    ()
-  }
+    * dominated) and file-listing time. The store's batch-table
+    * compaction ([[IndexStore.compactBatchTable]]) merges every batch
+    * into one, one-ish file per cell, and swaps it in; the row set is
+    * untouched (spec-pinned), and an append replayed after the compact
+    * is still a no-op. */
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    IndexStore.compactBatchTable(spark, s"$path/cells", "cell")
 
   /** Scheduled maintenance over the standing residual IVF-PQ index. */
   object IndexJob {
@@ -1492,7 +1467,7 @@ object Similarity {
         // — bounded by deletes-since-last-rebuild, the approved
         // driver scalar)
         import spark.implicits._
-        val tomb = IndexStore.idsIn(spark, s"$path/deletes", "vec_id")
+        val tomb = IndexStore.idsIn(spark, IndexStore.deletesDir(path), "vec_id")
           .as[Long].collect().toSeq.toDF("vec_id")
         writeIvfPqIndex(
           corpus.join(broadcast(tomb), Seq("vec_id"), "left_anti"), path)
@@ -1540,7 +1515,7 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "ivf_index_deleted")
     writeIvfIndex(emb.filter(!isNew), path)
     appendIvfIndex(spark, path, emb.filter(isNew))
-    deleteIvfIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
+    deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     ivfProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -1571,14 +1546,15 @@ object Similarity {
     * them). */
   def writeQuantizedIvfIndex(emb: DataFrame, path: String): Unit = {
     val xd = (x: Column) => x.cast("double")
-    ivfCells(emb)
+    IndexStore.clearTables(emb.sparkSession, path, "cells", "deletes")
+    landCells(ivfCells(emb)
       .select(col("vec_id"), col("cell"), col("embedding"),
         greatest(array_max(transform(col("embedding"), x => abs(xd(x)))),
           lit(1e-30)).as("scale"))
       .select(col("vec_id"), col("cell"), col("scale"),
         transform(col("embedding"),
-          x => floor(xd(x) / col("scale") * 127.0 + 0.5).cast("int")).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+          x => floor(xd(x) / col("scale") * 127.0 + 0.5).cast("int")).as("codes")),
+      emb, path)
     writeStrideCentroids(emb, path)
   }
 
@@ -2829,54 +2805,29 @@ object Similarity {
                        newEmb: DataFrame): Unit =
     landIvfPqCodes(spark, path, newEmb)
 
-  /** Land a TOMBSTONE batch against a landed residual IVF-PQ index —
-    * the delete half of the serving lifecycle (vector takedowns):
-    * vec ids land as an identity-addressed `deletes/batch=<tag>/` dir
-    * ([[IndexStore.landTombstones]] — replay-idempotent), are MASKED
-    * out of every probe immediately ([[IndexStore.liveRows]] anti-joins
-    * them off the code table before the ADC — exact: no other
-    * vector's score depends on a deleted one), and are physically
-    * APPLIED at the next [[writeIvfPqIndex]] rebuild. There is no
-    * separate compaction here BY DESIGN: the codes table is not
-    * versioned (unlike the dedup/CDC indexes), so an in-place rewrite
-    * would open a torn-read crash window, and the frozen-structure
-    * contract already schedules periodic rebuilds (the cell-occupancy
-    * audit's retrain trigger) — the rebuild IS the apply point. A
-    * replayed old append cannot resurrect a deleted vector either:
-    * IVF-PQ appends are identity-addressed, so the replay is a no-op
-    * at the landing layer (no mode(append) hole to guard, unlike the
-    * dedup index). */
+  /** Land a TOMBSTONE batch against any landed Similarity index whose
+    * probe reads [[IndexStore.liveRows]] — residual IVF-PQ, PQ,
+    * plain/learned IVF, k-means-int or band (not the quantized IVF
+    * probe): the one vec-id delete of the serving lifecycle (vector
+    * takedowns). Vec ids land as an identity-addressed
+    * `deletes/batch=<tag>/` dir ([[IndexStore.landTombstones]] —
+    * replay-idempotent), are MASKED out of every probe immediately
+    * ([[IndexStore.liveRows]] anti-joins them off the serving table
+    * before any scoring — exact: no other vector's score depends on a
+    * deleted one), and are physically APPLIED at the family's next
+    * build, which clears them with the table. There is no separate
+    * apply step BY DESIGN: these indexes are not versioned (unlike the
+    * dedup/CDC indexes), so an in-place rewrite would open a torn-read
+    * crash window, and the frozen-structure contract already schedules
+    * periodic rebuilds (the cell-occupancy audit's retrain trigger) —
+    * the rebuild IS the apply point ([[compactIvfIndex]] is
+    * row-set-preserving file hygiene and keeps the mask). A replayed
+    * old append cannot resurrect a deleted vector either: every append
+    * is identity-addressed, so the replay is a no-op at the landing
+    * layer. */
   def deleteIvfPqIndex(spark: SparkSession, path: String,
-                       vecIds: DataFrame): Unit = {
-    ensureRegistered(spark)
-    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
-  }
-
-  /** Land a TOMBSTONE batch against a standing plain-PQ index — the
-    * same shared machinery as the residual form: ids land
-    * identity-addressed, [[pqProbeIndex]] masks them immediately via
-    * the serving view (deleted codes never enter the ADC scan), and
-    * the next [[writePqIndex]] rebuild applies + clears. Appends are
-    * identity-addressed too, so no replayed-append resurrect hole
-    * exists here (the band-index argument). */
-  def deletePqIndex(spark: SparkSession, path: String,
-                    vecIds: DataFrame): Unit = {
-    ensureRegistered(spark)
-    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
-  }
-
-  /** Land a TOMBSTONE batch against a standing plain-IVF index:
-    * masked by [[ivfProbeIndex]] at the cells read (one anti-join
-    * against the tombstone-sized list), applied + cleared at the next
-    * [[writeIvfIndex]] rebuild. [[compactIvfCells]] deliberately does
-    * NOT apply them (its contract is row-set-preserving file
-    * hygiene); the rebuild is the apply point, the residual-index
-    * convention. */
-  def deleteIvfIndex(spark: SparkSession, path: String,
-                     vecIds: DataFrame): Unit = {
-    ensureRegistered(spark)
-    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
-  }
+                       vecIds: DataFrame): Unit =
+    IndexStore.landTombstones(vecIds, path, "vec_id")
 
   /** Serve top-k from the landed index: probe cells from `coarse`/
     * `fmap`, ADC over the landed codes (tombstones masked), exact
@@ -3010,7 +2961,7 @@ object Similarity {
     // post-takedown truth — the shared write*Index contract)
     IndexStore.clearTables(spark, path, "deletes", "codes")
     pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
-    landPqCodes(emb, spark.read.parquet(s"$path/codebook"), path)
+    appendPqIndex(spark, path, emb)
   }
 
   /** Append an increment: encode ONLY `newEmb` against the STANDING
@@ -3029,20 +2980,15 @@ object Similarity {
     * index corruption. Same mechanism as the CDC fps landing. */
   def appendPqIndex(spark: SparkSession, path: String,
                     newEmb: DataFrame): Unit =
-    landPqCodes(newEmb, spark.read.parquet(s"$path/codebook"), path)
-
-  /** Encode + land one batch of code rows under
-    * `codes/batch=<identity tag>/`. */
-  private def landPqCodes(emb: DataFrame, cb: DataFrame,
-                          path: String): Unit =
     // the encode is MAP-ONLY ([[pqEncode]]), so the embedding rides the
     // same projection instead of a corpus-scale re-join on vec_id (two
     // exchanges + a second batch scan for a column the row already had)
     IndexStore.landIdentityBatch(
-      emb.select(col("vec_id"),
-        pqEncodeColumn(emb.sparkSession, cb, col("embedding")).as("codes"),
+      newEmb.select(col("vec_id"),
+        pqEncodeColumn(spark, spark.read.parquet(s"$path/codebook"),
+          col("embedding")).as("codes"),
         col("embedding")),
-      s"$path/codes", IndexStore.identityBatchTag(emb, "vec_id"))
+      s"$path/codes", IndexStore.identityBatchTag(newEmb, "vec_id"))
 
   def pqProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int): DataFrame = {
@@ -3068,8 +3014,7 @@ object Similarity {
     // exercises encode-against-frozen-codebook on the append path
     pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
     IndexStore.clearTables(spark, path, "codes")
-    landPqCodes(emb.filter(!isNew),
-      spark.read.parquet(s"$path/codebook"), path)
+    appendPqIndex(spark, path, emb.filter(!isNew))
     appendPqIndex(spark, path, emb.filter(isNew))
     pqProbeIndex(spark, path, queryVectors(emb), k = 3)
       .orderBy(col("query_id"), col("rk"))
@@ -3090,10 +3035,9 @@ object Similarity {
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
     IndexStore.clearTables(spark, path, "deletes", "codes")
     pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
-    landPqCodes(emb.filter(!isNew),
-      spark.read.parquet(s"$path/codebook"), path)
+    appendPqIndex(spark, path, emb.filter(!isNew))
     appendPqIndex(spark, path, emb.filter(isNew))
-    deletePqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
+    deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     pqProbeIndex(spark, path, queryVectors(emb), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3124,32 +3068,23 @@ object Similarity {
     * [[embedCrossPairs]]. Band/sig are the layout's only join keys, so
     * the increment probe reads the band table and never re-bands the
     * indexed corpus; `embedding` rides along so the verify join needs
-    * no second corpus read. */
+    * no second corpus read. A rebuild clears the standing bands and
+    * tombstones ([[deleteIvfPqIndex]] masks until then). */
   def writeBandIndex(emb: DataFrame, path: String): Unit = {
-    // a rebuild clears standing tombstones (the deleteIvfPqIndex
-    // contract: the new corpus is the post-takedown truth)
-    IndexStore.clearTables(emb.sparkSession, path, "deletes")
-    bandedIndex(emb)
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("band"), col("sig"), col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$path/bands")
+    IndexStore.clearTables(emb.sparkSession, path, "bands", "deletes")
+    landBands(emb, path)
   }
 
-  /** Land a TOMBSTONE batch against a standing band index — the
-    * [[deleteIvfPqIndex]] contract on the sign-LSH layout: vec ids
-    * land identity-addressed under `deletes/batch=<tag>/`
-    * (replay-idempotent), [[bandProbeIndex]] masks them immediately
-    * (an anti-join on the band rows BEFORE candidates — exact: no
-    * other vector's cosine depends on a deleted one), and the next
-    * [[writeBandIndex]] rebuild applies and clears. No resurrect
-    * hazard from the mode(append) band appends: a replayed append
-    * re-lands rows but never removes tombstones, so the standing mask
-    * keeps them invisible until the rebuild. */
-  def deleteBandIndex(spark: SparkSession, path: String,
-                      vecIds: DataFrame): Unit = {
-    ensureRegistered(spark)
-    IndexStore.landTombstones(vecIds, s"$path/deletes", "vec_id")
-  }
+  /** Band one batch of vectors and land its rows under
+    * `bands/batch=<tag>/`, tagged from `emb`'s ids (a band batch holds
+    * one row per (vec_id, band), so a tag over the landed rows would
+    * fold each id's repeats away through `bit_xor`). */
+  private def landBands(emb: DataFrame, path: String): Unit =
+    IndexStore.landIdentityBatch(
+      bandedIndex(emb)
+        .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+        .select(col("band"), col("sig"), col("vec_id"), col("embedding")),
+      s"$path/bands", IndexStore.identityBatchTag(emb, "vec_id"))
 
   /** Probe a standing band index with a fresh increment: bands are
     * computed only for `probe`; candidates come from (band,sig)
@@ -3191,19 +3126,15 @@ object Similarity {
   /** Append an increment to a standing band index — the sign-LSH twin
     * of [[appendIvfIndex]]/[[graft.operators.TextDedup.appendDedupIndex]],
     * closing the lifecycle symmetry: only the NEW vectors band, their
-    * rows land as new files, the standing rows are never rewritten or
-    * re-read. Banding is per-vector (axis-aligned sign planes — no
-    * corpus-derived state at all), so `build(part1); append(part2)` ≡
-    * `build(part1 ∪ part2)` unconditionally; no compaction step is
-    * semantically needed (no duplicate-rep merge exists to do), only
-    * the generic small-file rewrite
-    * ([[graft.operators.LakeLayout]]). */
+    * rows land as one identity batch (a replayed append is a no-op),
+    * the standing rows are never rewritten or re-read. Banding is
+    * per-vector (axis-aligned sign planes — no corpus-derived state at
+    * all), so `build(part1); append(part2)` ≡ `build(part1 ∪ part2)`
+    * unconditionally; no compaction step is semantically needed (no
+    * duplicate-rep merge exists to do). */
   def appendBandIndex(spark: SparkSession, path: String,
                       newEmb: DataFrame): Unit =
-    bandedIndex(newEmb)
-      .join(newEmb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("band"), col("sig"), col("vec_id"), col("embedding"))
-      .write.mode("append").parquet(s"$path/bands")
+    landBands(newEmb, path)
 
   /** The takedown slice of [[qEmbedNearDupDeleted]] — removes 2 of the
     * persisted entry's 4 sf0.01 answer rows, so the mask is exercised,
@@ -3222,7 +3153,7 @@ object Similarity {
     val standing = emb.filter(col("vec_id") % EmbedIncrementMod =!= 0)
     writeBandIndex(standing.filter(col("vec_id") % 2 === 1), path)
     appendBandIndex(spark, path, standing.filter(col("vec_id") % 2 === 0))
-    deleteBandIndex(spark, path,
+    deleteIvfPqIndex(spark, path,
       standing.filter(col("vec_id") % EmbedDeleteMod === EmbedDeleteRem)
         .select(col("vec_id")))
     bandProbeIndex(spark, path,
@@ -3642,7 +3573,7 @@ object Similarity {
   /** Serve top-k from the landed integer-learned index: query cells
     * from the frozen centroids (map-only [[kmeansProbeCellsInt]]),
     * same-cell candidates from the landed cells (tombstones masked —
-    * [[deleteIvfIndex]] works on any cells-layout index), exact
+    * the one vec-id delete, [[deleteIvfPqIndex]]), exact
     * cosine rank. nprobe=1 reproduces [[ivfTopKKmeansAuto]] exactly. */
   def kmeansIntProbeIndex(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int,
@@ -3723,7 +3654,7 @@ object Similarity {
     writeKmeansIntStructures(emb, path)
     appendKmeansIntIndex(spark, path, emb.filter(!isNew))
     appendKmeansIntIndex(spark, path, emb.filter(isNew))
-    deleteIvfIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
+    deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     kmeansIntProbeIndex(spark, path, queryVectors(emb), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3820,17 +3751,15 @@ object Similarity {
     import spark.implicits._
     // shares the plain-IVF layout AND its delete lifecycle: probes go
     // through [[ivfProbeIndex]] (tombstone-masked), deletes land via
-    // [[deleteIvfIndex]], and a rebuild applies + clears
-    IndexStore.clearTables(spark, path, "deletes")
+    // [[deleteIvfPqIndex]], and a rebuild applies + clears
+    IndexStore.clearTables(spark, path, "cells", "deletes")
     val learned = kmeansCentroids(emb, kc, iters)
     val local = learned.select(col("cluster_id"), col("c"))
       .as[(Long, Array[Float])].collect().toSeq // O(K·dims), the broadcast bound
     learned.unpersist()
     val cents = local.toDF("cluster_id", "c")
-    kmeansAssign(emb, cents)
-      .withColumnRenamed("cluster_id", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells")
+    landCells(kmeansAssign(emb, cents).withColumnRenamed("cluster_id", "cell"),
+      emb, path)
     cents.select(col("cluster_id").as("centroid_id"), col("c"))
       .write.mode("overwrite").parquet(s"$path/centroids")
   }

@@ -469,17 +469,11 @@ object TrainPrep {
     // reads the CURRENT version, writes the NEXT — never in-place
     // (installIndexVersion's sweep retains the version being read)
     val live = IndexStore.currentIndexDir(spark, path)
-    val liveFps = s"$live/fps"
-    val carried = IndexStore.landedBatchTags(spark, liveFps) ++
-      IndexStore.batchDirTags(spark, liveFps)
     val deleted = IndexStore.idsIn(spark, s"$live/deleted_ids", "doc_id")
     val hasDeleted = !deleted.isEmpty
     IndexStore.installIndexVersion(spark, path) { dir =>
-      // a compacted version holds exactly one batch in a FRESH dir, so
-      // a constant tag suffices (no conflation surface)
-      IndexStore.landIdentityBatch(cdcIndexStats(spark, path), s"$dir/fps",
-        "compacted")
-      IndexStore.recordBatchTags(spark, s"$dir/fps", carried + "compacted")
+      IndexStore.landCompacted(cdcIndexStats(spark, path), s"$live/fps",
+        s"$dir/fps")
       // the deleted-doc-id ledger carries across versions
       // (deleted-stays-deleted, the dedup-family retention): without
       // the carry, a post-compact re-submission of an old takedown

@@ -178,15 +178,15 @@ class TextPipelineSpec extends SparkSpec {
     val before = rows()
     assert(before.nonEmpty, "vacuous fixture")
     val victim = before.head._2
-    deleteBandIndex(spark, path, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, path, Seq(victim).toDF("vec_id"))
     val after = rows()
     assert(after === before.filterNot(_._2 == victim),
       "the mask must remove exactly the victim's pairs")
     // replayed delete: identity-addressed no-op
-    deleteBandIndex(spark, path, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, path, Seq(victim).toDF("vec_id"))
     assert(rows() === after)
-    // a replayed append RE-LANDS the victim's band rows (band appends
-    // are mode(append)) — the standing mask must keep it invisible
+    // an append of the victim lands its band rows as a fresh identity
+    // batch — the standing mask must keep it invisible
     appendBandIndex(spark, path, emb.filter(col("vec_id") === victim))
     assert(rows() === after,
       "a replayed append must not resurrect a deleted vector")
@@ -1136,8 +1136,8 @@ class TextPipelineSpec extends SparkSpec {
       // replayed delete: identity-addressed no-op
       TextDedup.deleteWinnowIndex(spark, p, Seq(1L, 3L).toDF("doc_id"))
       assert(pairs() === after)
-      // replayed APPEND of a deleted doc: mode(append) physically
-      // re-lands rows; the standing mask must keep hiding them
+      // APPEND of a deleted doc: its prints land as a fresh identity
+      // batch; the standing mask must keep hiding them
       TextDedup.appendWinnowIndex(spark, p,
         standing.filter(col("doc_id") === 3L))
       assert(pairs() === after,
@@ -1845,6 +1845,54 @@ class TextPipelineSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(viaJob === allAtOnce,
       "the scheduled lifecycle must answer exactly like the all-at-once build")
+  }
+
+  test("replayed appends land each vec_id once") {
+    import Similarity._
+    val emb = graft.tables.Tables.embeddings(spark, sfSmoke)
+    val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem &&
+      !isCentroidId(col("vec_id"))
+    val queries = queryVectors(emb)
+    val increment = emb.filter(col("vec_id") % EmbedIncrementMod === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    case class Family(table: String,
+                      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+                      append: (String, org.apache.spark.sql.DataFrame) => Unit,
+                      probe: String => Seq[String],
+                      compact: Option[String => Unit])
+    Seq(
+      Family("cells", writeIvfIndex, appendIvfIndex(spark, _, _),
+        p => rows(ivfProbeIndex(spark, p, queries, k = 3, nprobe = 2)),
+        Some(compactIvfIndex(spark, _))),
+      Family("bands", writeBandIndex, appendBandIndex(spark, _, _),
+        p => rows(bandProbeIndex(spark, p, increment, 0.4)), None)
+    ).foreach { f =>
+      val p = java.nio.file.Files
+        .createTempDirectory(s"graft-replay-${f.table}").toString
+      def perId() = spark.read.parquet(s"$p/${f.table}")
+        .groupBy("vec_id").count().as[(Long, Long)].collect().toMap
+      f.build(emb.filter(!isNew), p)
+      f.append(p, emb.filter(isNew))
+      val once = perId()
+      val answers = f.probe(p)
+      assert(answers.nonEmpty, s"${f.table}: vacuous probe")
+      def unchanged(step: String): Unit = {
+        val now = perId()
+        assert(now == once, s"${f.table}: $step changed the rows per vec_id, e.g. " +
+          now.toSet.diff(once.toSet).take(3).mkString(", "))
+        assert(f.probe(p) === answers, s"${f.table}: $step changed the answers")
+      }
+      f.append(p, emb.filter(isNew))
+      unchanged("a replayed append")
+      f.compact.foreach { compact =>
+        compact(p)
+        unchanged("compaction")
+        f.append(p, emb.filter(isNew))
+        unchanged("an append replayed after compaction")
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+    }
   }
 
   test("localized: an oversized frame trips the row cap without a whole-frame collect") {
@@ -3220,10 +3268,10 @@ class TextPipelineSpec extends SparkSpec {
       "every vector's cell row landed exactly once")
     // delete masks immediately; replay no-op; rebuild applies + clears
     val victim = landed.head._2
-    deleteIvfIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     val after = probe()
     assert(!after.exists(_._2 == victim), "deleted vector still served")
-    deleteIvfIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     assert(probe() === after)
     writeKmeansIntStructures(emb.filter(col("vec_id") =!= victim), p)
     appendKmeansIntIndex(spark, p, emb.filter(col("vec_id") =!= victim))
@@ -3243,7 +3291,7 @@ class TextPipelineSpec extends SparkSpec {
     val victim = kmeansIntProbeIndex(spark, p, queries, 3)
       .orderBy("query_id", "rk").as[(Long, Long, Long, Double)]
       .collect().head._2
-    deleteIvfIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     val expected = kmeansIntProbeIndex(spark, p, queries, 3)
       .orderBy("query_id", "rk").as[(Long, Long, Long, Double)]
       .collect().toSeq
@@ -3421,6 +3469,34 @@ class TextPipelineSpec extends SparkSpec {
       "every vector's codes landed exactly once")
   }
 
+  test("a batch table with a bare part file beside its batch dirs fails the probe, naming the table") {
+    import Similarity._
+    import org.apache.commons.io.FileUtils
+    val emb = clusteredEmb
+    val p = java.nio.file.Files.createTempDirectory("graft-mixed-depth").toString
+    writeIvfPqIndex(emb, p)
+    // hand-build codes/: half the rows under batch=standing/, the other
+    // half as a bare part file at the root — a layout whose partition
+    // inference would serve only the batch rows
+    val codes = spark.read.parquet(s"$p/codes").drop("batch")
+    codes.filter(col("vec_id") % 2 === 0)
+      .write.parquet(s"$p/staged/batch=standing")
+    codes.filter(col("vec_id") % 2 === 1).coalesce(1)
+      .write.parquet(s"$p/staged/loose")
+    FileUtils.deleteDirectory(new java.io.File(s"$p/codes"))
+    FileUtils.moveDirectory(new java.io.File(s"$p/staged/batch=standing"),
+      new java.io.File(s"$p/codes/batch=standing"))
+    val part = new java.io.File(s"$p/staged/loose").listFiles()
+      .find(_.getName.startsWith("part-")).get
+    FileUtils.moveFile(part, new java.io.File(s"$p/codes/${part.getName}"))
+    val err = intercept[IllegalArgumentException] {
+      ivfPqProbeIndex(spark, p, queryVectors(emb), 3, 2).collect()
+    }
+    assert(err.getMessage.contains(s"$p/codes") &&
+      err.getMessage.contains(part.getName), err.getMessage)
+    FileUtils.deleteQuietly(new java.io.File(p))
+  }
+
   test("residual IVF-PQ delete: masks one-shot and streaming probes immediately; replay no-op; rebuild applies and clears") {
     import Similarity._
     val emb = clusteredEmb
@@ -3536,12 +3612,12 @@ class TextPipelineSpec extends SparkSpec {
       .orderBy("query_id", "rk").as[(Long, Long, Long, Double)].collect().toSeq
     val before = probe()
     val victim = before.head._2
-    deletePqIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     val after = probe()
     assert(!after.exists(_._2 == victim), "deleted vector still served")
     assert(after.map(_._1).distinct === before.map(_._1).distinct,
       "a delete must not lose queries — replacements promote")
-    deletePqIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     assert(probe() === after, "replayed delete must be a no-op")
     writePqIndex(emb.filter(col("vec_id") =!= victim), p)
     assert(!new java.io.File(s"$p/deletes").exists(),
@@ -3560,12 +3636,12 @@ class TextPipelineSpec extends SparkSpec {
       .orderBy("query_id", "rk").as[(Long, Long, Long, Double)].collect().toSeq
     val before = probe()
     val victim = before.head._2
-    deleteIvfIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     val after = probe()
     assert(!after.exists(_._2 == victim), "deleted vector still served")
     assert(after.map(_._1).distinct === before.map(_._1).distinct,
       "a delete must not lose queries — replacements promote")
-    deleteIvfIndex(spark, p, Seq(victim).toDF("vec_id"))
+    deleteIvfPqIndex(spark, p, Seq(victim).toDF("vec_id"))
     assert(probe() === after, "replayed delete must be a no-op")
     writeIvfIndex(emb.filter(col("vec_id") =!= victim), p)
     assert(!new java.io.File(s"$p/deletes").exists(),
