@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *    ([[landIdentityBatch]]) — replay-idempotent appends. The
   *    unversioned families' serving tables (`cells`, `codes`, `bands`,
   *    `prints`) land ONLY this way: a build is [[clearTables]] plus one
-  *    batch, an append is one batch. Every batch-table read goes
-  *    through one root listing that refuses a mixed-depth layout
-  *    ([[batchDirTags]]).
+  *    batch ([[landBuild]]), an append is one batch. Every batch-table
+  *    read goes through one root listing that refuses a mixed-depth
+  *    layout ([[batchDirTags]]).
   *  - TOMBSTONES: deleted ids land as identity batches under the index
   *    root's `deletes/` dir ([[landTombstones]]) and are read back as
   *    one id frame ([[idsIn]]) for the probe-side anti-join mask
@@ -162,6 +162,17 @@ private[graft] object IndexStore {
         .parquet(batchDir.toString)
     }
     recordBatchTags(spark, tableDir, landed + tag)
+  }
+
+  /** Rebuild `<path>/<table>`: clear it and the index's tombstones (a
+    * rebuild's corpus is the post-takedown truth), then land `rows` as
+    * its one batch. The table was just emptied, so no replay can be
+    * confused with this batch and the constant tag `build` spares the
+    * [[identityBatchTag]] job an append pays. */
+  def landBuild(rows: DataFrame, path: String, table: String,
+                partitionCols: String*): Unit = {
+    clearTables(rows.sparkSession, path, table, "deletes")
+    landIdentityBatch(rows, s"$path/$table", "build", partitionCols: _*)
   }
 
   /** The set of batch tags the table's manifest records as landed
@@ -313,7 +324,16 @@ private[graft] object IndexStore {
     val live = new Path(tableDir)
     val merged = new Path(s"${tableDir}_compact")
     val retired = new Path(s"${tableDir}_retired")
-    Seq(merged, retired).foreach(fs.delete(_, true)) // a crashed run's leftovers
+    // a crashed run's leftover `retired` is dropped only when the live
+    // table exists and already carries every batch it holds: a crash
+    // between the renames can leave it the only copy
+    val rs = retired.toString
+    require(fs.exists(live) && (!fs.exists(retired) ||
+      (landedBatchTags(spark, rs) ++ batchDirTags(spark, rs))
+        .subsetOf(landedBatchTags(spark, tableDir))),
+      s"cannot compact $live: it is missing, or a crashed compaction " +
+        s"left batches it lacks at $retired — move those back first")
+    Seq(merged, retired).foreach(fs.delete(_, true))
     landCompacted(spark.read.parquet(tableDir).drop("batch")
         .repartition(partitionCols.map(col): _*),
       tableDir, merged.toString, partitionCols: _*)

@@ -1358,18 +1358,9 @@ object Similarity {
     * [[appendIvfIndex]] is replay-idempotent; a rebuild clears the
     * standing cells and tombstones ([[deleteIvfPqIndex]]). */
   def writeIvfIndex(emb: DataFrame, path: String): Unit = {
-    IndexStore.clearTables(emb.sparkSession, path, "cells", "deletes")
-    landCells(ivfCells(emb), emb, path)
+    IndexStore.landBuild(ivfCells(emb), path, "cells", "cell")
     writeStrideCentroids(emb, path)
   }
-
-  /** Land one batch of cell rows under `cells/batch=<tag>/cell=<n>/`,
-    * tagged from `batch`'s ids — the one cells landing every plain,
-    * quantized and learned IVF build and append shares. */
-  private def landCells(rows: DataFrame, batch: DataFrame,
-                        path: String): Unit =
-    IndexStore.landIdentityBatch(rows, s"$path/cells",
-      IndexStore.identityBatchTag(batch, "vec_id"), "cell")
 
   /** The fixed-stride centroid table in the standard layout — one
     * definition for every index flavor that stores it, so the
@@ -1422,8 +1413,9 @@ object Similarity {
     * only on the centroid set, which an append of genuinely new
     * vectors never changes. */
   def appendIvfIndex(spark: SparkSession, path: String, newEmb: DataFrame): Unit =
-    landCells(assignBestByCos(newEmb, spark.read.parquet(s"$path/centroids"),
-      "centroid_id", "c", "cell"), newEmb, path)
+    IndexStore.landIdentityBatch(assignBestByCos(newEmb,
+        spark.read.parquet(s"$path/centroids"), "centroid_id", "c", "cell"),
+      s"$path/cells", IndexStore.identityBatchTag(newEmb, "vec_id"), "cell")
 
   /** Compact a standing IVF index's cell files in place. Repeated
     * [[appendIvfIndex]] batches each land their own small files per
@@ -1546,15 +1538,14 @@ object Similarity {
     * them). */
   def writeQuantizedIvfIndex(emb: DataFrame, path: String): Unit = {
     val xd = (x: Column) => x.cast("double")
-    IndexStore.clearTables(emb.sparkSession, path, "cells", "deletes")
-    landCells(ivfCells(emb)
+    IndexStore.landBuild(ivfCells(emb)
       .select(col("vec_id"), col("cell"), col("embedding"),
         greatest(array_max(transform(col("embedding"), x => abs(xd(x)))),
           lit(1e-30)).as("scale"))
       .select(col("vec_id"), col("cell"), col("scale"),
         transform(col("embedding"),
           x => floor(xd(x) / col("scale") * 127.0 + 0.5).cast("int")).as("codes")),
-      emb, path)
+      path, "cells", "cell")
     writeStrideCentroids(emb, path)
   }
 
@@ -1568,7 +1559,7 @@ object Similarity {
     * accumulation ambiguity anywhere. */
   def ivfProbeQuantized(spark: SparkSession, path: String, queries: DataFrame,
                         k: Int, nprobe: Int): DataFrame = {
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = IndexStore.liveRows(spark, path, "cells", "vec_id")
       .select(col("vec_id"), col("cell"),
         transform(col("codes"),
           c => (c.cast("double") * col("scale") / 127.0).cast("float"))
@@ -2807,8 +2798,8 @@ object Similarity {
 
   /** Land a TOMBSTONE batch against any landed Similarity index whose
     * probe reads [[IndexStore.liveRows]] — residual IVF-PQ, PQ,
-    * plain/learned IVF, k-means-int or band (not the quantized IVF
-    * probe): the one vec-id delete of the serving lifecycle (vector
+    * plain/quantized/learned IVF, k-means-int or band: the one vec-id
+    * delete of the serving lifecycle (vector
     * takedowns). Vec ids land as an identity-addressed
     * `deletes/batch=<tag>/` dir ([[IndexStore.landTombstones]] —
     * replay-idempotent), are MASKED out of every probe immediately
@@ -3070,21 +3061,14 @@ object Similarity {
     * indexed corpus; `embedding` rides along so the verify join needs
     * no second corpus read. A rebuild clears the standing bands and
     * tombstones ([[deleteIvfPqIndex]] masks until then). */
-  def writeBandIndex(emb: DataFrame, path: String): Unit = {
-    IndexStore.clearTables(emb.sparkSession, path, "bands", "deletes")
-    landBands(emb, path)
-  }
+  def writeBandIndex(emb: DataFrame, path: String): Unit =
+    IndexStore.landBuild(bandRows(emb), path, "bands")
 
-  /** Band one batch of vectors and land its rows under
-    * `bands/batch=<tag>/`, tagged from `emb`'s ids (a band batch holds
-    * one row per (vec_id, band), so a tag over the landed rows would
-    * fold each id's repeats away through `bit_xor`). */
-  private def landBands(emb: DataFrame, path: String): Unit =
-    IndexStore.landIdentityBatch(
-      bandedIndex(emb)
-        .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .select(col("band"), col("sig"), col("vec_id"), col("embedding")),
-      s"$path/bands", IndexStore.identityBatchTag(emb, "vec_id"))
+  /** One batch of vectors' `bands/` rows. */
+  private def bandRows(emb: DataFrame): DataFrame =
+    bandedIndex(emb)
+      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+      .select(col("band"), col("sig"), col("vec_id"), col("embedding"))
 
   /** Probe a standing band index with a fresh increment: bands are
     * computed only for `probe`; candidates come from (band,sig)
@@ -3097,7 +3081,12 @@ object Similarity {
     val bands = IndexStore.liveRows(spark, path, "bands", "vec_id")
     val pIdx = bandedIndex(probe)
       .select(col("band"), col("sig"), col("vec_id").as("probe_id"))
-    val cand = pIdx.join(bands.select(col("band"), col("sig"),
+    // the increment's (band, sig, id) rows are the small side. Spark
+    // scales the standing scan's file bytes by row widths that count
+    // the `batch` partition string no file stores, so pruning it sizes
+    // the scan low; with no shuffle below for AQE to correct, Spark
+    // would broadcast the standing rows, an embedding per band
+    val cand = broadcast(pIdx).join(bands.select(col("band"), col("sig"),
         col("vec_id").as("index_id"), col("embedding").as("ei")),
         Seq("band", "sig"))
       .select(col("probe_id"), col("index_id"), col("ei"))
@@ -3134,7 +3123,11 @@ object Similarity {
     * duplicate-rep merge exists to do). */
   def appendBandIndex(spark: SparkSession, path: String,
                       newEmb: DataFrame): Unit =
-    landBands(newEmb, path)
+    // tagged from the input's ids: a band batch holds one row per
+    // (vec_id, band), and a tag over those rows would fold each id's
+    // repeats away through `bit_xor`
+    IndexStore.landIdentityBatch(bandRows(newEmb), s"$path/bands",
+      IndexStore.identityBatchTag(newEmb, "vec_id"))
 
   /** The takedown slice of [[qEmbedNearDupDeleted]] — removes 2 of the
     * persisted entry's 4 sf0.01 answer rows, so the mask is exercised,
@@ -3752,14 +3745,13 @@ object Similarity {
     // shares the plain-IVF layout AND its delete lifecycle: probes go
     // through [[ivfProbeIndex]] (tombstone-masked), deletes land via
     // [[deleteIvfPqIndex]], and a rebuild applies + clears
-    IndexStore.clearTables(spark, path, "cells", "deletes")
     val learned = kmeansCentroids(emb, kc, iters)
     val local = learned.select(col("cluster_id"), col("c"))
       .as[(Long, Array[Float])].collect().toSeq // O(K·dims), the broadcast bound
     learned.unpersist()
     val cents = local.toDF("cluster_id", "c")
-    landCells(kmeansAssign(emb, cents).withColumnRenamed("cluster_id", "cell"),
-      emb, path)
+    IndexStore.landBuild(kmeansAssign(emb, cents)
+      .withColumnRenamed("cluster_id", "cell"), path, "cells", "cell")
     cents.select(col("cluster_id").as("centroid_id"), col("c"))
       .write.mode("overwrite").parquet(s"$path/centroids")
   }

@@ -2040,10 +2040,9 @@ object TextDedup {
     * and tombstones (the band-index contract: the new corpus is the
     * post-takedown truth). */
   def writeWinnowIndex(standing: DataFrame, path: String,
-                       k: Int = WinnowK, w: Int = WinnowW): Unit = {
-    IndexStore.clearTables(standing.sparkSession, path, "prints", "deletes")
-    landPrints(winnowFingerprints(standing, k, w), standing, path)
-  }
+                       k: Int = WinnowK, w: Int = WinnowW): Unit =
+    IndexStore.landBuild(winnowFingerprints(standing, k, w)
+      .select(col("fp"), col("doc_id")), path, "prints")
 
   /** Append an increment to a standing winnow index: fingerprints are
     * computed ONLY for `newDocs` and land as one identity batch of
@@ -2106,14 +2105,13 @@ object TextDedup {
     // the landed standing index is written FROM the memo'd print
     // frame (a doc_id filter — selection is per-document), so this
     // entry prices the write + probe, not a re-fingerprinting
-    val docs = Tables.documents(spark, dir)
-    val prints = winnowPrints(spark, dir)(docs)
+    val prints = winnowPrints(spark, dir)(Tables.documents(spark, dir))
     val isStanding = col("doc_id") % IncrementMod =!= 0
-    IndexStore.clearTables(spark, path, "prints", "deletes")
-    landPrints(prints.filter(isStanding), docs.filter(isStanding), path)
+    IndexStore.landBuild(prints.filter(isStanding)
+      .select(col("fp"), col("doc_id")), path, "prints")
     winnowProbeFrom(
         selOf(prints.filter(!isStanding)),
-        selOf(spark.read.parquet(s"$path/prints")),
+        selOf(IndexStore.liveRows(spark, path, "prints", "doc_id")),
         WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))
   }
@@ -2144,9 +2142,9 @@ object TextDedup {
     val prints = winnowPrints(spark, dir)(docs)
     val isStanding = col("doc_id") % IncrementMod =!= 0
     val standing = prints.filter(isStanding)
-    IndexStore.clearTables(spark, path, "prints", "deletes")
     val odd = col("doc_id") % 2 === 1
-    landPrints(standing.filter(odd), docs.filter(isStanding && odd), path)
+    IndexStore.landBuild(standing.filter(odd)
+      .select(col("fp"), col("doc_id")), path, "prints")
     landPrints(standing.filter(!odd), docs.filter(isStanding && !odd), path)
     deleteWinnowIndex(spark, path,
       standing.filter(col("doc_id") % WinnowDeleteMod === WinnowDeleteRem)

@@ -1895,6 +1895,37 @@ class TextPipelineSpec extends SparkSpec {
     }
   }
 
+  test("compaction keeps a crashed compaction's retired cells unless the live table carries them") {
+    import Similarity._
+    import org.apache.commons.io.FileUtils
+    val emb = graft.tables.Tables.embeddings(spark, sfSmoke)
+    val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem &&
+      !isCentroidId(col("vec_id"))
+    val p = java.nio.file.Files.createTempDirectory("graft-compact-crash").toString
+    def dir(name: String) = new java.io.File(s"$p/$name")
+    def rowCount(name: String) = spark.read.parquet(s"$p/$name").count()
+    writeIvfIndex(emb.filter(!isNew), p)
+    appendIvfIndex(spark, p, emb.filter(isNew))
+    val n = rowCount("cells")
+    // a crash between the swap's renames: `cells_retired` is the only copy
+    FileUtils.moveDirectory(dir("cells"), dir("cells_retired"))
+    intercept[IllegalArgumentException](compactIvfIndex(spark, p))
+    assert(rowCount("cells_retired") === n, "the only copy was dropped")
+    // a retried append recreates `cells` without the retired batches
+    appendIvfIndex(spark, p, emb.filter(isNew))
+    val err = intercept[IllegalArgumentException](compactIvfIndex(spark, p))
+    assert(err.getMessage.contains(s"$p/cells_retired"), err.getMessage)
+    assert(rowCount("cells_retired") === n, "the only full copy was dropped")
+    // a crash after the swap: the stale retired copy is dropped
+    FileUtils.deleteDirectory(dir("cells"))
+    FileUtils.copyDirectory(dir("cells_retired"), dir("cells"))
+    compactIvfIndex(spark, p)
+    FileUtils.copyDirectory(dir("cells"), dir("cells_retired"))
+    compactIvfIndex(spark, p)
+    assert(!dir("cells_retired").exists() && rowCount("cells") === n)
+    FileUtils.deleteQuietly(dir(""))
+  }
+
   test("localized: an oversized frame trips the row cap without a whole-frame collect") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
     val cap = Similarity.LocalizedRowCap
@@ -1975,6 +2006,22 @@ class TextPipelineSpec extends SparkSpec {
       quant(q).intersect(f).size.toDouble / f.size }
     val mean = overlaps.sum / overlaps.size
     assert(mean >= 2.0 / 3.0, s"mean quantized recall $mean too low")
+  }
+
+  test("quantized IVF index delete: the one vec-id delete masks its probe") {
+    import graft.operators.Similarity
+    val emb = graft.tables.Tables.embeddings(spark, sfSmoke)
+    val path = TextDedup.spillPath(spark, "spec_ivf_q8_del")
+    Similarity.writeQuantizedIvfIndex(emb, path)
+    val queries = Similarity.queryVectors(emb)
+    def probe() = Similarity.ivfProbeQuantized(spark, path, queries, 3, 2)
+      .select("vec_id").as[Long].collect().toSet
+    val deleted = probe().take(3)
+    assert(deleted.nonEmpty, "vacuous delete")
+    Similarity.deleteIvfPqIndex(spark, path, deleted.toSeq.toDF("vec_id"))
+    val after = probe()
+    assert(after.nonEmpty && after.intersect(deleted).isEmpty,
+      s"deleted ${deleted.intersect(after)} still served")
   }
 
   test("dedup clustering on an empty pair graph yields the empty cluster set") {
