@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
@@ -83,42 +82,11 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those queries
     // (driver runs always leave it unset and time the full set)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must fail loudly — an empty selection would emit a
-    // green zero-cost bench and exit 0
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (k, _) => names(k) })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Benign glob-path WARN (full stack) otherwise lands in the driver's
-    // captured output tail — see Verify for the rationale.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    // Likewise the "No Partition Defined for Window operation" WARN:
-    // every deliberately-global window here is O(K)-bounded (post-limit
-    // vocab rank, 256-row bucket offsets — see TrainPrep), and ~40
-    // repeats of the warning would drown real signal in the bounded
-    // output tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val selected = SparkEntry.selected("SPARK_GRAFT_BENCH_ONLY")
+    val spark = GraftSession(GraftSession.mainCores)
 
     // Full materialization without driver accumulation: every operator
     // and row executes (unlike count(), see scaladoc), nothing collects.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the declared queries so
   * scan pruning (PushedFilters / ReadSchema), join strategies, and
   * WholeStageCodegen spans can be audited per round.
@@ -38,11 +36,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else headline
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // fixed 4 cores: the plan text carries the shuffle partition count
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names.foreach { n =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.expressions.GraftFunctions
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -17,7 +18,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * registers graft's native expressions into the session it is
+    * handed, so a driver-built session without [[GraftSession]]'s
+    * extension runs every query too. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing_summary"   -> (Relational.q1PricingSummary _),
     "q3_shipping_priority" -> (Relational.q3ShippingPriority _),
@@ -308,7 +312,23 @@ object SparkEntry {
     "q_cdc_strip"          -> (TrainPrep.qCdcStrip _),
     "q_cdc_strip_frac"     -> (TrainPrep.qCdcStripFrac _),
     "q_cdc_strip_incremental" -> (TrainPrep.qCdcStripIncremental _),
-  )
+  ).transform { (_, q) => (spark: SparkSession, dir: String) =>
+    GraftFunctions.register(spark)
+    q(spark, dir)
+  }
+
+  /** The entries a main runs: all of [[queries]], or the comma-separated
+    * names in env var `onlyVar` (a dev loop). An unknown name fails
+    * loudly — an empty selection would report a green zero-query run. */
+  def selected(onlyVar: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    sys.env.get(onlyVar).fold(all) { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(all.keySet)
+      require(unknown.isEmpty, s"$onlyVar names unknown queries: ${unknown.mkString(", ")}")
+      all.filter { case (k, _) => names(k) }
+    }
+  }
 
   /** Absolute fixture paths for the DuckDB oracle (the driver's DuckDB
     * only creates views for the testdata tables; fixture tables are read

@@ -1,49 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failing query
+  * is logged to stderr and skipped; when any fails, failures.json (name →
+  * message) lands next to oracle_sql.json. The exit code is 0 either way. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink.hasMetadata logs a WARN + full FileNotFoundException
-    // stack for every glob-path batch read (the glob is not a literal dir);
-    // benign, but it pollutes the driver's captured output tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b dumps just those queries
     // (oracle_sql.json still carries every entry — check.py selects)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (k, _) => names(k) })
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val selected = SparkEntry.selected("SPARK_GRAFT_VERIFY_ONLY")
+    val spark = GraftSession(GraftSession.mainCores)
+    new java.io.File(outDir).mkdirs()
+    val failures = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val failed =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> Option(e.getMessage).getOrElse(e.getClass.getName))
+        }
       // release per-query persists (lmPerplexity/dsirWeights/divergence
       // caches) so a 185-query session doesn't accumulate every
       // operator's MEMORY_AND_DISK entries; no query reads another's
       // cache, so results are unaffected
       spark.catalog.clearCache()
+      failed
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,9 +40,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    val manifest = Paths.get(s"$outDir/failures.json")
+    if (failures.nonEmpty) Files.writeString(manifest, json(failures))
+    else Files.deleteIfExists(manifest)
     spark.stop()
   }
 }

@@ -73,10 +73,12 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native expressions — via
-  * `SparkSessionExtensions` (config
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) or the idempotent
-  * [[GraftFunctions.register]] for an existing session. */
+/** Graft's native expressions. Every graft session installs [[all]]
+  * through `spark.sql.extensions=graft.plans.GraftExtensions`
+  * ([[graft.GraftSession]]); operators never register them. The
+  * idempotent [[GraftFunctions.register]] is for a session built
+  * without the extension, and [[graft.SparkEntry.queries]] is its one
+  * caller. */
 object GraftFunctions {
   type Registration = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 

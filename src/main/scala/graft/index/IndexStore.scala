@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *  - TOMBSTONES: deleted ids land as identity batches under the index
   *    root's `deletes/` dir ([[landTombstones]]) and are read back as
   *    one id frame ([[idsIn]]) for the probe-side anti-join mask
-  *    ([[liveRows]]).
+  *    ([[liveRows]], [[withoutIdsIn]]), which is planned only when a
+  *    tombstone batch is landed.
   *  - COMPACTION: a batch table's dirs merge into one `batch=compacted`
   *    dir whose manifest carries every merged tag ([[landCompacted]]);
   *    an unversioned table swaps it in with checked renames
@@ -255,24 +256,28 @@ private[graft] object IndexStore {
   def deletesDir(root: String): String = s"$root/deletes"
 
   /** The ids landed as batch dirs under `dir`, as a one-column
-    * `idCol` frame — empty (same schema) when none have been landed,
-    * or when a compact applied them all (a post-compact dir may hold
-    * only the carried manifest). */
-  def idsIn(spark: SparkSession, dir: String, idCol: String): DataFrame =
-    if (batchDirTags(spark, dir).nonEmpty)
-      spark.read.parquet(dir).select(col(idCol)).distinct()
-    else spark.range(0).select(col("id").as(idCol))
+    * `idCol` frame, or None when none are landed. The driver-side
+    * listing decides, so a reader with nothing to mask plans no
+    * anti-join at all (not one against an empty relation, which Spark
+    * would still broadcast in its own exchange). */
+  def idsIn(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
+    Option.when(batchDirTags(spark, dir).nonEmpty)(
+      spark.read.parquet(dir).select(col(idCol)).distinct())
+
+  /** `rows` minus the ids landed under `dir`, anti-joined on `idCol`;
+    * `rows` itself when none are landed. */
+  def withoutIdsIn(rows: DataFrame, dir: String, idCol: String): DataFrame =
+    idsIn(rows.sparkSession, dir, idCol)
+      .fold(rows)(ids => rows.join(ids, Seq(idCol), "left_anti"))
 
   /** The serving view of `<path>/<table>`: its rows minus the ids
-    * landed under `<path>/deletes` (anti-joined on `idCol`; a no-op
-    * when none are landed). The physical table keeps masked rows until
-    * the family's next rebuild applies them. A batch table's rows carry
-    * its `batch` partition column. */
+    * landed under `<path>/deletes` ([[withoutIdsIn]]). The physical
+    * table keeps masked rows until the family's next rebuild applies
+    * them. A batch table's rows carry its `batch` partition column. */
   def liveRows(spark: SparkSession, path: String, table: String,
                idCol: String): DataFrame = {
     batchDirTags(spark, s"$path/$table") // the mixed-depth guard
-    spark.read.parquet(s"$path/$table")
-      .join(idsIn(spark, deletesDir(path), idCol), Seq(idCol), "left_anti")
+    withoutIdsIn(spark.read.parquet(s"$path/$table"), deletesDir(path), idCol)
   }
 
   /** Delete the named tables under an index root, where present — the

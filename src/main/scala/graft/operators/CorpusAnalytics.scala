@@ -373,7 +373,6 @@ object CorpusAnalytics {
   }
 
   def qSurvivorship(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // served from the per-(JVM, dir) materialized label table — no
     // cache to release, so no per-query spill of the output either
     val docs = Tables.documents(spark, dir)
@@ -404,10 +403,8 @@ object CorpusAnalytics {
       .agg(count(lit(1)).as("n_neighbors"), max(col("jaccard")).as("max_jaccard"))
   }
 
-  def qDupDegree(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qDupDegree(spark: SparkSession, dir: String): DataFrame =
     dupDegree(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   // ---------------------------------------------------------------------
   // BM25 ranked search
@@ -605,10 +602,8 @@ object CorpusAnalytics {
         col("n_duped").cast("double") / col("n_docs").cast("double"))
   }
 
-  def qDedupRates(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qDedupRates(spark: SparkSession, dir: String): DataFrame =
     dedupRates(Tables.documents(spark, dir)).orderBy(col("source"))
-  }
 
   // ---------------------------------------------------------------------
   // Mergeable per-source stats (incremental maintenance)
@@ -721,7 +716,6 @@ object CorpusAnalytics {
   }
 
   def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     heavyHitters(Tables.documents(spark, dir))
       .orderBy(col("n_occurrences").desc, col("token"))
   }
@@ -752,10 +746,8 @@ object CorpusAnalytics {
         concat_ws(" ", col("kept")).as("clean_text"))
   }
 
-  def qStripHeavy(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qStripHeavy(spark: SparkSession, dir: String): DataFrame =
     stripHeavyTokens(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   /** Streaming candidate maintenance: the SAME native Misra–Gries
     * aggregate run as a streaming aggregation in complete mode — each
@@ -1058,7 +1050,6 @@ object CorpusAnalytics {
         .as("gone_mass"))
 
   def qDriftAlert(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     driftAlert(docs.filter(col("doc_id") % 5 =!= 0),
       docs.filter(col("doc_id") % 5 === 0))
@@ -1090,7 +1081,6 @@ object CorpusAnalytics {
   }
 
   def qQualityDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     qualityDrift(docs.filter(col("doc_id") % 5 =!= 0),
         docs.filter(col("doc_id") % 5 === 0))
@@ -1120,7 +1110,6 @@ object CorpusAnalytics {
   }
 
   def qCrossSourceDups(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     crossSourceDups(Tables.documents(spark, dir))
       .orderBy(col("source_a"), col("source_b"))
   }
@@ -1188,8 +1177,6 @@ object CorpusAnalytics {
           .as("contamination_rate"))
   }
 
-  def qCorpusCard(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qCorpusCard(spark: SparkSession, dir: String): DataFrame =
     corpusCard(Tables.documents(spark, dir)).orderBy(col("source"))
-  }
 }

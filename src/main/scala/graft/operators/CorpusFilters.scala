@@ -105,10 +105,8 @@ object CorpusFilters {
           col("uniq_bigram_frac") >= UniqBigramFracMin)
   }
 
-  def qRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qRepetition(spark: SparkSession, dir: String): DataFrame =
     repetitionStats(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   // --- benchmark decontamination ---
 
@@ -143,10 +141,8 @@ object CorpusFilters {
       .withColumn("contaminated", col("n_overlap") > 0)
   }
 
-  def qContamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qContamination(spark: SparkSession, dir: String): DataFrame =
     contamination(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   /** Frozen banned-shingle set of a benchmark corpus — the table a
     * live decontamination gate broadcasts (bounded by the benchmark,
@@ -200,7 +196,6 @@ object CorpusFilters {
   }
 
   def qContaminationReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     contaminationReport(Tables.documents(spark, dir))
       .orderBy(col("eval_id"), col("train_id"))
   }

@@ -80,7 +80,6 @@ object Curate {
   }
 
   def qCurateCorpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curateWith(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
       nearDropIds(spark, dir))
       .orderBy(col("doc_id"))
@@ -117,7 +116,6 @@ object Curate {
   }
 
   def qCurateV2(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curateV2With(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
       nearDropIds(spark, dir))
       .orderBy(col("doc_id"))
@@ -158,7 +156,6 @@ object Curate {
   }
 
   def qCurateV3(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curateV3With(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
       nearDropIds(spark, dir))
       .orderBy(col("doc_id"))
@@ -188,7 +185,6 @@ object Curate {
         col("n_after"), col("quality_score"))
 
   def qCurateV4(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curateV4With(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
       nearDropIds(spark, dir))
       .orderBy(col("doc_id"))
@@ -215,7 +211,6 @@ object Curate {
   }
 
   def qCurateV5(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // v5 IS the emit: this entry lands the materialized parquet (first
     // caller in the JVM pays the build) and serves it back, so
     // v6/v7/shards/manifest scan a columnar table instead of replaying
@@ -293,7 +288,6 @@ object Curate {
     v6FromEmit(curateV5(docs, embeddings), docs)
 
   def qCurateV6(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     v6FromEmit(v5Emit(spark, dir), Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
   }
@@ -311,7 +305,6 @@ object Curate {
     v7FromEmit(curateV5(docs, embeddings), docs)
 
   def qCurateV7(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     v7FromEmit(v5Emit(spark, dir), Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
   }
@@ -385,7 +378,6 @@ object Curate {
     }
 
   def qCurateV8(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curateV8With(Tables.documents(spark, dir), Tables.embeddings(spark, dir),
       nearDropIds(spark, dir), cdcBoilerFps(spark, dir))
       .orderBy(col("doc_id"))
@@ -401,10 +393,8 @@ object Curate {
   def trainShards(docs: DataFrame, embeddings: DataFrame): DataFrame =
     trainShardsFromEmit(curateV5(docs, embeddings))
 
-  def qTrainShards(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qTrainShards(spark: SparkSession, dir: String): DataFrame =
     trainShardsFromEmit(v5Emit(spark, dir)).orderBy(col("doc_id"))
-  }
 
   /** Per-(shard, sequence) reproducibility manifest over the packed
     * emit — the receipt a training run verifies before consuming a
@@ -427,7 +417,6 @@ object Curate {
     manifestOf(trainShards(docs, embeddings))
 
   def qShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     manifestOf(trainShardsFromEmit(v5Emit(spark, dir)))
       .orderBy(col("shard"), col("seq_id"))
   }

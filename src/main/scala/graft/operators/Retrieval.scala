@@ -69,7 +69,6 @@ object Retrieval {
     * salted top-K — see object scaladoc). Output:
     * (query_id, doc_id, lex_rk). */
   def lexicalTopK(docs: DataFrame, k: Int = ListK): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val sets = docs
       .select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(TextDedup.ShingleN))

@@ -40,13 +40,10 @@ import graft.tables.Tables
   */
 object Similarity {
 
-  /** Native cosine — see [[graft.expressions.CosineSim]]. Callers outside
-    * a GraftExtensions session must register via [[ensureRegistered]]. */
+  /** Native cosine — see [[graft.expressions.CosineSim]]; resolves in any
+    * session built with [[graft.plans.GraftExtensions]]. */
   private def cos(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-
-  private def ensureRegistered(spark: SparkSession): Unit =
-    graft.expressions.GraftFunctions.register(spark)
 
   /** Workload-bound invariant: every broadcast in this module is O(K)
     * for a FIXED K independent of corpus size. The query set is capped
@@ -87,7 +84,6 @@ object Similarity {
   }
 
   def qSimilarTopK(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     topK(emb, queryVectors(emb), k = 5).orderBy(col("query_id"), col("rk"))
   }
@@ -210,7 +206,6 @@ object Similarity {
   }
 
   def qSimilarMmr(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     mmrRerank(emb, queryVectors(emb))
       .orderBy(col("query_id"), col("mmr_rank"))
@@ -260,7 +255,6 @@ object Similarity {
   }
 
   def qContrastivePairs(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     contrastivePairs(Tables.embeddings(spark, dir))
       .orderBy(col("query_id"), col("role"), col("rk"))
   }
@@ -448,7 +442,6 @@ object Similarity {
   }
 
   def qSimilarAnn(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     annTopK(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -474,10 +467,8 @@ object Similarity {
         (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
   }
 
-  def qAnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qAnnRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** Recall@k of int8-QUANTIZED retrieval against full precision — the
     * accuracy half of the [[quantizeStats]] compression story (16× less
@@ -517,10 +508,8 @@ object Similarity {
         (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
   }
 
-  def qQuantRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qQuantRecall(spark: SparkSession, dir: String): DataFrame =
     quantRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** Per-class prototype (centroid) statistics over the labeled
     * embeddings — the class-prototype table a few-shot or
@@ -641,7 +630,6 @@ object Similarity {
   }
 
   def qSimilarAnn2(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     annTopKProbed(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -947,7 +935,6 @@ object Similarity {
   private def assignBestByCos(vectors: DataFrame, cents: DataFrame,
                               centId: String, centVec: String,
                               outCol: String): DataFrame = {
-    ensureRegistered(vectors.sparkSession)
     vectors.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(centsRowFrom(cents, centId, centVec)))
       .select(col("vec_id"), col("embedding"),
@@ -967,7 +954,6 @@ object Similarity {
     * [[assignBestByCos]] that every flat-centroid probe shares. */
   private def probeCells(queries: DataFrame, centroids: DataFrame,
                          nprobe: Int): DataFrame = {
-    ensureRegistered(queries.sparkSession)
     queries.crossJoin(broadcast(centsRowFrom(centroids, "centroid_id", "c")))
       .select(col("query_id"), col("q"),
         explode(cosTopCells(col("q"), col("_cents"), nprobe)).as("cell"))
@@ -994,7 +980,6 @@ object Similarity {
     * reasoning as [[ivfCellsTwoLevel]]). */
   private def twoLevelTopCells(vectors: DataFrame, coarse: DataFrame,
                                fmap: DataFrame, n: Int): DataFrame = {
-    ensureRegistered(vectors.sparkSession)
     val fmapRow = fmap
       .groupBy(col("coarse_id"))
       .agg(collect_list(struct(col("centroid_id").cast("long").as("cid"),
@@ -1049,13 +1034,11 @@ object Similarity {
     ivfTopKFrom(ivfCellsTwoLevel(emb), k)
 
   def qSimilarIvfTwoLevel(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopKTwoLevel(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
 
   def qSimilarIvf(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopK(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -1128,7 +1111,6 @@ object Similarity {
     * embeddings carry no 0.95-level true near-dups — the
     * [[qEmbedNearDup]] convention). */
   def qSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     semanticDedup(Tables.embeddings(spark, dir), threshold = 0.4)
       .orderBy(col("vec_id"))
   }
@@ -1137,7 +1119,6 @@ object Similarity {
     * (stride, count) from the same `count(*)` and the same
     * ⌈√n⌉ / ⌊n/c⌋ arithmetic. */
   def qSemanticDedupAuto(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     semanticDedupAuto(Tables.embeddings(spark, dir), threshold = 0.4)
       .orderBy(col("vec_id"))
   }
@@ -1147,7 +1128,6 @@ object Similarity {
     * (dist DESC, id ASC) tie-breaks — the approximation is
     * deterministic, so it hash-certifies like the flat path. */
   def qSemanticDedupAuto2(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     semanticDedupTwoLevel(Tables.embeddings(spark, dir), threshold = 0.4)
       .orderBy(col("vec_id"))
   }
@@ -1213,7 +1193,6 @@ object Similarity {
     * ⌊9·count/10⌋ — one driver scalar, derived identically by the
     * DuckDB twin. */
   def qSemanticAdmission(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val t = emb.count() * 9 / 10
     semanticAdmission(
@@ -1238,7 +1217,6 @@ object Similarity {
     * SILENTLY without the deleted `require`). The DuckDB twin
     * re-derives the rank selection over the same re-keyed view. */
   def qSemanticDedupSparse(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     semanticDedupTwoLevel(sparseEmb(spark, dir), threshold = 0.4)
       .orderBy(col("vec_id"))
   }
@@ -1248,7 +1226,6 @@ object Similarity {
     * shape [[qSemanticAdmission]]'s scaladoc used to warn gutted the
     * stride selection. */
   def qSemanticAdmissionSparse(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val e = sparseEmb(spark, dir)
     semanticAdmission(
         e.filter(col("vec_id") % 5 === 0),
@@ -1335,7 +1312,6 @@ object Similarity {
   }
 
   def qSimilarIvf2(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopKProbed(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -1392,7 +1368,6 @@ object Similarity {
     * Results are pinned to [[qSimilarIvf2]]'s oracle — the persistence
     * layer must be answer-invariant. */
   def qSimilarIvfPersisted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivf_index")
     writeIvfIndex(emb, path)
@@ -1460,9 +1435,9 @@ object Similarity {
         // driver scalar)
         import spark.implicits._
         val tomb = IndexStore.idsIn(spark, IndexStore.deletesDir(path), "vec_id")
-          .as[Long].collect().toSeq.toDF("vec_id")
-        writeIvfPqIndex(
-          corpus.join(broadcast(tomb), Seq("vec_id"), "left_anti"), path)
+          .map(_.as[Long].collect().toSeq.toDF("vec_id"))
+        writeIvfPqIndex(tomb.fold(corpus)(t =>
+          corpus.join(broadcast(t), Seq("vec_id"), "left_anti")), path)
       }
       trigger
     }
@@ -1499,7 +1474,6 @@ object Similarity {
     * slice intersects the persisted entry's sf0.01 answers (387, 279,
     * 360 …), so the mask is exercised, not vacuous. */
   def qSimilarIvfDeleted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem &&
       !isCentroidId(col("vec_id"))
@@ -1516,7 +1490,6 @@ object Similarity {
     * increment, probe the combined index — answers must equal the
     * all-at-once build (same oracle as [[qSimilarIvf2]]). */
   def qSimilarIvfAppended(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem &&
       !isCentroidId(col("vec_id"))
@@ -1572,7 +1545,6 @@ object Similarity {
     * probe by design; the oracle replays the identical quantize →
     * dequantize → score arithmetic. */
   def qSimilarIvfQuantized(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivf_index_q8")
     writeQuantizedIvfIndex(emb, path)
@@ -1681,15 +1653,13 @@ object Similarity {
     * vectors and null codeword components. */
   def pqEncode(emb: DataFrame, codebook: DataFrame): DataFrame =
     emb.select(col("vec_id"),
-      pqEncodeColumn(emb.sparkSession, codebook, col("embedding")).as("codes"))
+      pqEncodeColumn(codebook, col("embedding")).as("codes"))
 
   /** The baked map-only encode COLUMN over any vector column (raw
     * float embeddings or double residuals) — the collect/bake half of
     * [[pqEncode]], factored so the residual path can keep its `cell`
     * column riding alongside the codes. */
-  private def pqEncodeColumn(spark: SparkSession, codebook: DataFrame,
-                             vec: Column): Column = {
-    ensureRegistered(spark)
+  private def pqEncodeColumn(codebook: DataFrame, vec: Column): Column = {
     val entries = codebook.select(col("m"), col("j"), col("cw")).collect()
       .map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getSeq[Any](2)))
     val kEff = if (entries.isEmpty) 1
@@ -1867,7 +1837,6 @@ object Similarity {
   private def lloydRounds(vecs: DataFrame, seed: DataFrame,
                           iters: Int): DataFrame = {
     val spark = vecs.sparkSession
-    ensureRegistered(spark)
     var cb = seed
     for (_ <- 0 until iters) {
       // assignment rides the row: element m of arrays_zip pairs code j
@@ -1875,7 +1844,7 @@ object Similarity {
       // baked encode makes this MAP-ONLY (the collect is the ≤ M·K-row
       // codebook, once per round, under the driver-scalar ledger)
       val asg = vecs.select(posexplode(arrays_zip(
-          pqEncodeColumn(spark, cb, col("embedding")).as("j"),
+          pqEncodeColumn(cb, col("embedding")).as("j"),
           array((0 until PqM).map { m =>
             transform(slice(col("embedding"), m * PqSubDim + 1, PqSubDim),
               microQ(_))
@@ -1936,11 +1905,10 @@ object Similarity {
   private def lloydRoundsSpherical(vecs: DataFrame, seed: DataFrame,
                                    iters: Int): DataFrame = {
     val spark = vecs.sparkSession
-    ensureRegistered(spark)
     var cb = seed
     for (_ <- 0 until iters) {
       val asg = vecs.select(posexplode(arrays_zip(
-          pqEncodeColumn(spark, cb, col("embedding")).as("j"),
+          pqEncodeColumn(cb, col("embedding")).as("j"),
           array((0 until PqM).map { m =>
             transform(slice(col("embedding"), m * PqSubDim + 1, PqSubDim),
               microQ(_))
@@ -2000,7 +1968,6 @@ object Similarity {
   }
 
   def qSimilarPqKmeans(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     pqTopKLloyd(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -2045,10 +2012,8 @@ object Similarity {
         (coalesce(col("hl"), lit(0L)).cast("double") / k).as("recall_lloyd"))
   }
 
-  def qPqCodebookRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qPqCodebookRecall(spark: SparkSession, dir: String): DataFrame =
     pqCodebookRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** IVF-PQ — the production 100-TB ANN shape, composed from parts
     * this engine already certifies separately: the TWO-LEVEL cell
@@ -2082,7 +2047,6 @@ object Similarity {
   }
 
   def qSimilarIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqTopK(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -2120,7 +2084,6 @@ object Similarity {
     * codebook samples the same rank line at a mid-stride offset — see
     * the inline note), so the eager corpus aggregate is paid once. */
   def ivfPqResidualTopK(emb: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, cb) = ivfPqResidualParts(emb)
     val codes = encodeResiduals(residualsAgainst(emb, coarse, fmap), cb)
     ivfPqProbeResidual(codes, cb, coarse, fmap, emb,
@@ -2260,7 +2223,7 @@ object Similarity {
     * per-cell ADC join. */
   private def encodeResiduals(resid: DataFrame, cb: DataFrame,
                               keepEmbedding: Boolean = false): DataFrame = {
-    val codes = pqEncodeColumn(resid.sparkSession, cb, col("resid")).as("codes")
+    val codes = pqEncodeColumn(cb, col("resid")).as("codes")
     if (keepEmbedding)
       resid.select(col("vec_id"), col("cell"), codes, col("embedding"))
     else resid.select(col("vec_id"), col("cell"), codes)
@@ -2347,7 +2310,6 @@ object Similarity {
   }
 
   def qSimilarIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqResidualTopK(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -2395,7 +2357,6 @@ object Similarity {
   def ivfPqLloydQuantError(emb: DataFrame,
                            iters: Int = PqLloydIters): DataFrame = {
     val spark = emb.sparkSession
-    ensureRegistered(spark)
     val (coarse, fmap, cb0) = ivfPqResidualParts(emb)
     // persisted: the Lloyd rounds AND both errOf columns read it —
     // iters+2 placement passes collapse to one
@@ -2405,7 +2366,7 @@ object Similarity {
       resid.select(col("vec_id"), col("resid").as("embedding")), cb0, iters)
     def errOf(cb: DataFrame, name: String) =
       resid.select(posexplode(arrays_zip(
-          pqEncodeColumn(spark, cb, col("resid")).as("j"),
+          pqEncodeColumn(cb, col("resid")).as("j"),
           array((0 until PqM).map { m =>
             transform(slice(col("resid"), m * PqSubDim + 1, PqSubDim),
               microQ(_))
@@ -2419,24 +2380,20 @@ object Similarity {
     errOf(cb0, "sq_err_res").crossJoin(errOf(cbL, "sq_err_lloyd"))
   }
 
-  def qIvfPqLloydMse(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfPqLloydMse(spark: SparkSession, dir: String): DataFrame =
     ivfPqLloydQuantError(Tables.embeddings(spark, dir))
-  }
 
   /** One-shot residual IVF-PQ search with the Lloyd-trained residual
     * codebook — [[ivfPqResidualTopK]] with training upgraded from
     * mid-stride sampling to corpus k-means on residuals. */
   def ivfPqResidualTopKLloyd(emb: DataFrame, k: Int, nprobe: Int = 2,
                              iters: Int = PqLloydIters): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, cb, resid) = ivfPqResidualPartsLloyd(emb, iters)
     ivfPqProbeResidual(encodeResiduals(resid, cb), cb, coarse, fmap, emb,
       queryVectors(emb), k, nprobe)
   }
 
   def qSimilarIvfPqLloyd(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqResidualTopKLloyd(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -2464,14 +2421,12 @@ object Similarity {
     * like the plain Lloyd chain. */
   def ivfPqResidualTopKSpherical(emb: DataFrame, k: Int, nprobe: Int = 2,
                                  iters: Int = PqLloydIters): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, cb, resid) = ivfPqResidualPartsSpherical(emb, iters)
     ivfPqProbeResidual(encodeResiduals(resid, cb), cb, coarse, fmap, emb,
       queryVectors(emb), k, nprobe)
   }
 
   def qSimilarIvfPqSpherical(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqResidualTopKSpherical(Tables.embeddings(spark, dir),
         k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
@@ -2502,7 +2457,6 @@ object Similarity {
     * expected win. */
   def ivfPqLloydRecall(emb: DataFrame, k: Int = 3,
                        nprobe: Int = 2): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val qv = queryVectors(emb)
     // the three chains share structures, residuals and the mid-stride
     // seed BY CONSTRUCTION (all deterministic), so build them once —
@@ -2562,10 +2516,8 @@ object Similarity {
     * (>4× the suite median by construction) prices the audit, not a
     * query; the serving-tier twins are the `q_similar_ivfpq*`
     * entries. */
-  def qIvfPqLloydRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfPqLloydRecall(spark: SparkSession, dir: String): DataFrame =
     ivfPqLloydRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** Per-query recall@k of BOTH IVF-PQ forms against brute force —
     * the certified version of the spec fixture's comparison. Raw and
@@ -2594,10 +2546,8 @@ object Similarity {
         (coalesce(col("hs"), lit(0L)).cast("double") / k).as("recall_res"))
   }
 
-  def qIvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
     ivfPqRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** The nprobe settings the recall/cost curve certifies — the serving
     * knob a deployment actually turns. */
@@ -2609,12 +2559,11 @@ object Similarity {
     * set of structures and ONE encode (the parts are built once; only
     * the probed-cell rank filter differs), so the curve isolates the
     * knob: more probed cells → more candidates → recall up, probe cost
-    * up (SeamBench prices the cost side per nprobe). Deterministic end
-    * to end, so the whole curve hash-certifies — a deployment reads
-    * this row set and picks its operating point instead of trusting a
-    * one-point measurement. */
+    * up (SCALING.md records the measured probe cost per nprobe).
+    * Deterministic end to end, so the whole curve hash-certifies — a
+    * deployment reads this row set and picks its operating point
+    * instead of trusting a one-point measurement. */
   def ivfPqNprobeCurve(emb: DataFrame, k: Int = 3): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, cb) = ivfPqResidualParts(emb)
     // persisted: all three probe points scan the same encoded corpus —
     // one placement+encode pass instead of |NprobeCurve|
@@ -2644,10 +2593,8 @@ object Similarity {
       .orderBy(col("nprobe"))
   }
 
-  def qIvfPqNprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfPqNprobeCurve(spark: SparkSession, dir: String): DataFrame =
     ivfPqNprobeCurve(Tables.embeddings(spark, dir))
-  }
 
   /** Hottest-cells window of the occupancy audit. */
   val CellAuditTopK = 4
@@ -2668,7 +2615,6 @@ object Similarity {
     * (~31.6k rows at N = 10⁹). */
   def ivfCellAudit(emb: DataFrame,
                    topK: Int = CellAuditTopK): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, _) = ivfPqResidualParts(emb)
     cellAuditFrom(
       assignTwoLevel(emb, coarse, fmap).select(col("vec_id"), col("cell")),
@@ -2682,7 +2628,6 @@ object Similarity {
     * colocated floats unread. */
   def ivfPqIndexCellAudit(spark: SparkSession, path: String,
                           topK: Int = CellAuditTopK): DataFrame = {
-    ensureRegistered(spark)
     cellAuditFrom(spark.read.parquet(s"$path/codes")
       .select(col("vec_id"), col("cell")), topK)
   }
@@ -2702,10 +2647,8 @@ object Similarity {
           / sum(col("n"))).as("topk_share"))
   }
 
-  def qIvfCellAudit(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfCellAudit(spark: SparkSession, dir: String): DataFrame =
     ivfCellAudit(Tables.embeddings(spark, dir))
-  }
 
   /** The occupancy audit IN MOTION — the drift readout the retrain
     * trigger actually watches: the same frozen structures, audited
@@ -2717,7 +2660,6 @@ object Similarity {
     * `topk_share`/`max_occ` pulling away from the `standing` row
     * faster than the corpus grows. */
   def ivfCellDrift(emb: DataFrame, topK: Int = CellAuditTopK): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val (coarse, fmap, _) = ivfPqResidualParts(emb)
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     def side(df: DataFrame, label: String) =
@@ -2731,10 +2673,8 @@ object Similarity {
       .orderBy(col("phase"))
   }
 
-  def qIvfCellDrift(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qIvfCellDrift(spark: SparkSession, dir: String): DataFrame =
     ivfCellDrift(Tables.embeddings(spark, dir))
-  }
 
   /** Persist the residual IVF-PQ index — the billion-vector serving
     * layout: `coarse/` + `fmap/` (the bounded two-level placement
@@ -2752,14 +2692,12 @@ object Similarity {
     * lands byte-identical codes to a one-shot build over the
     * union). */
   def writeIvfPqIndex(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
     writeIvfPqStructures(emb, path)
     // a rebuild clears the tombstones with the codes: the new corpus
     // is the post-takedown truth (upstream filters the deleted docs),
     // so old vec-id tombstones are void — and ids are never reused,
     // so none can mask a legitimate new row anyway
-    IndexStore.clearTables(spark, path, "codes", "deletes")
-    landIvfPqCodes(spark, path, emb)
+    IndexStore.landBuild(ivfPqCodeRows(emb.sparkSession, path, emb), path, "codes")
   }
 
   /** Train + land just the bounded structures (coarse/fmap/codebook)
@@ -2767,27 +2705,27 @@ object Similarity {
     * the full corpus while landing standing codes and the increment
     * through the append path. */
   def writeIvfPqStructures(trainCorpus: DataFrame, path: String): Unit = {
-    ensureRegistered(trainCorpus.sparkSession)
     val (coarse, fmap, cb) = ivfPqResidualParts(trainCorpus)
     coarse.write.mode("overwrite").parquet(s"$path/coarse")
     fmap.write.mode("overwrite").parquet(s"$path/fmap")
     cb.write.mode("overwrite").parquet(s"$path/codebook")
   }
 
-  /** Place + encode one batch against the LANDED structures and land
-    * its code rows under an identity-addressed batch dir. */
+  /** One batch's code rows, placed + encoded against the LANDED
+    * structures. */
+  private def ivfPqCodeRows(spark: SparkSession, path: String,
+                            batch: DataFrame): DataFrame =
+    encodeResiduals(
+      residualsAgainst(batch, spark.read.parquet(s"$path/coarse"),
+        spark.read.parquet(s"$path/fmap"), keepEmbedding = true),
+      spark.read.parquet(s"$path/codebook"), keepEmbedding = true)
+
+  /** Land one batch's code rows ([[ivfPqCodeRows]]) under an
+    * identity-addressed batch dir. */
   def landIvfPqCodes(spark: SparkSession, path: String,
-                     batch: DataFrame): Unit = {
-    ensureRegistered(spark)
-    val coarse = spark.read.parquet(s"$path/coarse")
-    val fmap = spark.read.parquet(s"$path/fmap")
-    val cb = spark.read.parquet(s"$path/codebook")
-    IndexStore.landIdentityBatch(
-      encodeResiduals(
-        residualsAgainst(batch, coarse, fmap, keepEmbedding = true),
-        cb, keepEmbedding = true),
+                     batch: DataFrame): Unit =
+    IndexStore.landIdentityBatch(ivfPqCodeRows(spark, path, batch),
       s"$path/codes", IndexStore.identityBatchTag(batch, "vec_id"))
-  }
 
   /** Append an increment: place into the FROZEN cells, encode against
     * the FROZEN residual codebook, land — standing rows never re-read;
@@ -2826,7 +2764,6 @@ object Similarity {
   def ivfPqProbeIndex(spark: SparkSession, path: String,
                       queries: DataFrame, k: Int,
                       nprobe: Int = 2): DataFrame = {
-    ensureRegistered(spark)
     val codes = IndexStore.liveRows(spark, path, "codes", "vec_id")
     ivfPqProbeResidual(
       codes.select(col("vec_id"), col("cell"), col("codes")),
@@ -2854,14 +2791,13 @@ object Similarity {
     * the vector from answers, not from history until the next
     * rebuild). */
   def qSimilarIvfPqDeleted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivfpq_index_deleted")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
     writeIvfPqStructures(emb, path)
-    IndexStore.clearTables(spark, path, "codes", "deletes")
-    landIvfPqCodes(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(ivfPqCodeRows(spark, path, emb.filter(!isNew)),
+      path, "codes")
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     ivfPqProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
@@ -2875,13 +2811,12 @@ object Similarity {
     * answer-invariant vs the rebuilt-per-call [[ivfPqResidualTopK]],
     * so the oracle is the same end-to-end re-derivation. */
   def qSimilarIvfPqPersisted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "ivfpq_index")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     writeIvfPqStructures(emb, path)
-    IndexStore.clearTables(spark, path, "codes", "deletes")
-    landIvfPqCodes(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(ivfPqCodeRows(spark, path, emb.filter(!isNew)),
+      path, "codes")
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     ivfPqProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
@@ -2896,16 +2831,15 @@ object Similarity {
     * would re-pay three parquet scans plus their broadcasts on every
     * micro-batch (the K-batches-pay-K-standing-builds hazard). The
     * corpus-scale `codes/` table stays a per-batch pruned parquet
-    * scan: the landed store IS the serving index (the SeamBench PQ
+    * scan: the landed store IS the serving index (a measured PQ probe
     * seam prices exactly this split). Stateless per batch, so
     * streamed ≡ batch under any slicing (spec-pinned).
     *
     * LISTING discipline: a bare per-batch `read.parquet(codes)` pays a
     * fresh file LISTING + parquet footer reads every trigger, growing
-    * linearly with landed batch-dir count (SeamBench's
-    * `ivfpq_probe_26dirs` prices it at ~6 ms per extra batch dir PER
-    * TRIGGER on a local FS — object-store listing is far worse). The
-    * codes frame is therefore SNAPSHOT-gated
+    * linearly with landed batch-dir count (measured at ~6 ms per extra
+    * batch dir PER TRIGGER over 26 dirs on a local FS — object-store
+    * listing is far worse). The codes frame is therefore SNAPSHOT-gated
     * ([[IndexStore.servingSnapshot]]): each trigger reads the one small
     * `_batches` manifest plus the tombstone-sized `deletes/` listing
     * and re-lists the table only when either changed, so a quiet index
@@ -2917,7 +2851,6 @@ object Similarity {
                            nprobe: Int = 2,
                            checkpoint: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    ensureRegistered(spark)
     val coarse = localized(spark, spark.read.parquet(s"$path/coarse"))
     val fmap = localized(spark, spark.read.parquet(s"$path/fmap"))
     val cb = localized(spark, spark.read.parquet(s"$path/codebook"))
@@ -2947,12 +2880,10 @@ object Similarity {
     * are replay-idempotent; the build clears any previous codes
     * layout first (a build is a full rebuild). */
   def writePqIndex(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
+    pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
     // a rebuild clears standing tombstones (the new corpus is the
     // post-takedown truth — the shared write*Index contract)
-    IndexStore.clearTables(spark, path, "deletes", "codes")
-    pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
-    appendPqIndex(spark, path, emb)
+    IndexStore.landBuild(pqCodeRows(emb.sparkSession, path, emb), path, "codes")
   }
 
   /** Append an increment: encode ONLY `newEmb` against the STANDING
@@ -2971,15 +2902,19 @@ object Similarity {
     * index corruption. Same mechanism as the CDC fps landing. */
   def appendPqIndex(spark: SparkSession, path: String,
                     newEmb: DataFrame): Unit =
-    // the encode is MAP-ONLY ([[pqEncode]]), so the embedding rides the
-    // same projection instead of a corpus-scale re-join on vec_id (two
-    // exchanges + a second batch scan for a column the row already had)
-    IndexStore.landIdentityBatch(
-      newEmb.select(col("vec_id"),
-        pqEncodeColumn(spark, spark.read.parquet(s"$path/codebook"),
-          col("embedding")).as("codes"),
-        col("embedding")),
+    IndexStore.landIdentityBatch(pqCodeRows(spark, path, newEmb),
       s"$path/codes", IndexStore.identityBatchTag(newEmb, "vec_id"))
+
+  /** One batch's code rows against the landed codebook. The encode is
+    * MAP-ONLY ([[pqEncode]]), so the embedding rides the same
+    * projection instead of a corpus-scale re-join on vec_id (two
+    * exchanges + a second batch scan for a column the row already had). */
+  private def pqCodeRows(spark: SparkSession, path: String,
+                         emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+      pqEncodeColumn(spark.read.parquet(s"$path/codebook"),
+        col("embedding")).as("codes"),
+      col("embedding"))
 
   def pqProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int): DataFrame = {
@@ -2996,7 +2931,6 @@ object Similarity {
     * whole train/encode/LUT/ADC/re-rank chain from the raw corpus, so
     * persistence AND append must be answer-invariant. */
   def qSimilarPq(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "pq_index")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
@@ -3004,8 +2938,7 @@ object Similarity {
     // rows must match the oracle's); the standing/increment split
     // exercises encode-against-frozen-codebook on the append path
     pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
-    IndexStore.clearTables(spark, path, "codes")
-    appendPqIndex(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(pqCodeRows(spark, path, emb.filter(!isNew)), path, "codes")
     appendPqIndex(spark, path, emb.filter(isNew))
     pqProbeIndex(spark, path, queryVectors(emb), k = 3)
       .orderBy(col("query_id"), col("rk"))
@@ -3019,14 +2952,12 @@ object Similarity {
     * intersects the one-shot entry's sf0.01 answers (423, 279, 45),
     * so the mask is exercised, not vacuous. */
   def qSimilarPqDeleted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "pq_index_deleted")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
-    IndexStore.clearTables(spark, path, "deletes", "codes")
     pqCodebook(emb).write.mode("overwrite").parquet(s"$path/codebook")
-    appendPqIndex(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(pqCodeRows(spark, path, emb.filter(!isNew)), path, "codes")
     appendPqIndex(spark, path, emb.filter(isNew))
     deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     pqProbeIndex(spark, path, queryVectors(emb), k = 3)
@@ -3050,10 +2981,8 @@ object Similarity {
         (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
   }
 
-  def qPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qPqRecall(spark: SparkSession, dir: String): DataFrame =
     pqRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
-  }
 
   /** Persist the sign-LSH band table — the standing side of
     * [[embedCrossPairs]]. Band/sig are the layout's only join keys, so
@@ -3103,7 +3032,6 @@ object Similarity {
     * with the 10% increment — pinned to [[qEmbedIncremental]]'s
     * oracle (same split, same threshold, answers must not move). */
   def qEmbedNearDupPersisted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "band_index")
     writeBandIndex(emb.filter(col("vec_id") % EmbedIncrementMod =!= 0), path)
@@ -3140,7 +3068,6 @@ object Similarity {
     * oracle re-derives the cross-pairs over the surviving standing
     * side. */
   def qEmbedNearDupDeleted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "band_index_deleted")
     val standing = emb.filter(col("vec_id") % EmbedIncrementMod =!= 0)
@@ -3159,7 +3086,6 @@ object Similarity {
     * same oracle as the one-shot persisted form (append must be
     * answer-invariant). */
   def qEmbedNearDupAppended(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "band_index_appended")
     val standing = emb.filter(col("vec_id") % EmbedIncrementMod =!= 0)
@@ -3319,7 +3245,6 @@ object Similarity {
     * far past 100-TB counts. */
   def kmeansCentroidsInt(emb: DataFrame, k: Int = KmeansK,
                          iters: Int = KmeansIters): Seq[(Long, Array[Long])] = {
-    ensureRegistered(emb.sparkSession)
     def collectCents(df: DataFrame): Seq[(Long, Array[Long])] =
       df.collect().map(r => (r.getLong(0),
         r.getSeq[Long](1).toArray)).toSeq.sortBy(_._1)
@@ -3351,7 +3276,6 @@ object Similarity {
     ivfTopKFrom(kmeansAssignInt(emb, kmeansCentroidsInt(emb, kc, iters)), k)
 
   def qSimilarKmeansInt(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopKKmeansInt(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3401,7 +3325,6 @@ object Similarity {
                                kc: Int = KmeansK,
                                iters: Int = KmeansIters): DataFrame = {
     val spark = emb.sparkSession
-    ensureRegistered(spark)
     import spark.implicits._
     val cents = kmeansCentroidsInt(emb, kc, iters)
     // decode table: the integer centroids scaled back — exact
@@ -3428,7 +3351,6 @@ object Similarity {
   }
 
   def qSimilarIvfPqLearned(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqResidualTopKLearned(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3447,7 +3369,6 @@ object Similarity {
     ivfPqResidualTopKLearned(emb, k, nprobe, kmeansAutoK(emb.count()), iters)
 
   def qSimilarIvfPqLearnedAuto(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfPqResidualTopKLearnedAuto(Tables.embeddings(spark, dir),
         k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
@@ -3463,16 +3384,13 @@ object Similarity {
   def kmeansCellAudit(emb: DataFrame, topK: Int = CellAuditTopK,
                       kc: Int = KmeansK,
                       iters: Int = KmeansIters): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     cellAuditFrom(
       kmeansAssignInt(emb, kmeansCentroidsInt(emb, kc, iters))
         .select(col("vec_id"), col("cell")), topK)
   }
 
-  def qKmeansCellAudit(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qKmeansCellAudit(spark: SparkSession, dir: String): DataFrame =
     kmeansCellAudit(Tables.embeddings(spark, dir))
-  }
 
   /** √N sizing for the learned coarse quantizer — the FAISS/IVFADC
     * rule of thumb (K = ⌈√N⌉ balances cell-scan cost K against
@@ -3496,7 +3414,6 @@ object Similarity {
     ivfTopKKmeansInt(emb, k, kmeansAutoK(emb.count()), iters)
 
   def qSimilarKmeansAuto(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopKKmeansAuto(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3508,15 +3425,11 @@ object Similarity {
     * ~uniform). */
   def kmeansCellAuditAuto(emb: DataFrame,
                           topK: Int = CellAuditTopK,
-                          iters: Int = KmeansIters): DataFrame = {
-    ensureRegistered(emb.sparkSession)
+                          iters: Int = KmeansIters): DataFrame =
     kmeansCellAudit(emb, topK, kmeansAutoK(emb.count()), iters)
-  }
 
-  def qKmeansCellAuditAuto(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
+  def qKmeansCellAuditAuto(spark: SparkSession, dir: String): DataFrame =
     kmeansCellAuditAuto(Tables.embeddings(spark, dir))
-  }
 
   // --- landed INTEGER-learned IVF index (the certified partition, served) ---
 
@@ -3531,7 +3444,6 @@ object Similarity {
                                kc: Int = 0,
                                iters: Int = KmeansIters): Unit = {
     val spark = train.sparkSession
-    ensureRegistered(spark)
     IndexStore.clearTables(spark, path, "deletes", "cells")
     val k = if (kc > 0) kc else kmeansAutoK(train.count())
     import spark.implicits._
@@ -3557,7 +3469,6 @@ object Similarity {
     * build+append ≡ one-shot (oracle-pinned). */
   def appendKmeansIntIndex(spark: SparkSession, path: String,
                            batch: DataFrame): Unit = {
-    ensureRegistered(spark)
     IndexStore.landIdentityBatch(
       kmeansAssignInt(batch, kmeansIntCentroidsOf(spark, path)),
       s"$path/cells", IndexStore.identityBatchTag(batch, "vec_id"))
@@ -3571,7 +3482,6 @@ object Similarity {
   def kmeansIntProbeIndex(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int,
                           nprobe: Int = 1): DataFrame = {
-    ensureRegistered(spark)
     val cents = kmeansIntCentroidsOf(spark, path)
     val qCells = kmeansProbeCellsInt(
         queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
@@ -3594,7 +3504,6 @@ object Similarity {
                                nprobe: Int = 1,
                                checkpoint: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    ensureRegistered(spark)
     val cents = kmeansIntCentroidsOf(spark, path)
     val cells = IndexStore.servingSnapshot(spark, path, "cells")(
       IndexStore.liveRows(spark, path, "cells", "vec_id"))
@@ -3621,12 +3530,12 @@ object Similarity {
     * answer-invariant vs the rebuilt-per-call [[ivfTopKKmeansAuto]],
     * so the oracle is the same end-to-end re-derivation. */
   def qSimilarKmeansLanded(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "kmeans_int_index")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     writeKmeansIntStructures(emb, path)
-    appendKmeansIntIndex(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(kmeansAssignInt(emb.filter(!isNew),
+      kmeansIntCentroidsOf(spark, path)), path, "cells")
     appendKmeansIntIndex(spark, path, emb.filter(isNew))
     kmeansIntProbeIndex(spark, path, queryVectors(emb), k = 3)
       .orderBy(col("query_id"), col("rk"))
@@ -3639,13 +3548,13 @@ object Similarity {
     * oracle excludes the deleted ids from candidates only (frozen
     * structures keep full-corpus training until rebuild). */
   def qSimilarKmeansDeleted(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     val path = TextDedup.spillPath(spark, "kmeans_int_index_deleted")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
     writeKmeansIntStructures(emb, path)
-    appendKmeansIntIndex(spark, path, emb.filter(!isNew))
+    IndexStore.landBuild(kmeansAssignInt(emb.filter(!isNew),
+      kmeansIntCentroidsOf(spark, path)), path, "cells")
     appendKmeansIntIndex(spark, path, emb.filter(isNew))
     deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
     kmeansIntProbeIndex(spark, path, queryVectors(emb), k = 3)
@@ -3653,7 +3562,6 @@ object Similarity {
   }
 
   def qSimilarKmeans(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     ivfTopKKmeans(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -3671,7 +3579,6 @@ object Similarity {
     * deterministic → the whole table hash-certifies. */
   def kmeansTradeTable(emb: DataFrame, k: Int = 3,
                        iters: Int = KmeansIters): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     val kAuto = kmeansAutoK(emb.count())
     val ks = Seq(KmeansK.toLong, math.max(1, kAuto / 2).toLong, kAuto.toLong)
     val qv = queryVectors(emb)
@@ -3723,7 +3630,6 @@ object Similarity {
     * (>4× the suite median by construction); the serving-tier twin is
     * `q_similar_kmeans_int`. */
   def qKmeansTrade(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     kmeansTradeTable(Tables.embeddings(spark, dir))
       .orderBy(col("k_cells"))
   }
@@ -3787,7 +3693,6 @@ object Similarity {
     * threshold (≥0.9) would verify only the empty set; 0.4 exercises the
     * full bucket-join + cosine + filter path with real output. */
   def qEmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     embedNearDup(Tables.embeddings(spark, dir), 0.4)
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -3859,7 +3764,6 @@ object Similarity {
   val EmbedIncrementMod = 10
 
   def qEmbedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir)
     embedCrossPairs(
         emb.filter(col("vec_id") % EmbedIncrementMod === 0),
@@ -3927,7 +3831,6 @@ object Similarity {
     * rank distortion the exact re-rank then repairs. */
   def rpProject(emb: DataFrame,
                 inDims: Int = RpInDims, outDims: Int = RpOutDims): DataFrame = {
-    ensureRegistered(emb.sparkSession)
     emb.select(col("vec_id"),
       call_function("rp_project", col("embedding"),
         lit(inDims), lit(outDims)).as("proj"))
@@ -3972,7 +3875,6 @@ object Similarity {
   }
 
   def qSimilarRp(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     annTopKProjected(Tables.embeddings(spark, dir), k = 3)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -4006,7 +3908,6 @@ object Similarity {
   }
 
   def qClusterSample(spark: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(spark)
     clusterBalancedSample(Tables.embeddings(spark, dir))
       .orderBy(col("cell"), col("rk"))
   }

@@ -444,10 +444,8 @@ object TextDedup {
     * accounting columns are non-trivial at fixture scale — the
     * production default [[MaxBandBucket]] cuts nothing on the synthetic
     * corpora, which would pin only zeros. */
-  def qLshBucketAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qLshBucketAudit(spark: SparkSession, dir: String): DataFrame =
     lshBucketAudit(Tables.documents(spark, dir), cap = 4).orderBy(col("band"))
-  }
 
   def minhashPairs(docs: DataFrame): DataFrame =
     minhashPairsAt(docs, MaxBandBucket)
@@ -460,10 +458,8 @@ object TextDedup {
       (a, b) => Seq("jaccard" -> jaccard(a, b)),
       _.filter(col("jaccard") >= JaccardThreshold))
 
-  def qDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qDedupMinhash(spark: SparkSession, dir: String): DataFrame =
     minhashPairs(Tables.documents(spark, dir)).orderBy(col("doc_a"), col("doc_b"))
-  }
 
   val ContainmentThreshold = 0.9
 
@@ -493,7 +489,6 @@ object TextDedup {
       _.filter(col("containment") >= threshold))
 
   def qContainmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     containmentPairs(Tables.documents(spark, dir))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -522,7 +517,6 @@ object TextDedup {
   }
 
   def qMinhashEstimation(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     minhashEstimation(Tables.documents(spark, dir))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -709,17 +703,17 @@ object TextDedup {
     // compact rebuilds the bands (see the cap note at
     // [[deleteDedupIndex]]), so a pre-compact probe can drop
     // candidate pairs a never-indexed corpus would keep — the same
-    // documented conservatism the cap itself carries. Empty when no
-    // tombstones exist (the anti-join is a no-op); grows with
-    // total-ever-deleted ids, never the corpus (deleted-stays-deleted
-    // retention — see [[compactDedupIndex]]).
-    crossPairsFrom(probeGroups,
+    // documented conservatism the cap itself carries. Planned only when
+    // tombstones exist; grows with total-ever-deleted ids, never the
+    // corpus (deleted-stays-deleted retention — see
+    // [[compactDedupIndex]]).
+    val pairs = crossPairsFrom(probeGroups,
       spark.read.parquet(s"$live/bands"),
       spark.read.parquet(s"$live/sets"),
       MaxBandBucket)
-      .join(IndexStore.idsIn(spark, IndexStore.deletesDir(live), "doc_id")
-          .select(col("doc_id").as("index_id")),
-        Seq("index_id"), "left_anti")
+    IndexStore.idsIn(spark, IndexStore.deletesDir(live), "doc_id")
+      .fold(pairs)(ids => pairs.join(ids.select(col("doc_id").as("index_id")),
+        Seq("index_id"), "left_anti"))
       .select(col("probe_id"), col("index_id"), col("jaccard"))
   }
 
@@ -814,18 +808,10 @@ object TextDedup {
     // lifecycle contract, so no tombstone can ever be retired by a
     // later legitimate append).
     val deletesDir = IndexStore.deletesDir(live)
-    val tombstoneTags = IndexStore.batchDirTags(spark, deletesDir)
-    val carriedDeleteTags =
-      IndexStore.landedBatchTags(spark, deletesDir) ++ tombstoneTags
+    // a delete-free index — the common lifecycle — plans no mask at all
+    // (the store's listing decides), so its compact plan is IDENTICAL
+    // to the pre-lifecycle r18 shape by construction
     val tombstones = IndexStore.idsIn(spark, deletesDir, "doc_id")
-    // gate the mask on tombstone BATCH DIRS existing (the FS listing
-    // already paid above): a delete-free index — the common
-    // lifecycle — skips the anti-join entirely instead of trusting
-    // PropagateEmptyRelation to fold the 0-row side out (measured in
-    // SCALING.md's round-20 creep adjudication: the ungated join's
-    // cost is ~30 ms, but the gate makes the no-delete compact plan
-    // IDENTICAL to the pre-lifecycle r18 shape by construction)
-    val hasTombstoneBatches = tombstoneTags.nonEmpty
     // no distinct() here: replay-duplicated memberships dedupe inside
     // chunkMembers' bucket aggregate (collect_set — same partition,
     // same bucket), saving a second corpus-width exchange that carried
@@ -833,7 +819,7 @@ object TextDedup {
     val exploded = spark.read.parquet(s"$live/sets")
       .select(col("hs"), explode(col("members")).as("doc_id"))
     val merged = chunkMembers(
-      if (hasTombstoneBatches) {
+      tombstones.fold(exploded) { ids =>
         // the tombstone ledger is delete-volume-sized (never corpus-
         // proportional — see the retention note above); when it
         // provably fits, broadcast it so the mask costs NO exchange of
@@ -841,16 +827,14 @@ object TextDedup {
         // arrays — a corpus-width shuffle by doc_id otherwise). One
         // cheap count over the narrow id table decides; past the
         // bound (~80 MB of longs) fall back to the shuffled anti-join.
-        val t = if (tombstones.count() <= 10000000L) broadcast(tombstones)
-                else tombstones
-        exploded.join(t, Seq("doc_id"), "left_anti")
-      } else exploded,
+        exploded.join(if (ids.count() <= 10000000L) broadcast(ids) else ids,
+          Seq("doc_id"), "left_anti")
+      },
       chunkSize(spark)).cache()
     IndexStore.installIndexVersion(spark, path) { dir =>
       landSetsAndBands(merged, dir, "overwrite")
-      if (carriedDeleteTags.nonEmpty)
-        IndexStore.landCompacted(tombstones, deletesDir,
-          IndexStore.deletesDir(dir))
+      tombstones.foreach(IndexStore.landCompacted(_, deletesDir,
+        IndexStore.deletesDir(dir)))
     }
     merged.unpersist()
     ()
@@ -862,7 +846,6 @@ object TextDedup {
     * standing population is identical, so persistence, append and
     * compaction must all be answer-invariant). */
   def qDedupAppended(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // the build/append/probe slices feed the memo'd (doc_id, hs)
     // shingle table through the chunk aggregate (shingling is
     // per-document, so filter∘shingle ≡ shingle∘filter — see
@@ -899,7 +882,6 @@ object TextDedup {
     * answer-invariant vs never having indexed the deleted docs at
     * all. */
   def qDedupDeleted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // memo'd shingle table + chunk aggregate per slice — see
     // [[qDedupAppended]]'s note; the delete lifecycle additionally
     // lands the tombstone slice (ids only — no shingles needed)
@@ -923,7 +905,6 @@ object TextDedup {
     * with the 10% increment — pinned to `q_dedup_incremental`'s
     * oracle. */
   def qDedupPersisted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // memo'd shingle table — see [[qDedupAppended]]'s note
     val pairs = shingleSets(spark, dir)(Tables.documents(spark, dir))
     val path = spillPath(spark, "dedup_index")
@@ -941,7 +922,6 @@ object TextDedup {
   val IncrementMod = 10
 
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     crossCorpusPairs(
         docs.filter(col("doc_id") % IncrementMod === 0),
@@ -1302,7 +1282,6 @@ object TextDedup {
     }
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // Harness entry: served from the per-(JVM, dir) materialized label
     // table ([[clusterLabels]]). Never collect(): "one row per paired
     // doc" is corpus-scale at web-crawl dup rates (30-50% dups), far
@@ -1334,7 +1313,6 @@ object TextDedup {
   }
 
   def qSimhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         call_function("simhash16", col("text")).as("simhash"))
@@ -1473,7 +1451,6 @@ object TextDedup {
     * full-corpus cost belongs to the production spelling, not the
     * parity exhibit. */
   def qSimhashPairs16(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     simhashPairs(Tables.documents(spark, dir).filter(col("doc_id") % 4 === 0))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1512,7 +1489,6 @@ object TextDedup {
   }
 
   def qSourceSimilarity(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     sourceMinhashSimilarity(Tables.documents(spark, dir))
       .orderBy(col("source_a"), col("source_b"))
   }
@@ -1609,7 +1585,6 @@ object TextDedup {
   }
 
   def qRepeatedSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     repeatedSpans(Tables.documents(spark, dir))
       .orderBy(col("doc_id"), col("span_start"))
   }
@@ -1649,10 +1624,8 @@ object TextDedup {
         size(col("keep")).cast("long").as("n_after"))
   }
 
-  def qStripSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qStripSpans(spark: SparkSession, dir: String): DataFrame =
     stripSpans(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   /** Tumbling-chunk width (tokens) for [[paragraphDedup]]. The corpus
     * has no newline structure, so "paragraphs" are fixed-width token
@@ -1920,7 +1893,6 @@ object TextDedup {
     prints.select(col("fp"), col("doc_id")).distinct()
 
   def qWinnowFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     winnowPrints(spark, dir)(Tables.documents(spark, dir))
       .orderBy(col("doc_id"), col("fpos"), col("fp"))
   }
@@ -1966,7 +1938,6 @@ object TextDedup {
   }
 
   def qWinnowOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     winnowPairsFrom(
         selOf(winnowPrints(spark, dir)(Tables.documents(spark, dir))),
         WinnowPairCap)
@@ -2025,7 +1996,6 @@ object TextDedup {
   }
 
   def qWinnowProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val (pSel, sSel) = incrementSels(spark, dir)
     winnowProbeFrom(pSel, sSel, WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))
@@ -2100,7 +2070,6 @@ object TextDedup {
     * standing population is identical, so persistence must be
     * answer-invariant). */
   def qWinnowPersisted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val path = spillPath(spark, "winnow_index")
     // the landed standing index is written FROM the memo'd print
     // frame (a doc_id filter — selection is per-document), so this
@@ -2129,7 +2098,6 @@ object TextDedup {
     * excluded from the standing side (survivor-exact: the mask lands
     * before the hot-fp cap). */
   def qWinnowDeleted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val path = spillPath(spark, "winnow_index_deleted")
     // the build/append/probe slices are doc_id FILTERS of the memo'd
@@ -2211,7 +2179,6 @@ object TextDedup {
   val BoilerShareCap = 4
 
   def qWinnowBoiler(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     winnowBoilerFrom(
         selOf(winnowPrints(spark, dir)(Tables.documents(spark, dir))),
         BoilerShareCap)
@@ -2257,7 +2224,6 @@ object TextDedup {
   }
 
   def qWinnowAttribution(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val (pSel, sSel) = incrementSels(spark, dir)
     winnowAttributionFrom(pSel, sSel, WinnowPairCap)
       .orderBy(col("probe_id"))
@@ -2309,7 +2275,6 @@ object TextDedup {
     * bucket counts that grow with the data. The 16-bit parity/teaching
     * variant lives at [[qSimhashPairs16]]. */
   def qSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     simhashPairs60(Tables.documents(spark, dir))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -2398,7 +2363,6 @@ object TextDedup {
   }
 
   def qNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     ngramJaccardPairs(Tables.documents(spark, dir), 0.7)
       .pairs.orderBy(col("source"), col("doc_a"), col("doc_b"))
   }
@@ -2437,7 +2401,6 @@ object TextDedup {
     * verify join — all keyed; nothing all-pairs. */
   def setSimilarityJoin(docs: DataFrame,
                         t: Double = SetSimThreshold): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val sets = docs
       .select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(ShingleN))
@@ -2506,7 +2469,6 @@ object TextDedup {
     * equi-join, one verify join — nothing all-pairs. */
   def containmentJoin(docs: DataFrame,
                       t: Double = ContainmentThreshold): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val sets = docs
       .select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(ShingleN))
@@ -2561,7 +2523,6 @@ object TextDedup {
     * pre-materialized by the caller at scale. */
   def containmentIncremental(probe: DataFrame, index: DataFrame,
                              t: Double = ContainmentThreshold): DataFrame = {
-    graft.expressions.GraftFunctions.register(probe.sparkSession)
     def sets(df: DataFrame) = df
       .select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(ShingleN))
@@ -2629,7 +2590,6 @@ object TextDedup {
     * pre-materialized by the caller at scale. */
   def setSimilarityIncremental(probe: DataFrame, index: DataFrame,
                                t: Double = SetSimThreshold): DataFrame = {
-    graft.expressions.GraftFunctions.register(probe.sparkSession)
     def sets(df: DataFrame) = df
       .select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(ShingleN))

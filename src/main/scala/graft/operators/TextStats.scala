@@ -55,10 +55,8 @@ object TextStats {
         (sum(col("n_chars")).cast("double") / count(lit(1)).cast("double"))
           .as("avg_chars"))
 
-  def qTextStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qTextStats(spark: SparkSession, dir: String): DataFrame =
     corpusStats(Tables.documents(spark, dir)).orderBy(col("lang"), col("source"))
-  }
 
   /** Per-language seed lexicons for the character-trigram profiles:
     * the most frequent function/content words of each of 36 languages
@@ -349,7 +347,6 @@ object TextStats {
     * rejected; see the inline note. */
   def langIdNgram(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val profSchema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("gram",
         org.apache.spark.sql.types.StringType, nullable = false) +:
@@ -432,7 +429,6 @@ object TextStats {
     * from the stopword-hit heuristic in round 15; the oracle carries
     * the identical profile integers. */
   def qLangId(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     docs.select(col("doc_id"), col("lang"))
       .join(langIdNgram(docs), Seq("doc_id"))
@@ -472,10 +468,8 @@ object TextStats {
           - punctRatio).as("quality_score"))
   }
 
-  def qQualityScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qQualityScore(spark: SparkSession, dir: String): DataFrame =
     qualityFeatures(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-  }
 
   // --- deterministic corpus split ---
 
@@ -503,7 +497,6 @@ object TextStats {
     * The classifier-evaluation twin of `q_ann_recall` — every heuristic
     * the engine ships gets an empirical scorecard, not just a spec. */
   def qLangIdEval(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val w = Window.partitionBy(col("lang"))
     val docs = Tables.documents(spark, dir)
     docs.select(col("doc_id"), col("lang"))
@@ -525,7 +518,6 @@ object TextStats {
     * (rank−1)/(n−1) and rank/n of the same integers — on both engines.
     * One window per source partition; no global ordering. */
   def qQualityPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val w = Window.partitionBy(col("source"))
       .orderBy(col("quality_score"), col("doc_id"))
@@ -672,7 +664,6 @@ object TextStats {
       (acc, t) => pmod(acc * 31L + md5Bits16(t).cast("long"), lit(2147483648L)))
 
   def qFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         call_function("rolling_fingerprint", col("text")).as("fingerprint"))
@@ -692,7 +683,6 @@ object TextStats {
     * in ExpressionsSpec instead of the hash oracle. Map-side only —
     * one native eval per row inside the scan projection. */
   def qCompressRatio(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         call_function("deflate_ratio", col("text")).as("deflate_ratio"))

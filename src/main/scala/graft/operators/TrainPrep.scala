@@ -404,9 +404,8 @@ object TrainPrep {
     // TEXT column of the takedown slice plus the ledger anti-join
     // (guide §5: reuse the expensive intermediate; the persist is
     // operator-scoped, built and unpersisted inside this call)
-    val fresh = docs.dropDuplicates("doc_id")
-      .join(IndexStore.idsIn(spark, s"$live/deleted_ids", "doc_id"),
-        Seq("doc_id"), "left_anti")
+    val fresh = IndexStore.withoutIdsIn(docs.dropDuplicates("doc_id"),
+        s"$live/deleted_ids", "doc_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the identity tag's n<count>_ prefix doubles as the emptiness
@@ -470,7 +469,6 @@ object TrainPrep {
     // (installIndexVersion's sweep retains the version being read)
     val live = IndexStore.currentIndexDir(spark, path)
     val deleted = IndexStore.idsIn(spark, s"$live/deleted_ids", "doc_id")
-    val hasDeleted = !deleted.isEmpty
     IndexStore.installIndexVersion(spark, path) { dir =>
       IndexStore.landCompacted(cdcIndexStats(spark, path), s"$live/fps",
         s"$dir/fps")
@@ -479,9 +477,8 @@ object TrainPrep {
       // the carry, a post-compact re-submission of an old takedown
       // list would re-subtract docs whose stats the compact already
       // dropped
-      if (hasDeleted)
-        IndexStore.landIdentityBatch(deleted, s"$dir/deleted_ids",
-          "compacted")
+      deleted.foreach(IndexStore.landIdentityBatch(_, s"$dir/deleted_ids",
+        "compacted"))
     }
   }
 
@@ -508,7 +505,6 @@ object TrainPrep {
     * carry must all be answer-invariant vs never having indexed the
     * deleted docs. */
   def qCdcDeleted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val path = TextDedup.spillPath(spark, "cdc_index_deleted")
     val standing = docs.filter(col("doc_id") % TextDedup.IncrementMod =!= 0)
@@ -525,7 +521,6 @@ object TrainPrep {
   }
 
   def qCdcPersisted(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val path = TextDedup.spillPath(spark, "cdc_index")
     val standing = docs.filter(col("doc_id") % TextDedup.IncrementMod =!= 0)
@@ -643,7 +638,6 @@ object TrainPrep {
     * runs on every batch (detection paid on the snapshot, removal per
     * increment). */
   def qCdcStripIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     cdcStripAgainst(
         docs.filter(col("doc_id") % TextDedup.IncrementMod === 0),
@@ -1158,7 +1152,6 @@ object TrainPrep {
     * equal-share [[CorpusFilters.domainMix]] case), budget 7777 so the
     * integer division is non-trivial. */
   def qTokenBudgetMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val shares = docs.select(col("source")).distinct()
       .withColumn("share_bp",
@@ -1494,7 +1487,6 @@ object TrainPrep {
   }
 
   def qLeakageSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     // served from the per-(JVM, dir) materialized label table
     // ([[TextDedup.clusterLabels]]) — parquet-backed, no cache to
@@ -1544,7 +1536,6 @@ object TrainPrep {
   }
 
   def qLeakageIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val probe = docs.filter(col("doc_id") % TextDedup.IncrementMod === 0)
     val standing = docs.filter(col("doc_id") % TextDedup.IncrementMod =!= 0)
@@ -1651,10 +1642,8 @@ object TrainPrep {
         col("rank"), col("stage"))
   }
 
-  def qCurriculum(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
+  def qCurriculum(spark: SparkSession, dir: String): DataFrame =
     curriculumStages(Tables.documents(spark, dir)).orderBy(col("rank"))
-  }
 
   /** [[curriculumStages]] with APPROXIMATE stage boundaries — the
     * documented 100-TB monolingual swap made a real code path instead
@@ -1694,7 +1683,6 @@ object TrainPrep {
   }
 
   def qCurriculumApprox(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curriculumStagesApprox(Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
   }
@@ -1715,7 +1703,6 @@ object TrainPrep {
         sum(col("n_tokens")).cast("long").as("sum_tokens"))
 
   def qCurriculumMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     curriculumMix(Tables.documents(spark, dir))
       .orderBy(col("stage"), col("source"))
   }
@@ -1757,7 +1744,6 @@ object TrainPrep {
   }
 
   def qCurriculumAdmission(spark: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     // probe = every 5th doc (the setsim-incremental convention);
     // reference = the standing 80% the floors were frozen from

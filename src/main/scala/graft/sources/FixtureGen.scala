@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, Path}
 import java.util.Base64
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Deterministic LegiScan-shaped fixture generator (run once; outputs are
@@ -257,11 +257,7 @@ object FixtureGen {
     genHtml().foreach { case (f, h) => write(root.resolve(s"html/$f"), h) }
 
     // 3. parquet landing copies — read the tree back through pinned schemas
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.mainCores)
     def land(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"${Fixtures.root}/$name.parquet")

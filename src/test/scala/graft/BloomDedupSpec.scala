@@ -87,7 +87,6 @@ class BloomDedupSpec extends SparkSpec {
   }
 
   test("q_bloom_dedup plan: broadcast anti-joins only on the bloom-positive branches") {
-    graft.expressions.GraftFunctions.register(spark)
     val df = SparkEntry.queries("q_bloom_dedup")(spark, sfSmoke)
     val plan = df.queryExecution.executedPlan.toString
     // Catalyst pushes the single authored anti-join through the

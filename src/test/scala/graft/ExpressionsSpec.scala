@@ -193,7 +193,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("deflate_ratio: monotone over redundancy, bounded, empty=1, null=null") {
-    graft.expressions.GraftFunctions.register(spark)
     val repetitive = ("spam " * 200).trim
     val prose = "the quick brown fox jumps over the lazy dog while a " +
       "farmer watches from an old wooden gate near the quiet river " +
@@ -220,7 +219,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("trigram_counts equals the composed explode histogram; codepoint windows; null/empty tokens inert") {
-    graft.expressions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     // parity with the composed spelling langIdNgram shipped through
     // round 16 (pad → sequence → substring → explode → count), on text
@@ -265,7 +263,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("pq_encode equals the composed explode/join/window argmin, degenerate inputs included") {
-    graft.expressions.GraftFunctions.register(spark)
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
@@ -324,7 +321,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("misra_gries SQL registration: arity and literal-type errors are clear") {
-    graft.expressions.GraftFunctions.register(spark)
     val df = Seq(Tuple1(Seq("a", "a", "b"))).toDF("toks")
     df.createOrReplaceTempView("mg_in")
     // Long literal capacity (e.g. 64L from generated SQL) is accepted

@@ -43,7 +43,6 @@ class RetrievalSpec extends SparkSpec {
 
   test("two-phase lexical top-K equals the naive single-window ranking") {
     val docs = Tables.documents(spark, sf("sf0.001"))
-    graft.expressions.GraftFunctions.register(spark)
     val sets = docs.select(col("doc_id"),
         call_function("hashed_shingle_set", col("text"), lit(TextDedup.ShingleN)).as("hs"))
       .withColumn("sz", size(col("hs")).cast("long"))

@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite run, configured like
-  * the production mains (UTC, ANSI default, nanos-as-long, graft
-  * extensions). */
+/** Shared test harness: one [[GraftSession]] per suite run, built like
+  * the production mains'. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
@@ -21,18 +20,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(s)
-    s
-  }
+  // fixed 4 cores: PlanSpec's plan text carries the shuffle partition count
+  lazy val session: SparkSession = GraftSession(4)
 }

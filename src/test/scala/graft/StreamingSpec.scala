@@ -499,7 +499,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming MG candidates exact-verified == batch heavy hitters") {
     import spark.implicits._
     import graft.operators.CorpusAnalytics
-    graft.expressions.GraftFunctions.register(spark)
     val docs = graft.tables.Tables.documents(spark, sfSmoke)
     // several source files + maxFilesPerTrigger=1 → several micro-batches,
     // so the standing MG state actually MERGES partial summaries across

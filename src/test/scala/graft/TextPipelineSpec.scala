@@ -3183,7 +3183,6 @@ class TextPipelineSpec extends SparkSpec {
     // lexicographic order — exercised on random vectors against a
     // centroid table that CONTAINS exact duplicates (forced ties,
     // broken by cid) and probed past K (truncation)
-    graft.expressions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val dims = 16
     val cents0 = (0 until 6).map(cid =>
@@ -3229,7 +3228,6 @@ class TextPipelineSpec extends SparkSpec {
     // against every centroid — Spark's total order ranks NaN greatest
     // and equal to itself, so the argmax falls to the cid tie-break in
     // BOTH spellings), probed past K (truncation)
-    graft.expressions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val dims = 8
     val cents0 = (0 until 6).map(cid =>
