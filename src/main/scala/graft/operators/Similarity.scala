@@ -3049,8 +3049,7 @@ object Similarity {
     * all), so `build(part1); append(part2)` ≡ `build(part1 ∪ part2)`
     * unconditionally; no compaction step is semantically needed (no
     * duplicate-rep merge exists to do). */
-  def appendBandIndex(spark: SparkSession, path: String,
-                      newEmb: DataFrame): Unit =
+  def appendBandIndex(path: String, newEmb: DataFrame): Unit =
     // tagged from the input's ids: a band batch holds one row per
     // (vec_id, band), and a tag over those rows would fold each id's
     // repeats away through `bit_xor`
@@ -3072,7 +3071,7 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "band_index_deleted")
     val standing = emb.filter(col("vec_id") % EmbedIncrementMod =!= 0)
     writeBandIndex(standing.filter(col("vec_id") % 2 === 1), path)
-    appendBandIndex(spark, path, standing.filter(col("vec_id") % 2 === 0))
+    appendBandIndex(path, standing.filter(col("vec_id") % 2 === 0))
     deleteIvfPqIndex(spark, path,
       standing.filter(col("vec_id") % EmbedDeleteMod === EmbedDeleteRem)
         .select(col("vec_id")))
@@ -3090,7 +3089,7 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "band_index_appended")
     val standing = emb.filter(col("vec_id") % EmbedIncrementMod =!= 0)
     writeBandIndex(standing.filter(col("vec_id") % 2 === 1), path)
-    appendBandIndex(spark, path, standing.filter(col("vec_id") % 2 === 0))
+    appendBandIndex(path, standing.filter(col("vec_id") % 2 === 0))
     bandProbeIndex(spark, path,
         emb.filter(col("vec_id") % EmbedIncrementMod === 0), 0.4)
       .orderBy(col("probe_id"), col("index_id"))

@@ -2019,8 +2019,7 @@ object TextDedup {
     * `prints/` — a replayed append is a no-op, and a replayed append
     * of DELETED docs stays masked by the standing tombstones
     * (spec-pinned). */
-  def appendWinnowIndex(spark: SparkSession, path: String,
-                        newDocs: DataFrame,
+  def appendWinnowIndex(path: String, newDocs: DataFrame,
                         k: Int = WinnowK, w: Int = WinnowW): Unit =
     landPrints(winnowFingerprints(newDocs, k, w), newDocs, path)
 
@@ -2046,8 +2045,7 @@ object TextDedup {
     * layout avoids because prints are per-doc rows, not pre-banded
     * buckets) — and the next [[writeWinnowIndex]] rebuild applies +
     * clears them. */
-  def deleteWinnowIndex(spark: SparkSession, path: String,
-                        docIds: DataFrame): Unit =
+  def deleteWinnowIndex(path: String, docIds: DataFrame): Unit =
     IndexStore.landTombstones(docIds, path, "doc_id")
 
   /** Probe a landed winnow index: identical semantics to
@@ -2114,7 +2112,7 @@ object TextDedup {
     IndexStore.landBuild(standing.filter(odd)
       .select(col("fp"), col("doc_id")), path, "prints")
     landPrints(standing.filter(!odd), docs.filter(isStanding && !odd), path)
-    deleteWinnowIndex(spark, path,
+    deleteWinnowIndex(path,
       standing.filter(col("doc_id") % WinnowDeleteMod === WinnowDeleteRem)
         .select(col("doc_id")))
     winnowProbeFrom(

@@ -68,14 +68,32 @@ object Fixtures {
     concat(col("session.year_start").cast("string"), lit("-"),
       col("session.year_end").cast("string"))
 
-  def billsJsonGlob: String = s"$root/raw/*/bill/*.json"
-  def peopleJsonGlob: String = s"$root/raw/*/people/*.json"
-
   /** S4: one distributed JSON scan over the whole bill tree (replaces the
     * reference's per-file fromJSON loop). Files are single-line JSON, so
-    * the default (line-mode, splittable) reader applies. */
-  def billsJson(spark: SparkSession): DataFrame =
-    spark.read.schema(billSchema).json(billsJsonGlob).select(col("bill.*"))
+    * the default (line-mode, splittable) reader applies. `tree` is the
+    * fixture root holding `raw/` (default [[root]]). */
+  def billsJson(spark: SparkSession, tree: String = root): DataFrame =
+    rawJson(spark, billSchema, tree, "bill").select(col("bill.*"))
+
+  /** The JSON files directly under each `raw/<years>/<kind>/` directory.
+    *
+    * The path names the per-session `<kind>` directories and a file
+    * filter picks the `.json` files, rather than a glob down to each
+    * `.json` file. Such a glob expands to one path per file, and past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 paths)
+    * the file index lists them in a Spark job with one task per file, at
+    * every reader call. Three directory roots stay under the threshold
+    * and are listed in place, with no job.
+    *
+    * The read is non-recursive, like the reference's
+    * `list.files(bill_directory)` (`legiscan_search_all_bills.R:71-78`):
+    * with no partition columns inferred, the file index serves only the
+    * files directly under each root, so a nested directory is skipped,
+    * and the filter skips non-JSON files. */
+  private def rawJson(spark: SparkSession, schema: StructType, tree: String,
+                      kind: String): DataFrame =
+    spark.read.schema(schema).option("pathGlobFilter", "*.json")
+      .json(s"$tree/raw/*/$kind")
 
   /** S4 with corrupt-record quarantine — the production ingest shape: at
     * 100 TB some landed documents WILL be malformed, and the default
@@ -119,9 +137,9 @@ object Fixtures {
 
   /** S5: people scan with the session recovered from the directory path
     * (the reference's only session marker for people files,
-    * `legislator_bill_counts_run.R:54-60`). */
-  def peopleJson(spark: SparkSession): DataFrame =
-    spark.read.schema(personSchema).json(peopleJsonGlob)
+    * `legislator_bill_counts_run.R:54-60`). Same read as [[billsJson]]. */
+  def peopleJson(spark: SparkSession, tree: String = root): DataFrame =
+    rawJson(spark, personSchema, tree, "people")
       .withColumn("session",
         regexp_extract(input_file_name(), "/raw/([0-9]{4}-[0-9]{4})/", 1))
       .select(col("person.*"), col("session"))

@@ -187,7 +187,7 @@ class TextPipelineSpec extends SparkSpec {
     assert(rows() === after)
     // an append of the victim lands its band rows as a fresh identity
     // batch — the standing mask must keep it invisible
-    appendBandIndex(spark, path, emb.filter(col("vec_id") === victim))
+    appendBandIndex(path, emb.filter(col("vec_id") === victim))
     assert(rows() === after,
       "a replayed append must not resurrect a deleted vector")
     // rebuild over the survivors applies and clears the tombstones
@@ -1121,25 +1121,23 @@ class TextPipelineSpec extends SparkSpec {
     val p = s"$dir/idx"
     try {
       TextDedup.writeWinnowIndex(standing.filter(col("doc_id") <= 3L), p)
-      TextDedup.appendWinnowIndex(spark, p,
-        standing.filter(col("doc_id") > 3L))
+      TextDedup.appendWinnowIndex(p, standing.filter(col("doc_id") > 3L))
       def pairs() = TextDedup.winnowProbeIndex(spark, p, probe, cap = 3)
         .select("probe_id", "index_id").as[(Long, Long)].collect().toSet
       assert(pairs() === Set((11L, 1L), (11L, 2L)),
         "pre-delete: boiler clique capped out, passage pairs only")
       // takedown doc 1 AND clique member 3: doc 1's pair vanishes,
       // and the clique drops to 3 ≤ cap — probe 13's pairs SURFACE
-      TextDedup.deleteWinnowIndex(spark, p, Seq(1L, 3L).toDF("doc_id"))
+      TextDedup.deleteWinnowIndex(p, Seq(1L, 3L).toDF("doc_id"))
       val after = pairs()
       assert(after === Set((11L, 2L), (13L, 4L), (13L, 5L), (13L, 6L)),
         s"post-delete must equal a fresh build over survivors, got $after")
       // replayed delete: identity-addressed no-op
-      TextDedup.deleteWinnowIndex(spark, p, Seq(1L, 3L).toDF("doc_id"))
+      TextDedup.deleteWinnowIndex(p, Seq(1L, 3L).toDF("doc_id"))
       assert(pairs() === after)
       // APPEND of a deleted doc: its prints land as a fresh identity
       // batch; the standing mask must keep hiding them
-      TextDedup.appendWinnowIndex(spark, p,
-        standing.filter(col("doc_id") === 3L))
+      TextDedup.appendWinnowIndex(p, standing.filter(col("doc_id") === 3L))
       assert(pairs() === after,
         "a replayed append must not resurrect a deleted doc")
       // rebuild over survivors APPLIES: tombstones cleared, answers keep
@@ -1865,7 +1863,7 @@ class TextPipelineSpec extends SparkSpec {
       Family("cells", writeIvfIndex, appendIvfIndex(spark, _, _),
         p => rows(ivfProbeIndex(spark, p, queries, k = 3, nprobe = 2)),
         Some(compactIvfIndex(spark, _))),
-      Family("bands", writeBandIndex, appendBandIndex(spark, _, _),
+      Family("bands", writeBandIndex, appendBandIndex,
         p => rows(bandProbeIndex(spark, p, increment, 0.4)), None)
     ).foreach { f =>
       val p = java.nio.file.Files
