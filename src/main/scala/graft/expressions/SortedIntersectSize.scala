@@ -261,11 +261,27 @@ object GraftFunctions {
       CosTopCells(children(0), children(1), n)
     })
 
+  val adcLookup: Registration = (
+    FunctionIdentifier("adc_lookup"),
+    new ExpressionInfo(classOf[AdcLookup].getName, "adc_lookup"),
+    (children: Seq[Expression]) => {
+      if (children.length != 3)
+        throw new IllegalArgumentException(
+          "adc_lookup: expected adc_lookup(array<bigint>, lut, k_lit), " +
+            s"got ${children.length} argument(s)")
+      val k = children(2) match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"adc_lookup: k must be an int literal, got $other")
+      }
+      AdcLookup(children(0), children(1), k)
+    })
+
   val all: Seq[Registration] =
     Seq(sortedIntersectSize, minhashSignature, hashedShingleSet, cosineSim,
       simhash16, tokenProfile, rollingFingerprint, shinglePosHashes, simhash60,
       deflateRatio, misraGries, rpProject, trigramCounts, pqEncode,
-      kmeansTopCells, cosTopCells)
+      kmeansTopCells, cosTopCells, adcLookup)
 
   def register(spark: SparkSession): Unit = all.foreach { r =>
     spark.sessionState.functionRegistry.registerFunction(r._1, r._2, r._3)

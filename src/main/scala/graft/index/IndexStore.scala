@@ -3,6 +3,34 @@ package graft.index
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+/** A served index table: its directory name under an index root and
+  * the schema its readers declare. `spark.read.parquet` on an
+  * undeclared table runs a one-task schema-inference job per read
+  * (footer reads) before planning; a declared read plans straight from
+  * the driver-side listing. The code that lands the table declares it
+  * next to the landing and passes its rows through [[conform]], so
+  * reader and writer cannot drift. A batch table's `batch=<tag>/`
+  * partition column is not declared: Spark appends it from the
+  * listing. */
+private[graft] final case class ServedTable(name: String, schema: StructType) {
+
+  def dir(root: String): String = s"$root/$name"
+
+  def read(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(schema).parquet(dir(root))
+
+  /** `rows` unchanged, once their column names and types (nullability
+    * aside: a landed parquet column reads back nullable either way)
+    * equal the declaration. */
+  def conform(rows: DataFrame): DataFrame = {
+    require(rows.schema.catalogString == schema.catalogString,
+      s"rows landed as $name are ${rows.schema.catalogString}; " +
+        s"its readers declare ${schema.catalogString}")
+    rows
+  }
+}
 
 /** The on-disk rules every persisted index family shares (dedup, CDC,
   * winnow, band, plain IVF, PQ, residual IVF-PQ, k-means-int) — one
@@ -242,14 +270,25 @@ private[graft] object IndexStore {
 
   // ----- tombstones ----- //
 
+  /** The one-column id table of a tombstone ledger keyed by `idCol` —
+    * `deletes/` under an index root, or a family's own ledger dir. */
+  def idTable(name: String, idCol: String): ServedTable =
+    ServedTable(name, idSchema(idCol))
+
+  private def idSchema(idCol: String): StructType =
+    StructType(Seq(StructField(idCol, LongType)))
+
   /** Land a tombstone batch against the index rooted at `root`: the
-    * distinct `idCol` values of `ids` as an identity-addressed
-    * `<root>/deletes/batch=<tag>/` — replay-idempotent, read back by
-    * [[liveRows]] (or [[idsIn]] over [[deletesDir]]). */
+    * `idCol` values of `ids`, as given, in one file under an
+    * identity-addressed `<root>/deletes/batch=<tag>/` —
+    * replay-idempotent, read back de-duplicated by [[liveRows]] (or
+    * [[idsIn]] over [[deletesDir]]). No distinct pre-pass: [[idsIn]]
+    * de-duplicates on read, and the tag's count then bounds the
+    * batch's distinct ids from above ([[rowBound]]). */
   def landTombstones(ids: DataFrame, root: String, idCol: String): Unit = {
-    val distinctIds = ids.select(col(idCol)).distinct()
-    landIdentityBatch(distinctIds, deletesDir(root),
-      identityBatchTag(distinctIds, idCol))
+    val rows = idTable("deletes", idCol).conform(ids.select(col(idCol)))
+    landIdentityBatch(rows.coalesce(1), deletesDir(root),
+      identityBatchTag(rows, idCol))
   }
 
   /** The tombstone dir of the index rooted at `root`. */
@@ -262,7 +301,26 @@ private[graft] object IndexStore {
     * would still broadcast in its own exchange). */
   def idsIn(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
     Option.when(batchDirTags(spark, dir).nonEmpty)(
-      spark.read.parquet(dir).select(col(idCol)).distinct())
+      spark.read.schema(idSchema(idCol)).parquet(dir)
+        .select(col(idCol)).distinct())
+
+  private val CountedTag = """^n(\d+)_h[0-9a-f]+$""".r
+
+  /** An upper bound on the rows under the batch table `tableDir`, from
+    * its tags alone: the sum of the `n<count>` prefixes
+    * ([[identityBatchTag]]) over every tag its manifest and its batch
+    * dirs name. A `compacted` dir holds exactly the rows of the tags
+    * its manifest carries ([[landCompacted]]), so it adds nothing when
+    * the manifest names it. None when any other tag carries no count
+    * (a batch landed by hand, or a manifest lost with its `compacted`
+    * dir still present) — the caller then counts. */
+  def rowBound(spark: SparkSession, tableDir: String): Option[Long] = {
+    val manifest = landedBatchTags(spark, tableDir)
+    val tags = (manifest ++ batchDirTags(spark, tableDir)) --
+      Option.when(manifest.contains("compacted"))("compacted")
+    val counts = tags.toSeq.collect { case CountedTag(n) => n.toLong }
+    Option.when(counts.size == tags.size)(counts.sum)
+  }
 
   /** `rows` minus the ids landed under `dir`, anti-joined on `idCol`;
     * `rows` itself when none are landed. */
@@ -275,9 +333,18 @@ private[graft] object IndexStore {
     * table keeps masked rows until the family's next rebuild applies
     * them. A batch table's rows carry its `batch` partition column. */
   def liveRows(spark: SparkSession, path: String, table: String,
-               idCol: String): DataFrame = {
+               idCol: String): DataFrame =
+    liveRowsOf(spark, path, table, idCol)(spark.read.parquet(s"$path/$table"))
+
+  /** [[liveRows]] of a declared table, read without inference. */
+  def liveRows(spark: SparkSession, path: String, table: ServedTable,
+               idCol: String): DataFrame =
+    liveRowsOf(spark, path, table.name, idCol)(table.read(spark, path))
+
+  private def liveRowsOf(spark: SparkSession, path: String, table: String,
+                         idCol: String)(read: => DataFrame): DataFrame = {
     batchDirTags(spark, s"$path/$table") // the mixed-depth guard
-    withoutIdsIn(spark.read.parquet(s"$path/$table"), deletesDir(path), idCol)
+    withoutIdsIn(read, deletesDir(path), idCol)
   }
 
   /** Delete the named tables under an index root, where present — the

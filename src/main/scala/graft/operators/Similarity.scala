@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType,
+  MapType, StringType, StructField, StructType}
 import graft.functions._
-import graft.index.IndexStore
+import graft.index.{IndexStore, ServedTable}
 import graft.tables.Tables
 
 /** Similarity search over the `embeddings` table (`Array[Float]`
@@ -867,7 +869,7 @@ object Similarity {
     * a vector. */
   def ivfCellsTwoLevel(emb: DataFrame): DataFrame = {
     val (coarse, fmap) = twoLevelParts(emb)
-    assignTwoLevel(emb, coarse, fmap)
+    assignTwoLevel(emb, plannedTwoLevel(coarse, fmap))
   }
 
   /** The bounded two-level structures of a corpus: the coarse centroid
@@ -959,17 +961,76 @@ object Similarity {
         explode(cosTopCells(col("q"), col("_cents"), nprobe)).as("cell"))
   }
 
+  /** The two-level quantizer as broadcast DATA — what every two-level
+    * placement reads: the coarse centroids `(coarse_id, gv)` as ONE
+    * `_cents` row (`array<struct<cid, cv>>`), the fine centroids
+    * `(coarse_id, centroid_id, c)` as ONE coarse→fines `_fmap` row
+    * (`map<coarse_id, array<struct<cid, cv>>>`), and the fine centroids
+    * themselves, whose ids are the cells and whose vectors are the
+    * residual decode table ([[centers]]). A caller assembles it once
+    * ([[localTwoLevel]] from bounded driver rows, [[plannedTwoLevel]]
+    * for the lazily planned chains) and every placement it runs reads
+    * the same value. */
+  private[graft] final case class TwoLevel(coarse: DataFrame, fmap: DataFrame,
+                                           coarseRow: DataFrame,
+                                           finesRow: DataFrame) {
+    /** The `(cell, cv)` decode table. */
+    def centers: DataFrame =
+      fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
+  }
+
+  /** A [[TwoLevel]] over lazy structure frames: the two rows are
+    * in-plan aggregates, re-run by each plan that places against them
+    * (the semantic-dedup chains, which plan the structures with the
+    * corpus). */
+  private def plannedTwoLevel(coarse: DataFrame, fmap: DataFrame): TwoLevel =
+    TwoLevel(coarse, fmap, centsRowFrom(coarse, "coarse_id", "gv"),
+      fmap.groupBy(col("coarse_id"))
+        .agg(collect_list(struct(col("centroid_id").cast("long").as("cid"),
+          col("c").as("cv"))).as("fines"))
+        .agg(map_from_entries(
+          collect_list(struct(col("coarse_id"), col("fines")))).as("_fmap")))
+
+  /** A [[TwoLevel]] over BOUNDED local relations (localized or read
+    * from a landed index): their rows are already on the driver
+    * (collecting a local relation runs no job), so the `_cents` and
+    * `_fmap` rows are assembled there as one-row local relations —
+    * broadcast data, never expression literals, so plan size stays
+    * O(1) in the centroid count, and no plan aggregates them. Array
+    * order is by cid for a stable plan; [[graft.expressions.CosTopCells]]
+    * is order-independent. */
+  private def localTwoLevel(coarse: DataFrame, fmap: DataFrame): TwoLevel = {
+    val spark = coarse.sparkSession
+    def centType(cv: String, df: DataFrame) = ArrayType(StructType(Seq(
+      StructField("cid", LongType), StructField("cv", df.schema(cv).dataType))))
+    def cent(id: Long, v: Any) = Row(id, v)
+    val coarseCents = coarse.collect().toSeq
+      .map(r => cent(r.getLong(0), r.get(1))).sortBy(_.getLong(0))
+    val fines = fmap.collect().toSeq.groupBy(_.getLong(0)).map {
+      case (g, rs) => g -> rs.map(r => cent(r.getLong(1), r.get(2)))
+        .sortBy(_.getLong(0))
+    }
+    TwoLevel(coarse, fmap,
+      oneRow(spark, "_cents", centType("gv", coarse), coarseCents),
+      oneRow(spark, "_fmap", MapType(LongType, centType("c", fmap)), fines))
+  }
+
+  /** One driver-side value as a one-row, one-column local relation. */
+  private def oneRow(spark: SparkSession, name: String, dt: DataType,
+                     value: Any): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(value)),
+      StructType(Seq(StructField(name, dt))))
+
   /** Coarse-then-refine placement of a (vec_id, embedding) frame into
-    * the cells of a standing corpus's [[twoLevelParts]] — both stages
-    * are MAP-ONLY [[graft.expressions.CosTopCells]] argmaxes: the
-    * coarse stage against the single-row coarse broadcast, the refine
-    * stage against `element_at` of a single-row coarse_id→fines MAP
-    * broadcast. The whole two-level placement costs ZERO exchanges and
-    * zero sorts where the window form paid an N×G-row exchange plus
-    * two corpus-scale sorts (every row carrying the embedding). */
-  private def assignTwoLevel(vectors: DataFrame, coarse: DataFrame,
-                             fmap: DataFrame): DataFrame =
-    twoLevelTopCells(vectors, coarse, fmap, 1)
+    * the cells of a [[TwoLevel]] — both stages are MAP-ONLY
+    * [[graft.expressions.CosTopCells]] argmaxes: the coarse stage
+    * against the single-row coarse broadcast, the refine stage against
+    * `element_at` of the single-row coarse_id→fines MAP broadcast. The
+    * whole two-level placement costs ZERO exchanges and zero sorts
+    * where the window form paid an N×G-row exchange plus two
+    * corpus-scale sorts (every row carrying the embedding). */
+  private def assignTwoLevel(vectors: DataFrame, tl: TwoLevel): DataFrame =
+    twoLevelTopCells(vectors, tl, 1)
       .select(col("vec_id"), col("embedding"),
         element_at(col("cells"), 1).as("cell"))
 
@@ -978,29 +1039,28 @@ object Similarity {
     * visits; fine candidates come from the vector's best COARSE cell
     * only — the standard two-level multi-probe trade, same recall
     * reasoning as [[ivfCellsTwoLevel]]). */
-  private def twoLevelTopCells(vectors: DataFrame, coarse: DataFrame,
-                               fmap: DataFrame, n: Int): DataFrame = {
-    val fmapRow = fmap
-      .groupBy(col("coarse_id"))
-      .agg(collect_list(struct(col("centroid_id").cast("long").as("cid"),
-        col("c").as("cv"))).as("fines"))
-      .agg(map_from_entries(
-        collect_list(struct(col("coarse_id"), col("fines")))).as("_fmap"))
-    assignBestByCos(vectors, coarse, "coarse_id", "gv", "coarse_id")
-      .crossJoin(broadcast(fmapRow))
+  private def twoLevelTopCells(vectors: DataFrame, tl: TwoLevel,
+                               n: Int): DataFrame =
+    vectors.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(tl.coarseRow))
+      .select(col("vec_id"), col("embedding"),
+        element_at(cosTopCells(col("embedding"), col("_cents"), 1), 1)
+          .as("coarse_id"))
+      .crossJoin(broadcast(tl.finesRow))
       .select(col("vec_id"), col("embedding"),
         cosTopCells(col("embedding"),
           element_at(col("_fmap"), col("coarse_id")), n).as("cells"))
-  }
 
-  /** `(query_id, cell)` probe pairs of a `(query_id, q)` frame: each
-    * query's `nprobe` best two-level cells. */
-  private def twoLevelProbeCells(queries: DataFrame, coarse: DataFrame,
-                                 fmap: DataFrame, nprobe: Int): DataFrame =
+  /** `(query_id, q, cell)` probe rows of a `(query_id, q)` frame: each
+    * query's `nprobe` best two-level cells, the query vector riding
+    * along for the per-cell ADC table. */
+  private def twoLevelProbeCells(queries: DataFrame, tl: TwoLevel,
+                                 nprobe: Int): DataFrame =
     twoLevelTopCells(
         queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
-        coarse, fmap, nprobe)
-      .select(col("vec_id").as("query_id"), explode(col("cells")).as("cell"))
+        tl, nprobe)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
+        explode(col("cells")).as("cell"))
 
   def ivfTopK(emb: DataFrame, k: Int): DataFrame =
     ivfTopKFrom(ivfCells(emb), k)
@@ -1163,7 +1223,7 @@ object Similarity {
   def semanticStandingParts(standing: DataFrame):
       (DataFrame, DataFrame, DataFrame) = {
     val (coarse, fmap) = twoLevelParts(standing)
-    (coarse, fmap, assignTwoLevel(standing, coarse, fmap))
+    (coarse, fmap, assignTwoLevel(standing, plannedTwoLevel(coarse, fmap)))
   }
 
   /** [[semanticAdmission]] against pre-built standing structures —
@@ -1171,7 +1231,7 @@ object Similarity {
   def semanticAdmissionAgainst(probe: DataFrame, coarse: DataFrame,
                                fmap: DataFrame, cells: DataFrame,
                                threshold: Double): DataFrame = {
-    val probeCells = assignTwoLevel(probe, coarse, fmap)
+    val probeCells = assignTwoLevel(probe, plannedTwoLevel(coarse, fmap))
       .select(col("vec_id").as("probe_id"), col("embedding").as("ep"),
         col("cell"))
     val dom = probeCells
@@ -2029,18 +2089,18 @@ object Similarity {
     // ONE selector feeds both the cell partition and the codebook —
     // one eager corpus aggregate (and at most one rank build), not two
     val (n, sel) = centroidSelector(emb)
-    val (coarse0, fmap0) = twoLevelPartsFrom(n, sel)
+    val (coarse, fmap) = twoLevelPartsFrom(n, sel)
     // localize the bounded structures (the residual path's measured
     // win): cells, query placement and the candidate join otherwise
     // each re-run the two-level lineage
-    val coarse = localized(emb.sparkSession, coarse0)
-    val fmap = localized(emb.sparkSession, fmap0)
-    val cells = assignTwoLevel(emb, coarse, fmap)
+    val tl = localTwoLevel(localized(emb.sparkSession, coarse),
+      localized(emb.sparkSession, fmap))
+    val cells = assignTwoLevel(emb, tl)
     val cb = pqCodebookFrom(n, sel)
     val queries = queryVectors(emb)
     val cand = cells.select(col("vec_id"), col("cell"))
-      .join(broadcast(twoLevelProbeCells(queries, coarse, fmap, nprobe)),
-        Seq("cell"))
+      .join(broadcast(twoLevelProbeCells(queries, tl, nprobe)
+        .select(col("query_id"), col("cell"))), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
     pqProbeFrom(pqEncode(emb, cb), cb, emb, queries, k, Some(cand))
@@ -2084,11 +2144,18 @@ object Similarity {
     * codebook samples the same rank line at a mid-stride offset — see
     * the inline note), so the eager corpus aggregate is paid once. */
   def ivfPqResidualTopK(emb: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val (coarse, fmap, cb) = ivfPqResidualParts(emb)
-    val codes = encodeResiduals(residualsAgainst(emb, coarse, fmap), cb)
-    ivfPqProbeResidual(codes, cb, coarse, fmap, emb,
-      queryVectors(emb), k, nprobe)
+    val st = ivfPqResidualParts(emb)
+    val codes = encodeResiduals(residualsAgainst(emb, st.twoLevel), st.codebook)
+    ivfPqProbeResidual(codes, st, emb, queryVectors(emb), k, nprobe)
   }
+
+  /** The trained state of a residual IVF-PQ chain: the two-level
+    * quantizer and the residual codebook `(m, j, cw)` (≤ M·K rows), both
+    * bounded local relations. A one-shot chain trains it
+    * ([[ivfPqResidualParts]]); a landed index keeps it as its `state/`
+    * table and reads it back once per call ([[readIvfPqState]]). */
+  private[graft] final case class IvfPqState(twoLevel: TwoLevel,
+                                             codebook: DataFrame)
 
   /** The bounded standing structures of a residual IVF-PQ index:
     * coarse centroids, the fine→coarse map (whose fine-centroid
@@ -2105,8 +2172,7 @@ object Similarity {
     * (measured on the spec fixture: recall fell BELOW the raw form).
     * Mid-stride rows are genuine within-cell offsets on any id
     * space. */
-  private def ivfPqResidualParts(emb: DataFrame):
-      (DataFrame, DataFrame, DataFrame) = {
+  private def ivfPqResidualParts(emb: DataFrame): IvfPqState = {
     val spark = emb.sparkSession
     val (n, sel3) = centroidSelectorOff(emb)
     val (coarse0, fmap0) =
@@ -2121,16 +2187,14 @@ object Similarity {
     // flat ~2 s structure overhead dominating q_similar_ivfpq_res's
     // 1.10× slope). Row-based collect preserves nulls and exact float
     // bits; O(√N·dims) driver bytes, never corpus-proportional.
-    val coarse = localized(spark, coarse0)
-    val fmap = localized(spark, fmap0)
+    val tl = localTwoLevel(localized(spark, coarse0), localized(spark, fmap0))
     val tStride = pqTrainStride(n)
     val train = sel3(tStride, math.max(1L, math.min(PqK.toLong, n)),
         tStride / 2)
       .select(col("centroid_id").as("vec_id"), col("c").as("embedding"))
-    val cb = pqCodebookRows(
-      residualsAgainst(train, coarse, fmap)
-        .select(col("vec_id").as("centroid_id"), col("resid").as("c")))
-    (coarse, fmap, cb)
+    IvfPqState(tl, pqCodebookRows(
+      residualsAgainst(train, tl)
+        .select(col("vec_id").as("centroid_id"), col("resid").as("c"))))
   }
 
   /** Collect a BOUNDED frame and re-create it as a local relation —
@@ -2143,8 +2207,12 @@ object Similarity {
     val rows = df.limit(LocalizedRowCap + 1).collect()
     // bounded-collect ledger: the LARGEST legitimate call site is the
     // ⌈√N⌉-row fine-centroid map (≈3·10⁵ rows at 10¹¹ vectors — tens
-    // of MB, driver-bounded); every other site is a ≤PqM·PqK=128-row
-    // codebook or a ≤|Q|·k=24-row ground truth. The cap sits above the
+    // of MB, driver-bounded), alone or inside a landed residual
+    // IVF-PQ index's `state/` rows (coarse + fine centroids + ≤ M·K
+    // codewords, [[readIvfPqState]]); every other site is a
+    // ≤PqM·PqK=128-row codebook (also collected whole by the encode
+    // bake and by [[adcTables]]' dense M·K-slot table row) or a
+    // ≤|Q|·k=24-row ground truth. The cap sits above the
     // √N ledger at any plausible corpus but catches the refactor that
     // hands this helper a corpus-SCALE frame (a 10⁹-row collect is a
     // driver OOM at 100 TB) before it ships.
@@ -2197,12 +2265,10 @@ object Similarity {
     * Output (vec_id, cell, resid: array<double>). Per-vector pure
     * against the frozen structures, so increments place/encode
     * byte-identically to a one-shot pass. */
-  private def residualsAgainst(vectors: DataFrame, coarse: DataFrame,
-                               fmap: DataFrame,
+  private def residualsAgainst(vectors: DataFrame, tl: TwoLevel,
                                keepEmbedding: Boolean = false): DataFrame = {
-    val centers = fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
-    val placed = assignTwoLevel(vectors, coarse, fmap)
-      .join(broadcast(centers), Seq("cell"))
+    val placed = assignTwoLevel(vectors, tl)
+      .join(broadcast(tl.centers), Seq("cell"))
     val resid = zip_with(col("embedding"), col("cv"),
       (x, c) => (microQ(x) - microQ(c)).cast("double") / lit(1e6))
       .as("resid")
@@ -2230,83 +2296,119 @@ object Similarity {
   }
 
   /** The residual ADC probe over an encoded (vec_id, cell, codes)
-    * frame: per-(query, probed cell) LUT of EFFECTIVE codewords
-    * `cs + cw` (|queries|·nprobe·M·K rows, bounded broadcast — the
-    * classic IVFADC per-cell table), candidates pruned to the probed
-    * cells, integer ADC sums, [[pqRankFromAdc]] shortlist + exact
-    * re-rank against `rerankSrc`. */
-  private def ivfPqProbeResidual(codes: DataFrame, cb: DataFrame,
-                                 coarse: DataFrame, fmap: DataFrame,
+    * frame: each query's `nprobe` two-level cells, per-(query, probed
+    * cell) tables of EFFECTIVE codewords `cs + cw` (the classic IVFADC
+    * per-cell table), candidates pruned to the probed cells, integer
+    * ADC sums, [[pqRankFromAdc]] shortlist + exact re-rank against
+    * `rerankSrc`. */
+  private def ivfPqProbeResidual(codes: DataFrame, st: IvfPqState,
                                  rerankSrc: DataFrame, queries: DataFrame,
-                                 k: Int, nprobe: Int): DataFrame = {
-    val centers = fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
-    ivfPqProbeResidualFrom(codes, cb, centers, rerankSrc, queries,
-      twoLevelProbeCells(queries, coarse, fmap, nprobe), k)
-  }
+                                 k: Int, nprobe: Int): DataFrame =
+    ivfPqProbeResidualFrom(codes, st.codebook, st.twoLevel.centers,
+      rerankSrc, queries, twoLevelProbeCells(queries, st.twoLevel, nprobe), k)
 
   /** The placement-agnostic residual probe core — per-(query, probed
-    * cell) effective-codeword LUT, pruned-before-explode ADC,
-    * shortlist + exact re-rank — shared by the two-level chain (cells
-    * from [[twoLevelProbeCells]]) and the LEARNED chain (cells from
-    * the integer k-means quantizer). `centers` is the (cell, cv)
-    * decode table; `qCells` the caller's (query_id, cell) probed
-    * pairs. */
+    * cell) lookup tables, map-side ADC, shortlist + exact re-rank —
+    * shared by the two-level chain (cells from [[twoLevelProbeCells]])
+    * and the LEARNED chain (cells from the integer k-means quantizer).
+    * `centers` is the (cell, cv) decode table; `qCells` the caller's
+    * `(query_id, q, cell)` probe rows.
+    *
+    * The table: ONE row per (query, probed cell) — |queries|·nprobe
+    * rows, built map-side on the probe rows ([[adcTables]]) and
+    * broadcast. The candidates: the code rows of the probed cells,
+    * reached by the broadcast equi-join on `cell` straight off the code
+    * scan, so the ~nprobe·|Q|·N/√N candidates are the only code rows
+    * scored; each (query, vec) pair is a candidate once (a vector sits
+    * in one cell). The scores: [[graft.expressions.AdcLookup]] reads
+    * each candidate's `num`/`nsq` with M table lookups in one
+    * projection. The round-22 shape exploded every candidate ×M,
+    * re-partitioned them by (query, vec), joined the exploded rows to
+    * a long-form table on (query, cell, m, j) and summed them back —
+    * an exchange and an aggregate for a value that depends only on
+    * the candidate's row and one broadcast row. Every sum is the same
+    * integer sum and the `adc` expression below is unchanged, so the
+    * answers are bit-identical. The null filter runs the lookup once
+    * more below the projection (Catalyst pushes it through); M array
+    * reads per candidate cost far less than the exchange they
+    * replace. */
   private def ivfPqProbeResidualFrom(codes: DataFrame, cb: DataFrame,
                                      centers: DataFrame,
                                      rerankSrc: DataFrame,
                                      queries: DataFrame,
-                                     qCells: DataFrame, k: Int): DataFrame = {
-    val qsubs = queries
-      .select(col("query_id"), pqSubspaces(col("q")).as("sub"))
-      .select(col("query_id"), col("sub.m").as("m"), col("sub.sv").as("qq"))
-      .withColumn("qq_n2", aggregate(transform(col("qq"), x => x * x),
-        lit(0L), (acc, d) => acc + d))
-    val cellSubs = centers
-      .select(col("cell"), pqSubspaces(col("cv")).as("sub"))
-      .select(col("cell"), col("sub.m").as("m"), col("sub.sv").as("cs"))
-    val eff = zip_with(col("cs"), col("cw"), (a, b) => a + b)
-    val lut = qCells.join(qsubs, Seq("query_id"))
-      .join(cellSubs, Seq("cell", "m"))
-      .join(cb, Seq("m"))
-      .select(col("query_id"), col("cell"), col("m"), col("j"),
-        aggregate(zip_with(col("qq"), eff, (q, e) => q * e),
-          lit(0L), (acc, d) => acc + d).as("dotp"),
-        aggregate(eff, lit(0L), (acc, e) => acc + e * e).as("cwn2"))
-    val qn = qsubs.groupBy(col("query_id")).agg(sum(col("qq_n2")).as("qn2"))
-    // PRUNE BEFORE THE ×M EXPLODE: the probed-cell join (a bounded
-    // broadcast — qCells is ≤ |Q|·nprobe rows) lands on the UNEXPLODED
-    // code rows, so the Generate and the ADC aggregate see only the
-    // probed-cell candidates (~nprobe·|Q|·N/√N rows) instead of every
-    // landed code row ×M — the round-18 shape exploded the full corpus
-    // 8×-inflated and only then joined the candidates, forfeiting
-    // IVF's core saving on the heaviest table at 100×. One pass over
-    // codes (the old vcodes + cand pair read it twice); candidates
-    // carry their OWN cell (== the probed cell that found them),
-    // which keys the per-cell LUT rows — probing never re-places the
-    // corpus. Same filters, applied earlier; answers unchanged.
-    val adc = codes
-      .join(broadcast(qCells), Seq("cell"))
+                                     qCells: DataFrame, k: Int): DataFrame =
+    pqRankFromAdc(residualAdc(codes, cb, centers, qCells), rerankSrc,
+      queries, k)
+
+  /** The `(query_id, vec_id, adc)` scores of [[ivfPqProbeResidualFrom]]:
+    * every code row of a probed cell against its query's table. */
+  private[graft] def residualAdc(codes: DataFrame, cb: DataFrame,
+                                 centers: DataFrame,
+                                 qCells: DataFrame): DataFrame = {
+    val (tables, kEff) = adcTables(qCells, centers, cb)
+    codes
+      .join(broadcast(tables), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      // reposition the ADC aggregate's exchange onto the pruned,
-      // un-exploded candidates — see [[pqProbeFrom]]'s note (same row
-      // count as the old post-partial-agg exchange; the explode+LUT
-      // stage's parallelism stops depending on the landed code table's
-      // file layout, and the groupBy below rides this partitioning)
-      .repartition(col("query_id"), col("vec_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        posexplode(col("codes")))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        col("pos").cast("long").as("m"), col("col").as("j"))
-      .join(broadcast(lut), Seq("query_id", "cell", "m", "j"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("dotp")).as("num"), sum(col("cwn2")).as("nsq"))
-      .join(broadcast(qn), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"), col("qn2"),
+        call_function("adc_lookup", col("codes"), col("lut"), lit(kEff))
+          .as("s"))
+      .filter(col("s").isNotNull)
+      .select(col("query_id"), col("vec_id"), col("s.num").as("num"),
+        col("s.nsq").as("nsq"), col("qn2"))
       .select(col("query_id"), col("vec_id"),
         when(col("nsq") === 0 || col("qn2") === 0, lit(0.0))
           .otherwise(col("num").cast("double")
             / (sqrt(col("nsq").cast("double"))
               * sqrt(col("qn2").cast("double")))).as("adc"))
-    pqRankFromAdc(adc, rerankSrc, queries, k)
+  }
+
+  /** The per-(query, probed cell) ADC tables of `qCells` `(query_id, q,
+    * cell)` against the decode table `centers` `(cell, cv)` and the
+    * codebook `cb` `(m, j, cw)`: `(query_id, cell, lut, qn2)` rows,
+    * `lut` dense over slot `m·K + j` with K the codebook's code count
+    * (returned alongside). Slot `(m, j)` holds, for the effective
+    * codeword `e = cs_m + cw_mj` (`cs_m` the cell centre's micro
+    * sub-vector), `dot = Σ qq_m·e` and `n = Σ e²` — the terms the
+    * long-form table held per (query, cell, m, j) row, same
+    * expressions, same nulls — and is NULL where the codebook has no
+    * `(m, j)` row. `qn2` is `Σ_m Σ qq_m²` with SQL `SUM`'s null
+    * skipping over the M subspaces. One projection over a broadcast
+    * centre join and the one-row codebook: no exchange. The codebook
+    * is bounded (≤ M·K rows) and a local relation in every caller, so
+    * its collect runs no job. */
+  private def adcTables(qCells: DataFrame, centers: DataFrame,
+                        cb: DataFrame): (DataFrame, Int) = {
+    val entries = cb.select(col("m"), col("j"), col("cw")).collect()
+    val kEff = if (entries.isEmpty) 1
+      else entries.iterator.map(_.getLong(1).toInt).max + 1
+    val mEff = if (entries.isEmpty) PqM
+      else math.max(PqM, entries.iterator.map(_.getLong(0).toInt).max + 1)
+    val slots = Array.fill[Row](mEff * kEff)(null)
+    entries.foreach { r =>
+      slots(r.getLong(0).toInt * kEff + r.getLong(1).toInt) = Row(r.get(2))
+    }
+    val cbRow = oneRow(cb.sparkSession, "_cb", ArrayType(StructType(Seq(
+      StructField("cw", cb.schema("cw").dataType)))), slots.toSeq)
+    def sub(vec: Column, m: Column): Column =
+      transform(slice(vec, m * PqSubDim + 1, lit(PqSubDim)), microQ(_))
+    def sum0(xs: Column, f: Column => Column): Column =
+      aggregate(xs, lit(0L), (acc, x) => acc + f(x))
+    val lut = transform(col("_cb"), (slot, i) => {
+      val m = floor(i / kEff).cast("int")
+      val eff = zip_with(sub(col("cv"), m), slot.getField("cw"), (a, b) => a + b)
+      when(slot.isNotNull, struct(
+        sum0(zip_with(sub(col("q"), m), eff, (q, e) => q * e), identity).as("dot"),
+        sum0(eff, e => e * e).as("n")))
+    })
+    val qn2 = aggregate(
+      array((0 until PqM).map(m => sum0(sub(col("q"), lit(m)), x => x * x)): _*),
+      lit(null).cast("long"),
+      (acc, x) => when(x.isNull, acc).otherwise(coalesce(acc, lit(0L)) + x))
+    val tables = qCells
+      .join(broadcast(centers), Seq("cell"))
+      .crossJoin(broadcast(cbRow))
+      .select(col("query_id"), col("cell"), lut.as("lut"), qn2.as("qn2"))
+    (tables, kEff)
   }
 
   def qSimilarIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
@@ -2329,18 +2431,19 @@ object Similarity {
     * caller encodes without a second corpus placement pass. */
   private def ivfPqResidualPartsLloyd(emb: DataFrame,
                                       iters: Int = PqLloydIters):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (coarse, fmap, cb0) = ivfPqResidualParts(emb)
+      (IvfPqState, DataFrame) = {
+    val st = ivfPqResidualParts(emb)
     // persist the corpus-scale residual frame (MEMORY_AND_DISK, the
     // lmPerplexity convention): every Lloyd round executes it once and
     // the caller's encode reads it again — iters+1 two-level placement
     // passes (each a corpus scan + the vec-keyed window exchange)
     // collapse to one. Bench/Verify clearCache() releases it per query.
-    val resid = residualsAgainst(emb, coarse, fmap)
+    val resid = residualsAgainst(emb, st.twoLevel)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = lloydRounds(
-      resid.select(col("vec_id"), col("resid").as("embedding")), cb0, iters)
-    (coarse, fmap, cb, resid)
+      resid.select(col("vec_id"), col("resid").as("embedding")), st.codebook,
+      iters)
+    (st.copy(codebook = cb), resid)
   }
 
   /** Total squared residual-quantization error (micro² ints) of the
@@ -2356,11 +2459,11 @@ object Similarity {
     * + a 1-row aggregate; the final 1×1 cross join is bounded. */
   def ivfPqLloydQuantError(emb: DataFrame,
                            iters: Int = PqLloydIters): DataFrame = {
-    val spark = emb.sparkSession
-    val (coarse, fmap, cb0) = ivfPqResidualParts(emb)
+    val st = ivfPqResidualParts(emb)
+    val cb0 = st.codebook
     // persisted: the Lloyd rounds AND both errOf columns read it —
     // iters+2 placement passes collapse to one
-    val resid = residualsAgainst(emb, coarse, fmap)
+    val resid = residualsAgainst(emb, st.twoLevel)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cbL = lloydRounds(
       resid.select(col("vec_id"), col("resid").as("embedding")), cb0, iters)
@@ -2388,8 +2491,8 @@ object Similarity {
     * mid-stride sampling to corpus k-means on residuals. */
   def ivfPqResidualTopKLloyd(emb: DataFrame, k: Int, nprobe: Int = 2,
                              iters: Int = PqLloydIters): DataFrame = {
-    val (coarse, fmap, cb, resid) = ivfPqResidualPartsLloyd(emb, iters)
-    ivfPqProbeResidual(encodeResiduals(resid, cb), cb, coarse, fmap, emb,
+    val (st, resid) = ivfPqResidualPartsLloyd(emb, iters)
+    ivfPqProbeResidual(encodeResiduals(resid, st.codebook), st, emb,
       queryVectors(emb), k, nprobe)
   }
 
@@ -2404,14 +2507,15 @@ object Similarity {
     * differs. */
   private def ivfPqResidualPartsSpherical(emb: DataFrame,
                                           iters: Int = PqLloydIters):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (coarse, fmap, cb0) = ivfPqResidualParts(emb)
+      (IvfPqState, DataFrame) = {
+    val st = ivfPqResidualParts(emb)
     // persisted for the same multi-pass reason as the Lloyd parts
-    val resid = residualsAgainst(emb, coarse, fmap)
+    val resid = residualsAgainst(emb, st.twoLevel)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = lloydRoundsSpherical(
-      resid.select(col("vec_id"), col("resid").as("embedding")), cb0, iters)
-    (coarse, fmap, cb, resid)
+      resid.select(col("vec_id"), col("resid").as("embedding")), st.codebook,
+      iters)
+    (st.copy(codebook = cb), resid)
   }
 
   /** Residual IVF-PQ served from the SPHERICAL-Lloyd codebook — the
@@ -2421,8 +2525,8 @@ object Similarity {
     * like the plain Lloyd chain. */
   def ivfPqResidualTopKSpherical(emb: DataFrame, k: Int, nprobe: Int = 2,
                                  iters: Int = PqLloydIters): DataFrame = {
-    val (coarse, fmap, cb, resid) = ivfPqResidualPartsSpherical(emb, iters)
-    ivfPqProbeResidual(encodeResiduals(resid, cb), cb, coarse, fmap, emb,
+    val (st, resid) = ivfPqResidualPartsSpherical(emb, iters)
+    ivfPqProbeResidual(encodeResiduals(resid, st.codebook), st, emb,
       queryVectors(emb), k, nprobe)
   }
 
@@ -2462,10 +2566,11 @@ object Similarity {
     // seed BY CONSTRUCTION (all deterministic), so build them once —
     // per-chain TopK calls would pay three scaffold builds for
     // byte-identical parts
-    val (coarse, fmap, cb0) = ivfPqResidualParts(emb)
+    val st = ivfPqResidualParts(emb)
+    val cb0 = st.codebook
     // persisted: TWO Lloyd trainings iterate over it and all three
     // chains encode from it — ~7 placement passes collapse to one
-    val resid = residualsAgainst(emb, coarse, fmap)
+    val resid = residualsAgainst(emb, st.twoLevel)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rvecs = resid.select(col("vec_id"), col("resid").as("embedding"))
     // OVERLAP the independent eager builds (guide §2.6). Phase 1: the
@@ -2490,7 +2595,7 @@ object Similarity {
           Seq("query_id", "vec_id"), "left_semi")
         .groupBy(col("query_id")).agg(count(lit(1)).as(name))
     def chainOf(cb: DataFrame) =
-      ivfPqProbeResidual(encodeResiduals(resid, cb), cb, coarse, fmap,
+      ivfPqProbeResidual(encodeResiduals(resid, cb), st.copy(codebook = cb),
         emb, qv, k, nprobe)
     qv.select(col("query_id"))
       .join(hitsOf(chainOf(cb0), "hs"),
@@ -2564,10 +2669,11 @@ object Similarity {
     * deployment reads this row set and picks its operating point
     * instead of trusting a one-point measurement. */
   def ivfPqNprobeCurve(emb: DataFrame, k: Int = 3): DataFrame = {
-    val (coarse, fmap, cb) = ivfPqResidualParts(emb)
+    val st = ivfPqResidualParts(emb)
     // persisted: all three probe points scan the same encoded corpus —
     // one placement+encode pass instead of |NprobeCurve|
-    val codes = encodeResiduals(residualsAgainst(emb, coarse, fmap), cb)
+    val codes = encodeResiduals(residualsAgainst(emb, st.twoLevel),
+        st.codebook)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qv = queryVectors(emb)
     // overlap (guide §2.6): the bounded |Q|·k ground truth is
@@ -2581,7 +2687,7 @@ object Similarity {
       .head.asInstanceOf[DataFrame]
     NprobeCurve.map { np =>
       exact.join(
-          ivfPqProbeResidual(codes, cb, coarse, fmap, emb, qv, k, np)
+          ivfPqProbeResidual(codes, st, emb, qv, k, np)
             .select(col("query_id"), col("vec_id")),
           Seq("query_id", "vec_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
@@ -2615,10 +2721,9 @@ object Similarity {
     * (~31.6k rows at N = 10⁹). */
   def ivfCellAudit(emb: DataFrame,
                    topK: Int = CellAuditTopK): DataFrame = {
-    val (coarse, fmap, _) = ivfPqResidualParts(emb)
+    val tl = ivfPqResidualParts(emb).twoLevel
     cellAuditFrom(
-      assignTwoLevel(emb, coarse, fmap).select(col("vec_id"), col("cell")),
-      topK)
+      assignTwoLevel(emb, tl).select(col("vec_id"), col("cell")), topK)
   }
 
   /** The audit over a LANDED residual IVF-PQ index's codes table —
@@ -2628,7 +2733,7 @@ object Similarity {
     * colocated floats unread. */
   def ivfPqIndexCellAudit(spark: SparkSession, path: String,
                           topK: Int = CellAuditTopK): DataFrame = {
-    cellAuditFrom(spark.read.parquet(s"$path/codes")
+    cellAuditFrom(IvfPqCodes.read(spark, path)
       .select(col("vec_id"), col("cell")), topK)
   }
 
@@ -2660,10 +2765,10 @@ object Similarity {
     * `topk_share`/`max_occ` pulling away from the `standing` row
     * faster than the corpus grows. */
   def ivfCellDrift(emb: DataFrame, topK: Int = CellAuditTopK): DataFrame = {
-    val (coarse, fmap, _) = ivfPqResidualParts(emb)
+    val tl = ivfPqResidualParts(emb).twoLevel
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     def side(df: DataFrame, label: String) =
-      cellAuditFrom(assignTwoLevel(df, coarse, fmap)
+      cellAuditFrom(assignTwoLevel(df, tl)
         .select(col("vec_id"), col("cell")), topK)
         .select(lit(label).as("phase"), col("n_cells"), col("n_vectors"),
           col("max_occ"), col("mean_occ"), col("topk_mass"),
@@ -2677,54 +2782,99 @@ object Similarity {
     ivfCellDrift(Tables.embeddings(spark, dir))
 
   /** Persist the residual IVF-PQ index — the billion-vector serving
-    * layout: `coarse/` + `fmap/` (the bounded two-level placement
-    * structures; fmap's fine-centroid vectors double as the ADC
-    * decode table), `codebook/` (≤ M·K residual codewords), and
-    * `codes/` — (vec_id, cell, codes, embedding), the embedding
-    * riding along ONLY for the shortlist re-rank reads (the
-    * [[writePqIndex]] colocation reasoning; the ADC scan projects
-    * codes + cell and column pruning keeps the floats unread). Codes
-    * land as identity-addressed `batch=<tag>/` dirs, so
+    * layout: `state/` (the trained state, [[IvfPqStateTable]]: the
+    * bounded two-level placement structures, whose fine-centroid
+    * vectors double as the ADC decode table, and the ≤ M·K residual
+    * codewords) and `codes/` ([[IvfPqCodes]]) — (vec_id, cell, codes,
+    * embedding), the embedding riding along ONLY for the shortlist
+    * re-rank reads (the [[writePqIndex]] colocation reasoning; the ADC
+    * scan projects codes + cell and column pruning keeps the floats
+    * unread). Codes land as identity-addressed `batch=<tag>/` dirs, so
     * [[appendIvfPqIndex]] is replay-idempotent. Structures are FROZEN
     * at build (the standard IVF contract: appends inherit the
     * snapshot's centroids and codebook between rebuilds — placement
     * and encode are per-vector pure against them, so build+append
-    * lands byte-identical codes to a one-shot build over the
-    * union). */
+    * lands byte-identical codes to a one-shot build over the union).
+    * Embeddings are `array<float>`, the corpus type. */
   def writeIvfPqIndex(emb: DataFrame, path: String): Unit = {
-    writeIvfPqStructures(emb, path)
+    val st = ivfPqResidualParts(emb)
+    landIvfPqState(st, path)
     // a rebuild clears the tombstones with the codes: the new corpus
     // is the post-takedown truth (upstream filters the deleted docs),
     // so old vec-id tombstones are void — and ids are never reused,
     // so none can mask a legitimate new row anyway
-    IndexStore.landBuild(ivfPqCodeRows(emb.sparkSession, path, emb), path, "codes")
+    IndexStore.landBuild(ivfPqCodeRows(st, emb), path, "codes")
   }
 
-  /** Train + land just the bounded structures (coarse/fmap/codebook)
-    * from `trainCorpus` — split out so the harness entry can train on
-    * the full corpus while landing standing codes and the increment
-    * through the append path. */
-  def writeIvfPqStructures(trainCorpus: DataFrame, path: String): Unit = {
-    val (coarse, fmap, cb) = ivfPqResidualParts(trainCorpus)
-    coarse.write.mode("overwrite").parquet(s"$path/coarse")
-    fmap.write.mode("overwrite").parquet(s"$path/fmap")
-    cb.write.mode("overwrite").parquet(s"$path/codebook")
+  /** Train + land just the trained state from `trainCorpus` — split
+    * out so the harness entry can train on the full corpus while
+    * landing standing codes and the increment through the append
+    * path. */
+  def writeIvfPqStructures(trainCorpus: DataFrame, path: String): Unit =
+    landIvfPqState(ivfPqResidualParts(trainCorpus), path)
+
+  /** The landed residual IVF-PQ code table. */
+  private[graft] val IvfPqCodes = ServedTable("codes", StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", LongType),
+    StructField("codes", ArrayType(LongType)),
+    StructField("embedding", ArrayType(FloatType)))))
+
+  /** The landed trained state, one small table in one file: the coarse
+    * centroids (`kind` "coarse": `id` = coarse_id, `c` its vector), the
+    * fine centroids ("fine": `id` = centroid_id, `owner` = its
+    * coarse_id, `c`) and the residual codewords ("codeword": `id` = j,
+    * `owner` = m, `cw`) — ⌈√C⌉ + C + M·K rows, C ≈ ⌈√N⌉. One table so a
+    * call reads its whole state with one job ([[readIvfPqState]]). */
+  private[graft] val IvfPqStateTable = ServedTable("state", StructType(Seq(
+    StructField("kind", StringType), StructField("id", LongType),
+    StructField("owner", LongType), StructField("c", ArrayType(FloatType)),
+    StructField("cw", ArrayType(LongType)))))
+
+  private def landIvfPqState(st: IvfPqState, path: String): Unit = {
+    val noOwner = lit(null).cast("long").as("owner")
+    val noC = lit(null).cast("array<float>").as("c")
+    val noCw = lit(null).cast("array<bigint>").as("cw")
+    IvfPqStateTable.conform(
+        st.twoLevel.coarse.select(lit("coarse").as("kind"),
+            col("coarse_id").as("id"), noOwner, col("gv").as("c"), noCw)
+          .unionByName(st.twoLevel.fmap.select(lit("fine").as("kind"),
+            col("centroid_id").as("id"), col("coarse_id").as("owner"),
+            col("c"), noCw))
+          .unionByName(st.codebook.select(lit("codeword").as("kind"),
+            col("j").as("id"), col("m").as("owner"), noC, col("cw"))))
+      .coalesce(1).write.mode("overwrite").parquet(IvfPqStateTable.dir(path))
   }
 
-  /** One batch's code rows, placed + encoded against the LANDED
-    * structures. */
-  private def ivfPqCodeRows(spark: SparkSession, path: String,
-                            batch: DataFrame): DataFrame =
-    encodeResiduals(
-      residualsAgainst(batch, spark.read.parquet(s"$path/coarse"),
-        spark.read.parquet(s"$path/fmap"), keepEmbedding = true),
-      spark.read.parquet(s"$path/codebook"), keepEmbedding = true)
+  /** The one reader of a landed index's trained state: one bounded
+    * collect of `state/` ([[localized]]), split on the driver into the
+    * [[TwoLevel]] and codebook local relations every placement, encode
+    * and ADC table of the call then shares — no plan re-derives them. */
+  private[graft] def readIvfPqState(spark: SparkSession,
+                                    path: String): IvfPqState = {
+    val state = localized(spark, IvfPqStateTable.read(spark, path))
+    def kind(k: String) = state.filter(col("kind") === k)
+    IvfPqState(
+      localTwoLevel(
+        kind("coarse").select(col("id").as("coarse_id"), col("c").as("gv")),
+        kind("fine").select(col("owner").as("coarse_id"),
+          col("id").as("centroid_id"), col("c"))),
+      kind("codeword").select(col("owner").as("m"), col("id").as("j"),
+        col("cw")))
+  }
 
-  /** Land one batch's code rows ([[ivfPqCodeRows]]) under an
-    * identity-addressed batch dir. */
+  /** One batch's code rows, placed + encoded against a trained
+    * state. */
+  private def ivfPqCodeRows(st: IvfPqState, batch: DataFrame): DataFrame =
+    IvfPqCodes.conform(encodeResiduals(
+      residualsAgainst(batch, st.twoLevel, keepEmbedding = true),
+      st.codebook, keepEmbedding = true))
+
+  /** Land one batch's code rows ([[ivfPqCodeRows]] against the landed
+    * state) under an identity-addressed batch dir. */
   def landIvfPqCodes(spark: SparkSession, path: String,
                      batch: DataFrame): Unit =
-    IndexStore.landIdentityBatch(ivfPqCodeRows(spark, path, batch),
+    IndexStore.landIdentityBatch(
+      ivfPqCodeRows(readIvfPqState(spark, path), batch),
       s"$path/codes", IndexStore.identityBatchTag(batch, "vec_id"))
 
   /** Append an increment: place into the FROZEN cells, encode against
@@ -2758,18 +2908,16 @@ object Similarity {
                        vecIds: DataFrame): Unit =
     IndexStore.landTombstones(vecIds, path, "vec_id")
 
-  /** Serve top-k from the landed index: probe cells from `coarse`/
-    * `fmap`, ADC over the landed codes (tombstones masked), exact
-    * re-rank from the colocated embeddings. */
+  /** Serve top-k from the landed index: probe cells from the landed
+    * state ([[readIvfPqState]]), ADC over the landed codes (tombstones
+    * masked), exact re-rank from the colocated embeddings. */
   def ivfPqProbeIndex(spark: SparkSession, path: String,
                       queries: DataFrame, k: Int,
                       nprobe: Int = 2): DataFrame = {
-    val codes = IndexStore.liveRows(spark, path, "codes", "vec_id")
+    val codes = IndexStore.liveRows(spark, path, IvfPqCodes, "vec_id")
     ivfPqProbeResidual(
       codes.select(col("vec_id"), col("cell"), col("codes")),
-      spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/coarse"),
-      spark.read.parquet(s"$path/fmap"),
+      readIvfPqState(spark, path),
       codes.select(col("vec_id"), col("embedding")),
       queries, k, nprobe)
   }
@@ -2796,7 +2944,8 @@ object Similarity {
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     val isDel = col("vec_id") % IvfDeleteMod === IvfDeleteRem
     writeIvfPqStructures(emb, path)
-    IndexStore.landBuild(ivfPqCodeRows(spark, path, emb.filter(!isNew)),
+    IndexStore.landBuild(
+      ivfPqCodeRows(readIvfPqState(spark, path), emb.filter(!isNew)),
       path, "codes")
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     deleteIvfPqIndex(spark, path, emb.filter(isDel).select(col("vec_id")))
@@ -2815,7 +2964,8 @@ object Similarity {
     val path = TextDedup.spillPath(spark, "ivfpq_index")
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     writeIvfPqStructures(emb, path)
-    IndexStore.landBuild(ivfPqCodeRows(spark, path, emb.filter(!isNew)),
+    IndexStore.landBuild(
+      ivfPqCodeRows(readIvfPqState(spark, path), emb.filter(!isNew)),
       path, "codes")
     appendIvfPqIndex(spark, path, emb.filter(isNew))
     ivfPqProbeIndex(spark, path, queryVectors(emb), k = 3, nprobe = 2)
@@ -2825,11 +2975,11 @@ object Similarity {
   /** Live ANN serving from a LANDED residual IVF-PQ index — the
     * streaming twin of [[ivfPqProbeIndex]]: each arriving
     * (query_id, q) micro-batch probes the frozen layout and the sink
-    * receives its top-k. The bounded structures (coarse/fmap/codebook)
-    * are read and LOCALIZED once before the stream starts — as plan
-    * literals they need no persist lifecycle, and per-batch re-reads
-    * would re-pay three parquet scans plus their broadcasts on every
-    * micro-batch (the K-batches-pay-K-standing-builds hazard). The
+    * receives its top-k. The trained state is read once before the
+    * stream starts ([[readIvfPqState]]) — as local relations it needs
+    * no persist lifecycle, and per-batch re-reads would re-pay its scan
+    * on every micro-batch (the K-batches-pay-K-standing-builds
+    * hazard). The
     * corpus-scale `codes/` table stays a per-batch pruned parquet
     * scan: the landed store IS the serving index (a measured PQ probe
     * seam prices exactly this split). Stateless per batch, so
@@ -2851,18 +3001,15 @@ object Similarity {
                            nprobe: Int = 2,
                            checkpoint: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val coarse = localized(spark, spark.read.parquet(s"$path/coarse"))
-    val fmap = localized(spark, spark.read.parquet(s"$path/fmap"))
-    val cb = localized(spark, spark.read.parquet(s"$path/codebook"))
+    val st = readIvfPqState(spark, path)
     val codes = IndexStore.servingSnapshot(spark, path, "codes")(
-      IndexStore.liveRows(spark, path, "codes", "vec_id"))
+      IndexStore.liveRows(spark, path, IvfPqCodes, "vec_id"))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val codesSnap = codes()
         sink(ivfPqProbeResidual(
-          codesSnap.select(col("vec_id"), col("cell"), col("codes")),
-          cb, coarse, fmap,
+          codesSnap.select(col("vec_id"), col("cell"), col("codes")), st,
           codesSnap.select(col("vec_id"), col("embedding")),
           batch, k, nprobe), id)
       }
@@ -3291,17 +3438,18 @@ object Similarity {
           (x, c) => (microQ(x) - microQ(c)).cast("double") / lit(1e6))
           .as("resid"))
 
-  /** Top-`nprobe` cells per vector under the INTEGER k-means
+  /** Top-`nprobe` cells per query under the INTEGER k-means
     * quantizer — the [[kmeansAssignInt]] argmin widened to the native
-    * expression's top-n selection, exploded. Still MAP-ONLY, still
-    * O(1) plan size in K. */
-  private def kmeansProbeCellsInt(vectors: DataFrame,
+    * expression's top-n selection, exploded to `(query_id, q, cell)`
+    * probe rows. Still MAP-ONLY, still O(1) plan size in K. */
+  private def kmeansProbeCellsInt(queries: DataFrame,
                                   cents: Seq[(Long, Array[Long])],
                                   nprobe: Int): DataFrame = {
-    vectors.crossJoin(broadcast(centsRow(vectors.sparkSession, cents)))
-      .select(col("vec_id"),
+    queries.select(col("query_id"), col("q"))
+      .crossJoin(broadcast(centsRow(queries.sparkSession, cents)))
+      .select(col("query_id"), col("q"),
         explode(call_function("kmeans_top_cells",
-          col("embedding"), col("_cents"), lit(nprobe))).as("cell"))
+          col("q"), col("_cents"), lit(nprobe))).as("cell"))
   }
 
   /** FULLY-LEARNED certified IVFADC: the integer-k-means coarse
@@ -3341,12 +3489,8 @@ object Similarity {
       residualsFromCells(kmeansAssignInt(train, cents), centers)
         .select(col("vec_id").as("centroid_id"), col("resid").as("c")))
     val queries = queryVectors(emb)
-    val qCells = kmeansProbeCellsInt(
-        queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
-        cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("cell"))
     ivfPqProbeResidualFrom(encodeResiduals(resid, cb), cb, centers,
-      emb, queries, qCells, k)
+      emb, queries, kmeansProbeCellsInt(queries, cents, nprobe), k)
   }
 
   def qSimilarIvfPqLearned(spark: SparkSession, dir: String): DataFrame = {
@@ -3481,13 +3625,9 @@ object Similarity {
   def kmeansIntProbeIndex(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int,
                           nprobe: Int = 1): DataFrame = {
-    val cents = kmeansIntCentroidsOf(spark, path)
-    val qCells = kmeansProbeCellsInt(
-        queries.select(col("query_id").as("vec_id"), col("q").as("embedding")),
-        cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("cell"))
     sameCellTopK(IndexStore.liveRows(spark, path, "cells", "vec_id"),
-      qCells.join(queries, Seq("query_id")), k)
+      kmeansProbeCellsInt(queries, kmeansIntCentroidsOf(spark, path), nprobe),
+      k)
   }
 
   /** Live ANN serving from the landed integer-learned index — the
@@ -3510,13 +3650,8 @@ object Similarity {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val cellsSnap = cells()
-        val qCells = kmeansProbeCellsInt(
-            batch.select(col("query_id").as("vec_id"),
-              col("q").as("embedding")),
-            cents, nprobe)
-          .select(col("vec_id").as("query_id"), col("cell"))
-        sink(sameCellTopK(cellsSnap, qCells.join(batch, Seq("query_id")), k),
-          id)
+        sink(sameCellTopK(cellsSnap, kmeansProbeCellsInt(batch, cents, nprobe),
+          k), id)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import graft.functions._
-import graft.index.IndexStore
+import graft.index.{IndexStore, ServedTable}
 import graft.tables.Tables
 
 /** Document deduplication suite over the `documents` corpus — the
@@ -663,22 +665,36 @@ object TextDedup {
     * [[appendDedupIndex]] crash contract). */
   private def landSetsAndBands(groups: DataFrame, dir: String,
                                mode: String): Unit = {
-    groups.select(col("set_rep").as("doc_id"), col("hs"), col("chunk_id"),
-        col("members"))
-      .write.mode(mode).parquet(s"$dir/sets")
-    minhashIndex(groups.filter(col("chunk_id") === 0)
+    DedupSets.conform(groups.select(col("set_rep").as("doc_id"), col("hs"),
+        col("chunk_id"), col("members")))
+      .write.mode(mode).parquet(DedupSets.dir(dir))
+    DedupBands.conform(minhashIndex(groups.filter(col("chunk_id") === 0)
         .select(col("set_rep").as("doc_id"), col("hs")))
-      .select(col("doc_id"), col("band"), col("sig"))
-      .write.mode(mode).parquet(s"$dir/bands")
+        .select(col("doc_id"), col("band"), col("sig")))
+      .write.mode(mode).parquet(DedupBands.dir(dir))
   }
+
+  /** The dedup index's chunked shingle-set memberships, as
+    * [[landSetsAndBands]] lands them. */
+  private[graft] val DedupSets = ServedTable("sets", StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("hs", ArrayType(IntegerType)),
+    StructField("chunk_id", IntegerType),
+    StructField("members", ArrayType(LongType)))))
+
+  /** The dedup index's LSH band table, as [[landSetsAndBands]] lands
+    * it. */
+  private[graft] val DedupBands = ServedTable("bands", StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("sig", StringType))))
 
   /** Version-resolving table readers — the public view of the
     * persisted layout; tests and tooling should never hardcode
     * version directories. */
   def dedupIndexSets(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${IndexStore.currentIndexDir(spark, path)}/sets")
+    DedupSets.read(spark, IndexStore.currentIndexDir(spark, path))
   def dedupIndexBands(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${IndexStore.currentIndexDir(spark, path)}/bands")
+    DedupBands.read(spark, IndexStore.currentIndexDir(spark, path))
 
   /** Probe a standing dedup index with a fresh increment: shingles and
     * bands are computed ONLY for `probe`; candidates come from
@@ -707,10 +723,8 @@ object TextDedup {
     // tombstones exist; grows with total-ever-deleted ids, never the
     // corpus (deleted-stays-deleted retention — see
     // [[compactDedupIndex]]).
-    val pairs = crossPairsFrom(probeGroups,
-      spark.read.parquet(s"$live/bands"),
-      spark.read.parquet(s"$live/sets"),
-      MaxBandBucket)
+    val pairs = crossPairsFrom(probeGroups, DedupBands.read(spark, live),
+      DedupSets.read(spark, live), MaxBandBucket)
     IndexStore.idsIn(spark, IndexStore.deletesDir(live), "doc_id")
       .fold(pairs)(ids => pairs.join(ids.select(col("doc_id").as("index_id")),
         Seq("index_id"), "left_anti"))
@@ -816,7 +830,7 @@ object TextDedup {
     // chunkMembers' bucket aggregate (collect_set — same partition,
     // same bucket), saving a second corpus-width exchange that carried
     // the full hs arrays as its key (r22, guide §2.4)
-    val exploded = spark.read.parquet(s"$live/sets")
+    val exploded = DedupSets.read(spark, live)
       .select(col("hs"), explode(col("members")).as("doc_id"))
     val merged = chunkMembers(
       tombstones.fold(exploded) { ids =>
@@ -824,10 +838,14 @@ object TextDedup {
         // proportional — see the retention note above); when it
         // provably fits, broadcast it so the mask costs NO exchange of
         // the exploded memberships (whose rows carry the full hs
-        // arrays — a corpus-width shuffle by doc_id otherwise). One
-        // cheap count over the narrow id table decides; past the
+        // arrays — a corpus-width shuffle by doc_id otherwise). The
+        // tombstone tags' row counts bound the ledger with no job
+        // ([[IndexStore.rowBound]]); a batch whose tag carries no
+        // count falls back to counting the narrow id table. Past the
         // bound (~80 MB of longs) fall back to the shuffled anti-join.
-        exploded.join(if (ids.count() <= 10000000L) broadcast(ids) else ids,
+        val bound = IndexStore.rowBound(spark, deletesDir)
+          .getOrElse(ids.count())
+        exploded.join(if (bound <= 10000000L) broadcast(ids) else ids,
           Seq("doc_id"), "left_anti")
       },
       chunkSize(spark)).cache()

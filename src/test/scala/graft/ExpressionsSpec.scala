@@ -340,4 +340,128 @@ class ExpressionsSpec extends SparkSpec {
     assert(e2.getMessage.contains("misra_gries(array<string>, int_literal)"),
       s"unexpected: ${e2.getMessage}")
   }
+
+  test("adc_lookup equals the composed explode/join/SUM ADC, degenerate inputs included") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.Column
+    val sp = spark
+    import sp.implicits._
+    val M = Similarity.PqM
+    val D = Similarity.PqSubDim
+    def vec(seed: Int, n: Int) = Array.tabulate(n)(d => math.sin(seed * 7 + d).toFloat)
+    def floats(xs: Array[Float]) = xs.map(java.lang.Float.valueOf)
+    def withNull(xs: Array[Float], at: Int) =
+      floats(xs).updated(at, null.asInstanceOf[java.lang.Float])
+    // queries: sane, a null component (that subspace's terms go NULL
+    // and SUM skips them), SHORT (20 dims: late subspaces are empty or
+    // padded), and a null vector (every dot NULL — the group survives
+    // with num NULL)
+    val queries = Seq((0L, floats(vec(1, 64))), (1L, withNull(vec(2, 64), 5)),
+        (2L, floats(vec(3, 20))))
+      .toDF("query_id", "q")
+      .unionByName(Seq(Tuple1(3L)).toDF("query_id")
+        .withColumn("q", lit(null).cast("array<float>")))
+    // cell centres: sane, SHORT, and one with a null component
+    val centers = Seq((10L, floats(vec(4, 64))), (11L, floats(vec(5, 30))),
+        (12L, withNull(vec(6, 64), 40)))
+      .toDF("cell", "cv")
+    // codebook: K = 3, slot (2, 1) MISSING, one SHORT codeword and one
+    // with a null component (present rows whose terms are NULL)
+    val cwType = "array<bigint>"
+    val cb = (for (m <- 0 until M; j <- 0 until 3 if !(m == 2 && j == 1)) yield {
+        val cw: Seq[java.lang.Long] =
+          if (m == 4 && j == 2) Seq.tabulate(5)(d => java.lang.Long.valueOf(d * 1000L))
+          else if (m == 5 && j == 0) Seq.tabulate(D)(d =>
+            if (d == 3) null else java.lang.Long.valueOf((j + 1) * 3000L - d * 500L))
+          else Seq.tabulate(D)(d => java.lang.Long.valueOf((m - j) * 20000L + d * 777L))
+        (m.toLong, j.toLong, cw)
+      }).toDF("m", "j", "cw").select(col("m"), col("j"), col("cw").cast(cwType))
+    def codes(xs: java.lang.Long*): Seq[java.lang.Long] = xs
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    val n: java.lang.Long = null
+    val codeRows = Seq(
+      (100L, 10L, codes(Seq.tabulate(M)(m => L(m % 3)): _*)),
+      (101L, 10L, codes(L(2), n, L(1), L(0), n, L(0), L(1), L(2))), // null codes
+      (102L, 10L, codes(L(1), L(0), L(2))),                         // short
+      (103L, 11L, codes(Seq.tabulate(M + 2)(m => L(m % 3)): _*)),   // long
+      (104L, 11L, codes(L(5), L(-1), L(1), L(7), L(0), L(0), L(2), L(1))), // out of range
+      (105L, 12L, codes(n, n, L(1), n, n, n, n, n)),                 // only the missing slot
+      (106L, 12L, codes(Seq.tabulate(M)(m => L((m + 1) % 3)): _*)),
+      (107L, 13L, codes(L(0), L(0))),                                // cell has no centre
+      (108L, 11L, codes(L(2), L(1), L(0), L(4), L(2), L(0), L(1), L(0))))
+      .toDF("vec_id", "cell", "codes")
+      .unionByName(Seq((109L, 10L)).toDF("vec_id", "cell")
+        .withColumn("codes", lit(null).cast("array<bigint>")))       // null codes array
+    val qCells = Seq((0L, 10L), (0L, 11L), (0L, 13L), (1L, 10L), (1L, 12L),
+        (2L, 11L), (2L, 12L), (3L, 10L), (3L, 11L), (1L, 99L))
+      .toDF("query_id", "cell")
+      .join(queries, Seq("query_id"))
+      .select(col("query_id"), col("q"), col("cell"))
+    // composed reference: the round-22 long-form table and the
+    // posexplode → table join → (query, vec) SUM, verbatim
+    val microQ = (x: Column) => floor(x.cast("double") * lit(1e6) + lit(0.5)).cast("long")
+    def subspaces(v: Column) = explode(array((0 until M).map { mi =>
+      struct(lit(mi.toLong).as("m"),
+        transform(slice(v, mi * D + 1, D), microQ(_)).as("sv"))
+    }: _*))
+    def reference(codeRows: org.apache.spark.sql.DataFrame) = {
+      val qsubs = queries
+        .select(col("query_id"), subspaces(col("q")).as("sub"))
+        .select(col("query_id"), col("sub.m").as("m"), col("sub.sv").as("qq"))
+        .withColumn("qq_n2", aggregate(transform(col("qq"), x => x * x),
+          lit(0L), (acc, d) => acc + d))
+      val cellSubs = centers
+        .select(col("cell"), subspaces(col("cv")).as("sub"))
+        .select(col("cell"), col("sub.m").as("m"), col("sub.sv").as("cs"))
+      val eff = zip_with(col("cs"), col("cw"), (a, b) => a + b)
+      val pairs = qCells.select(col("query_id"), col("cell"))
+      val lut = pairs.join(qsubs, Seq("query_id"))
+        .join(cellSubs, Seq("cell", "m"))
+        .join(cb, Seq("m"))
+        .select(col("query_id"), col("cell"), col("m"), col("j"),
+          aggregate(zip_with(col("qq"), eff, (q, e) => q * e),
+            lit(0L), (acc, d) => acc + d).as("dotp"),
+          aggregate(eff, lit(0L), (acc, e) => acc + e * e).as("cwn2"))
+      val qn = qsubs.groupBy(col("query_id")).agg(sum(col("qq_n2")).as("qn2"))
+      codeRows.join(pairs, Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), col("cell"),
+          posexplode(col("codes")))
+        .select(col("query_id"), col("vec_id"), col("cell"),
+          col("pos").cast("long").as("m"), col("col").as("j"))
+        .join(lut, Seq("query_id", "cell", "m", "j"))
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(sum(col("dotp")).as("num"), sum(col("cwn2")).as("nsq"))
+        .join(qn, Seq("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          when(col("nsq") === 0 || col("qn2") === 0, lit(0.0))
+            .otherwise(col("num").cast("double")
+              / (sqrt(col("nsq").cast("double"))
+                * sqrt(col("qn2").cast("double")))).as("adc"))
+    }
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Option[Double])].collect()
+        .map(r => (r._1, r._2) -> r._3.map(java.lang.Double.doubleToLongBits))
+        .toMap
+    val want = scores(reference(codeRows))
+    val got = scores(Similarity.residualAdc(codeRows, cb, centers, qCells))
+    // the fixture reaches every branch: a pair with only absent slots
+    // drops out, a pair whose matched terms are all NULL stays with a
+    // NULL score, and a no-centre cell yields nothing
+    assert(!want.contains((1L, 105L)), "only-absent-slot candidate must drop")
+    assert(want.get((3L, 100L)).exists(_.isEmpty), "null query keeps a NULL score")
+    assert(!want.keySet.exists(_._2 == 107L))
+    assert(want.values.exists(_.nonEmpty))
+    assert(got === want)
+    // an empty candidate set scores nothing on either side
+    val none = codeRows.limit(0)
+    assert(scores(Similarity.residualAdc(none, cb, centers, qCells)).isEmpty)
+    assert(scores(reference(none)).isEmpty)
+    // map-side: the scoring plans no exchange
+    val plan = Similarity.residualAdc(codeRows, cb, centers, qCells)
+      .queryExecution.executedPlan.toString
+    assert(!plan.linesIterator.exists(l => l.contains("Exchange") &&
+        !l.contains("BroadcastExchange")) && !plan.contains("Generate"),
+      s"residual ADC grew a shuffle or an explode:\n$plan")
+  }
 }

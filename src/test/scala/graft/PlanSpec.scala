@@ -534,11 +534,11 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // probed-cell join in its child subtree — a Generate whose child
     // subtree has no join is exploding the full corpus ×8 before
     // filtering, the round-18 scale wart (the prune must PRECEDE the
-    // explode).
+    // explode). The plain-PQ chain keeps that explode; the residual
+    // chains score map-side (next test).
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    for (q <- Seq("q_similar_ivfpq", "q_similar_ivfpq_res",
-        "q_similar_ivfpq_persisted")) {
+    for (q <- Seq("q_similar_ivfpq")) {
       val plan = physical(SparkEntry.queries(q)(spark, sf("sf0.001")))
       val gens = plan.collect {
         case g: GenerateExec if g.generator.toString.contains("codes") => g
@@ -548,6 +548,42 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
         val prunes = g.child.collect { case j: BaseJoinExec => j }
         assert(prunes.nonEmpty,
           s"$q: code-table explode not preceded by the candidate join:\n$g")
+      }
+    }
+  }
+
+  test("residual IVF-PQ probes score the probed cells map-side: no explode, no exchange before the table join") {
+    // The residual ADC reads each candidate's sums with M table lookups
+    // (adc_lookup) right above the probed-cell broadcast join: no
+    // Generate over the codes, and the code rows reach that join with
+    // no Exchange on their path (a shuffle there would move every
+    // landed code row, not just the probed candidates).
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def carriesCodes(p: SparkPlan) = p.output.exists(_.name == "codes")
+    def codePath(p: SparkPlan): Seq[SparkPlan] =
+      p +: p.children.filter(carriesCodes).flatMap(codePath)
+    for (q <- Seq("q_similar_ivfpq_res", "q_similar_ivfpq_persisted",
+        "q_similar_ivfpq_deleted")) {
+      val plan = physical(SparkEntry.queries(q)(spark, sf("sf0.001")))
+      val gens = plan.collect {
+        case g: GenerateExec if g.generator.toString.contains("codes") => g
+      }
+      assert(gens.isEmpty, s"$q explodes the code table:\n$plan")
+      val scorers = plan.collect {
+        case n if n.expressions.exists(_.exists(
+          _.isInstanceOf[graft.expressions.AdcLookup])) => n
+      }
+      assert(scorers.nonEmpty, s"$q: no adc_lookup scoring found:\n$plan")
+      scorers.foreach { n =>
+        val joins = n.collect { case j: BaseJoinExec if carriesCodes(j) => j }
+        assert(joins.nonEmpty, s"$q: no probed-cell join below the ADC:\n$n")
+        val shuffles = codePath(joins.head).collect {
+          case e: ShuffleExchangeLike => e
+        }
+        assert(shuffles.isEmpty,
+          s"$q: an Exchange sits between the code rows and the table join:\n$n")
       }
     }
   }
