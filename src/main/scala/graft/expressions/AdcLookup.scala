@@ -103,4 +103,8 @@ case class AdcLookup(codes: Expression, lut: Expression, k: Int)
 object AdcLookup {
   val ResultType: StructType = StructType(Seq(
     StructField("num", LongType), StructField("nsq", LongType)))
+
+  /** One table slot, as [[AdcTable]] builds it. */
+  val SlotType: StructType = StructType(Seq(
+    StructField("dot", LongType), StructField("n", LongType)))
 }

@@ -277,11 +277,27 @@ object GraftFunctions {
       AdcLookup(children(0), children(1), k)
     })
 
+  val adcTable: Registration = (
+    FunctionIdentifier("adc_table"),
+    new ExpressionInfo(classOf[AdcTable].getName, "adc_table"),
+    (children: Seq[Expression]) => {
+      if (children.length != 6)
+        throw new IllegalArgumentException(
+          "adc_table: expected adc_table(q, cv, cb, k_lit, m_lit, " +
+            s"sub_dim_lit), got ${children.length} argument(s)")
+      val Seq(k, m, subDim) = children.drop(3).map {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"adc_table: k, m and sub_dim must be int literals, got $other")
+      }
+      AdcTable(children(0), children(1), children(2), k, m, subDim)
+    })
+
   val all: Seq[Registration] =
     Seq(sortedIntersectSize, minhashSignature, hashedShingleSet, cosineSim,
       simhash16, tokenProfile, rollingFingerprint, shinglePosHashes, simhash60,
       deflateRatio, misraGries, rpProject, trigramCounts, pqEncode,
-      kmeansTopCells, cosTopCells, adcLookup)
+      kmeansTopCells, cosTopCells, adcLookup, adcTable)
 
   def register(spark: SparkSession): Unit = all.foreach { r =>
     spark.sessionState.functionRegistry.registerFunction(r._1, r._2, r._3)

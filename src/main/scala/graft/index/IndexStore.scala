@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -148,20 +148,33 @@ private[graft] object IndexStore {
 
   // ----- identity-addressed batch landing ----- //
 
-  /** Deterministic identity tag of a row batch: row count + a bit_xor
-    * fold of per-id xxhash64 (order-independent, overflow-free under
-    * ANSI). Append batches carry DISJOINT id sets (the lifecycle
+  /** Deterministic identity tag of a row batch: row count + a wrapping
+    * 64-bit SUM of per-id xxhash64 — an additive multiset hash,
+    * order-independent, in which a repeated id adds rather than
+    * cancels. Append batches carry DISJOINT id sets (the lifecycle
     * contract: new rows get new ids), so two different batches get
     * different tags even when their PAYLOADS are identical (a re-crawl
     * of the same pages — which is exactly why the tag hashes ids, not
     * payload), while a replay of the same batch reproduces the same
-    * tag. Accidental 64-bit collision between disjoint id sets is the
-    * 2⁻⁶⁴-scale trade for a journal-free idempotent append. One
-    * bounded aggregate over bare ids. */
+    * tag. A tombstone batch may repeat ids ([[landTombstones]] lands
+    * them as given): an XOR fold would cancel each pair, so `{1,1,2,2}`
+    * and `{3,3,4,4}` would share a tag and the later batch be skipped
+    * as a replay; under the sum they differ. Accidental 64-bit
+    * collision between different id multisets is the 2⁻⁶⁴-scale trade
+    * for a journal-free idempotent append. Each partition folds its
+    * own (count, sum) and the driver adds the partials: one job, no
+    * exchange. */
   def identityBatchTag(rows: DataFrame, idCol: String): String = {
-    val r = rows.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    f"n${r.getLong(0)}_h${java.lang.Long.toHexString(
-      if (r.isNullAt(1)) 0L else r.getLong(1))}"
+    val (n, h) = rows.select(xxhash64(col(idCol))).as[Long](Encoders.scalaLong)
+      .mapPartitions { hashes =>
+        var n = 0L
+        var h = 0L
+        hashes.foreach { x => n += 1; h += x }
+        Iterator.single((n, h))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect()
+      .foldLeft((0L, 0L)) { case ((n0, h0), (n1, h1)) => (n0 + n1, h0 + h1) }
+    f"n${n}_h${java.lang.Long.toHexString(h)}"
   }
 
   /** Land one batch of rows under an IDENTITY-ADDRESSED partition dir
@@ -273,21 +286,21 @@ private[graft] object IndexStore {
   /** The one-column id table of a tombstone ledger keyed by `idCol` —
     * `deletes/` under an index root, or a family's own ledger dir. */
   def idTable(name: String, idCol: String): ServedTable =
-    ServedTable(name, idSchema(idCol))
-
-  private def idSchema(idCol: String): StructType =
-    StructType(Seq(StructField(idCol, LongType)))
+    ServedTable(name, StructType(Seq(StructField(idCol, LongType))))
 
   /** Land a tombstone batch against the index rooted at `root`: the
     * `idCol` values of `ids`, as given, in one file under an
     * identity-addressed `<root>/deletes/batch=<tag>/` —
     * replay-idempotent, read back de-duplicated by [[liveRows]] (or
-    * [[idsIn]] over [[deletesDir]]). No distinct pre-pass: [[idsIn]]
-    * de-duplicates on read, and the tag's count then bounds the
-    * batch's distinct ids from above ([[rowBound]]). */
+    * [[idsIn]] over [[deletesDir]]). No distinct pass: [[idsIn]]
+    * de-duplicates on read, the tag's multiset hash keeps two batches
+    * with repeated ids apart, and its count bounds the batch's
+    * distinct ids from above ([[rowBound]]). The one file comes from a
+    * shuffle of the bare id column into one partition, so the
+    * caller's scan and filter keep their parallelism. */
   def landTombstones(ids: DataFrame, root: String, idCol: String): Unit = {
     val rows = idTable("deletes", idCol).conform(ids.select(col(idCol)))
-    landIdentityBatch(rows.coalesce(1), deletesDir(root),
+    landIdentityBatch(rows.repartition(1), deletesDir(root),
       identityBatchTag(rows, idCol))
   }
 
@@ -300,9 +313,11 @@ private[graft] object IndexStore {
     * anti-join at all (not one against an empty relation, which Spark
     * would still broadcast in its own exchange). */
   def idsIn(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
-    Option.when(batchDirTags(spark, dir).nonEmpty)(
-      spark.read.schema(idSchema(idCol)).parquet(dir)
-        .select(col(idCol)).distinct())
+    Option.when(batchDirTags(spark, dir).nonEmpty) {
+      val d = new Path(dir)
+      idTable(d.getName, idCol).read(spark, d.getParent.toString)
+        .select(col(idCol)).distinct()
+    }
 
   private val CountedTag = """^n(\d+)_h[0-9a-f]+$""".r
 
@@ -328,18 +343,25 @@ private[graft] object IndexStore {
     idsIn(rows.sparkSession, dir, idCol)
       .fold(rows)(ids => rows.join(ids, Seq(idCol), "left_anti"))
 
-  /** The serving view of `<path>/<table>`: its rows minus the ids
-    * landed under `<path>/deletes` ([[withoutIdsIn]]). The physical
-    * table keeps masked rows until the family's next rebuild applies
-    * them. A batch table's rows carry its `batch` partition column. */
-  def liveRows(spark: SparkSession, path: String, table: String,
-               idCol: String): DataFrame =
-    liveRowsOf(spark, path, table, idCol)(spark.read.parquet(s"$path/$table"))
-
-  /** [[liveRows]] of a declared table, read without inference. */
+  /** The serving view of the declared table `table` under `path`: its
+    * rows, read without schema inference, minus the ids landed under
+    * `<path>/deletes` ([[withoutIdsIn]]). The physical table keeps
+    * masked rows until the family's next rebuild applies them. A batch
+    * table's rows carry its `batch` partition column. */
   def liveRows(spark: SparkSession, path: String, table: ServedTable,
                idCol: String): DataFrame =
     liveRowsOf(spark, path, table.name, idCol)(table.read(spark, path))
+
+  /** [[liveRows]] of an UNDECLARED table, whose read infers its schema
+    * (one footer-reading job per call). Left to the families whose
+    * landings declare no schema yet — plain IVF and k-means-int
+    * `cells`, plain-PQ `codes`, band `bands`, winnow `prints` — whose
+    * other tables (centroids, codebooks) are read undeclared as well;
+    * a new served table declares a [[ServedTable]] and reads through
+    * [[liveRows]]. */
+  def liveRowsInferred(spark: SparkSession, path: String, table: String,
+                       idCol: String): DataFrame =
+    liveRowsOf(spark, path, table, idCol)(spark.read.parquet(s"$path/$table"))
 
   private def liveRowsOf(spark: SparkSession, path: String, table: String,
                          idCol: String)(read: => DataFrame): DataFrame = {

@@ -867,10 +867,8 @@ object Similarity {
     * so the tie-break that empties one twin's cell also steers every
     * vector to the same surviving twin — the refine join never drops
     * a vector. */
-  def ivfCellsTwoLevel(emb: DataFrame): DataFrame = {
-    val (coarse, fmap) = twoLevelParts(emb)
-    assignTwoLevel(emb, plannedTwoLevel(coarse, fmap))
-  }
+  def ivfCellsTwoLevel(emb: DataFrame): DataFrame =
+    assignTwoLevel(emb, standingTwoLevel(emb))
 
   /** The bounded two-level structures of a corpus: the coarse centroid
     * frame `(coarse_id, gv)` and the fine→coarse map
@@ -880,6 +878,16 @@ object Similarity {
   private def twoLevelParts(emb: DataFrame): (DataFrame, DataFrame) = {
     val (n, sel) = centroidSelector(emb)
     twoLevelPartsFrom(n, sel)
+  }
+
+  /** The [[TwoLevel]] of a corpus: its [[twoLevelParts]] localized
+    * (⌈√C⌉ coarse and C ≈ ⌈√N⌉ fine rows, the [[localized]] ledger), so
+    * every placement against it reads two one-row local relations and
+    * no plan re-runs the structure lineage. */
+  private def standingTwoLevel(emb: DataFrame): TwoLevel = {
+    val (coarse, fmap) = twoLevelParts(emb)
+    localTwoLevel(localized(emb.sparkSession, coarse),
+      localized(emb.sparkSession, fmap))
   }
 
   /** [[twoLevelParts]] over an already-computed [[centroidSelector]] —
@@ -968,9 +976,8 @@ object Similarity {
     * (`map<coarse_id, array<struct<cid, cv>>>`), and the fine centroids
     * themselves, whose ids are the cells and whose vectors are the
     * residual decode table ([[centers]]). A caller assembles it once
-    * ([[localTwoLevel]] from bounded driver rows, [[plannedTwoLevel]]
-    * for the lazily planned chains) and every placement it runs reads
-    * the same value. */
+    * ([[localTwoLevel]], from bounded driver rows) and every placement
+    * it runs reads the same value. */
   private[graft] final case class TwoLevel(coarse: DataFrame, fmap: DataFrame,
                                            coarseRow: DataFrame,
                                            finesRow: DataFrame) {
@@ -978,18 +985,6 @@ object Similarity {
     def centers: DataFrame =
       fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
   }
-
-  /** A [[TwoLevel]] over lazy structure frames: the two rows are
-    * in-plan aggregates, re-run by each plan that places against them
-    * (the semantic-dedup chains, which plan the structures with the
-    * corpus). */
-  private def plannedTwoLevel(coarse: DataFrame, fmap: DataFrame): TwoLevel =
-    TwoLevel(coarse, fmap, centsRowFrom(coarse, "coarse_id", "gv"),
-      fmap.groupBy(col("coarse_id"))
-        .agg(collect_list(struct(col("centroid_id").cast("long").as("cid"),
-          col("c").as("cv"))).as("fines"))
-        .agg(map_from_entries(
-          collect_list(struct(col("coarse_id"), col("fines")))).as("_fmap")))
 
   /** A [[TwoLevel]] over BOUNDED local relations (localized or read
     * from a landed index): their rows are already on the driver
@@ -1215,23 +1210,27 @@ object Similarity {
   }
 
   /** The standing side of [[semanticAdmission]] built once:
-    * (coarse, fmap, cells). The seam a caller that admits MANY probe
-    * batches against ONE snapshot needs — without it every admission
-    * call re-derives the centroid structures (two eager counts) AND
-    * re-runs the full O(N^1.25) standing-cell assignment, which for
-    * the streaming twin meant whole-corpus work per micro-batch. */
+    * (coarse, fmap, cells), the two bounded structure frames localized
+    * ([[standingTwoLevel]]) and the standing cells lazy. The seam a
+    * caller that admits MANY probe batches against ONE snapshot needs —
+    * without it every admission call re-derives the centroid structures
+    * (two eager counts) AND re-runs the full O(N^1.25) standing-cell
+    * assignment, which for the streaming twin meant whole-corpus work
+    * per micro-batch. */
   def semanticStandingParts(standing: DataFrame):
       (DataFrame, DataFrame, DataFrame) = {
-    val (coarse, fmap) = twoLevelParts(standing)
-    (coarse, fmap, assignTwoLevel(standing, plannedTwoLevel(coarse, fmap)))
+    val tl = standingTwoLevel(standing)
+    (tl.coarse, tl.fmap, assignTwoLevel(standing, tl))
   }
 
   /** [[semanticAdmission]] against pre-built standing structures —
-    * assigns ONLY the probe batch. */
+    * assigns ONLY the probe batch. `coarse` and `fmap` are the local
+    * relations [[semanticStandingParts]] returns, so assembling their
+    * [[TwoLevel]] here runs no job. */
   def semanticAdmissionAgainst(probe: DataFrame, coarse: DataFrame,
                                fmap: DataFrame, cells: DataFrame,
                                threshold: Double): DataFrame = {
-    val probeCells = assignTwoLevel(probe, plannedTwoLevel(coarse, fmap))
+    val probeCells = assignTwoLevel(probe, localTwoLevel(coarse, fmap))
       .select(col("vec_id").as("probe_id"), col("embedding").as("ep"),
         col("cell"))
     val dom = probeCells
@@ -1295,24 +1294,21 @@ object Similarity {
 
   /** Streaming twin: admit each arriving embedding against the static
     * standing corpus. The standing structures build ONCE, before the
-    * query starts, and ALL THREE persist — the corpus-scale cell frame
-    * (MEMORY_AND_DISK, the lmPerplexity convention) AND the two
-    * bounded centroid frames: coarse/fmap lineage contains the
-    * centroid-selection corpus scans (on a non-dense id space, the
-    * whole [[withVecRank]] ranking exchange — twice, once per level),
-    * so leaving them lazy would re-pay corpus-wide rank scans on
-    * EVERY micro-batch despite the cells being cached. Each batch then
-    * pays only ITS OWN two-level placement plus the cell-local
-    * dominance join. The persisted frames release when the query
-    * terminates ([[releaseOnTermination]]). */
+    * query starts: the two bounded centroid frames come back localized
+    * ([[semanticStandingParts]] — their lineage holds the
+    * centroid-selection corpus scans, on a non-dense id space the whole
+    * [[withVecRank]] ranking exchange, once per level, which a lazy
+    * frame would re-pay on EVERY micro-batch), and the corpus-scale
+    * cell frame persists (MEMORY_AND_DISK, the lmPerplexity
+    * convention). Each batch then pays only ITS OWN two-level
+    * placement plus the cell-local dominance join. The persisted cells
+    * release when the query terminates ([[releaseOnTermination]]). */
   def streamingSemanticAdmission(streamEmb: DataFrame, standing: DataFrame,
                                  threshold: Double,
                                  checkpoint: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (coarse0, fmap0, cells0) = semanticStandingParts(standing)
-    val coarse = coarse0.persist(lvl)
-    val fmap = fmap0.persist(lvl)
+    val (coarse, fmap, cells0) = semanticStandingParts(standing)
     val cells = cells0.persist(lvl)
     val writer = streamEmb.writeStream
       .outputMode("append")
@@ -1322,8 +1318,7 @@ object Similarity {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     val query =
       checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-    releaseOnTermination(standing.sparkSession, query,
-      Seq(coarse, fmap, cells))
+    releaseOnTermination(standing.sparkSession, query, Seq(cells))
     query
   }
 
@@ -1420,7 +1415,7 @@ object Similarity {
     * persistence must not change answers, only amortize the build. */
   def ivfProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
                     k: Int, nprobe: Int): DataFrame =
-    sameCellTopK(IndexStore.liveRows(spark, path, "cells", "vec_id"),
+    sameCellTopK(IndexStore.liveRowsInferred(spark, path, "cells", "vec_id"),
       probeAssignments(spark, path, queries, nprobe), k)
 
   /** Harness entry: build the standing index (one assignment pass,
@@ -1592,7 +1587,7 @@ object Similarity {
     * accumulation ambiguity anywhere. */
   def ivfProbeQuantized(spark: SparkSession, path: String, queries: DataFrame,
                         k: Int, nprobe: Int): DataFrame = {
-    val cells = IndexStore.liveRows(spark, path, "cells", "vec_id")
+    val cells = IndexStore.liveRowsInferred(spark, path, "cells", "vec_id")
       .select(col("vec_id"), col("cell"),
         transform(col("codes"),
           c => (c.cast("double") * col("scale") / 127.0).cast("float"))
@@ -2211,7 +2206,7 @@ object Similarity {
     // IVF-PQ index's `state/` rows (coarse + fine centroids + ≤ M·K
     // codewords, [[readIvfPqState]]); every other site is a
     // ≤PqM·PqK=128-row codebook (also collected whole by the encode
-    // bake and by [[adcTables]]' dense M·K-slot table row) or a
+    // bake and by [[adcTables]]' one-row M·K-slot codebook) or a
     // ≤|Q|·k=24-row ground truth. The cap sits above the
     // √N ledger at any plausible corpus but catches the refactor that
     // hands this helper a corpus-SCALE frame (a 10⁹-row collect is a
@@ -2369,13 +2364,13 @@ object Similarity {
     * (returned alongside). Slot `(m, j)` holds, for the effective
     * codeword `e = cs_m + cw_mj` (`cs_m` the cell centre's micro
     * sub-vector), `dot = Σ qq_m·e` and `n = Σ e²` — the terms the
-    * long-form table held per (query, cell, m, j) row, same
-    * expressions, same nulls — and is NULL where the codebook has no
-    * `(m, j)` row. `qn2` is `Σ_m Σ qq_m²` with SQL `SUM`'s null
-    * skipping over the M subspaces. One projection over a broadcast
-    * centre join and the one-row codebook: no exchange. The codebook
-    * is bounded (≤ M·K rows) and a local relation in every caller, so
-    * its collect runs no job. */
+    * long-form table held per (query, cell, m, j) row, same nulls — and
+    * is NULL where the codebook has no `(m, j)` row; `qn2` is
+    * `Σ_m Σ qq_m²` with SQL `SUM`'s null skipping over the M subspaces.
+    * The native [[graft.expressions.AdcTable]] builds both in one
+    * projection over a broadcast centre join and the one-row codebook:
+    * no exchange. The codebook is bounded (≤ M·K rows) and a local
+    * relation in every caller, so its collect runs no job. */
   private def adcTables(qCells: DataFrame, centers: DataFrame,
                         cb: DataFrame): (DataFrame, Int) = {
     val entries = cb.select(col("m"), col("j"), col("cw")).collect()
@@ -2389,25 +2384,14 @@ object Similarity {
     }
     val cbRow = oneRow(cb.sparkSession, "_cb", ArrayType(StructType(Seq(
       StructField("cw", cb.schema("cw").dataType)))), slots.toSeq)
-    def sub(vec: Column, m: Column): Column =
-      transform(slice(vec, m * PqSubDim + 1, lit(PqSubDim)), microQ(_))
-    def sum0(xs: Column, f: Column => Column): Column =
-      aggregate(xs, lit(0L), (acc, x) => acc + f(x))
-    val lut = transform(col("_cb"), (slot, i) => {
-      val m = floor(i / kEff).cast("int")
-      val eff = zip_with(sub(col("cv"), m), slot.getField("cw"), (a, b) => a + b)
-      when(slot.isNotNull, struct(
-        sum0(zip_with(sub(col("q"), m), eff, (q, e) => q * e), identity).as("dot"),
-        sum0(eff, e => e * e).as("n")))
-    })
-    val qn2 = aggregate(
-      array((0 until PqM).map(m => sum0(sub(col("q"), lit(m)), x => x * x)): _*),
-      lit(null).cast("long"),
-      (acc, x) => when(x.isNull, acc).otherwise(coalesce(acc, lit(0L)) + x))
     val tables = qCells
       .join(broadcast(centers), Seq("cell"))
       .crossJoin(broadcast(cbRow))
-      .select(col("query_id"), col("cell"), lut.as("lut"), qn2.as("qn2"))
+      .select(col("query_id"), col("cell"),
+        call_function("adc_table", col("q"), col("cv"), col("_cb"),
+          lit(kEff), lit(PqM), lit(PqSubDim)).as("t"))
+      .select(col("query_id"), col("cell"), col("t.lut").as("lut"),
+        col("t.qn2").as("qn2"))
     (tables, kEff)
   }
 
@@ -3068,7 +3052,7 @@ object Similarity {
     val cb = spark.read.parquet(s"$path/codebook")
     // tombstone mask — the shared serving view (no-op anti-join when
     // none are landed)
-    val codes = IndexStore.liveRows(spark, path, "codes", "vec_id")
+    val codes = IndexStore.liveRowsInferred(spark, path, "codes", "vec_id")
     pqProbeFrom(codes.select(col("vec_id"), col("codes")), cb,
       codes.select(col("vec_id"), col("embedding")), queries, k)
   }
@@ -3154,7 +3138,7 @@ object Similarity {
   def bandProbeIndex(spark: SparkSession, path: String, probe: DataFrame,
                      threshold: Double): DataFrame = {
     // tombstone mask — a no-op anti-join when none are landed
-    val bands = IndexStore.liveRows(spark, path, "bands", "vec_id")
+    val bands = IndexStore.liveRowsInferred(spark, path, "bands", "vec_id")
     val pIdx = bandedIndex(probe)
       .select(col("band"), col("sig"), col("vec_id").as("probe_id"))
     // the increment's (band, sig, id) rows are the small side. Spark
@@ -3625,7 +3609,7 @@ object Similarity {
   def kmeansIntProbeIndex(spark: SparkSession, path: String,
                           queries: DataFrame, k: Int,
                           nprobe: Int = 1): DataFrame = {
-    sameCellTopK(IndexStore.liveRows(spark, path, "cells", "vec_id"),
+    sameCellTopK(IndexStore.liveRowsInferred(spark, path, "cells", "vec_id"),
       kmeansProbeCellsInt(queries, kmeansIntCentroidsOf(spark, path), nprobe),
       k)
   }
@@ -3645,7 +3629,7 @@ object Similarity {
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val cents = kmeansIntCentroidsOf(spark, path)
     val cells = IndexStore.servingSnapshot(spark, path, "cells")(
-      IndexStore.liveRows(spark, path, "cells", "vec_id"))
+      IndexStore.liveRowsInferred(spark, path, "cells", "vec_id"))
     val writer = streamQueries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>

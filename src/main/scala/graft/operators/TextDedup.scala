@@ -2078,7 +2078,7 @@ object TextDedup {
         .distinct(),
       // tombstone mask BEFORE distinct and before winnowProbeFrom's
       // cap count — survivor-exact (see deleteWinnowIndex)
-      selOf(IndexStore.liveRows(spark, path, "prints", "doc_id")),
+      selOf(IndexStore.liveRowsInferred(spark, path, "prints", "doc_id")),
       cap)
 
   /** Harness entry: land the standing 90%'s winnow index, probe with
@@ -2096,7 +2096,7 @@ object TextDedup {
       .select(col("fp"), col("doc_id")), path, "prints")
     winnowProbeFrom(
         selOf(prints.filter(!isStanding)),
-        selOf(IndexStore.liveRows(spark, path, "prints", "doc_id")),
+        selOf(IndexStore.liveRowsInferred(spark, path, "prints", "doc_id")),
         WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))
   }
@@ -2137,7 +2137,7 @@ object TextDedup {
       selOf(prints.filter(!isStanding)),
       // tombstone mask BEFORE distinct and before the cap count —
       // survivor-exact (see deleteWinnowIndex)
-      selOf(IndexStore.liveRows(spark, path, "prints", "doc_id")),
+      selOf(IndexStore.liveRowsInferred(spark, path, "prints", "doc_id")),
       WinnowPairCap)
       .orderBy(col("probe_id"), col("index_id"))
   }

@@ -464,4 +464,87 @@ class ExpressionsSpec extends SparkSpec {
         !l.contains("BroadcastExchange")) && !plan.contains("Generate"),
       s"residual ADC grew a shuffle or an explode:\n$plan")
   }
+
+  test("adc_table equals the composed higher-order-function table, degenerate inputs included") {
+    import scala.jdk.CollectionConverters._
+    import graft.operators.Similarity
+    import org.apache.spark.sql.{Column, Row}
+    val sp = spark
+    import sp.implicits._
+    val M = Similarity.PqM
+    val D = Similarity.PqSubDim
+    val K = 3
+    def vec(seed: Int, n: Int) = Array.tabulate(n)(d => math.sin(seed * 7 + d).toFloat)
+    def floats(xs: Array[Float]) = xs.map(java.lang.Float.valueOf)
+    def withNull(xs: Array[Float], at: Int) =
+      floats(xs).updated(at, null.asInstanceOf[java.lang.Float])
+    // vectors: sane, a null component, SHORT (20 dims: late subspaces
+    // are empty or partial), and NULL
+    val vecs: Seq[Array[java.lang.Float]] = Seq(floats(vec(1, 64)),
+      withNull(vec(2, 64), 5), floats(vec(3, 20)), null)
+    val pairs = spark.createDataFrame(
+      (for ((q, a) <- vecs.zipWithIndex; (cv, b) <- vecs.zipWithIndex)
+        yield Row(a * 10L + b, Option(q).map(_.toSeq).orNull,
+          Option(cv).map(_.toSeq).orNull)).asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "id bigint, q array<float>, cv array<float>"))
+    // codebook slots m·K + j: slot (2, 1) ABSENT, (3, 0) with a NULL
+    // codeword, (4, 2) SHORT, (5, 0) with a null component, (6, 1)
+    // LONGER than a subspace
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    val slots: Seq[Row] = for (m <- 0 until M; j <- 0 until K) yield {
+      if (m == 2 && j == 1) null
+      else if (m == 3 && j == 0) Row(null)
+      else if (m == 4 && j == 2) Row(Seq.tabulate(5)(d => L(d * 1000L)))
+      else if (m == 5 && j == 0) Row(Seq.tabulate(D)(d =>
+        if (d == 3) null else L((j + 1) * 3000L - d * 500L)))
+      else if (m == 6 && j == 1) Row(Seq.tabulate(D + 2)(d => L(d * 900L)))
+      else Row(Seq.tabulate(D)(d => L((m - j) * 20000L + d * 777L)))
+    }
+    val cbType = org.apache.spark.sql.types.DataType.fromDDL(
+      "array<struct<cw: array<bigint>>>")
+    val cbRow = spark.createDataFrame(java.util.List.of(Row(slots)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("_cb", cbType))))
+    // composed reference: the table as higher-order functions, verbatim
+    val microQ = (x: Column) => floor(x.cast("double") * lit(1e6) + lit(0.5)).cast("long")
+    def sub(v: Column, m: Column): Column =
+      transform(slice(v, m * D + 1, lit(D)), microQ(_))
+    def sum0(xs: Column, f: Column => Column): Column =
+      aggregate(xs, lit(0L), (acc, x) => acc + f(x))
+    val lut = transform(col("_cb"), (slot, i) => {
+      val m = floor(i / K).cast("int")
+      val eff = zip_with(sub(col("cv"), m), slot.getField("cw"), (a, b) => a + b)
+      when(slot.isNotNull, struct(
+        sum0(zip_with(sub(col("q"), m), eff, (q, e) => q * e), identity).as("dot"),
+        sum0(eff, e => e * e).as("n")))
+    })
+    val qn2 = aggregate(
+      array((0 until M).map(m => sum0(sub(col("q"), lit(m)), x => x * x)): _*),
+      lit(null).cast("long"),
+      (acc, x) => when(x.isNull, acc).otherwise(coalesce(acc, lit(0L)) + x))
+    val rows = pairs.crossJoin(cbRow)
+      .select(col("id"), lut.as("lut"), qn2.as("qn2"),
+        call_function("adc_table", col("q"), col("cv"), col("_cb"),
+          lit(K), lit(M), lit(D)).as("t"))
+      .select(col("id"), to_json(col("lut")).as("want_lut"),
+        col("qn2").as("want_qn2"), to_json(col("t.lut")).as("got_lut"),
+        col("t.qn2").as("got_qn2"))
+      .as[(Long, String, Option[Long], String, Option[Long])].collect()
+    assert(rows.length === 16)
+    rows.foreach { case (id, wantLut, wantQn2, gotLut, gotQn2) =>
+      assert(gotLut === wantLut, s"pair $id: lut")
+      assert(gotQn2 === wantQn2, s"pair $id: qn2")
+    }
+    // the fixture reaches every branch: absent slots, NULL and non-NULL
+    // terms, a NULL qn2 (null query) and a qn2 that skips a NULL
+    // subspace (the null-component query)
+    assert(rows.exists(_._2.contains("null")) && rows.exists(_._2.contains("\"dot\":")))
+    assert(rows.exists(r => r._3.isEmpty) && rows.count(_._3.nonEmpty) === 12)
+    // a NULL codebook row gives a NULL table
+    val noCb = pairs.limit(1).select(call_function("adc_table", col("q"), col("cv"),
+        lit(null).cast(cbType), lit(K), lit(M), lit(D)).as("t"))
+      .select(col("t.lut").isNull).as[Boolean].head()
+    assert(noCb)
+  }
 }

@@ -174,6 +174,22 @@ class IndexServingSpec extends SparkSpec {
     assert(read === (0L until 40L))
   }
 
+  test("two different tombstone batches that repeat ids both land and mask their ids") {
+    // under an XOR fold each repeated pair cancels: both batches would
+    // tag n4_h0 and the second be skipped as a replay
+    val p = tmp("graft-tomb-dups")
+    val dir = IndexStore.deletesDir(p)
+    IndexStore.landTombstones(Seq(1L, 1L, 2L, 2L).toDF("vec_id"), p, "vec_id")
+    IndexStore.landTombstones(Seq(3L, 3L, 4L, 4L).toDF("vec_id"), p, "vec_id")
+    assert(IndexStore.batchDirTags(spark, dir).size === 2)
+    // a replay of the same multiset, in any order, is still a no-op
+    IndexStore.landTombstones(Seq(4L, 3L, 4L, 3L).toDF("vec_id"), p, "vec_id")
+    assert(IndexStore.batchDirTags(spark, dir).size === 2)
+    val rows = Seq(1L, 2L, 3L, 4L, 5L).toDF("vec_id")
+    assert(IndexStore.withoutIdsIn(rows, dir, "vec_id").as[Long].collect().toSeq
+      === Seq(5L))
+  }
+
   test("compactDedupIndex bounds the tombstone broadcast from the tags, counting only an uncounted batch") {
     val path = tmp("graft-dedup-bound")
     def members = TextDedup.dedupIndexSets(spark, path)
