@@ -1026,7 +1026,7 @@ object SparkEntry {
   }
 
   /** Parameterized SPHERICAL Lloyd unroll — the DuckDB twin of
-    * [[graft.operators.Similarity]]'s `lloydRoundsSpherical`: the same
+    * [[graft.operators.Similarity]]'s `sphericalUpdate`: the same
     * exact integer L2² assignment and integer-mean update, plus the
     * norm-restoring rescale — each mean codeword scaled to its
     * cluster's RMS member norm via the one deterministic-double leaf

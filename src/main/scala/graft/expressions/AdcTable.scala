@@ -21,6 +21,13 @@ import org.apache.spark.sql.types._
   * `n = Σ e²`; an absent slot stays NULL. `qn2` is `Σ qq²` over the
   * first `m` subspaces.
   *
+  * Centre-free form: a plain PQ chain has no decode table, so its
+  * caller passes an untyped NULL `cv` (`NullType`), and the effective
+  * codeword is `cw` itself. A zero centre is not the same thing:
+  * `zip_with` pads a short `cw` with NULL against the `subDim`-long
+  * centre slice, where the plain table's `n = Σ cw²` runs over `cw`'s
+  * own components.
+  *
   * Why custom: the composed spelling was a `transform` over the M·K
   * slots whose lambda nested `slice`/`zip_with`/`aggregate` lambdas —
   * a few hundred expression nodes to analyze and optimize in every
@@ -35,7 +42,7 @@ import org.apache.spark.sql.types._
   * terms, and a NULL `q` (`cv`, `cw`) nulls every `dot` (every `dot`
   * and `n`, that slot's `dot` and `n`). `qn2` skips NULL subspace sums
   * as SQL `SUM` does and is NULL when all are NULL. A NULL `cb` gives a
-  * NULL `lut`. Integer arithmetic is exact (`Math.*Exact`): an overflow
+  * NULL `lut`. A typed NULL `cv` is a centre, not the centre-free form. Integer arithmetic is exact (`Math.*Exact`): an overflow
   * fails, as the ANSI operators do. */
 case class AdcTable(q: Expression, cv: Expression, cb: Expression,
                     k: Int, m: Int, subDim: Int)
@@ -60,10 +67,10 @@ case class AdcTable(q: Expression, cv: Expression, cb: Expression,
           f.dataType.asInstanceOf[ArrayType].elementType == LongType
       case _ => false
     }
-    if (isVector(q.dataType) && isVector(cv.dataType) && cbOk)
+    if (isVector(q.dataType) && (isVector(cv.dataType) || !centred) && cbOk)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<float|double>, array<float|double>, " +
+      s"$prettyName requires (array<float|double>, array<float|double> or NULL, " +
         "array<struct<cw: array<bigint>>>), got " +
         Seq(q, cv, cb).map(_.dataType.catalogString).mkString(" / "))
   }
@@ -72,8 +79,10 @@ case class AdcTable(q: Expression, cv: Expression, cb: Expression,
   override def nullable: Boolean = false
   override def prettyName: String = "adc_table"
 
+  /** False for the centre-free form (an untyped NULL `cv`). */
+  private lazy val centred = cv.dataType != NullType
   private lazy val qIsDouble = elementIsDouble(q)
-  private lazy val cvIsDouble = elementIsDouble(cv)
+  private lazy val cvIsDouble = centred && elementIsDouble(cv)
 
   private def elementIsDouble(v: Expression): Boolean =
     v.dataType.asInstanceOf[ArrayType].elementType == DoubleType
@@ -138,7 +147,7 @@ case class AdcTable(q: Expression, cv: Expression, cb: Expression,
             Array.tabulate(a.numElements())(d =>
               if (a.isNullAt(d)) None else Some(a.getLong(d)))
           }
-          val eff = zip(cs(mi), cw, Math.addExact)
+          val eff = if (centred) zip(cs(mi), cw, Math.addExact) else cw
           val dot = sum0(zip(qSubs(mi), eff, Math.multiplyExact), identity)
           val n = sum0(eff, e => Math.multiplyExact(e, e))
           out(i) = new GenericInternalRow(Array[Any](dot, n))

@@ -456,17 +456,36 @@ object Similarity {
     * the result is engine-exact. A query with NO intact-band candidates
     * still reports (0, 0.0) via the left join back onto the bounded
     * query list. */
-  def annRecall(emb: DataFrame, k: Int = 3): DataFrame = {
-    val exact = topK(emb, queryVectors(emb), k)
-      .select(col("query_id"), col("vec_id"))
-    val ann = annTopK(emb, k).select(col("query_id"), col("vec_id"))
-    val hits = exact.join(ann, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    queryVectors(emb).select(col("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
+  def annRecall(emb: DataFrame, k: Int = 3): DataFrame =
+    recallOf(queryVectors(emb), exactTopK(emb, k), k)(
+      ("n_hit", "", annTopK(emb, k)))
+
+  /** The brute-force `(query_id, vec_id)` ground truth the recall
+    * certificates score against. */
+  private def exactTopK(emb: DataFrame, k: Int): DataFrame =
+    topK(emb, queryVectors(emb), k).select(col("query_id"), col("vec_id"))
+
+  /** The one recall tail: per query of `queries`, how many of the
+    * `exact` `(query_id, vec_id)` answers each approximate chain
+    * recovered (a left-semi join on the pair, counted per query as
+    * `hits`), as `n_hit<suffix>` and the rational `recall<suffix>` =
+    * n_hit/k — every count column first, then every recall, in chain
+    * order. A query with no recovered answer reports (0, 0.0) via the
+    * left join back onto the bounded query list. */
+  private def recallOf(queries: DataFrame, exact: DataFrame, k: Int)(
+      chains: (String, String, DataFrame)*): DataFrame = {
+    val counted = chains.foldLeft(queries.select(col("query_id"))) {
+      case (acc, (hits, _, approx)) =>
+        acc.join(exact.join(approx.select(col("query_id"), col("vec_id")),
+            Seq("query_id", "vec_id"), "left_semi")
+          .groupBy(col("query_id")).agg(count(lit(1)).as(hits)),
+          Seq("query_id"), "left")
+    }
+    def nHit(hits: String) = coalesce(col(hits), lit(0L))
+    counted.select(col("query_id") +:
+      (chains.map { case (hits, sfx, _) => nHit(hits).as(s"n_hit$sfx") } ++
+        chains.map { case (hits, sfx, _) =>
+          (nHit(hits).cast("double") / k).as(s"recall$sfx") }): _*)
   }
 
   def qAnnRecall(spark: SparkSession, dir: String): DataFrame =
@@ -499,15 +518,7 @@ object Similarity {
         .select(col("query_id"), col("vec_id"),
           graft.functions.cosineSim(col("qv"), col("recon")).as("cosine")), k)
       .select(col("query_id"), col("vec_id"))
-    val exact = topK(emb, queryVectors(emb), k)
-      .select(col("query_id"), col("vec_id"))
-    val hits = exact.join(approx, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    queryVectors(emb).select(col("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
+    recallOf(queryVectors(emb), exactTopK(emb, k), k)(("n_hit", "", approx))
   }
 
   def qQuantRecall(spark: SparkSession, dir: String): DataFrame =
@@ -886,8 +897,7 @@ object Similarity {
     * no plan re-runs the structure lineage. */
   private def standingTwoLevel(emb: DataFrame): TwoLevel = {
     val (coarse, fmap) = twoLevelParts(emb)
-    localTwoLevel(localized(emb.sparkSession, coarse),
-      localized(emb.sparkSession, fmap))
+    localTwoLevel(coarse, fmap)
   }
 
   /** [[twoLevelParts]] over an already-computed [[centroidSelector]] —
@@ -986,28 +996,36 @@ object Similarity {
       fmap.select(col("centroid_id").as("cell"), col("c").as("cv"))
   }
 
-  /** A [[TwoLevel]] over BOUNDED local relations (localized or read
-    * from a landed index): their rows are already on the driver
-    * (collecting a local relation runs no job), so the `_cents` and
-    * `_fmap` rows are assembled there as one-row local relations —
-    * broadcast data, never expression literals, so plan size stays
-    * O(1) in the centroid count, and no plan aggregates them. Array
-    * order is by cid for a stable plan; [[graft.expressions.CosTopCells]]
-    * is order-independent. */
-  private def localTwoLevel(coarse: DataFrame, fmap: DataFrame): TwoLevel = {
-    val spark = coarse.sparkSession
-    def centType(cv: String, df: DataFrame) = ArrayType(StructType(Seq(
-      StructField("cid", LongType), StructField("cv", df.schema(cv).dataType))))
+  /** The [[TwoLevel]] of BOUNDED coarse `(coarse_id, gv)` and fine
+    * `(coarse_id, centroid_id, c)` frames ([[twoLevelPartsFrom]]): each
+    * collected once ([[localRows]] — ⌈√C⌉ and C ≈ ⌈√N⌉ rows, the
+    * [[localized]] ledger) and assembled by [[twoLevelOf]]. */
+  private def localTwoLevel(coarse: DataFrame, fmap: DataFrame): TwoLevel =
+    twoLevelOf(coarse.sparkSession, localRows(coarse), coarse.schema,
+      localRows(fmap), fmap.schema)
+
+  /** A [[TwoLevel]] from its coarse and fine rows on the driver: the
+    * frames are local relations of the rows, and the `_cents` and
+    * `_fmap` rows are assembled from the same rows as one-row local
+    * relations — broadcast data, never expression literals, so plan
+    * size stays O(1) in the centroid count, and no plan aggregates
+    * them. Array order is by cid for a stable plan;
+    * [[graft.expressions.CosTopCells]] is order-independent. */
+  private def twoLevelOf(spark: SparkSession, coarse: Seq[Row],
+                         coarseType: StructType, fine: Seq[Row],
+                         fineType: StructType): TwoLevel = {
+    def centType(t: StructType, cv: String) = ArrayType(StructType(Seq(
+      StructField("cid", LongType), StructField("cv", t(cv).dataType))))
     def cent(id: Long, v: Any) = Row(id, v)
-    val coarseCents = coarse.collect().toSeq
+    val coarseCents = coarse
       .map(r => cent(r.getLong(0), r.get(1))).sortBy(_.getLong(0))
-    val fines = fmap.collect().toSeq.groupBy(_.getLong(0)).map {
+    val fines = fine.groupBy(_.getLong(0)).map {
       case (g, rs) => g -> rs.map(r => cent(r.getLong(1), r.get(2)))
         .sortBy(_.getLong(0))
     }
-    TwoLevel(coarse, fmap,
-      oneRow(spark, "_cents", centType("gv", coarse), coarseCents),
-      oneRow(spark, "_fmap", MapType(LongType, centType("c", fmap)), fines))
+    TwoLevel(asLocal(spark, coarse, coarseType), asLocal(spark, fine, fineType),
+      oneRow(spark, "_cents", centType(coarseType, "gv"), coarseCents),
+      oneRow(spark, "_fmap", MapType(LongType, centType(fineType, "c")), fines))
   }
 
   /** One driver-side value as a one-row, one-column local relation. */
@@ -1644,7 +1662,10 @@ object Similarity {
     * form: (m, j, cw: array<long> micro ints), M·K ≤ 128 rows — a
     * broadcast constant at any corpus size. The j-assignment window
     * orders ≤ [[PqK]] rows (bounded single partition). */
-  def pqCodebook(emb: DataFrame): DataFrame = {
+  def pqCodebook(emb: DataFrame): DataFrame = strideCodebook(emb).df
+
+  /** [[pqCodebook]] as a driver-side [[Codebook]]. */
+  private def strideCodebook(emb: DataFrame): Codebook = {
     val (n, sel) = centroidSelector(emb)
     pqCodebookFrom(n, sel)
   }
@@ -1652,7 +1673,7 @@ object Similarity {
   /** [[pqCodebook]] over an already-computed [[centroidSelector]]
     * (see [[twoLevelPartsFrom]]). */
   private def pqCodebookFrom(n: Long, sel: (Long, Long) => DataFrame):
-      DataFrame =
+      Codebook =
     pqCodebookRows(sel(pqTrainStride(n), math.max(1L, math.min(PqK.toLong, n))))
 
   /** The training stride the PQ codebooks sample at —
@@ -1670,22 +1691,29 @@ object Similarity {
     * or array<double> (residuals — already exact micro differences
     * scaled back by 1e-6, which [[microQ]] recovers exactly).
     *
-    * LOCALIZED on construction (r21): every consumer of a codebook
-    * frame re-executed its training lineage — [[pqEncodeColumn]]
-    * collects it for the bake AND the ADC LUT joins it again in the
-    * final plan, so each probe chain paid the selector scan + the
-    * 16-row residualization windows at least twice (and the recall
-    * certificates once per column). The rows are the bounded ≤
-    * [[PqM]]·[[PqK]] broadcast constant, so collecting once and
-    * re-creating them as a local relation is the exact trade
-    * [[localized]] exists for — plan-literal downstream, zero
-    * recomputation, values bit-identical. */
-  private def pqCodebookRows(train: DataFrame): DataFrame = {
+    * Collected on construction ([[codebookOf]]): the encode bake and
+    * the ADC tables read the rows, so no consumer re-executes the
+    * training lineage. */
+  private def pqCodebookRows(train: DataFrame): Codebook = {
     val wj = Window.orderBy(col("centroid_id"))
-    localized(train.sparkSession, train
+    codebookOf(train
       .withColumn("j", row_number().over(wj).cast("long") - 1)
       .select(col("j"), pqSubspaces(col("c")).as("sub"))
       .select(col("sub.m").as("m"), col("j"), col("sub.sv").as("cw")))
+  }
+
+  /** A PQ codebook held on the driver: its `(m, j, cw)` rows (≤
+    * [[PqM]]·[[PqK]]) and the same rows as a local relation. The encode
+    * bake ([[pqEncodeColumn]]) and the ADC tables ([[adcTables]]) read
+    * `rows`; landing and joins read `df`. */
+  private[graft] final case class Codebook(rows: Seq[Row], df: DataFrame)
+
+  /** The one collect of a bounded `(m, j, cw)` codebook frame: its rows
+    * and, from the same rows, its local relation ([[localized]]). */
+  private[graft] def codebookOf(cb: DataFrame): Codebook = {
+    val frame = cb.select(col("m"), col("j"), col("cw"))
+    val rows = localRows(frame)
+    Codebook(rows, asLocal(cb.sparkSession, rows, frame.schema))
   }
 
   /** PQ-encode every vector against a (frozen) codebook: per
@@ -1707,15 +1735,18 @@ object Similarity {
     * bit-identical to the composed reference, including null/short
     * vectors and null codeword components. */
   def pqEncode(emb: DataFrame, codebook: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-      pqEncodeColumn(codebook, col("embedding")).as("codes"))
+    pqCodes(emb, codebookOf(codebook))
+
+  /** [[pqEncode]] against a driver-side [[Codebook]]. */
+  private def pqCodes(emb: DataFrame, cb: Codebook): DataFrame =
+    emb.select(col("vec_id"), pqEncodeColumn(cb, col("embedding")).as("codes"))
 
   /** The baked map-only encode COLUMN over any vector column (raw
     * float embeddings or double residuals) — the collect/bake half of
     * [[pqEncode]], factored so the residual path can keep its `cell`
     * column riding alongside the codes. */
-  private def pqEncodeColumn(codebook: DataFrame, vec: Column): Column = {
-    val entries = codebook.select(col("m"), col("j"), col("cw")).collect()
+  private def pqEncodeColumn(cb: Codebook, vec: Column): Column = {
+    val entries = cb.rows
       .map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getSeq[Any](2)))
     val kEff = if (entries.isEmpty) 1
       else entries.iterator.map(_._1._2).max + 1
@@ -1740,93 +1771,111 @@ object Similarity {
       lit(mEff), lit(kEff), lit(PqSubDim))
   }
 
-  /** Asymmetric-distance (ADC) probe + exact re-rank over encoded
-    * vectors. ADC approximates cosine from the codes alone:
+  /** The one PQ probe: ADC scores ([[pqAdc]]) of every code row of a
+    * probed cell, then the [[pqRankFromAdc]] shortlist + exact re-rank
+    * against `rerankSrc`. Every PQ chain, plain or IVF, raw or
+    * residual, probes through here. */
+  private def pqProbe(codes: DataFrame, cb: Codebook, qCells: DataFrame,
+                      rerankSrc: DataFrame, queries: DataFrame,
+                      k: Int): DataFrame =
+    pqRankFromAdc(pqAdc(codes, cb, qCells), rerankSrc, queries, k)
+
+  /** Plain PQ as the one-cell case of [[pqProbe]]: every code row and
+    * every query sit in cell 0, so each query's one table scores every
+    * code (the brute ADC scan). */
+  private def plainPqProbe(codes: DataFrame, cb: Codebook,
+                           rerankSrc: DataFrame, queries: DataFrame,
+                           k: Int): DataFrame =
+    pqProbe(codes.select(col("vec_id"), lit(0L).as("cell"), col("codes")), cb,
+      queries.select(col("query_id"), col("q"), lit(0L).as("cell")),
+      rerankSrc, queries, k)
+
+  /** Asymmetric-distance (ADC) scores `(query_id, vec_id, adc)` of the
+    * encoded `codes` `(vec_id, cell, codes)` against the probe rows
+    * `qCells` `(query_id, q, cell[, cv])`: every code row of a probed
+    * cell against its query's table. ADC approximates cosine from the
+    * codes alone:
     *
-    *   num(q, x)  = Σ_m ⟨qq_m, cw_{m, code_m(x)}⟩   (micro² ints)
-    *   ‖x̂‖²      = Σ_m ‖cw_{m, code_m(x)}‖²        (micro² ints)
+    *   num(q, x)  = Σ_m ⟨qq_m, e_{m, code_m(x)}⟩   (micro² ints)
+    *   ‖x̂‖²      = Σ_m ‖e_{m, code_m(x)}‖²        (micro² ints)
     *   adc        = num / (√‖x̂‖² · √‖qq‖²)          (one pinned
     *                double expression — IEEE-identical on both engines)
     *
-    * Everything query-side is a bounded broadcast: the LUT is
-    * |queries|·M·K ≤ 1024 rows — the classic ADC table. The corpus
-    * side touches ONLY the codes (8 small ints per vector — this is
-    * the point: at 100 TB the scan that ranks candidates reads the
-    * 64×-compressed representation, never the floats), one equi-join
-    * on (m, j) and a (query, vec)-keyed sum. The exact re-rank then
-    * reads full vectors for [[PqShortlist]] ids per query — O(k)
-    * lookups, full-precision output cosines. Recall is the only
-    * approximation; [[pqRecall]] measures it against brute force. */
-  def pqProbeFrom(codes: DataFrame, codebook: DataFrame,
-                  rerankSrc: DataFrame, queries: DataFrame,
-                  k: Int, candidates: Option[DataFrame] = None): DataFrame = {
-    val qsubs = queries
-      .select(col("query_id"), pqSubspaces(col("q")).as("sub"))
-      .select(col("query_id"), col("sub.m").as("m"), col("sub.sv").as("qq"))
-      .withColumn("qq_n2", aggregate(transform(col("qq"), x => x * x),
-        lit(0L), (acc, d) => acc + d))
-    val lut = qsubs.join(codebook, Seq("m"))
-      .select(col("query_id"), col("m"), col("j"),
-        aggregate(zip_with(col("qq"), col("cw"), (a, b) => a * b),
-          lit(0L), (acc, d) => acc + d).as("dotp"),
-        aggregate(transform(col("cw"), x => x * x),
-          lit(0L), (acc, d) => acc + d).as("cwn2"))
-    val qn = qsubs.groupBy(col("query_id")).agg(sum(col("qq_n2")).as("qn2"))
-    // unrestricted: the LUT join fans every code row out to every
-    // query (the brute-ADC scan). With a candidate frame (IVF-PQ),
-    // only the probed (query, vec) pairs reach the sum — and the
-    // candidate join lands on the UNEXPLODED code rows, BEFORE the ×M
-    // posexplode, so the Generate and everything above it see the
-    // pruned ~nprobe·|Q|·N/√N candidate rows instead of every landed
-    // code row 8×-inflated (at 100× the explode-then-join shape is
-    // exactly the full-corpus shuffle IVF exists to avoid). Same
-    // filter, applied earlier; answers unchanged.
-    // The ADC sum's exchange is REPOSITIONED onto the un-exploded code
-    // rows (r22, §2.4): the (query, vec) aggregate below needs a
-    // clustering exchange regardless, and hash-partitioning the rows
-    // BEFORE the ×M explode (a) satisfies the aggregate's distribution
-    // — groupBy(query_id, vec_id) rides HashPartitioning on its key
-    // subset, so no second exchange appears — and (b) decouples the
-    // explode+LUT scoring stage's parallelism from the code table's
-    // FILE layout (the now map-only encode writes however many files
-    // its scan had; a single-file landed batch would otherwise
-    // serialize the whole ADC scoring on one task). Bytes: identical
-    // row count to the old post-partial-agg exchange (the partial agg
-    // only folded the ×M explosion back to one row per candidate), a
-    // few dozen bytes per row either way — and in the brute (None)
-    // case the exchange now moves N rows instead of N·|Q|.
-    val coded = candidates match {
-      case Some(cand) =>
-        codes.join(cand, Seq("vec_id"))
-          .repartition(col("query_id"), col("vec_id"))
-          .select(col("query_id"), col("vec_id"), posexplode(col("codes")))
-          .select(col("query_id"), col("vec_id"),
-            col("pos").cast("long").as("m"), col("col").as("j"))
-          .join(broadcast(lut), Seq("query_id", "m", "j"))
-      case None =>
-        codes.repartition(col("vec_id"))
-          .select(col("vec_id"), posexplode(col("codes")))
-          .select(col("vec_id"),
-            col("pos").cast("long").as("m"), col("col").as("j"))
-          .join(broadcast(lut), Seq("m", "j"))
-    }
-    val adc = coded
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("dotp")).as("num"), sum(col("cwn2")).as("nsq"))
-      .join(broadcast(qn), Seq("query_id"))
+    * with `e` the effective codeword: `cs_m + cw_mj` when the probe
+    * rows carry their cell's centre `cv` (residual chains decode
+    * `x̂ = c_cell + r̂`, the classic per-cell IVFADC table), `cw_mj`
+    * when they carry none (plain and raw IVF chains).
+    *
+    * The tables: ONE row per (query, probed cell) — |queries|·nprobe
+    * rows, built map-side on the probe rows ([[adcTables]]) and
+    * broadcast. The candidates: the code rows of the probed cells,
+    * reached by the broadcast equi-join on `cell` straight off the code
+    * scan, so only the probed cells' code rows are scored; each
+    * (query, vec) pair is a candidate once (a vector sits in one cell).
+    * The corpus side reads only the codes and the cell (8 small ints
+    * per vector: at 100 TB the scan that ranks candidates reads the
+    * 64×-compressed representation, never the floats). The scores:
+    * [[graft.expressions.AdcLookup]] reads each candidate's `num`/`nsq`
+    * with M table lookups in one projection — no explode, no exchange,
+    * no aggregate. The null filter runs the lookup once more below the
+    * projection (Catalyst pushes it through). */
+  private[graft] def pqAdc(codes: DataFrame, cb: Codebook,
+                           qCells: DataFrame): DataFrame = {
+    val (tables, kEff) = adcTables(qCells, cb)
+    codes
+      .join(broadcast(tables), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), col("qn2"),
+        call_function("adc_lookup", col("codes"), col("lut"), lit(kEff))
+          .as("s"))
+      .filter(col("s").isNotNull)
+      .select(col("query_id"), col("vec_id"), col("s.num").as("num"),
+        col("s.nsq").as("nsq"), col("qn2"))
       .select(col("query_id"), col("vec_id"),
         when(col("nsq") === 0 || col("qn2") === 0, lit(0.0))
           .otherwise(col("num").cast("double")
             / (sqrt(col("nsq").cast("double"))
               * sqrt(col("qn2").cast("double")))).as("adc"))
-    pqRankFromAdc(adc, rerankSrc, queries, k)
   }
 
-  /** The ADC shortlist + exact-re-rank tail shared by every PQ probe
-    * shape (brute, IVF-pruned, residual): take the [[PqShortlist]]
-    * best candidates per query BY ADC, then score those — and only
-    * those — with the full-precision cosine. */
+  /** The per-(query, probed cell) ADC tables of `qCells` against the
+    * codebook: `(query_id, cell, lut, qn2)` rows, `lut` dense over slot
+    * `m·K + j` with K the codebook's code count (returned alongside).
+    * Slot `(m, j)` holds, for the effective codeword `e` ([[pqAdc]]),
+    * `dot = Σ qq_m·e` and `n = Σ e²`, and is NULL where the codebook has
+    * no `(m, j)` row; `qn2` is `Σ_m Σ qq_m²` with SQL `SUM`'s null
+    * skipping over the M subspaces. The native
+    * [[graft.expressions.AdcTable]] builds both in one projection over
+    * the one-row codebook broadcast: no exchange. Probe rows without a
+    * `cv` column take its centre-free form (an untyped NULL centre). */
+  private def adcTables(qCells: DataFrame, cb: Codebook): (DataFrame, Int) = {
+    val entries = cb.rows
+    val kEff = if (entries.isEmpty) 1
+      else entries.iterator.map(_.getLong(1).toInt).max + 1
+    val mEff = if (entries.isEmpty) PqM
+      else math.max(PqM, entries.iterator.map(_.getLong(0).toInt).max + 1)
+    val slots = Array.fill[Row](mEff * kEff)(null)
+    entries.foreach { r =>
+      slots(r.getLong(0).toInt * kEff + r.getLong(1).toInt) = Row(r.get(2))
+    }
+    val cbRow = oneRow(qCells.sparkSession, "_cb", ArrayType(StructType(Seq(
+      StructField("cw", cb.df.schema("cw").dataType)))), slots.toSeq)
+    val cv = if (qCells.columns.contains("cv")) col("cv") else lit(null)
+    val tables = qCells
+      .crossJoin(broadcast(cbRow))
+      .select(col("query_id"), col("cell"),
+        call_function("adc_table", col("q"), cv, col("_cb"),
+          lit(kEff), lit(PqM), lit(PqSubDim)).as("t"))
+      .select(col("query_id"), col("cell"), col("t.lut").as("lut"),
+        col("t.qn2").as("qn2"))
+    (tables, kEff)
+  }
+
+  /** The ADC shortlist + exact-re-rank tail of [[pqProbe]]: take the
+    * [[PqShortlist]] best candidates per query BY ADC, then score those
+    * — and only those — with the full-precision cosine: O(k) full-vector
+    * reads per query. Recall is the only approximation; [[pqRecall]]
+    * measures it against brute force. */
   private def pqRankFromAdc(adc: DataFrame, rerankSrc: DataFrame,
                             queries: DataFrame, k: Int): DataFrame = {
     val ws = Window.partitionBy(col("query_id"))
@@ -1842,10 +1891,12 @@ object Similarity {
   }
 
   /** One-shot PQ search: train codebook, encode, ADC + re-rank. */
-  def pqTopK(emb: DataFrame, k: Int): DataFrame = {
-    val cb = pqCodebook(emb)
-    pqProbeFrom(pqEncode(emb, cb), cb, emb, queryVectors(emb), k)
-  }
+  def pqTopK(emb: DataFrame, k: Int): DataFrame =
+    plainPqTopK(emb, strideCodebook(emb), k)
+
+  /** One-shot plain PQ search with a trained codebook. */
+  private def plainPqTopK(emb: DataFrame, cb: Codebook, k: Int): DataFrame =
+    plainPqProbe(pqCodes(emb, cb), cb, emb, queryVectors(emb), k)
 
   /** Lloyd rounds the learned PQ codebook runs (unrolled in the DuckDB
     * oracle, so kept small; recall gains saturate fast from a stride
@@ -1878,62 +1929,68 @@ object Similarity {
     * starts from the certified selection. */
   def pqCodebookLloyd(emb: DataFrame,
                       iters: Int = PqLloydIters): DataFrame =
-    lloydRounds(emb, pqCodebook(emb), iters)
+    lloydRounds(emb, strideCodebook(emb), iters, meanUpdate).df
 
   /** The Lloyd engine shared by the raw chain ([[pqCodebookLloyd]])
-    * and the residual chain ([[ivfPqResidualPartsLloyd]]): integer-mean
-    * rounds over ANY (…, embedding: array<double>) frame whose values
-    * micro-quantize exactly — raw embeddings or the 1e-6-scaled
-    * micro-int residuals ([[residualsAgainst]]'s exact-roundtrip
-    * column) — from an arbitrary seed codebook. Determinism and the
+    * and the residual chains ([[ivfPqResidualTopKTrained]]): `iters`
+    * rounds over ANY (…, embedding) frame whose values micro-quantize
+    * exactly — raw embeddings or the 1e-6-scaled micro-int residuals
+    * ([[residualsFromCells]]' exact-roundtrip column) — from an
+    * arbitrary seed codebook. Each round is one map-only baked
+    * assignment ([[lloydAssign]]) and one `update` of the codebook
+    * from it: the integer mean ([[meanUpdate]]) or the norm-restored
+    * spherical mean ([[sphericalUpdate]]). Determinism and the
     * per-round cost argument are [[pqCodebookLloyd]]'s scaladoc,
-    * unchanged: one map-only baked assignment + one ≤ M·K·subdim-group
-    * aggregate per round, at any corpus size. */
-  private def lloydRounds(vecs: DataFrame, seed: DataFrame,
-                          iters: Int): DataFrame = {
-    val spark = vecs.sparkSession
+    * unchanged: one ≤ M·K·subdim-group aggregate per round, at any
+    * corpus size.
+    *
+    * Each round's codebook is collected ([[codebookOf]], ≤ M·K rows —
+    * the same bounded collect the next round's bake pays anyway): the
+    * lazy form made the RETURNED codebook a full corpus-aggregation
+    * subtree that every consumer re-executed. Collected, the loop pays
+    * exactly ONE corpus job per round. Values bit-identical (integer
+    * means; (m, j)-keyed consumers are row-order-independent). */
+  private def lloydRounds(vecs: DataFrame, seed: Codebook, iters: Int,
+                          update: DataFrame => DataFrame): Codebook = {
     var cb = seed
-    for (_ <- 0 until iters) {
-      // assignment rides the row: element m of arrays_zip pairs code j
-      // of subspace m with the micro sub-vector of subspace m — the
-      // baked encode makes this MAP-ONLY (the collect is the ≤ M·K-row
-      // codebook, once per round, under the driver-scalar ledger)
-      val asg = vecs.select(posexplode(arrays_zip(
-          pqEncodeColumn(cb, col("embedding")).as("j"),
-          array((0 until PqM).map { m =>
-            transform(slice(col("embedding"), m * PqSubDim + 1, PqSubDim),
-              microQ(_))
-          }: _*).as("sv"))))
-        .select(col("pos").cast("long").as("m"),
-          col("col.j").as("j"), col("col.sv").as("sv"))
-      // integer mean per (m, j, dim): floor(Σ/n) spelled
-      // (s − pmod(s, n)) div n — exact integer floor division for any
-      // sign, identical in DuckDB as (s − ((s % n) + n) % n) // n
-      val next = asg
-        .select(col("m"), col("j"), posexplode(col("sv")))
-        .toDF("m", "j", "dim", "v")
-        .groupBy(col("m"), col("j"), col("dim"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-        .select(col("m"), col("j"), col("dim"),
-          expr("(s - pmod(s, c)) div c").as("cwd"))
-        .groupBy(col("m"), col("j"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("cwd")))).as("a"))
-        .select(col("m"), col("j"),
-          transform(col("a"), s => s.getField("cwd")).as("cw"))
-      // LOCALIZE each round's codebook (≤ M·K rows — the same bounded
-      // collect the next round's bake pays anyway): the lazy form made
-      // the RETURNED codebook a full corpus-aggregation subtree that
-      // every consumer re-executed — the encode's bake collect AND the
-      // ADC LUT join each re-ran the final Lloyd round's corpus pass.
-      // Localized, the loop pays exactly ONE corpus job per round and
-      // consumers read a plan literal. Values bit-identical (integer
-      // means; (m, j)-keyed consumers are row-order-independent).
-      cb = localized(spark, next)
-    }
+    for (_ <- 0 until iters)
+      cb = codebookOf(update(lloydAssign(vecs, "embedding", cb)))
     cb
   }
 
-  /** SPHERICAL integer Lloyd rounds — the cosine-consistent variant
+  /** The map-only Lloyd assignment of the `vec` column: one `(m, j,
+    * sv)` row per subspace of each vector — element m of arrays_zip
+    * pairs code j of subspace m (the baked encode, no shuffle) with the
+    * micro sub-vector of subspace m (riding the same row, so no N·M
+    * join either). */
+  private def lloydAssign(vecs: DataFrame, vec: String,
+                          cb: Codebook): DataFrame =
+    vecs.select(posexplode(arrays_zip(
+        pqEncodeColumn(cb, col(vec)).as("j"),
+        array((0 until PqM).map { m =>
+          transform(slice(col(vec), m * PqSubDim + 1, PqSubDim), microQ(_))
+        }: _*).as("sv"))))
+      .select(col("pos").cast("long").as("m"),
+        col("col.j").as("j"), col("col.sv").as("sv"))
+
+  /** The plain Lloyd update: the integer mean per (m, j, dim),
+    * floor(Σ/n) spelled (s − pmod(s, n)) div n — exact integer floor
+    * division for any sign, identical in DuckDB as
+    * (s − ((s % n) + n) % n) // n. */
+  private def meanUpdate(asg: DataFrame): DataFrame =
+    asg
+      .select(col("m"), col("j"), posexplode(col("sv")))
+      .toDF("m", "j", "dim", "v")
+      .groupBy(col("m"), col("j"), col("dim"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
+      .select(col("m"), col("j"), col("dim"),
+        expr("(s - pmod(s, c)) div c").as("cwd"))
+      .groupBy(col("m"), col("j"))
+      .agg(array_sort(collect_list(struct(col("dim"), col("cwd")))).as("a"))
+      .select(col("m"), col("j"),
+        transform(col("a"), s => s.getField("cwd")).as("cw"))
+
+  /** The SPHERICAL Lloyd update — the cosine-consistent variant
     * the round-19 honest negative prescribed: plain Lloyd's
     * integer-mean update descends the L2 objective but SHRINKS
     * codeword norms (the mean of a spread cluster is shorter than its
@@ -1957,47 +2014,29 @@ object Similarity {
     * downstream — still hash-certifies. Assignment stays the exact
     * integer-L2 [[graft.expressions.PqEncode]] against the rescaled
     * codewords. */
-  private def lloydRoundsSpherical(vecs: DataFrame, seed: DataFrame,
-                                   iters: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    var cb = seed
-    for (_ <- 0 until iters) {
-      val asg = vecs.select(posexplode(arrays_zip(
-          pqEncodeColumn(cb, col("embedding")).as("j"),
-          array((0 until PqM).map { m =>
-            transform(slice(col("embedding"), m * PqSubDim + 1, PqSubDim),
-              microQ(_))
-          }: _*).as("sv"))))
-        .select(col("pos").cast("long").as("m"),
-          col("col.j").as("j"), col("col.sv").as("sv"))
-      val perDim = asg
-        .select(col("m"), col("j"), posexplode(col("sv")))
-        .toDF("m", "j", "dim", "v")
-        .groupBy(col("m"), col("j"), col("dim"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"),
-          sum((col("v") * col("v")).cast("decimal(38,0)")).as("sq"))
-        .select(col("m"), col("j"), col("dim"),
-          expr("(s - pmod(s, c)) div c").as("cwd"), col("sq"), col("c"))
-      cb = perDim
-        .groupBy(col("m"), col("j"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("cwd"))))
-            .as("a"),
-          sum(col("sq")).as("sqsum"), first(col("c")).as("n"))
-        // msq = floor(Σ‖x‖² / n_members): sqsum is Σ over (dim,
-        // member) of v² and every member contributes one row per dim,
-        // so n is the member count and the division is the exact
-        // integer floor (sqsum ≥ 0)
-        .select(col("m"), col("j"),
-          transform(col("a"), s => s.getField("cwd")).as("mw"),
-          expr("CAST((sqsum - (sqsum % n)) / n AS DECIMAL(38,0))")
-            .cast("long").as("msq"))
-        .select(col("m"), col("j"),
-          sphericalRescale(col("mw"), col("msq")).as("cw"))
-      // per-round localize: the [[lloydRounds]] reasoning, verbatim
-      cb = localized(spark, cb)
-    }
-    cb
-  }
+  private def sphericalUpdate(asg: DataFrame): DataFrame =
+    asg
+      .select(col("m"), col("j"), posexplode(col("sv")))
+      .toDF("m", "j", "dim", "v")
+      .groupBy(col("m"), col("j"), col("dim"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"),
+        sum((col("v") * col("v")).cast("decimal(38,0)")).as("sq"))
+      .select(col("m"), col("j"), col("dim"),
+        expr("(s - pmod(s, c)) div c").as("cwd"), col("sq"), col("c"))
+      .groupBy(col("m"), col("j"))
+      .agg(array_sort(collect_list(struct(col("dim"), col("cwd"))))
+          .as("a"),
+        sum(col("sq")).as("sqsum"), first(col("c")).as("n"))
+      // msq = floor(Σ‖x‖² / n_members): sqsum is Σ over (dim,
+      // member) of v² and every member contributes one row per dim,
+      // so n is the member count and the division is the exact
+      // integer floor (sqsum ≥ 0)
+      .select(col("m"), col("j"),
+        transform(col("a"), s => s.getField("cwd")).as("mw"),
+        expr("CAST((sqsum - (sqsum % n)) / n AS DECIMAL(38,0))")
+          .cast("long").as("msq"))
+      .select(col("m"), col("j"),
+        sphericalRescale(col("mw"), col("msq")).as("cw"))
 
   /** floor(cwd · √(msq/mn2) + ½) per component — the one
     * deterministic-double leaf of the spherical update (mn2 = ‖mean‖²
@@ -2017,10 +2056,8 @@ object Similarity {
     * [[pqTopK]] with [[pqCodebookLloyd]] swapped in; encode, ADC and
     * re-rank are byte-identical machinery. */
   def pqTopKLloyd(emb: DataFrame, k: Int,
-                  iters: Int = PqLloydIters): DataFrame = {
-    val cb = pqCodebookLloyd(emb, iters)
-    pqProbeFrom(pqEncode(emb, cb), cb, emb, queryVectors(emb), k)
-  }
+                  iters: Int = PqLloydIters): DataFrame =
+    plainPqTopK(emb, lloydRounds(emb, strideCodebook(emb), iters, meanUpdate), k)
 
   def qSimilarPqKmeans(spark: SparkSession, dir: String): DataFrame = {
     pqTopKLloyd(Tables.embeddings(spark, dir), k = 3)
@@ -2043,28 +2080,15 @@ object Similarity {
     // (guide §2.6).
     val Seq(exactE, cbsE) = inParallel[AnyRef](Seq(
       // localized: bounded |Q|·k rows read by both codebook columns
-      () => localized(emb.sparkSession,
-        topK(emb, qv, k).select(col("query_id"), col("vec_id"))),
+      () => localized(emb.sparkSession, exactTopK(emb, k)),
       () => {
-        val cbS = pqCodebook(emb)
-        (cbS, lloydRounds(emb, cbS, PqLloydIters))
+        val cbS = strideCodebook(emb)
+        (cbS, lloydRounds(emb, cbS, PqLloydIters, meanUpdate))
       }))
-    val exact = exactE.asInstanceOf[DataFrame]
-    val (cbS, cbL) = cbsE.asInstanceOf[(DataFrame, DataFrame)]
-    def hitsOf(ap: DataFrame, name: String) =
-      exact.join(ap.select(col("query_id"), col("vec_id")),
-          Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-    qv.select(col("query_id"))
-      .join(hitsOf(pqProbeFrom(pqEncode(emb, cbS), cbS, emb, qv, k), "hs"),
-        Seq("query_id"), "left")
-      .join(hitsOf(pqProbeFrom(pqEncode(emb, cbL), cbL, emb, qv, k), "hl"),
-        Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("hs"), lit(0L)).as("n_hit_stride"),
-        coalesce(col("hl"), lit(0L)).as("n_hit_lloyd"),
-        (coalesce(col("hs"), lit(0L)).cast("double") / k).as("recall_stride"),
-        (coalesce(col("hl"), lit(0L)).cast("double") / k).as("recall_lloyd"))
+    val (cbS, cbL) = cbsE.asInstanceOf[(Codebook, Codebook)]
+    recallOf(qv, exactE.asInstanceOf[DataFrame], k)(
+      ("hs", "_stride", plainPqTopK(emb, cbS, k)),
+      ("hl", "_lloyd", plainPqTopK(emb, cbL, k)))
   }
 
   def qPqCodebookRecall(spark: SparkSession, dir: String): DataFrame =
@@ -2085,20 +2109,15 @@ object Similarity {
     // one eager corpus aggregate (and at most one rank build), not two
     val (n, sel) = centroidSelector(emb)
     val (coarse, fmap) = twoLevelPartsFrom(n, sel)
-    // localize the bounded structures (the residual path's measured
-    // win): cells, query placement and the candidate join otherwise
-    // each re-run the two-level lineage
-    val tl = localTwoLevel(localized(emb.sparkSession, coarse),
-      localized(emb.sparkSession, fmap))
-    val cells = assignTwoLevel(emb, tl)
+    val tl = localTwoLevel(coarse, fmap)
     val cb = pqCodebookFrom(n, sel)
+    // the codes carry the cell of the same placement pass that encodes
+    // them; the probe rows carry no centre, so the tables are the raw
+    // (centre-free) ones for every cell
+    val codes = assignTwoLevel(emb, tl).select(col("vec_id"), col("cell"),
+      pqEncodeColumn(cb, col("embedding")).as("codes"))
     val queries = queryVectors(emb)
-    val cand = cells.select(col("vec_id"), col("cell"))
-      .join(broadcast(twoLevelProbeCells(queries, tl, nprobe)
-        .select(col("query_id"), col("cell"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    pqProbeFrom(pqEncode(emb, cb), cb, emb, queries, k, Some(cand))
+    pqProbe(codes, cb, twoLevelProbeCells(queries, tl, nprobe), emb, queries, k)
   }
 
   def qSimilarIvfPq(spark: SparkSession, dir: String): DataFrame = {
@@ -2145,12 +2164,12 @@ object Similarity {
   }
 
   /** The trained state of a residual IVF-PQ chain: the two-level
-    * quantizer and the residual codebook `(m, j, cw)` (≤ M·K rows), both
-    * bounded local relations. A one-shot chain trains it
+    * quantizer and the residual [[Codebook]] (≤ M·K rows), both held on
+    * the driver. A one-shot chain trains it
     * ([[ivfPqResidualParts]]); a landed index keeps it as its `state/`
     * table and reads it back once per call ([[readIvfPqState]]). */
   private[graft] final case class IvfPqState(twoLevel: TwoLevel,
-                                             codebook: DataFrame)
+                                             codebook: Codebook)
 
   /** The bounded standing structures of a residual IVF-PQ index:
     * coarse centroids, the fine→coarse map (whose fine-centroid
@@ -2158,19 +2177,10 @@ object Similarity {
     * everything needed to place, encode and probe ANY vector frame.
     * One [[centroidSelectorOff]] feeds the cell partition AND the
     * codebook's training rows, so the eager corpus aggregate is paid
-    * once. The codebook trains on the residuals of the mid-stride
-    * rank rows ONLY (≤ [[PqK]] vectors residualized — bounded work):
-    * offset-0 training rows can coincide with the fine-centroid rows
-    * (when C sizes like PqK their strides select the same ranks), and
-    * a centroid's residual against itself is zero — every codeword
-    * degenerates to ≈ 0 and the ADC collapses to per-cell ties
-    * (measured on the spec fixture: recall fell BELOW the raw form).
-    * Mid-stride rows are genuine within-cell offsets on any id
-    * space. */
+    * once; the codebook is [[residualCodebook]]'s. */
   private def ivfPqResidualParts(emb: DataFrame): IvfPqState = {
-    val spark = emb.sparkSession
     val (n, sel3) = centroidSelectorOff(emb)
-    val (coarse0, fmap0) =
+    val (coarse, fmap) =
       twoLevelPartsFrom(n, (s: Long, e: Long) => sel3(s, e, 0L))
     // LOCALIZE the bounded structures (the ivfTopKKmeans discipline):
     // coarse is ⌈√C⌉ rows and fmap C ≈ ⌈√N⌉ rows — the SAME order as
@@ -2182,21 +2192,48 @@ object Similarity {
     // flat ~2 s structure overhead dominating q_similar_ivfpq_res's
     // 1.10× slope). Row-based collect preserves nulls and exact float
     // bits; O(√N·dims) driver bytes, never corpus-proportional.
-    val tl = localTwoLevel(localized(spark, coarse0), localized(spark, fmap0))
+    val tl = localTwoLevel(coarse, fmap)
+    IvfPqState(tl, residualCodebook(n, sel3, assignTwoLevel(_, tl), tl.centers))
+  }
+
+  /** The one residual codebook recipe, for any coarse quantizer: the
+    * mid-stride rank rows of the [[centroidSelectorOff]] line (≤
+    * [[PqK]] vectors — bounded work), placed by `place` into
+    * `(vec_id, embedding, cell)` and residualized against the `(cell,
+    * cv)` decode table `centers`, as codewords ([[pqCodebookRows]]).
+    * Offset-0 training rows can coincide with the fine-centroid rows
+    * (when C sizes like PqK their strides select the same ranks), and
+    * a centroid's residual against itself is zero — every codeword
+    * degenerates to ≈ 0 and the ADC collapses to per-cell ties
+    * (measured on the spec fixture: recall fell BELOW the raw form).
+    * Mid-stride rows are genuine within-cell offsets on any id
+    * space. */
+  private def residualCodebook(n: Long, sel3: (Long, Long, Long) => DataFrame,
+                               place: DataFrame => DataFrame,
+                               centers: DataFrame): Codebook = {
     val tStride = pqTrainStride(n)
     val train = sel3(tStride, math.max(1L, math.min(PqK.toLong, n)),
         tStride / 2)
       .select(col("centroid_id").as("vec_id"), col("c").as("embedding"))
-    IvfPqState(tl, pqCodebookRows(
-      residualsAgainst(train, tl)
-        .select(col("vec_id").as("centroid_id"), col("resid").as("c"))))
+    pqCodebookRows(residualsFromCells(place(train), centers)
+      .select(col("vec_id").as("centroid_id"), col("resid").as("c")))
   }
 
   /** Collect a BOUNDED frame and re-create it as a local relation —
     * exact value/null/type roundtrip, plan-literal downstream (no
     * recomputation per consumer, no cache-lifecycle management).
     * Callers own the boundedness argument. */
-  private[graft] def localized(spark: SparkSession, df: DataFrame): DataFrame = {
+  private[graft] def localized(spark: SparkSession, df: DataFrame): DataFrame =
+    asLocal(spark, localRows(df), df.schema)
+
+  /** `rows` as a local relation of `schema` (no job). */
+  private def asLocal(spark: SparkSession, rows: Seq[Row],
+                      schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The rows of a BOUNDED frame, collected once — the collect under
+    * [[localized]], for callers that read the rows on the driver too. */
+  private def localRows(df: DataFrame): Seq[Row] = {
     // collect at most cap + 1 rows: an oversized frame trips the
     // require below without ever being collected whole
     val rows = df.limit(LocalizedRowCap + 1).collect()
@@ -2205,9 +2242,8 @@ object Similarity {
     // of MB, driver-bounded), alone or inside a landed residual
     // IVF-PQ index's `state/` rows (coarse + fine centroids + ≤ M·K
     // codewords, [[readIvfPqState]]); every other site is a
-    // ≤PqM·PqK=128-row codebook (also collected whole by the encode
-    // bake and by [[adcTables]]' one-row M·K-slot codebook) or a
-    // ≤|Q|·k=24-row ground truth. The cap sits above the
+    // ≤PqM·PqK=128-row codebook ([[codebookOf]]: the encode bake and
+    // [[adcTables]] read its rows) or a ≤|Q|·k=24-row ground truth. The cap sits above the
     // √N ledger at any plausible corpus but catches the refactor that
     // hands this helper a corpus-SCALE frame (a 10⁹-row collect is a
     // driver OOM at 100 TB) before it ships.
@@ -2215,7 +2251,7 @@ object Similarity {
       s"localized() collected ${rows.length} rows (cap $LocalizedRowCap): " +
         "caller broke the boundedness contract — this helper is for " +
         "broadcast-constant (≤ √N) frames only")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    rows.toSeq
   }
 
   /** Hard ceiling on [[localized]] collects — see its require. */
@@ -2253,27 +2289,32 @@ object Similarity {
     } finally { pool.shutdown(); () }
   }
 
-  /** Place a (vec_id, embedding) frame into the standing cells and
-    * compute each vector's residual against its own cell centroid —
-    * the micro-int difference scaled back by 1e-6, which the
-    * downstream quantizer recovers EXACTLY (see [[ivfPqResidualTopK]]).
-    * Output (vec_id, cell, resid: array<double>). Per-vector pure
-    * against the frozen structures, so increments place/encode
-    * byte-identically to a one-shot pass. */
+  /** Place a (vec_id, embedding) frame into the standing two-level
+    * cells ([[assignTwoLevel]]) and residualize it against its own cell
+    * centroid ([[residualsFromCells]]). Per-vector pure against the
+    * frozen structures, so increments place/encode byte-identically to
+    * a one-shot pass. */
   private def residualsAgainst(vectors: DataFrame, tl: TwoLevel,
-                               keepEmbedding: Boolean = false): DataFrame = {
-    val placed = assignTwoLevel(vectors, tl)
-      .join(broadcast(tl.centers), Seq("cell"))
+                               keepEmbedding: Boolean = false): DataFrame =
+    residualsFromCells(assignTwoLevel(vectors, tl), tl.centers, keepEmbedding)
+
+  /** Residuals of an already-placed (vec_id, embedding, cell) frame
+    * against a (cell, cv) decode table: output (vec_id, cell, resid:
+    * array<double>), the micro-int difference scaled back by 1e-6,
+    * which the downstream quantizer recovers EXACTLY (see
+    * [[ivfPqResidualTopK]]). */
+  private def residualsFromCells(cells: DataFrame, centers: DataFrame,
+                                 keepEmbedding: Boolean = false): DataFrame = {
+    val placed = cells.join(broadcast(centers), Seq("cell"))
     val resid = zip_with(col("embedding"), col("cv"),
       (x, c) => (microQ(x) - microQ(c)).cast("double") / lit(1e6))
       .as("resid")
     // keepEmbedding: the serving-code landing needs (vec_id, cell,
     // codes, EMBEDDING) — carrying the column through this map-only
-    // tail is free (the placement exchange already moved it), where
-    // the pre-r22 shape re-joined the batch on vec_id: a second
-    // corpus-scale exchange pair and a second scan of the batch.
-    // Default OFF so the persisted-residual consumers (Lloyd/curve
-    // caches) don't widen their MEMORY_AND_DISK footprint.
+    // tail is free, where the pre-r22 shape re-joined the batch on
+    // vec_id: a second corpus-scale exchange pair and a second scan of
+    // the batch. Default OFF so the persisted-residual consumers
+    // (Lloyd/curve caches) don't widen their MEMORY_AND_DISK footprint.
     if (keepEmbedding)
       placed.select(col("vec_id"), col("cell"), col("embedding"), resid)
     else placed.select(col("vec_id"), col("cell"), resid)
@@ -2282,7 +2323,7 @@ object Similarity {
   /** Map-only residual encode (the baked [[graft.expressions.PqEncode]]
     * accepts the double residual column); the cell rides along for the
     * per-cell ADC join. */
-  private def encodeResiduals(resid: DataFrame, cb: DataFrame,
+  private def encodeResiduals(resid: DataFrame, cb: Codebook,
                               keepEmbedding: Boolean = false): DataFrame = {
     val codes = pqEncodeColumn(cb, col("resid")).as("codes")
     if (keepEmbedding)
@@ -2290,144 +2331,68 @@ object Similarity {
     else resid.select(col("vec_id"), col("cell"), codes)
   }
 
-  /** The residual ADC probe over an encoded (vec_id, cell, codes)
-    * frame: each query's `nprobe` two-level cells, per-(query, probed
+  /** The residual probe of an encoded (vec_id, cell, codes) frame
+    * against a two-level state: each query's `nprobe` two-level cells,
+    * each with its centre, so [[pqProbe]] builds the per-(query, probed
     * cell) tables of EFFECTIVE codewords `cs + cw` (the classic IVFADC
-    * per-cell table), candidates pruned to the probed cells, integer
-    * ADC sums, [[pqRankFromAdc]] shortlist + exact re-rank against
-    * `rerankSrc`. */
+    * per-cell table), scores the probed cells' codes and re-ranks
+    * against `rerankSrc`. */
   private def ivfPqProbeResidual(codes: DataFrame, st: IvfPqState,
                                  rerankSrc: DataFrame, queries: DataFrame,
                                  k: Int, nprobe: Int): DataFrame =
-    ivfPqProbeResidualFrom(codes, st.codebook, st.twoLevel.centers,
-      rerankSrc, queries, twoLevelProbeCells(queries, st.twoLevel, nprobe), k)
+    pqProbe(codes, st.codebook,
+      withCentres(twoLevelProbeCells(queries, st.twoLevel, nprobe),
+        st.twoLevel.centers),
+      rerankSrc, queries, k)
 
-  /** The placement-agnostic residual probe core — per-(query, probed
-    * cell) lookup tables, map-side ADC, shortlist + exact re-rank —
-    * shared by the two-level chain (cells from [[twoLevelProbeCells]])
-    * and the LEARNED chain (cells from the integer k-means quantizer).
-    * `centers` is the (cell, cv) decode table; `qCells` the caller's
-    * `(query_id, q, cell)` probe rows.
-    *
-    * The table: ONE row per (query, probed cell) — |queries|·nprobe
-    * rows, built map-side on the probe rows ([[adcTables]]) and
-    * broadcast. The candidates: the code rows of the probed cells,
-    * reached by the broadcast equi-join on `cell` straight off the code
-    * scan, so the ~nprobe·|Q|·N/√N candidates are the only code rows
-    * scored; each (query, vec) pair is a candidate once (a vector sits
-    * in one cell). The scores: [[graft.expressions.AdcLookup]] reads
-    * each candidate's `num`/`nsq` with M table lookups in one
-    * projection. The round-22 shape exploded every candidate ×M,
-    * re-partitioned them by (query, vec), joined the exploded rows to
-    * a long-form table on (query, cell, m, j) and summed them back —
-    * an exchange and an aggregate for a value that depends only on
-    * the candidate's row and one broadcast row. Every sum is the same
-    * integer sum and the `adc` expression below is unchanged, so the
-    * answers are bit-identical. The null filter runs the lookup once
-    * more below the projection (Catalyst pushes it through); M array
-    * reads per candidate cost far less than the exchange they
-    * replace. */
-  private def ivfPqProbeResidualFrom(codes: DataFrame, cb: DataFrame,
-                                     centers: DataFrame,
-                                     rerankSrc: DataFrame,
-                                     queries: DataFrame,
-                                     qCells: DataFrame, k: Int): DataFrame =
-    pqRankFromAdc(residualAdc(codes, cb, centers, qCells), rerankSrc,
-      queries, k)
-
-  /** The `(query_id, vec_id, adc)` scores of [[ivfPqProbeResidualFrom]]:
-    * every code row of a probed cell against its query's table. */
-  private[graft] def residualAdc(codes: DataFrame, cb: DataFrame,
-                                 centers: DataFrame,
-                                 qCells: DataFrame): DataFrame = {
-    val (tables, kEff) = adcTables(qCells, centers, cb)
-    codes
-      .join(broadcast(tables), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("qn2"),
-        call_function("adc_lookup", col("codes"), col("lut"), lit(kEff))
-          .as("s"))
-      .filter(col("s").isNotNull)
-      .select(col("query_id"), col("vec_id"), col("s.num").as("num"),
-        col("s.nsq").as("nsq"), col("qn2"))
-      .select(col("query_id"), col("vec_id"),
-        when(col("nsq") === 0 || col("qn2") === 0, lit(0.0))
-          .otherwise(col("num").cast("double")
-            / (sqrt(col("nsq").cast("double"))
-              * sqrt(col("qn2").cast("double")))).as("adc"))
-  }
-
-  /** The per-(query, probed cell) ADC tables of `qCells` `(query_id, q,
-    * cell)` against the decode table `centers` `(cell, cv)` and the
-    * codebook `cb` `(m, j, cw)`: `(query_id, cell, lut, qn2)` rows,
-    * `lut` dense over slot `m·K + j` with K the codebook's code count
-    * (returned alongside). Slot `(m, j)` holds, for the effective
-    * codeword `e = cs_m + cw_mj` (`cs_m` the cell centre's micro
-    * sub-vector), `dot = Σ qq_m·e` and `n = Σ e²` — the terms the
-    * long-form table held per (query, cell, m, j) row, same nulls — and
-    * is NULL where the codebook has no `(m, j)` row; `qn2` is
-    * `Σ_m Σ qq_m²` with SQL `SUM`'s null skipping over the M subspaces.
-    * The native [[graft.expressions.AdcTable]] builds both in one
-    * projection over a broadcast centre join and the one-row codebook:
-    * no exchange. The codebook is bounded (≤ M·K rows) and a local
-    * relation in every caller, so its collect runs no job. */
-  private def adcTables(qCells: DataFrame, centers: DataFrame,
-                        cb: DataFrame): (DataFrame, Int) = {
-    val entries = cb.select(col("m"), col("j"), col("cw")).collect()
-    val kEff = if (entries.isEmpty) 1
-      else entries.iterator.map(_.getLong(1).toInt).max + 1
-    val mEff = if (entries.isEmpty) PqM
-      else math.max(PqM, entries.iterator.map(_.getLong(0).toInt).max + 1)
-    val slots = Array.fill[Row](mEff * kEff)(null)
-    entries.foreach { r =>
-      slots(r.getLong(0).toInt * kEff + r.getLong(1).toInt) = Row(r.get(2))
-    }
-    val cbRow = oneRow(cb.sparkSession, "_cb", ArrayType(StructType(Seq(
-      StructField("cw", cb.schema("cw").dataType)))), slots.toSeq)
-    val tables = qCells
-      .join(broadcast(centers), Seq("cell"))
-      .crossJoin(broadcast(cbRow))
-      .select(col("query_id"), col("cell"),
-        call_function("adc_table", col("q"), col("cv"), col("_cb"),
-          lit(kEff), lit(PqM), lit(PqSubDim)).as("t"))
-      .select(col("query_id"), col("cell"), col("t.lut").as("lut"),
-        col("t.qn2").as("qn2"))
-    (tables, kEff)
-  }
+  /** `(query_id, q, cell)` probe rows with each cell's centre `cv` from
+    * the `(cell, cv)` decode table: the residual form of [[pqAdc]]'s
+    * probe rows. A cell with no centre is probed by no one. */
+  private def withCentres(qCells: DataFrame, centers: DataFrame): DataFrame =
+    qCells.join(broadcast(centers), Seq("cell"))
 
   def qSimilarIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
     ivfPqResidualTopK(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** Residual IVF-PQ with a LEARNED residual codebook — full FAISS
+  /** The residual chain's mid-stride state ([[ivfPqResidualParts]])
+    * and the corpus residuals against it, PERSISTED (MEMORY_AND_DISK,
+    * the lmPerplexity convention): every Lloyd round executes them and
+    * every encode reads them again, so the iters+1 (or more) two-level
+    * placement passes — each a corpus scan — collapse to one.
+    * Bench/Verify clearCache() releases them per query. */
+  private def persistedResiduals(emb: DataFrame): (IvfPqState, DataFrame) = {
+    val st = ivfPqResidualParts(emb)
+    (st, residualsAgainst(emb, st.twoLevel)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** Persisted residuals as the `(vec_id, embedding)` frame
+    * [[lloydRounds]] trains on. */
+  private def residualVecs(resid: DataFrame): DataFrame =
+    resid.select(col("vec_id"), col("resid").as("embedding"))
+
+  /** Residual IVF-PQ with a TRAINED residual codebook — full FAISS
     * IVFADC training, composed from two halves this engine already
     * certifies separately: the mid-stride residual sample seeds
-    * ([[ivfPqResidualParts]]' codebook) and [[lloydRounds]]
-    * integer-mean k-means refines it ON THE RESIDUAL sub-vectors of
-    * the whole corpus. Production IVFADC trains k-means on residuals
-    * (Jégou, Douze & Schmid 2011, §III-C); this is that composition —
-    * deterministic end to end (integer floor-means over exact
-    * micro-int residuals), so it hash-certifies like both parents.
-    * Serving (encode, per-cell effective-codeword LUT, ADC, exact
-    * re-rank) is byte-identical [[ivfPqProbeResidual]] machinery —
-    * only the codebook differs. Returns the residual frame too so the
-    * caller encodes without a second corpus placement pass. */
-  private def ivfPqResidualPartsLloyd(emb: DataFrame,
-                                      iters: Int = PqLloydIters):
-      (IvfPqState, DataFrame) = {
-    val st = ivfPqResidualParts(emb)
-    // persist the corpus-scale residual frame (MEMORY_AND_DISK, the
-    // lmPerplexity convention): every Lloyd round executes it once and
-    // the caller's encode reads it again — iters+1 two-level placement
-    // passes (each a corpus scan + the vec-keyed window exchange)
-    // collapse to one. Bench/Verify clearCache() releases it per query.
-    val resid = residualsAgainst(emb, st.twoLevel)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cb = lloydRounds(
-      resid.select(col("vec_id"), col("resid").as("embedding")), st.codebook,
-      iters)
-    (st.copy(codebook = cb), resid)
+    * ([[residualCodebook]]) and [[lloydRounds]] with the round's
+    * `update` refines it ON THE RESIDUAL sub-vectors of the whole
+    * corpus. Production IVFADC trains k-means on residuals (Jégou,
+    * Douze & Schmid 2011, §III-C); this is that composition —
+    * deterministic end to end (integer floor-means over exact micro-int
+    * residuals), so it hash-certifies like both parents. Serving
+    * (encode, per-cell effective-codeword LUT, ADC, exact re-rank) is
+    * byte-identical [[ivfPqProbeResidual]] machinery — only the
+    * codebook differs, and the encode reads the persisted residuals
+    * instead of a second corpus placement pass. */
+  private def ivfPqResidualTopKTrained(emb: DataFrame, k: Int, nprobe: Int,
+                                       iters: Int,
+                                       update: DataFrame => DataFrame): DataFrame = {
+    val (st, resid) = persistedResiduals(emb)
+    val cb = lloydRounds(residualVecs(resid), st.codebook, iters, update)
+    ivfPqProbeResidual(encodeResiduals(resid, cb), st.copy(codebook = cb), emb,
+      queryVectors(emb), k, nprobe)
   }
 
   /** Total squared residual-quantization error (micro² ints) of the
@@ -2443,28 +2408,16 @@ object Similarity {
     * + a 1-row aggregate; the final 1×1 cross join is bounded. */
   def ivfPqLloydQuantError(emb: DataFrame,
                            iters: Int = PqLloydIters): DataFrame = {
-    val st = ivfPqResidualParts(emb)
-    val cb0 = st.codebook
-    // persisted: the Lloyd rounds AND both errOf columns read it —
-    // iters+2 placement passes collapse to one
-    val resid = residualsAgainst(emb, st.twoLevel)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cbL = lloydRounds(
-      resid.select(col("vec_id"), col("resid").as("embedding")), cb0, iters)
-    def errOf(cb: DataFrame, name: String) =
-      resid.select(posexplode(arrays_zip(
-          pqEncodeColumn(cb, col("resid")).as("j"),
-          array((0 until PqM).map { m =>
-            transform(slice(col("resid"), m * PqSubDim + 1, PqSubDim),
-              microQ(_))
-          }: _*).as("sv"))))
-        .select(col("pos").cast("long").as("m"),
-          col("col.j").as("j"), col("col.sv").as("sv"))
-        .join(cb, Seq("m", "j"))
+    // persisted: the Lloyd rounds AND both errOf columns read them
+    val (st, resid) = persistedResiduals(emb)
+    val cbL = lloydRounds(residualVecs(resid), st.codebook, iters, meanUpdate)
+    def errOf(cb: Codebook, name: String) =
+      lloydAssign(resid, "resid", cb)
+        .join(cb.df, Seq("m", "j"))
         .select(aggregate(zip_with(col("sv"), col("cw"),
           (a, b) => (a - b) * (a - b)), lit(0L), (acc, d) => acc + d).as("e"))
         .agg(sum(col("e")).as(name))
-    errOf(cb0, "sq_err_res").crossJoin(errOf(cbL, "sq_err_lloyd"))
+    errOf(st.codebook, "sq_err_res").crossJoin(errOf(cbL, "sq_err_lloyd"))
   }
 
   def qIvfPqLloydMse(spark: SparkSession, dir: String): DataFrame =
@@ -2474,45 +2427,23 @@ object Similarity {
     * codebook — [[ivfPqResidualTopK]] with training upgraded from
     * mid-stride sampling to corpus k-means on residuals. */
   def ivfPqResidualTopKLloyd(emb: DataFrame, k: Int, nprobe: Int = 2,
-                             iters: Int = PqLloydIters): DataFrame = {
-    val (st, resid) = ivfPqResidualPartsLloyd(emb, iters)
-    ivfPqProbeResidual(encodeResiduals(resid, st.codebook), st, emb,
-      queryVectors(emb), k, nprobe)
-  }
+                             iters: Int = PqLloydIters): DataFrame =
+    ivfPqResidualTopKTrained(emb, k, nprobe, iters, meanUpdate)
 
   def qSimilarIvfPqLloyd(spark: SparkSession, dir: String): DataFrame = {
     ivfPqResidualTopKLloyd(Tables.embeddings(spark, dir), k = 3, nprobe = 2)
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** The residual chain trained with SPHERICAL integer Lloyd rounds
-    * ([[lloydRoundsSpherical]]) — same structures, residuals, encode
-    * and probe as the plain Lloyd form; only the codebook update
-    * differs. */
-  private def ivfPqResidualPartsSpherical(emb: DataFrame,
-                                          iters: Int = PqLloydIters):
-      (IvfPqState, DataFrame) = {
-    val st = ivfPqResidualParts(emb)
-    // persisted for the same multi-pass reason as the Lloyd parts
-    val resid = residualsAgainst(emb, st.twoLevel)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cb = lloydRoundsSpherical(
-      resid.select(col("vec_id"), col("resid").as("embedding")), st.codebook,
-      iters)
-    (st.copy(codebook = cb), resid)
-  }
-
-  /** Residual IVF-PQ served from the SPHERICAL-Lloyd codebook — the
-    * fix the round-19 honest negative prescribed for its own
-    * diagnosis: training that optimizes the engine's actual COSINE
-    * serving metric instead of raw L2 MSE. Hash-certified end to end
-    * like the plain Lloyd chain. */
+  /** Residual IVF-PQ served from the SPHERICAL-Lloyd codebook
+    * ([[sphericalUpdate]]) — the fix the round-19 honest negative
+    * prescribed for its own diagnosis: training that optimizes the
+    * engine's actual COSINE serving metric instead of raw L2 MSE. Same
+    * structures, residuals, encode and probe as the plain Lloyd form;
+    * hash-certified end to end like it. */
   def ivfPqResidualTopKSpherical(emb: DataFrame, k: Int, nprobe: Int = 2,
-                                 iters: Int = PqLloydIters): DataFrame = {
-    val (st, resid) = ivfPqResidualPartsSpherical(emb, iters)
-    ivfPqProbeResidual(encodeResiduals(resid, st.codebook), st, emb,
-      queryVectors(emb), k, nprobe)
-  }
+                                 iters: Int = PqLloydIters): DataFrame =
+    ivfPqResidualTopKTrained(emb, k, nprobe, iters, sphericalUpdate)
 
   def qSimilarIvfPqSpherical(spark: SparkSession, dir: String): DataFrame = {
     ivfPqResidualTopKSpherical(Tables.embeddings(spark, dir),
@@ -2537,7 +2468,7 @@ object Similarity {
     * K=16. FAISS IVFADC trains k-means on residuals under an L2
     * serving metric, where objective and ranking align; a cosine
     * deployment of THIS engine keeps mid-stride sampling or trains
-    * the SPHERICAL rounds ([[lloydRoundsSpherical]] — round 20's fix
+    * the SPHERICAL rounds ([[sphericalUpdate]] — round 20's fix
     * for exactly this diagnosis: norm-restored means, still
     * hash-certified; the third column reports what it recovers —
     * fixture 0.78 ≡ mid-stride, vs plain Lloyd's 0.44). All columns
@@ -2549,17 +2480,14 @@ object Similarity {
     // the three chains share structures, residuals and the mid-stride
     // seed BY CONSTRUCTION (all deterministic), so build them once —
     // per-chain TopK calls would pay three scaffold builds for
-    // byte-identical parts
-    val st = ivfPqResidualParts(emb)
+    // byte-identical parts. Persisted: TWO Lloyd trainings iterate
+    // over the residuals and all three chains encode from them.
+    val (st, resid) = persistedResiduals(emb)
     val cb0 = st.codebook
-    // persisted: TWO Lloyd trainings iterate over it and all three
-    // chains encode from it — ~7 placement passes collapse to one
-    val resid = residualsAgainst(emb, st.twoLevel)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rvecs = resid.select(col("vec_id"), col("resid").as("embedding"))
+    val rvecs = residualVecs(resid)
     // OVERLAP the independent eager builds (guide §2.6). Phase 1: the
     // brute-force ground truth (localized r21: the bounded |Q|·k pair
-    // set — as a lazy frame each hitsOf column re-executed the full
+    // set — as a lazy frame each recall column re-executed the full
     // corpus×queries scan, three passes for one ≤24-row constant)
     // runs while the persisted residuals materialize (the count()
     // builds the cache once so the trainings below READ it instead of
@@ -2567,35 +2495,19 @@ object Similarity {
     // and spherical — are independent given the cache; r21 ran their
     // 2·(iters) small jobs back to back.
     val exact = inParallel[AnyRef](Seq(
-      () => localized(emb.sparkSession,
-        topK(emb, qv, k).select(col("query_id"), col("vec_id"))),
+      () => localized(emb.sparkSession, exactTopK(emb, k)),
       () => java.lang.Long.valueOf(resid.count())))
       .head.asInstanceOf[DataFrame]
     val Seq(cbLloyd, cbSpherical) = inParallel(Seq(
-      () => lloydRounds(rvecs, cb0, PqLloydIters),
-      () => lloydRoundsSpherical(rvecs, cb0, PqLloydIters)))
-    def hitsOf(ap: DataFrame, name: String) =
-      exact.join(ap.select(col("query_id"), col("vec_id")),
-          Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-    def chainOf(cb: DataFrame) =
+      () => lloydRounds(rvecs, cb0, PqLloydIters, meanUpdate),
+      () => lloydRounds(rvecs, cb0, PqLloydIters, sphericalUpdate)))
+    def chainOf(cb: Codebook) =
       ivfPqProbeResidual(encodeResiduals(resid, cb), st.copy(codebook = cb),
         emb, qv, k, nprobe)
-    qv.select(col("query_id"))
-      .join(hitsOf(chainOf(cb0), "hs"),
-        Seq("query_id"), "left")
-      .join(hitsOf(chainOf(cbLloyd), "hl"),
-        Seq("query_id"), "left")
-      .join(hitsOf(chainOf(cbSpherical), "hp"),
-        Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("hs"), lit(0L)).as("n_hit_res"),
-        coalesce(col("hl"), lit(0L)).as("n_hit_lloyd"),
-        coalesce(col("hp"), lit(0L)).as("n_hit_spherical"),
-        (coalesce(col("hs"), lit(0L)).cast("double") / k).as("recall_res"),
-        (coalesce(col("hl"), lit(0L)).cast("double") / k).as("recall_lloyd"),
-        (coalesce(col("hp"), lit(0L)).cast("double") / k)
-          .as("recall_spherical"))
+    recallOf(qv, exact, k)(
+      ("hs", "_res", chainOf(cb0)),
+      ("hl", "_lloyd", chainOf(cbLloyd)),
+      ("hp", "_spherical", chainOf(cbSpherical)))
   }
 
   /** CERTIFICATION-TIER entry (the round-20 tag): this is an offline
@@ -2614,26 +2526,12 @@ object Similarity {
     * two columns isolate CODE FIDELITY; the engine REPORTS the
     * fractions (hash-certified), the ≥ claim lives in the clustered
     * spec fixture where the geometry makes it meaningful. */
-  def ivfPqRecall(emb: DataFrame, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    val qv = queryVectors(emb)
-    // localized: bounded |Q|·k rows, read by both hitsOf columns —
-    // one brute-force pass instead of two (the ivfPqLloydRecall note)
-    val exact = localized(emb.sparkSession,
-      topK(emb, qv, k).select(col("query_id"), col("vec_id")))
-    def hitsOf(ap: DataFrame, name: String) =
-      exact.join(ap.select(col("query_id"), col("vec_id")),
-          Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-    qv.select(col("query_id"))
-      .join(hitsOf(ivfPqTopK(emb, k, nprobe), "hr"), Seq("query_id"), "left")
-      .join(hitsOf(ivfPqResidualTopK(emb, k, nprobe), "hs"),
-        Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("hr"), lit(0L)).as("n_hit_raw"),
-        coalesce(col("hs"), lit(0L)).as("n_hit_res"),
-        (coalesce(col("hr"), lit(0L)).cast("double") / k).as("recall_raw"),
-        (coalesce(col("hs"), lit(0L)).cast("double") / k).as("recall_res"))
-  }
+  def ivfPqRecall(emb: DataFrame, k: Int = 3, nprobe: Int = 2): DataFrame =
+    // localized: bounded |Q|·k rows, read by both recall columns — one
+    // brute-force pass instead of two (the ivfPqLloydRecall note)
+    recallOf(queryVectors(emb), localized(emb.sparkSession, exactTopK(emb, k)), k)(
+      ("hr", "_raw", ivfPqTopK(emb, k, nprobe)),
+      ("hs", "_res", ivfPqResidualTopK(emb, k, nprobe)))
 
   def qIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
     ivfPqRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
@@ -2665,8 +2563,7 @@ object Similarity {
     // persisted codes materialize (the count() builds the cache once,
     // so the three probe points below read it)
     val exact = inParallel[AnyRef](Seq(
-      () => localized(emb.sparkSession,
-        topK(emb, qv, k).select(col("query_id"), col("vec_id"))),
+      () => localized(emb.sparkSession, exactTopK(emb, k)),
       () => java.lang.Long.valueOf(codes.count())))
       .head.asInstanceOf[DataFrame]
     NprobeCurve.map { np =>
@@ -2705,7 +2602,7 @@ object Similarity {
     * (~31.6k rows at N = 10⁹). */
   def ivfCellAudit(emb: DataFrame,
                    topK: Int = CellAuditTopK): DataFrame = {
-    val tl = ivfPqResidualParts(emb).twoLevel
+    val tl = standingTwoLevel(emb)
     cellAuditFrom(
       assignTwoLevel(emb, tl).select(col("vec_id"), col("cell")), topK)
   }
@@ -2749,7 +2646,7 @@ object Similarity {
     * `topk_share`/`max_occ` pulling away from the `standing` row
     * faster than the corpus grows. */
   def ivfCellDrift(emb: DataFrame, topK: Int = CellAuditTopK): DataFrame = {
-    val tl = ivfPqResidualParts(emb).twoLevel
+    val tl = standingTwoLevel(emb)
     val isNew = col("vec_id") % IvfAppendMod === IvfAppendRem
     def side(df: DataFrame, label: String) =
       cellAuditFrom(assignTwoLevel(df, tl)
@@ -2824,26 +2721,31 @@ object Similarity {
           .unionByName(st.twoLevel.fmap.select(lit("fine").as("kind"),
             col("centroid_id").as("id"), col("coarse_id").as("owner"),
             col("c"), noCw))
-          .unionByName(st.codebook.select(lit("codeword").as("kind"),
+          .unionByName(st.codebook.df.select(lit("codeword").as("kind"),
             col("j").as("id"), col("m").as("owner"), noC, col("cw"))))
       .coalesce(1).write.mode("overwrite").parquet(IvfPqStateTable.dir(path))
   }
 
   /** The one reader of a landed index's trained state: one bounded
-    * collect of `state/` ([[localized]]), split on the driver into the
-    * [[TwoLevel]] and codebook local relations every placement, encode
-    * and ADC table of the call then shares — no plan re-derives them. */
+    * collect of `state/` ([[localRows]]), split on the driver into the
+    * [[TwoLevel]] and the [[Codebook]] every placement, encode and ADC
+    * table of the call then shares — no plan re-derives them, and no
+    * further query collects them. */
   private[graft] def readIvfPqState(spark: SparkSession,
                                     path: String): IvfPqState = {
-    val state = localized(spark, IvfPqStateTable.read(spark, path))
-    def kind(k: String) = state.filter(col("kind") === k)
-    IvfPqState(
-      localTwoLevel(
-        kind("coarse").select(col("id").as("coarse_id"), col("c").as("gv")),
-        kind("fine").select(col("owner").as("coarse_id"),
-          col("id").as("centroid_id"), col("c"))),
-      kind("codeword").select(col("owner").as("m"), col("id").as("j"),
-        col("cw")))
+    val state = localRows(IvfPqStateTable.read(spark, path))
+    val t = IvfPqStateTable.schema
+    def kind(k: String, fields: (String, String)*) = {
+      val at = fields.map { case (f, _) => t.fieldIndex(f) }
+      (state.filter(_.getString(0) == k).map(r => Row.fromSeq(at.map(r.get))),
+        StructType(fields.map { case (f, as) => t(f).copy(name = as) }))
+    }
+    val (coarse, coarseType) = kind("coarse", "id" -> "coarse_id", "c" -> "gv")
+    val (fine, fineType) = kind("fine", "owner" -> "coarse_id",
+      "id" -> "centroid_id", "c" -> "c")
+    val (cw, cwType) = kind("codeword", "owner" -> "m", "id" -> "j", "cw" -> "cw")
+    IvfPqState(twoLevelOf(spark, coarse, coarseType, fine, fineType),
+      Codebook(cw, asLocal(spark, cw, cwType)))
   }
 
   /** One batch's code rows, placed + encoded against a trained
@@ -3043,17 +2945,23 @@ object Similarity {
   private def pqCodeRows(spark: SparkSession, path: String,
                          emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
-      pqEncodeColumn(spark.read.parquet(s"$path/codebook"),
-        col("embedding")).as("codes"),
+      pqEncodeColumn(landedPqCodebook(spark, path), col("embedding")).as("codes"),
       col("embedding"))
 
+  /** The landed PQ codebook, collected once per call. */
+  private def landedPqCodebook(spark: SparkSession, path: String): Codebook =
+    codebookOf(spark.read.parquet(s"$path/codebook"))
+
+  /** Serve top-k from the landed PQ index: the landed codebook's one
+    * table per query scores every live code ([[plainPqProbe]]), then
+    * the exact re-rank reads the colocated embeddings. */
   def pqProbeIndex(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int): DataFrame = {
-    val cb = spark.read.parquet(s"$path/codebook")
     // tombstone mask — the shared serving view (no-op anti-join when
     // none are landed)
     val codes = IndexStore.liveRowsInferred(spark, path, "codes", "vec_id")
-    pqProbeFrom(codes.select(col("vec_id"), col("codes")), cb,
+    plainPqProbe(codes.select(col("vec_id"), col("codes")),
+      landedPqCodebook(spark, path),
       codes.select(col("vec_id"), col("embedding")), queries, k)
   }
 
@@ -3099,18 +3007,9 @@ object Similarity {
     * the accuracy half of the 64× compression story, the
     * [[quantRecall]] convention. Deterministic end to end, so the
     * fractions hash-certify. */
-  def pqRecall(emb: DataFrame, k: Int = 3): DataFrame = {
-    val exact = topK(emb, queryVectors(emb), k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = pqTopK(emb, k).select(col("query_id"), col("vec_id"))
-    val hits = exact.join(approx, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    queryVectors(emb).select(col("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("n_hit"), lit(0L)).cast("double") / k).as("recall"))
-  }
+  def pqRecall(emb: DataFrame, k: Int = 3): DataFrame =
+    recallOf(queryVectors(emb), exactTopK(emb, k), k)(
+      ("n_hit", "", pqTopK(emb, k)))
 
   def qPqRecall(spark: SparkSession, dir: String): DataFrame =
     pqRecall(Tables.embeddings(spark, dir)).orderBy(col("query_id"))
@@ -3410,18 +3309,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** Residuals of an already-placed (vec_id, embedding, cell) frame
-    * against a (cell, cv) decode table — the tail of
-    * [[residualsAgainst]], factored for placements that are not the
-    * two-level quantizer. */
-  private def residualsFromCells(cells: DataFrame,
-                                 centers: DataFrame): DataFrame =
-    cells.join(broadcast(centers), Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("embedding"), col("cv"),
-          (x, c) => (microQ(x) - microQ(c)).cast("double") / lit(1e6))
-          .as("resid"))
-
   /** Top-`nprobe` cells per query under the INTEGER k-means
     * quantizer — the [[kmeansAssignInt]] argmin widened to the native
     * expression's top-n selection, exploded to `(query_id, q, cell)`
@@ -3465,16 +3352,11 @@ object Similarity {
         transform(col("cm"), m => m.cast("double") / lit(1e6)).as("cv"))
     val resid = residualsFromCells(kmeansAssignInt(emb, cents), centers)
     val (n, sel3) = centroidSelectorOff(emb)
-    val tStride = pqTrainStride(n)
-    val train = sel3(tStride, math.max(1L, math.min(PqK.toLong, n)),
-        tStride / 2)
-      .select(col("centroid_id").as("vec_id"), col("c").as("embedding"))
-    val cb = pqCodebookRows(
-      residualsFromCells(kmeansAssignInt(train, cents), centers)
-        .select(col("vec_id").as("centroid_id"), col("resid").as("c")))
+    val cb = residualCodebook(n, sel3, kmeansAssignInt(_, cents), centers)
     val queries = queryVectors(emb)
-    ivfPqProbeResidualFrom(encodeResiduals(resid, cb), cb, centers,
-      emb, queries, kmeansProbeCellsInt(queries, cents, nprobe), k)
+    pqProbe(encodeResiduals(resid, cb), cb,
+      withCentres(kmeansProbeCellsInt(queries, cents, nprobe), centers),
+      emb, queries, k)
   }
 
   def qSimilarIvfPqLearned(spark: SparkSession, dir: String): DataFrame = {

@@ -343,7 +343,7 @@ class ExpressionsSpec extends SparkSpec {
 
   test("adc_lookup equals the composed explode/join/SUM ADC, degenerate inputs included") {
     import graft.operators.Similarity
-    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.{Column, DataFrame}
     val sp = spark
     import sp.implicits._
     val M = Similarity.PqM
@@ -365,12 +365,15 @@ class ExpressionsSpec extends SparkSpec {
     val centers = Seq((10L, floats(vec(4, 64))), (11L, floats(vec(5, 30))),
         (12L, withNull(vec(6, 64), 40)))
       .toDF("cell", "cv")
-    // codebook: K = 3, slot (2, 1) MISSING, one SHORT codeword and one
-    // with a null component (present rows whose terms are NULL)
+    // codebook: K = 3, slot (2, 1) MISSING, one SHORT codeword, one
+    // LONGER than a subspace, one NULL and one with a null component
+    // (present rows whose terms are NULL)
     val cwType = "array<bigint>"
     val cb = (for (m <- 0 until M; j <- 0 until 3 if !(m == 2 && j == 1)) yield {
         val cw: Seq[java.lang.Long] =
           if (m == 4 && j == 2) Seq.tabulate(5)(d => java.lang.Long.valueOf(d * 1000L))
+          else if (m == 6 && j == 1) Seq.tabulate(D + 2)(d => java.lang.Long.valueOf(d * 900L))
+          else if (m == 3 && j == 0) null
           else if (m == 5 && j == 0) Seq.tabulate(D)(d =>
             if (d == 3) null else java.lang.Long.valueOf((j + 1) * 3000L - d * 500L))
           else Seq.tabulate(D)(d => java.lang.Long.valueOf((m - j) * 20000L + d * 777L))
@@ -443,8 +446,10 @@ class ExpressionsSpec extends SparkSpec {
       df.as[(Long, Long, Option[Double])].collect()
         .map(r => (r._1, r._2) -> r._3.map(java.lang.Double.doubleToLongBits))
         .toMap
+    val codebook = Similarity.codebookOf(cb)
+    val centred = qCells.join(broadcast(centers), Seq("cell"))
     val want = scores(reference(codeRows))
-    val got = scores(Similarity.residualAdc(codeRows, cb, centers, qCells))
+    val got = scores(Similarity.pqAdc(codeRows, codebook, centred))
     // the fixture reaches every branch: a pair with only absent slots
     // drops out, a pair whose matched terms are all NULL stays with a
     // NULL score, and a no-centre cell yields nothing
@@ -455,14 +460,59 @@ class ExpressionsSpec extends SparkSpec {
     assert(got === want)
     // an empty candidate set scores nothing on either side
     val none = codeRows.limit(0)
-    assert(scores(Similarity.residualAdc(none, cb, centers, qCells)).isEmpty)
+    assert(scores(Similarity.pqAdc(none, codebook, centred)).isEmpty)
     assert(scores(reference(none)).isEmpty)
-    // map-side: the scoring plans no exchange
-    val plan = Similarity.residualAdc(codeRows, cb, centers, qCells)
-      .queryExecution.executedPlan.toString
-    assert(!plan.linesIterator.exists(l => l.contains("Exchange") &&
-        !l.contains("BroadcastExchange")) && !plan.contains("Generate"),
-      s"residual ADC grew a shuffle or an explode:\n$plan")
+    // centre-free: probe rows with no `cv` score the raw codewords. Plain
+    // PQ is the one-cell case (every code row and every query in cell 0);
+    // its reference is the plain long form, verbatim: the (query, m, j)
+    // table, the posexplode → table join → (query, vec) SUM
+    def plainReference(codes: DataFrame) = {
+      val qsubs = queries
+        .select(col("query_id"), subspaces(col("q")).as("sub"))
+        .select(col("query_id"), col("sub.m").as("m"), col("sub.sv").as("qq"))
+        .withColumn("qq_n2", aggregate(transform(col("qq"), x => x * x),
+          lit(0L), (acc, d) => acc + d))
+      val lut = qsubs.join(cb, Seq("m"))
+        .select(col("query_id"), col("m"), col("j"),
+          aggregate(zip_with(col("qq"), col("cw"), (a, b) => a * b),
+            lit(0L), (acc, d) => acc + d).as("dotp"),
+          aggregate(transform(col("cw"), x => x * x),
+            lit(0L), (acc, d) => acc + d).as("cwn2"))
+      val qn = qsubs.groupBy(col("query_id")).agg(sum(col("qq_n2")).as("qn2"))
+      codes.repartition(col("vec_id"))
+        .select(col("vec_id"), posexplode(col("codes")))
+        .select(col("vec_id"),
+          col("pos").cast("long").as("m"), col("col").as("j"))
+        .join(broadcast(lut), Seq("m", "j"))
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(sum(col("dotp")).as("num"), sum(col("cwn2")).as("nsq"))
+        .join(broadcast(qn), Seq("query_id"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          when(col("nsq") === 0 || col("qn2") === 0, lit(0.0))
+            .otherwise(col("num").cast("double")
+              / (sqrt(col("nsq").cast("double"))
+                * sqrt(col("qn2").cast("double")))).as("adc"))
+    }
+    val plainCodes = codeRows.select(col("vec_id"), lit(0L).as("cell"), col("codes"))
+    val plainCells = queries.select(col("query_id"), col("q"), lit(0L).as("cell"))
+    val plainWant = scores(plainReference(codeRows))
+    assert(plainWant.get((3L, 100L)).exists(_.isEmpty), "null query keeps a NULL score")
+    assert(!plainWant.keySet.exists(_._2 == 109L), "a NULL codes array scores nothing")
+    assert(plainWant.size > want.size && plainWant.values.exists(_.nonEmpty))
+    assert(scores(Similarity.pqAdc(plainCodes, codebook, plainCells)) === plainWant)
+    // a zero centre is not the centre-free form: it pads the short and
+    // long codewords with NULL terms, so their norms go NULL
+    val zeroCentre = plainCells.withColumn("cv",
+      array(Seq.fill(64)(lit(0.0f)): _*))
+    assert(scores(Similarity.pqAdc(plainCodes, codebook, zeroCentre)) !== plainWant)
+    // map-side: the scoring plans no exchange, centred or not
+    for (plan <- Seq(Similarity.pqAdc(codeRows, codebook, centred),
+        Similarity.pqAdc(plainCodes, codebook, plainCells))
+        .map(_.queryExecution.executedPlan.toString))
+      assert(!plan.linesIterator.exists(l => l.contains("Exchange") &&
+          !l.contains("BroadcastExchange")) && !plan.contains("Generate"),
+        s"ADC grew a shuffle or an explode:\n$plan")
   }
 
   test("adc_table equals the composed higher-order-function table, degenerate inputs included") {

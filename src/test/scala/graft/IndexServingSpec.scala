@@ -120,10 +120,23 @@ class IndexServingSpec extends SparkSpec {
     assert(!probeJobs.exists(_.infersSchema),
       s"the probe inferred a landed table's schema: $probeJobs")
     assert(probeJobs.size <= 12, s"probe ran ${probeJobs.size} jobs: $probeJobs")
+    // planned queries: the trained state's one collect and the answer's
+    // own; the quantizer and the codebook are built from the state rows
+    // on the driver, with no further collect
+    val probeQueries = actionsOf {
+      Similarity.ivfPqProbeIndex(spark, p, queries, 3).collect(); ()
+    }
+    assert(probeQueries.size <= 2,
+      s"probe planned ${probeQueries.size} queries: $probeQueries")
     val appendJobs = jobsOf(Similarity.appendIvfPqIndex(spark, p, emb.filter(isNew)))
     assert(!appendJobs.exists(_.infersSchema),
       s"the append inferred a landed table's schema: $appendJobs")
     assert(appendJobs.size <= 7, s"append ran ${appendJobs.size} jobs: $appendJobs")
+    // a replayed append lands nothing, but it plans what every append
+    // does: the trained state's one collect and the batch tag's
+    val replayQueries = actionsOf(Similarity.appendIvfPqIndex(spark, p, emb.filter(isNew)))
+    assert(replayQueries.size <= 2,
+      s"append planned ${replayQueries.size} queries: $replayQueries")
     // the served answer is the one-shot chain's, minus the tombstone
     val got = Similarity.ivfPqProbeIndex(spark, p, queries, 3)
       .orderBy("query_id", "rk").as[(Long, Long, Long, Double)].collect()

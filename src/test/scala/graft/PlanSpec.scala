@@ -527,33 +527,9 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     }
   }
 
-  test("round-19: ADC probes prune the code table BEFORE the ×M explode") {
-    // The IVF-PQ saving is candidate-volume pruning; it only survives
-    // the ADC if the prune sits BELOW the ×M posexplode of the code
-    // table. Assert every code-table Generate has the candidate /
-    // probed-cell join in its child subtree — a Generate whose child
-    // subtree has no join is exploding the full corpus ×8 before
-    // filtering, the round-18 scale wart (the prune must PRECEDE the
-    // explode). The plain-PQ chain keeps that explode; the residual
-    // chains score map-side (next test).
-    import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    for (q <- Seq("q_similar_ivfpq")) {
-      val plan = physical(SparkEntry.queries(q)(spark, sf("sf0.001")))
-      val gens = plan.collect {
-        case g: GenerateExec if g.generator.toString.contains("codes") => g
-      }
-      assert(gens.nonEmpty, s"$q: no code-table Generate found")
-      gens.foreach { g =>
-        val prunes = g.child.collect { case j: BaseJoinExec => j }
-        assert(prunes.nonEmpty,
-          s"$q: code-table explode not preceded by the candidate join:\n$g")
-      }
-    }
-  }
-
   test("residual IVF-PQ probes score the probed cells map-side: no explode, no exchange before the table join") {
-    // The residual ADC reads each candidate's sums with M table lookups
+    // Every PQ chain — residual, raw IVF-PQ and plain PQ (the one-cell
+    // case) — reads each candidate's sums with M table lookups
     // (adc_lookup) right above the probed-cell broadcast join: no
     // Generate over the codes, and the code rows reach that join with
     // no Exchange on their path (a shuffle there would move every
@@ -565,7 +541,8 @@ class PlanSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     def codePath(p: SparkPlan): Seq[SparkPlan] =
       p +: p.children.filter(carriesCodes).flatMap(codePath)
     for (q <- Seq("q_similar_ivfpq_res", "q_similar_ivfpq_persisted",
-        "q_similar_ivfpq_deleted")) {
+        "q_similar_ivfpq_deleted", "q_similar_ivfpq", "q_similar_pq",
+        "q_similar_pq_deleted", "q_similar_pq_kmeans")) {
       val plan = physical(SparkEntry.queries(q)(spark, sf("sf0.001")))
       val gens = plan.collect {
         case g: GenerateExec if g.generator.toString.contains("codes") => g

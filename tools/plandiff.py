@@ -3,12 +3,13 @@
 
 Splits each dump on its `========== <name> ==========` headers,
 normalizes what differs between two runs of the same plan (expression
-ids `#123`, exchange `plan_id=123`, identity hashes of array literals
+ids `#123`, lambda variable counters `lambda x_12#`, exchange `plan_id=123`, identity hashes of array literals
 `[J@1a2b3c`, the spill directory plus the `<name>_<seq>` suffix
 `TextDedup.spillPath` gives each landed index, sbt's own log lines, and
 the order Spark's distinct-aggregate rewrite picks for its `Expand`
 groups), then prints one line per query: `same`, or the before->after
-counts of the plan nodes that cost shuffles, sorts or row multiplication.
+counts of the plan nodes that cost shuffles, broadcasts, sorts or row
+multiplication.
 
 Usage: python3 tools/plandiff.py BEFORE AFTER
 """
@@ -19,7 +20,8 @@ HEADER = re.compile(r"^========== (\S+) ==========$", re.M)
 # one operator line of a formatted plan tree, e.g. "   +- Exchange (33)"
 TREE_LINE = re.compile(r"^[ :|+\-]*([A-Za-z]+)[^()\n]*\(\d+\)\s*$", re.M)
 SBT_LOG = re.compile(r"^\[(success|info|warn|error)\]")
-COUNTED = ["Exchange", "Sort", "Window", "Generate", "BroadcastNestedLoopJoin"]
+COUNTED = ["Exchange", "BroadcastExchange", "Sort", "Window", "Generate",
+           "BroadcastNestedLoopJoin"]
 EXPAND_ARGS = re.compile(r"^Arguments: (\[\[.*)$", re.M)
 GID_TEST = re.compile(r"\b(gid# = )(\d+)\b")
 
@@ -89,6 +91,8 @@ def distinct_expand(plan):
 
 def normalize(plan):
     plan = re.sub(r"#\d+", "#", plan)
+    # lambda variables carry a JVM-wide counter (`lambda x_569#`)
+    plan = re.sub(r"(lambda [A-Za-z]+)_\d+#", r"\1_#", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
     plan = re.sub(r"(\[[A-Z])@[0-9a-f]+", r"\1@", plan)
     plan = re.sub(r"(graft_spill)[^/\s\]]*/(\w+?)_\d+\b", r"\1/\2_", plan)
