@@ -1929,7 +1929,12 @@ object Similarity {
     * starts from the certified selection. */
   def pqCodebookLloyd(emb: DataFrame,
                       iters: Int = PqLloydIters): DataFrame =
-    lloydRounds(emb, strideCodebook(emb), iters, meanUpdate).df
+    lloydCodebook(emb, iters).df
+
+  /** The learned plain-PQ codebook: `iters` integer-mean Lloyd rounds
+    * seeded from the rank-stride codebook. */
+  private def lloydCodebook(emb: DataFrame, iters: Int): Codebook =
+    lloydRounds(emb, strideCodebook(emb), iters, meanUpdate)
 
   /** The Lloyd engine shared by the raw chain ([[pqCodebookLloyd]])
     * and the residual chains ([[ivfPqResidualTopKTrained]]): `iters`
@@ -2057,7 +2062,7 @@ object Similarity {
     * re-rank are byte-identical machinery. */
   def pqTopKLloyd(emb: DataFrame, k: Int,
                   iters: Int = PqLloydIters): DataFrame =
-    plainPqTopK(emb, lloydRounds(emb, strideCodebook(emb), iters, meanUpdate), k)
+    plainPqTopK(emb, lloydCodebook(emb, iters), k)
 
   def qSimilarPqKmeans(spark: SparkSession, dir: String): DataFrame = {
     pqTopKLloyd(Tables.embeddings(spark, dir), k = 3)

@@ -81,14 +81,17 @@ class IndexServingSpec extends SparkSpec {
   }
 
   /** The Dataset actions `body` runs, by name ("count", "collect", …),
-    * from a [[org.apache.spark.sql.util.QueryExecutionListener]]; a
-    * marker `collect` closes the window, as in [[jobsOf]]. */
+    * from a [[org.apache.spark.sql.util.QueryExecutionListener]]. The
+    * window closes at a marker query whose one output column carries a
+    * fresh name no body query can produce; listener events arrive in
+    * completion order, so every event before the marker's is the body's. */
   private def actionsOf(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
+    val marker = s"actions_marker_${System.nanoTime()}"
+    val seen = new ConcurrentLinkedQueue[(String, Boolean)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-        seen.add(f); ()
+        seen.add(f -> qe.analyzed.output.exists(_.name == marker)); ()
       }
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
@@ -96,13 +99,13 @@ class IndexServingSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       body
-      spark.range(1).collect()
+      spark.range(1).toDF(marker).collect()
       val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.asScala.toSeq.contains("collect") && System.nanoTime() < deadline)
+      while (!seen.asScala.exists(_._2) && System.nanoTime() < deadline)
         Thread.sleep(20)
       val all = seen.asScala.toSeq
-      assert(all.contains("collect"), "listener never saw the marker action")
-      all.take(all.lastIndexOf("collect"))
+      assert(all.exists(_._2), "listener never saw the marker action")
+      all.takeWhile(!_._2).map(_._1)
     } finally spark.listenerManager.unregister(listener)
   }
 
